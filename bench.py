@@ -22,363 +22,10 @@ import pyspark.sql.functions as F  # noqa: E402
 from bioeco_portal_etl_spark import catalog  # noqa: E402
 from bioeco_portal_etl_spark.session import get_spark  # noqa: E402
 
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q6_revenue_forecast",
-    "q4_priority_exists",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "a1_grouped_merge",
-    "a2_dedupe_keep_first",
-    "a4_make_unique",
-    "g2_multipoint_union",
-    "g7_linestring_track",
-    "j1_broadcast_left_join",
-    "u1_union_by_name",
-    "r2_unpivot_flags",
-    # LLM-pipeline extensions
-    "tx1_token_counts",
-    "tx3_quality",
-    "td1_exact_dedupe",
-    "td2_minhash_lsh",
-    "td4_jaccard_pairs",
-    "ts1_cosine_topk",
-    "ts3_ivf_topk",
-    "ts6_ivfpq_topk",
-    "td8_segment_dedupe",
-    "w1_tumbling",
-    "w4_sessionize",
-    "x1_salted_agg",
-    "x7_temperature_mix",
-    "x8_fuzzy_match",
-    "x9_snapshot_diff",
-    "x10_url_dedupe",
-    "rel5_topk_per_group",
-    # round-3/4 operators (judge: the newest, heaviest code needs wall-time
-    # tracking so perf regressions are visible round-over-round)
-    "g10_point_in_polygon",
-    "g11_pip_grid",
-    "x11_resample_interpolate",
-    "rel12_setops",
-    "rel13_range_frame",
-    "mm2_resize_meta",
-    "td9_cluster_keep_best",
-    "ts7_pq_refine_topk",
-    "tx11_lm_score",
-    "mm3_frame_sample",
-    "rel14_hierarchy_flatten",
-    "rel15_rank_quantiles",
-    "g12_poly_measure",
-    # streaming: each times a full availableNow drain through the state store
-    "w5_streaming_sessions",
-    "w6_streaming_dedupe",
-    "w7_stream_interval_join",
-    # round-4: sketches, graph, robust/islands, weighted sampling, anomaly,
-    # vocab diagnostics
-    "sk1_kmv_distinct",
-    "sk2_cms_heavy_hitters",
-    "sk3_hll_distinct",
-    "sk4_bloom_gate",
-    "gr1_pagerank",
-    "gr2_triangles",
-    "rel16_median_mad",
-    "rel17_islands",
-    "x12_weighted_sample",
-    "x13_rolling_zscore",
-    "tx12_vocab_growth",
-    "sk5_kmv_setops",
-    "rel18_interval_merge",
-    "x14_ewma",
-    "mm4_audio_energy",
-    "rel19_funnel",
-    "x15_temporal_split",
-    "tx13_bigram_lm",
-    "gr3_khop_reach",
-    "rel20_rolling_distinct",
-    "tx14_readability",
-    "w8_streaming_anomaly",
-    "rel21_attribution",
-    "rel22_cohort_retention",
-    "rel23_transitions",
-    "tx15_token_entropy",
-    "tx16_pmi_bigrams",
-    "tx17_postings",
-    "x16_histogram",
-    "x17_winsorize",
-    "x18_cusum_drift",
-    "sk6_sampled_quantiles",
-    "dq1_profile",
-    "td10_containment",
-    "w9_streaming_tumbling",
-    "gr4_degree_hist",
-    "x19_group_normalize",
-    "rel24_cdc_apply",
-    "tx18_script_detect",
-    "tx19_boilerplate",
-    "gr5_node_similarity",
-    "mm5_scene_cuts",
-    "ts8_mmr_rerank",
-    "x20_equidepth_bins",
-    "dq2_referential",
-    "rel25_missing_days",
-    "w10_streaming_update_counts",
-    "x21_dup_matrix",
-    # full TPC-H plan-family sweep (q1/3/4/5/6/17/18/19 already above) —
-    # all 22 now carry wall-time so no plan family regresses silently
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_value_suppliers",
-    "q12_lateness_priority",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q20_part_stock_chain",
-    "q21_waiting_supplier",
-    "q22_idle_customers",
-    # heavier previously-unbenched operators
-    "rel6_asof_join",
-    "rel7_range_join",
-    "rel9_cube",
-    "td3_simhash",
-    "td5_embedding_neardup",
-    "td6_decontamination",
-    "td7_dup_clusters",
-    "ts2_lsh_bucket_topk",
-    "ts4_kmeans_ivf",
-    "ts5_pq_topk",
-    "tx9_repetition",
-    "tx10_tfidf_top_terms",
-    "x2_stratified_split",
-    "x3_sequence_packing",
-    # round-5: complete the sweep — every catalog entry with a batch face
-    # carries wall-time (test_bench_contract.py pins bench==catalog), so
-    # nothing regresses silently. These are the light r1-r2 entries.
-    "a3_duplicate_audit",
-    "f_filters",
-    "g1_point_wkt",
-    "g5_geom_type",
-    "g9_union_points_geojson",
-    "j4_differing_key_names",
-    "mm1_media_metadata",
-    "p0_canonical_entities",
-    "p12_make_identifier",
-    "p18_row_number",
-    "p19_sql_script",
-    "p1_select_rename",
-    "p3_blanks_to_null",
-    "p4_flag_columns",
-    "p6_recode_passthrough",
-    "p7_str_trunc",
-    "p8_p9_year_dates",
-    "rel10_window_suite",
-    "rel11_scd2_merge",
-    "rel1_rollup",
-    "rel2_lead_lag",
-    "rel3_semi_anti",
-    "rel4_conditional_pivot",
-    "rel8_json_props",
-    "tx2_language_id",
-    "tx4_fingerprint",
-    "tx5_normalize",
-    "tx6_pii_redact",
-    "tx7_top_bigrams",
-    "tx8_length_quantiles",
-    # round-5 third batch
-    "tx21_bpe_merges",
-    "td11_semantic_dedupe",
-    "x24_zorder_layout",
-    "dq6_benford",
-    "mm8_phash_groups",
-    "w12_stream_outer_join",
-    # round-5 fourth batch
-    "tx22_bm25",
-    "ts11_rrf_fusion",
-    "gr7_label_communities",
-    "gr8_kcore",
-    "dq7_profile_drift",
-    "x25_salted_join",
-    # round-5 fifth batch
-    "tx23_heavy_hitters",
-    "tx24_bpe_encode",
-    "x26_bloom_join",
-    "dq8_lateness_audit",
-    "rel26_pivot",
-    "mm9_wav_downsample",
-    # round-5 sixth batch
-    "w13_stream_two_level_agg",
-    "td12_lsh_quality",
-    "x27_epoch_shuffle",
-    "x28_compaction_plan",
-    "tx25_blocklist_filter",
-    "rel27_rolling_slope",
-    # round-5 seventh batch
-    "gr9_hits",
-    "tx26_rake_keywords",
-    "ts12_range_search",
-    "ts13_filtered_ann",
-    "x29_cdc_net_effect",
-    "w14_stream_complete_topk",
-    # round-5 eighth batch
-    "gr10_random_walks",
-    "x30_scd2_asof",
-    "rel28_percent_rank",
-    # round-5 tenth batch
-    "rel29_grouping_sets",
-    "sk7_hll_merge",
-    "tx29_ngram_coverage",
-    "ts15_ivf_balance",
-    "x32_join_skew_report",
-    # round-6 tenth batch
-    "gr21_edge_support",
-    "dq16_id_gaps",
-    "ts24_norm_profile",
-    "td15_soft_dedupe_weights",
-    "mm22_crest_factor",
-    # round-6 ninth batch
-    "td14_dedupe_agreement",
-    "x48_top_movers",
-    "rel37_top_paths",
-    "mm21_frame_motion",
-    "tx40_hapax_ratio",
-    # round-6 eighth batch
-    "mm20_shot_lengths",
-    "sk13_histq_error_sweep",
-    "ts23_pq_utilization",
-    "x47_decile_lift",
-    "rel36_cycle_time",
-    # round-6 seventh batch
-    "gr20_modularity",
-    "rel35_period_growth",
-    "ts22_centroid_drift",
-    "dq15_key_discovery",
-    "x46_ndv_estimate_audit",
-    # round-6 sixth batch
-    "ts21_nprobe_sweep",
-    "sk12_cms_error_sweep",
-    "tx38_garbage_score",
-    "mm19_channel_correlation",
-    "dq14_expectation_drift",
-    # round-6 fifth batch
-    "tx37_bpe_fertility",
-    "x45_bitmap_estimate",
-    "td13_shard_dup_locality",
-    "gr19_rich_club",
-    "w20_stream_union_dedupe",
-    # round-6 fourth batch
-    "rel33_max_concurrency",
-    "x43_weighted_median",
-    "x44_join_card_estimate",
-    "mm18_gain_normalization",
-    "tx36_langid_confusion",
-    # round-6 third batch
-    "tx35_term_burstiness",
-    "ts20_matryoshka_recall",
-    "sk11_minhash_lang_sim",
-    "mm17_jpeg_blockiness",
-    "dq13_duplicate_burden",
-    # round-6 second batch
-    "tx34_ngram_novelty",
-    "x40_skyline_2d",
-    "gr18_clustering_coeff",
-    "mm16_pixel_gini",
-    "x41_nucleus_coverage",
-    # round-6 first batch
-    "mm14_jpeg_roundtrip",
-    "mm15_wav_silence_trim",
-    "gr17_adamic_adar",
-    "ts19_centroid_stats",
-    "dq12_split_balance",
-    # round-5 seventeenth batch
-    "gr16_assortativity",
-    "x39_consistent_hashing",
-    "sk10_bloom_fpr",
-    "ts18_ann_cascade",
-    "mm13_frame_zcr",
-    # round-5 sixteenth batch
-    "gr15_effective_diameter",
-    "x38_ab_test",
-    "tx33_zipf_fit",
-    "ts17_topk_diversity",
-    "dq11_expectations",
-    # round-5 fifteenth batch
-    "gr14_harmonic_centrality",
-    "rel32_window_funnel",
-    "x37_range_partition_audit",
-    "tx32_feature_hashing",
-    "w19_stream_native_sessions",
-    # round-5 fourteenth batch
-    "rel31_bom_rollup",
-    "mm12_resize_pixels",
-    "x35_market_basket",
-    "tx31_doc_cosine",
-    "x36_time_weighted_avg",
-    # round-5 thirteenth batch
-    "gr13_personalized_pagerank",
-    "dq10_l_diversity",
-    "sk8_hist_merge_quantiles",
-    "x34_selectivity_audit",
-    "w18_stream_cms_topk",
-    # round-5 twelfth batch
-    "tx30_textrank",
-    "mm11_patch_dupes",
-    "gr12_sssp",
-    "x33_zone_skip",
-    "w17_stream_binned_quantiles",
-    # round-5 eleventh batch
-    "gr11_hyperball",
-    "mm10_patch_grid",
-    "rel30_variant_shred",
-    "w16_stream_hll_distinct",
-    "ts16_sq_distortion",
-    # round-5 ninth batch
-    "tx27_gopher_rules",
-    "dq9_fd_violations",
-    "x31_dsir_weights",
-    "ts14_hard_negatives",
-    "w15_stream_cdc_upsert",
-    "w2_sliding",
-    "w3_session",
-    "x4_source_cap",
-    "x5_chunk_windows",
-    "x6_corpus_stats",
-    # round-5 additions
-    "gr6_dup_components",
-    "dq3_split_leakage",
-    "x22_incremental_agg",
-    "mm6_png_channel_stats",
-    "ts9_recall_at_k",
-    "mm7_wav_clip_stats",
-    "x23_scd2_history",
-    "tx20_winnow_fingerprints",
-    "w11_stream_static_enrich",
-    "dq4_psi_drift",
-    "ts10_sq8_topk",
-    "dq5_k_anonymity",
-    # round-7 first batch
-    "mm23_jpeg_color_roundtrip",
-    "td16_minhash_error_sweep",
-    "tx41_rank_stability",
-    "ts25_dim_covariance",
-    "x49_poisson_bootstrap",
-    # round-7 second batch
-    "x50_ks_test",
-    "tx42_js_divergence",
-    "gr22_assortativity",
-    "td17_truncation_dupes",
-    "rel38_time_weighted_avg",
-    # round-7 third batch
-    "w21_stream_locf_segments",
-    "x51_exact_quantiles",
-    "gr23_degree_inequality",
-    "dq17_freshness_lag",
-]
+# Every catalog entry, in name order. The order is written to
+# bench_full.json ("suite_order"): a query's cold time depends on its
+# position in the suite (the JVM warms as the suite runs).
+BENCH_QUERIES = sorted(catalog.queries())
 
 # The 26 queries benched identically since round 1 — their sum is the
 # cross-round comparable number (the full-suite total grows every round as
@@ -654,7 +301,7 @@ def main(sustained: bool = True) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qmap = catalog.queries()
-    names = [n for n in BENCH_QUERIES if n in qmap]
+    names = BENCH_QUERIES
 
     # Fixed CPU-bound calibration (see _calibration_df), timed with the same
     # protocol: a pure codegen aggregate over a literal range, no I/O, no
@@ -737,6 +384,7 @@ def main(sustained: bool = True) -> None:
         ),
         "total_per_sustained": _normalize_by_sustained(total, calib_sustained),
         "n_queries": len(timings),
+        "suite_order": names,
     }
     print(json.dumps(full))
     with open(Path(__file__).resolve().parent / "bench_full.json", "w") as f:

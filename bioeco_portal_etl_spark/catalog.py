@@ -16,6 +16,7 @@ Conventions:
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1002,116 +1003,14 @@ _CATALOG.update(CATALOG_REL)
 _CATALOG.update(CATALOG_TPCH)
 _CATALOG.update(CATALOG_TPCH2)
 
-# Driver-gate rotation. The correctness driver hash-checks the FIRST 50
+# Driver-gate window. The correctness driver hash-checks the FIRST 50
 # declared entries only; tests/test_catalog_oracle.py and
-# scripts/validate.py run the identical spark-vs-DuckDB comparison over
-# ALL entries every round, so nothing is ever *unchecked* locally — this
-# list only decides which 50 the external driver re-confirms this round.
-#
-# Standing policy (since round 6; cumulative coverage reached 314/314
-# in round 8): changed-since-sampled entries (scripts/regate_check.py)
-# fill the front slots, then the longest-since-sampled cohorts refresh,
-# name order within a cohort. REGATE_r{N}.json is the committed flag
-# artifact each round.
-# TRAP (batch-15 postmortem): after ANY edit to this list, re-verify
-# window membership by position — tests/test_gate_window.py pins it.
-_GATE_FIRST = [
-    # ---- ROUND-11 WINDOW (slots 1-50), executing the plan pinned at
-    # the end of round 10 (VERDICT r10 item 1). Composition:
-    #   Slots 1-2  — the two entries VERDICT r10 names span-level
-    #                ("truly edited", front-load first):
-    #                w5_streaming_sessions, x10_url_dedupe. (Both also
-    #                got green r10 rows; re-confirming them is 2 cheap
-    #                slots that close the judge's explicit ask.)
-    #   Slot  3    — mm1_media_metadata: re-tainted by round 10's
-    #                packed-audio mixdown fix to the shared
-    #                multimodal/media.py (its own last row is r9; the
-    #                other 22 mm rows were sampled AFTER that edit).
-    #   Slots 4-16 — the 13 r4-era REGATE_r10 leftovers, name order.
-    #   Slots 17-30 — the 14 r5-era-and-later leftovers, name order.
-    #   Slots 31-50 — oldest-rotation resume: the 20 longest-since-
-    #                sampled remaining entries (all r4 rows), name order.
-    # w5/x10 span-level first:
-    "w5_streaming_sessions",
-    "x10_url_dedupe",
-    # mm1 (shared-module taint from the round-10 media.py fix):
-    "mm1_media_metadata",
-    # r4-era REGATE_r10 leftovers, name order:
-    "gr7_label_communities",
-    "rel14_hierarchy_flatten",
-    "rel19_funnel",
-    "rel21_attribution",
-    "rel24_cdc_apply",
-    "sk3_hll_distinct",
-    "td10_containment",
-    "x12_weighted_sample",
-    "x13_rolling_zscore",
-    "x14_ewma",
-    "x15_temporal_split",
-    "x16_histogram",
-    "x17_winsorize",
-    # r5-era-and-later leftovers, name order:
-    "dq1_profile",
-    "dq3_split_leakage",
-    "dq11_expectations",
-    "g5_geom_type",
-    "gr17_adamic_adar",
-    "gr20_modularity",
-    "td9_cluster_keep_best",
-    "ts9_recall_at_k",
-    "ts10_sq8_topk",
-    "ts20_matryoshka_recall",
-    "ts21_nprobe_sweep",
-    "x20_equidepth_bins",
-    "x21_dup_matrix",
-    "x38_ab_test",
-    # oldest-rotation resume (r4 rows), name order:
-    "g11_pip_grid",
-    "g12_poly_measure",
-    "gr3_khop_reach",
-    "rel12_setops",
-    "rel13_range_frame",
-    "rel16_median_mad",
-    "rel17_islands",
-    "rel18_interval_merge",
-    "sk1_kmv_distinct",
-    "sk2_cms_heavy_hitters",
-    "sk4_bloom_gate",
-    "sk5_kmv_setops",
-    "sk6_sampled_quantiles",
-    "ts8_mmr_rerank",
-    "tx13_bigram_lm",
-    "tx14_readability",
-    "tx15_token_entropy",
-    "tx16_pmi_bigrams",
-    "tx18_script_detect",
-    "tx19_boilerplate",
-]
-# ---- ROUND-12 CONTINUATION PLAN (pinned now, same practice as the
-# round-11 pin this block replaces — VERDICT r9 item 4). After this
-# round the REGATE backlog is EMPTY absent new edits: the round-11
-# precision tracer (scripts/regate_check.py) classifies doc-only and
-# unreached-def module edits instead of flagging whole families, and
-# the r0*-glob fix makes round-10+ samples visible to the tracer. So
-# round 12's window is: (a) any REGATE_r11 changed-since-sampled flags
-# from round-12 edits, span-level first (checked this round: the
-# media.py _frame_channel_count guard is UNREACHED by every mm entry —
-# it sits on the PyAV arm behind the injectable decode seam — so the
-# round-11 edit contributes no carry-over flags; re-run the tracer
-# rather than assuming after any new edits), then (b) oldest-rotation
-# resume — the 5 remaining r4-row entries (tx9_repetition,
-# w10_streaming_update_counts, w6_streaming_dedupe,
-# w8_streaming_anomaly, x11_resample_interpolate), then the r5 cohort
-# (dq2, dq10, gr1, gr11-gr16, rel15, rel20, rel22, rel23, rel25,
-# rel30-rel32, sk8, sk10, ts16, ...; name order within each cohort —
-# recompute exact ages from the CORRECTNESS union as
-# tests/test_gate_window.py does). Update tests/test_gate_window.py's pin in
-# the SAME commit as any _GATE_FIRST edit — the round-5
-# silent-displacement trap.
-_CATALOG = {
-    **{k: _CATALOG[k] for k in _GATE_FIRST},
-    **{k: v for k, v in _CATALOG.items() if k not in set(_GATE_FIRST)},
-}
+# scripts/validate.py compare ALL entries, so this order only decides which
+# 50 the driver re-confirms. gate_window.txt is written by
+# scripts/gate_window.py (changed-since-sampled entries first, then the
+# longest unsampled); tests/test_gate_window.py checks it is current.
+_GATE_WINDOW = (Path(__file__).parent / "gate_window.txt").read_text().split()
+_CATALOG = {k: _CATALOG[k] for k in [*_GATE_WINDOW, *_CATALOG] if k in _CATALOG}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

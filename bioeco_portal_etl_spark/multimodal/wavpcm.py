@@ -39,10 +39,12 @@ def encode_wav(samples, sample_rate: int = SAMPLE_RATE) -> bytes:
     rate/width/channels, no metadata chunks beyond what ``wave`` always
     writes — byte-identical across runs and hosts. The numpy path packs
     via ``astype('<i2').tobytes()`` (identical little-endian int16 bytes
-    to ``struct.pack``) with an explicit range check mirroring
-    struct.pack's overflow error."""
+    to ``struct.pack``) with explicit type and range checks mirroring
+    struct.pack's errors (a float sample is rejected, never truncated)."""
     if _np is not None:
-        arr = _np.asarray(samples, dtype=_np.int64)
+        arr = _np.asarray(samples)
+        if arr.size and arr.dtype.kind not in "biu":
+            raise TypeError(f"samples must be integers, got {arr.dtype}")
         if arr.size and (arr.min() < -32768 or arr.max() > 32767):
             raise ValueError("sample out of int16 range")
         frames = arr.astype("<i2").tobytes()
@@ -57,38 +59,39 @@ def encode_wav(samples, sample_rate: int = SAMPLE_RATE) -> bytes:
     return buf.getvalue()
 
 
-def decode_wav(payload: bytes) -> tuple[int, list[int]]:
-    """(sample_rate, samples) from mono 16-bit PCM WAV bytes. Raises on
-    anything else — a curation pipeline wants loud failures on codec
-    surprises, not silently resampled garbage."""
+def _read_pcm(payload: bytes) -> tuple[int, int, bytes]:
+    """(sample_rate, nframes, frame bytes) of mono 16-bit PCM WAV bytes.
+    Raises on anything else, and on a data chunk shorter than its header
+    says — a curation pipeline wants loud failures on codec surprises,
+    not silently resampled or truncated garbage."""
     with wave.open(io.BytesIO(payload), "rb") as w:
         if w.getnchannels() != 1 or w.getsampwidth() != 2:
             raise ValueError(
                 "expected mono 16-bit PCM, got "
                 f"{w.getnchannels()}ch/{8 * w.getsampwidth()}-bit"
             )
-        rate = w.getframerate()
         n = w.getnframes()
         raw = w.readframes(n)
+        if len(raw) != 2 * n:
+            raise ValueError(f"truncated data chunk: {len(raw)} of {2 * n} bytes")
+        return w.getframerate(), n, raw
+
+
+def decode_wav(payload: bytes) -> tuple[int, list[int]]:
+    """(sample_rate, samples) from mono 16-bit PCM WAV bytes; raises as
+    :func:`_read_pcm` does."""
+    rate, n, raw = _read_pcm(payload)
     return rate, list(struct.unpack(f"<{n}h", raw))
 
 
 def decode_wav_np(payload: bytes):
     """(sample_rate, int64 numpy array) — the vectorized twin of
-    :func:`decode_wav` for numpy-path consumers (round-13, guide §4.2):
+    :func:`decode_wav` for numpy-path consumers:
     ``frombuffer('<i2')`` reads the identical little-endian int16 frames,
     widened to int64 so downstream integer arithmetic (energy sums,
-    products) cannot overflow. Raises exactly like decode_wav on
-    non-mono/non-16-bit input; falls back to decode_wav without numpy."""
+    products) cannot overflow. Raises exactly like decode_wav; falls back
+    to decode_wav without numpy."""
     if _np is None:  # pragma: no cover - numpy present in all test envs
-        rate, s = decode_wav(payload)
-        return rate, s
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        if w.getnchannels() != 1 or w.getsampwidth() != 2:
-            raise ValueError(
-                "expected mono 16-bit PCM, got "
-                f"{w.getnchannels()}ch/{8 * w.getsampwidth()}-bit"
-            )
-        rate = w.getframerate()
-        raw = w.readframes(w.getnframes())
+        return decode_wav(payload)
+    rate, _, raw = _read_pcm(payload)
     return rate, _np.frombuffer(raw, dtype="<i2").astype(_np.int64)

@@ -10,8 +10,13 @@ and for scale (AQE on: runtime partition coalescing + skew-join splitting).
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package: Python workers (mapInPandas, UDFs)
+# import it from here whatever the caller's cwd
+_CHECKOUT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -26,7 +31,11 @@ def get_spark(
     ``local[$SPARK_GRAFT_CPUS]``. Shuffle partitions default to 2x local cores
     (small local runs) — on a 1000-executor cluster AQE coalesces from a high
     initial count, so production submits should raise this to ~2-3x total cores.
+    Python workers get the package's checkout on their PYTHONPATH, ahead of
+    the caller's PYTHONPATH; an ``extra_conf`` value for
+    ``spark.executorEnv.PYTHONPATH`` replaces both.
     """
+    worker_path = [_CHECKOUT, *filter(None, [os.environ.get("PYTHONPATH")])]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -56,6 +65,7 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

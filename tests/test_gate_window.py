@@ -1,246 +1,90 @@
-"""Pins the driver-gate WINDOW — the first 50 entries of the catalog's
-declaration order, which are the only ones the external correctness
-driver hash-samples each round.
-
-Round-5 postmortem: inserting a new batch into _GATE_FIRST silently
-pushed 5 intended entries past slot 50; nothing failed locally because
-validate.py checks ALL entries — the displacement was only caught by
-hand-re-listing positions. This test makes window membership a pinned,
-reviewable artifact: editing _GATE_FIRST without updating the pin (or
-vice versa) fails immediately.
-"""
+"""The driver-gate window: the first 50 catalog entries, which are the only
+ones the external correctness driver hash-samples each round. catalog.py
+declares the names in bioeco_portal_etl_spark/gate_window.txt first;
+scripts/gate_window.py writes that file from the CORRECTNESS history and
+git (see its docstring for the rule)."""
 
 from __future__ import annotations
 
 import json
+import shutil
+import subprocess
+import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "scripts"))
 
-# The round-11 window, by position, executing the plan pinned in
-# catalog.py at the end of round 10 (VERDICT r10 item 1):
-#   Slots 1-2   — w5/x10, the two entries VERDICT r10 names span-level.
-#   Slot  3     — mm1_media_metadata (round-10 media.py fix taint; its
-#                 own last driver row is r9).
-#   Slots 4-30  — the 27 remaining REGATE_r10 changed-since-sampled
-#                 leftovers (flagged minus round-10-sampled), grouped
-#                 r4-era then r5-era-and-later, name order within each.
-#   Slots 31-50 — oldest-rotation resume: the 20 longest-since-sampled
-#                 remaining entries (all r4 rows), name order.
-ROUND11_WINDOW = [
-    # span-level front (VERDICT r10 item 1):
-    "w5_streaming_sessions",
-    "x10_url_dedupe",
-    # media.py-taint carry-over:
-    "mm1_media_metadata",
-    # r4-era REGATE_r10 leftovers, name order:
-    "gr7_label_communities",
-    "rel14_hierarchy_flatten",
-    "rel19_funnel",
-    "rel21_attribution",
-    "rel24_cdc_apply",
-    "sk3_hll_distinct",
-    "td10_containment",
-    "x12_weighted_sample",
-    "x13_rolling_zscore",
-    "x14_ewma",
-    "x15_temporal_split",
-    "x16_histogram",
-    "x17_winsorize",
-    # r5-era-and-later leftovers, name order:
-    "dq1_profile",
-    "dq3_split_leakage",
-    "dq11_expectations",
-    "g5_geom_type",
-    "gr17_adamic_adar",
-    "gr20_modularity",
-    "td9_cluster_keep_best",
-    "ts9_recall_at_k",
-    "ts10_sq8_topk",
-    "ts20_matryoshka_recall",
-    "ts21_nprobe_sweep",
-    "x20_equidepth_bins",
-    "x21_dup_matrix",
-    "x38_ab_test",
-    # oldest-rotation resume (r4 rows), name order:
-    "g11_pip_grid",
-    "g12_poly_measure",
-    "gr3_khop_reach",
-    "rel12_setops",
-    "rel13_range_frame",
-    "rel16_median_mad",
-    "rel17_islands",
-    "rel18_interval_merge",
-    "sk1_kmv_distinct",
-    "sk2_cms_heavy_hitters",
-    "sk4_bloom_gate",
-    "sk5_kmv_setops",
-    "sk6_sampled_quantiles",
-    "ts8_mmr_rerank",
-    "tx13_bigram_lm",
-    "tx14_readability",
-    "tx15_token_entropy",
-    "tx16_pmi_bigrams",
-    "tx18_script_detect",
-    "tx19_boilerplate",
-]
-
-N_FRONT = 2  # slots 1-2: span-level w5/x10
-N_LEFTOVER = 28  # slots 3-30: mm1 + the 27 REGATE_r10 leftovers
-N_ROTATE = 20  # slots 31-50: oldest-rotation resume
+import gate_window  # noqa: E402
 
 
-def _last_sampled_round(max_round: int | None = None) -> dict[str, int]:
-    """Most recent GREEN driver row per entry — delegated to the policy
-    owner (scripts/regate_check.py sampled_rounds) so the green filter
-    and the r[0-9]* glob live in ONE place; the round-11 glob fix (r0*
-    silently dropped two-digit rounds) had to land in both copies, and
-    the copies had already drifted on the green filter.
-
-    max_round caps the age basis: window pins pass the round the window
-    was DERIVED from, so later driver artifacts landing in the tree
-    cannot retroactively change the pinned expectation (round-12 fix for
-    the round-11 time-bomb — the pin went red the moment
-    CORRECTNESS_r11.json was committed)."""
-    import sys as _sys
-
-    _sys.path.insert(0, str(REPO / "scripts"))
-    from regate_check import sampled_rounds
-
-    return sampled_rounds(max_round=max_round)
-
-
-def _regate_r10_leftovers() -> set[str]:
-    """REGATE_r10 changed-since-sampled entries that round 10's window
-    did NOT clear with a GREEN row — the 28-entry backlog slots 3-30
-    exist to retire. Green-filtered like every other 'sampled' read
-    (a red r10 row must NOT count as cleared backlog)."""
-    flagged = set(
-        json.loads((REPO / "REGATE_r10.json").read_text())["summary"][
-            "changed_since_sampled"
-        ]
-    )
-    green_r10 = {
-        k
-        for k, row in json.loads(
-            (REPO / "CORRECTNESS_r10.json").read_text()
-        ).items()
-        if row.get("rows_match") and row.get("hash_match", True)
-    }
-    return flagged - green_r10
+def _window_file() -> list[str]:
+    return gate_window.OUT.read_text().split()
 
 
 def test_window_is_exactly_the_planned_50():
-    from bioeco_portal_etl_spark.catalog import _CATALOG
-
-    window = list(_CATALOG.keys())[:50]
-    assert window == ROUND11_WINDOW, (
-        "driver-gate window drifted from the plan — a batch insert "
-        "displaced entries past slot 50 (the round-5 silent-displacement "
-        "trap). Diff: "
-        f"{[(i, a, b) for i, (a, b) in enumerate(zip(window, ROUND11_WINDOW)) if a != b]}"
-    )
-
-
-def test_front_slots_are_the_span_level_flags():
-    """Slots 1-2 must be exactly REGATE_r10's changed_span_level entries
-    (VERDICT r10 item 1 front-loads them by name)."""
-    span = json.loads((REPO / "REGATE_r10.json").read_text())["summary"][
-        "changed_span_level"
-    ]
-    assert sorted(ROUND11_WINDOW[:N_FRONT]) == sorted(span)
-
-
-def test_leftover_slots_are_the_regate_r10_backlog():
-    """Slots 3-30 must be exactly the 28 REGATE_r10 flagged entries that
-    round 10's window did not sample — this window exists to retire that
-    backlog, nothing else belongs in those slots."""
-    leftovers = _regate_r10_leftovers()
-    slots = ROUND11_WINDOW[N_FRONT:N_FRONT + N_LEFTOVER]
-    assert set(slots) == leftovers, (
-        f"missing={sorted(leftovers - set(slots))} "
-        f"extra={sorted(set(slots) - leftovers)}"
-    )
-
-
-def test_rotation_slots_are_the_oldest_remaining():
-    """Slots 31-50 must be the 20 oldest remaining entries by last green
-    driver row (CORRECTNESS union r1..r10 — the pre-window state the
-    ROUND11_WINDOW was derived from; later rounds' artifacts must not
-    shift this pin), name order within each age cohort, excluding
-    everything already in slots 1-30."""
-    last = _last_sampled_round(max_round=10)
-    taken = set(ROUND11_WINDOW[: N_FRONT + N_LEFTOVER])
-    from bioeco_portal_etl_spark.catalog import _CATALOG
-
-    rest = sorted(
-        (k for k in _CATALOG if k not in taken),
-        key=lambda k: (last.get(k, 0), k),
-    )
-    expected = rest[:N_ROTATE]
-    rotation = ROUND11_WINDOW[N_FRONT + N_LEFTOVER:]
-    assert rotation == expected, (
-        f"rotation slots should be the oldest remaining: "
-        f"expected={expected} got={rotation}"
-    )
-
-
-def test_window_plus_history_covers_catalog():
-    """Cumulative driver coverage reached 314/314 in round 8; the window
-    must never reintroduce a coverage hole: history ∪ window must still
-    cover every entry. Catalog growth is pinned flat at 314 (VERDICT r10
-    item 6), so no new-module tolerance is needed anymore."""
     from bioeco_portal_etl_spark.catalog import queries
 
-    sampled = set(_last_sampled_round())
-    after = sampled | set(ROUND11_WINDOW)
-    uncovered = sorted(set(queries()) - after)
-    assert not uncovered, (
-        f"entries missing from both history and window: {uncovered}"
-    )
+    names = _window_file()
+    assert len(names) == len(set(names)) == gate_window.N
+    assert set(names) <= set(queries())
+    assert list(queries())[: gate_window.N] == names
 
 
 def test_no_duplicate_gate_entries():
-    from bioeco_portal_etl_spark.catalog import _CATALOG, _GATE_FIRST
+    """catalog.py silently drops window names it does not know, so a stale
+    or misspelled name in gate_window.txt must fail here instead."""
+    from bioeco_portal_etl_spark.catalog import _CATALOG, _GATE_WINDOW
 
-    assert len(set(_GATE_FIRST)) == len(_GATE_FIRST)
+    assert len(set(_GATE_WINDOW)) == len(_GATE_WINDOW)
     assert len(set(_CATALOG.keys())) == len(_CATALOG.keys())
-    missing = [k for k in _GATE_FIRST if k not in _CATALOG]
-    assert not missing, f"_GATE_FIRST names not in catalog: {missing}"
+    missing = [k for k in _GATE_WINDOW if k not in _CATALOG]
+    assert not missing, f"gate_window.txt names not in catalog: {missing}"
 
 
-def test_sampled_rounds_cap_ignores_future_artifacts(tmp_path):
-    """Regression for the round-11 time-bomb: a CORRECTNESS file from a
-    round AFTER a pin's max_round must not change the age table, so a
-    round-N window pin stays green forever regardless of later driver
-    artifacts landing in the tree."""
-    import sys as _sys
-
-    _sys.path.insert(0, str(REPO / "scripts"))
-    from regate_check import sampled_rounds
-
-    row = {"rows_match": True, "hash_match": True}
-    (tmp_path / "CORRECTNESS_r09.json").write_text(json.dumps({"a_q": row}))
-    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"b_q": row}))
-    # the "future" artifact a later round (or the current round's driver)
-    # drops into the tree after the pin was derived:
-    (tmp_path / "CORRECTNESS_r12.json").write_text(
-        json.dumps({"a_q": row, "c_q": row})
+def test_window_file_matches_script():
+    if shutil.which("git") is None:
+        pytest.skip("git is not installed")
+    if not gate_window.last_green(REPO):
+        pytest.skip("no CORRECTNESS_r*.json files")
+    try:
+        rows = gate_window.window(REPO, gate_window.catalog_closures())
+    except (subprocess.CalledProcessError, LookupError) as e:
+        pytest.skip(f"no git history for the CORRECTNESS files: {e}")
+    assert [name for name, _, _ in rows] == _window_file(), (
+        "gate_window.txt is stale: run `python scripts/gate_window.py`"
     )
-    capped = sampled_rounds(max_round=10, repo=tmp_path)
-    assert capped == {"a_q": 9, "b_q": 10}
-    uncapped = sampled_rounds(repo=tmp_path)
-    assert uncapped == {"a_q": 12, "b_q": 10, "c_q": 12}
 
 
-def test_window_covers_all_regate_r11_flags():
-    """VERDICT r10 item 1's done-criterion, encoded: every entry the
-    round-11 regate artifact flags as changed-since-sampled must be IN
-    this round's driver window, so a green CORRECTNESS_r11 retires the
-    entire backlog (the precision tracer classifies the rest as
-    unobservable-by-the-entry and records them unflagged)."""
-    flagged = json.loads((REPO / "REGATE_r11.json").read_text())["summary"][
-        "changed_since_sampled"
+def test_rule_on_fake_history(tmp_path):
+    """A red row does not count as sampled, and changed entries come
+    before older unchanged ones."""
+    if shutil.which("git") is None:
+        pytest.skip("git is not installed")
+
+    def git(*args):
+        subprocess.run(["git", "-c", "user.name=t", "-c", "user.email=t@t",
+                        *args], cwd=tmp_path, check=True, capture_output=True)
+
+    def commit(path, text):
+        (tmp_path / path).parent.mkdir(exist_ok=True)
+        (tmp_path / path).write_text(text)
+        git("add", path)
+        git("commit", "-qm", path)
+
+    green, red = {"rows_match": True}, {"rows_match": True, "hash_match": False}
+    git("init", "-q")
+    pkg = gate_window.PKG
+    for name in "abc":
+        commit(f"{pkg}/{name}.py", "x = 1\n")
+    commit("CORRECTNESS_r01.json", json.dumps({"a": green, "b": green, "c": green}))
+    commit(f"{pkg}/b.py", "x = 2\n")  # after b's last GREEN row
+    commit("CORRECTNESS_r02.json", json.dumps({"b": red, "c": green}))
+    (tmp_path / pkg / "c.py").write_text("x = 3\n")  # uncommitted edit
+
+    closures = {n: {f"{pkg}/{n}.py"} for n in "abc"}
+    assert gate_window.window(tmp_path, closures) == [
+        ("b", 1, True), ("c", 2, True), ("a", 1, False),
     ]
-    missing = [k for k in flagged if k not in ROUND11_WINDOW]
-    assert not missing, f"flagged but not in window: {missing}"

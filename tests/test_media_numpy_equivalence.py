@@ -15,6 +15,9 @@ import random
 import struct
 import zlib
 
+import numpy as np
+import pytest
+
 from bioeco_portal_etl_spark.multimodal import png as PNG
 from bioeco_portal_etl_spark.multimodal import wavpcm as W
 
@@ -40,15 +43,24 @@ def test_wav_encode_decode_equivalence():
         rate, s_list = W.decode_wav(enc_np)
         rate2, s_np = W.decode_wav_np(enc_np)
         assert rate == rate2 and s_np.tolist() == s_list
+        # a data chunk shorter than the header's frame count: both raise
+        for cut in (1, 2) if n else ():
+            for decode in (W.decode_wav, W.decode_wav_np):
+                with pytest.raises(ValueError, match="truncated"):
+                    decode(enc_np[:-cut])
 
 
 def test_wav_encode_range_check_matches_struct():
-    import pytest
-
     with pytest.raises(ValueError):
         W.encode_wav([40000])
     with pytest.raises(Exception):  # struct.error on the stdlib path
         _scalar(W, W.encode_wav, [40000])
+    # a float sample is rejected on both paths, never truncated to int
+    for bad in ([1.5], [0, 2.0], np.array([1.5])):
+        with pytest.raises(TypeError):
+            W.encode_wav(bad)
+        with pytest.raises(Exception):  # struct.error on the stdlib path
+            _scalar(W, W.encode_wav, list(bad))
 
 
 def test_png_filter0_fast_path_equivalence():

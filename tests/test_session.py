@@ -1,0 +1,43 @@
+"""get_spark puts the package on the Python workers' path itself, so
+mapInPandas queries run whatever directory the caller starts in."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+from tests.conftest import SF_SMOKE
+
+REPO = Path(__file__).resolve().parent.parent
+
+_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from bioeco_portal_etl_spark.catalog import queries
+from bioeco_portal_etl_spark.session import get_spark
+
+conf = {{"spark.driver.memory": "1g"}}
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={{**conf, "spark.executorEnv.PYTHONPATH": "/override"}})
+assert spark.sparkContext.environment["PYTHONPATH"] == "/override"
+spark.stop()
+spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf=conf)
+print(spark.sparkContext.environment["PYTHONPATH"])
+print(queries()["mm7_wav_clip_stats"](spark, {sf!r}).count())
+spark.stop()
+"""
+
+
+def test_mapinpandas_query_runs_outside_the_checkout(tmp_path):
+    script = tmp_path / "run.py"
+    script.write_text(_SCRIPT.format(repo=str(REPO), sf=SF_SMOKE))
+    env = {**os.environ, "PYTHONPATH": "/caller/path"}
+    proc = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    worker_path, rows = proc.stdout.split()[-2:]
+    # the checkout first, merged with the caller's PYTHONPATH
+    assert worker_path == os.pathsep.join([str(REPO), "/caller/path"])
+    assert int(rows) > 0
