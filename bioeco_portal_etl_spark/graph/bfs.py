@@ -27,17 +27,12 @@ def khop_reach(
     dst: str = "dst",
     seed_col: str = "node",
     persist_edges: bool = True,
-    broadcast_dist: bool = True,
 ) -> DataFrame:
     """(node, dist) for every node within ``k`` hops of any seed;
     dist = minimum hop count (0 for the seeds themselves).
 
-    ``broadcast_dist``: broadcast the per-hop distance table into the
-    edge join so the persisted edge frame never moves (guide §3.1). The
-    table grows toward O(reached nodes); past broadcast limits
-    (~hundreds of millions of reached nodes / the 8 GB relation cap)
-    pass ``False`` for the shuffle-join fallback — same knob family as
-    pagerank's ``broadcast_ranks`` / labelprop's ``broadcast_labels``."""
+    The per-hop distance table, O(reached nodes), is broadcast into the
+    edge join so the persisted edge frame never moves (guide §3.1)."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     # single-exchange dedupe + src layout (round-12, guide §2.4)
@@ -52,11 +47,9 @@ def khop_reach(
         "dist", F.lit(0)
     )
     for i in range(1, k + 1):
-        rhs = dist.withColumnRenamed("node", "src")
-        if broadcast_dist:
-            # O(reached) frontier broadcast: the persisted edges never
-            # move (round-12, guide §3.1); flag-gated since round 13
-            rhs = F.broadcast(rhs)
+        # O(reached) frontier broadcast: the persisted edges never move
+        # (round-12, guide §3.1)
+        rhs = F.broadcast(dist.withColumnRenamed("node", "src"))
         frontier = (
             e.join(rhs, "src")
             .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))

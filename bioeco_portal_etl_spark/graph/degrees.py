@@ -35,9 +35,7 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
     )
 
 
-def degree_assortativity(
-    edges: DataFrame, broadcast_degrees: bool = True
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Newman's degree assortativity coefficient — the one-number answer
     to "do hubs link to hubs?" (positive: social-network-like; negative:
     hub-and-spoke/technological). It is the Pearson correlation of
@@ -52,18 +50,14 @@ def degree_assortativity(
     distributions at the fixture scales (document before applying to a
     hub of degree > ~3e6).
 
-    Plan: one degree aggregate, two broadcast-friendly enrichment joins
-    keyed by endpoint, one global 6-sum reduce. Returns a single row
+    Plan: one degree aggregate, two broadcast enrichment joins keyed by
+    endpoint, one global 6-sum reduce. Returns a single row
     (m_edges, sum_dx, sum_dy, assortativity_e6)."""
     e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed("src", "node")
-    dx = deg.select(F.col("node").alias("src"), F.col("d").alias("dx"))
-    dy = deg.select(F.col("node").alias("dst"), F.col("d").alias("dy"))
-    if broadcast_degrees:
-        # node-sized degree lookups broadcast onto the edge stream
-        # (guide §3.1); past broadcast limits pass
-        # broadcast_degrees=False for the shuffle-join fallback
-        dx, dy = F.broadcast(dx), F.broadcast(dy)
+    # node-sized degree lookups broadcast onto the edge stream (guide §3.1)
+    dx = F.broadcast(deg.select(F.col("node").alias("src"), F.col("d").alias("dx")))
+    dy = F.broadcast(deg.select(F.col("node").alias("dst"), F.col("d").alias("dy")))
     pairs = e.join(dx, "src").join(dy, "dst")
     agg = pairs.agg(
         F.count(F.lit(1)).alias("m"),

@@ -27,22 +27,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def hits(
-    edges: DataFrame, iterations: int = 2, broadcast_scores: bool = True
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """(node, side, score_e6) after ``iterations`` full a/h rounds over a
     DIRECTED edge list (src, dst) — ``side`` is 'hub' (appears as src) or
     'auth' (appears as dst); a node appearing on both sides gets two
     rows, matching the bipartite reading. Initial hub scores are 1e6.
 
-    ``broadcast_scores``: broadcast the O(V) hub/auth score tables into
-    the per-half-step edge joins (guide §3.1). Past broadcast limits
-    (~hundreds of millions of nodes / the 8 GB relation cap) pass
-    ``False`` for the shuffle-join fallback. The scalar max rows stay
-    broadcast either way (one row each)."""
-
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_scores else df
+    The O(V) hub/auth score tables and the one-row scalar maxima are
+    broadcast into the per-half-step joins (guide §3.1)."""
 
     # a production caller persists the distinct edge list across the
     # 2 * iterations references (the pagerank persist_edges pattern);
@@ -56,8 +48,8 @@ def hits(
     for _ in range(iterations):
         a_raw = (
             # scores are O(V) — broadcast them so the edge list never
-            # shuffles (round-12, guide §3.1; flag-gated since round 13)
-            e.join(_bc(hubs), "src")
+            # shuffles (round-12, guide §3.1)
+            e.join(F.broadcast(hubs), "src")
             .groupBy("dst")
             .agg(F.sum("h_e6").alias("__a"))
         )
@@ -72,7 +64,7 @@ def hits(
             )
         )
         h_raw = (
-            e.join(_bc(auths), "dst")
+            e.join(F.broadcast(auths), "dst")
             .groupBy("src")
             .agg(F.sum("a_e6").alias("__h"))
         )

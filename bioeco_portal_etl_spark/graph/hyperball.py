@@ -110,7 +110,6 @@ def hyperball_neighborhood(
     edges: DataFrame,
     nodes: DataFrame,
     radius: int,
-    broadcast_registers: bool = True,
 ) -> DataFrame:
     """(node, r, ball_est) for r in 0..radius: estimated |B(node, r)|
     over the directed ``edges (src, dst)`` (pass both directions for an
@@ -123,9 +122,7 @@ def hyperball_neighborhood(
     picking sort-merge, re-sorting the edge frame every round), then one
     grouped merge of m max aggregates (map-side partial); estimates are
     a projection of the wide register row, so no extra shuffle per
-    radius. Register state is |V| rows total, never ball-sized. Past
-    broadcast limits (~hundreds of millions of nodes) pass
-    ``broadcast_registers=False`` for the shuffle-join fallback.
+    radius. Register state is |V| rows total, never ball-sized.
     (A self-loop formulation that folds the keep-your-own-ball union
     into the join was prototyped and measured SLOWER at bench scale —
     the loop-edge construction cost more than the per-round union it
@@ -142,7 +139,7 @@ def hyperball_neighborhood(
     est = _estimate_wide(_RCOLS).alias("ball_est")
     out = regs.select("node", F.lit(0).cast("long").alias("r"), est)
     for r in range(1, radius + 1):
-        rhs = F.broadcast(regs) if broadcast_registers else regs
+        rhs = F.broadcast(regs)
         prop = e.join(rhs, e["src"] == rhs["node"]).select(
             F.col("dst").alias("node"), *_RCOLS
         )

@@ -34,7 +34,6 @@ def kcore(
     k: int = 3,
     max_rounds: int = 12,
     pre_symmetrized: bool = False,
-    broadcast_keep: bool = True,
 ) -> DataFrame:
     """(node, deg) for every node of the k-core, with ``deg`` its degree
     INSIDE the core. ``edges`` is undirected (src, dst); symmetrized and
@@ -45,11 +44,10 @@ def kcore(
     Round-12 knobs (guide §2.4/§3.1): ``pre_symmetrized`` skips the
     swap-union when the caller's list already carries both directions as
     a set (e.g. the co-activity join); the dedupe then runs keyed by src
-    so per-round degree counts need no exchange. ``broadcast_keep``
-    broadcasts the surviving-node set into both endpoint semi-joins (the
-    set is <= |V| ids and SHRINKS every round) so the edge frame never
-    shuffles during peeling; disable past broadcast limits to fall back
-    to shuffled semi-joins."""
+    so per-round degree counts need no exchange. The surviving-node set
+    is broadcast into both endpoint semi-joins (the set is <= |V| ids and
+    SHRINKS every round) so the edge frame never shuffles during
+    peeling."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if not pre_symmetrized:
         e = e.unionByName(
@@ -66,10 +64,8 @@ def kcore(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        keep_src = keep.withColumnRenamed("node", "src")
-        keep_dst = keep.withColumnRenamed("node", "dst")
-        if broadcast_keep:
-            keep_src, keep_dst = F.broadcast(keep_src), F.broadcast(keep_dst)
+        keep_src = F.broadcast(keep.withColumnRenamed("node", "src"))
+        keep_dst = F.broadcast(keep.withColumnRenamed("node", "dst"))
         sym = (
             sym.join(keep_src, "src", "semi")
             .join(keep_dst, "dst", "semi")

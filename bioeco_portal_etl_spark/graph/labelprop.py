@@ -33,9 +33,6 @@ The previous form (SortMergeJoin on dst + row_number window) paid, PER
 ROUND, a full sort of the edge frame plus two exchanges of up to |E|
 (node, label) rows; the broadcast+aggregate form's per-round plan is one
 BroadcastExchange of |V| label rows and two in-place hash aggregates.
-At billion-node scale where |V| rows no longer broadcast, pass
-``broadcast_labels=False`` to recover the shuffle-join form (edges
-stay partitioned; labels shuffle to them) — same results either way.
 """
 
 from __future__ import annotations
@@ -70,7 +67,6 @@ def label_propagation(
     rounds: int = 2,
     persist_edges: bool = True,
     pre_symmetrized: bool = False,
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """(node, label) after ``rounds`` synchronous updates; initial label =
     own node id. ``edges`` is an undirected edge list given as (src, dst)
@@ -88,10 +84,8 @@ def label_propagation(
     hash-partitions it by ``src`` (e.g. ``repartition("src")`` before
     ``persist()``): every per-round aggregate then runs exchange-free.
 
-    ``broadcast_labels`` (default True) broadcasts the O(V) label table
-    into the per-round join so the edge frame never shuffles or sorts.
-    Set False past broadcast limits (~hundreds of millions of nodes);
-    the join then shuffles labels to the edge partitioning instead."""
+    The O(V) label table is broadcast into the per-round join so the
+    edge frame never shuffles or sorts."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if pre_symmetrized:
         sym = e
@@ -116,7 +110,7 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
     )
     for _ in range(rounds):
-        lbl = F.broadcast(labels) if broadcast_labels else labels
+        lbl = F.broadcast(labels)
         nbr = (
             sym.join(lbl, sym["dst"] == lbl["node"])
             .select(F.col("src").alias("node"), "label")

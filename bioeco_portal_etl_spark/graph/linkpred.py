@@ -39,7 +39,6 @@ def adamic_adar(
     min_common: int = 2,
     persist_edges: bool = True,
     pre_symmetrized: bool = False,
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """(u, v, n_common, aa_e6) for non-adjacent pairs (u < v) sharing
     >= ``min_common`` middles of degree <= ``max_degree``. ``edges`` is
@@ -68,12 +67,8 @@ def adamic_adar(
         F.count(F.lit(1)).alias("deg")
     )
     # middles: (w, leaf) with the hub cap applied BEFORE the wedge join.
-    # The capped degree table is node-sized — broadcast by default
-    # (guide §3.1); past broadcast limits pass broadcast_degrees=False
-    # for the shuffle-join fallback.
-    capped = deg.filter(F.col("deg") <= max_degree)
-    if broadcast_degrees:
-        capped = F.broadcast(capped)
+    # The capped degree table is node-sized — broadcast (guide §3.1).
+    capped = F.broadcast(deg.filter(F.col("deg") <= max_degree))
     mid = (
         sym.select(F.col("src").alias("w"), F.col("dst").alias("leaf"))
         .join(capped, "w")

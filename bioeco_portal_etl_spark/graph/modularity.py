@@ -29,7 +29,6 @@ def community_modularity(
     labels: DataFrame,
     top_k: int = 20,
     pre_symmetrized: bool = False,
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """(community, n_nodes, internal_edges, degree_sum, q_contrib_e6)
     for the ``top_k`` largest communities (size DESC, community ASC).
@@ -43,13 +42,8 @@ def community_modularity(
     (integer-exact) and degree is the per-src out-count, with the label
     table broadcast onto both endpoints.
 
-    ``broadcast_labels``: broadcast the O(V) label table into the two
-    endpoint joins (guide §3.1). Past broadcast limits (~hundreds of
-    millions of nodes / the 8 GB relation cap) pass ``False`` for the
-    shuffle-join fallback."""
-
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_labels else df
+    The O(V) label table is broadcast into the two endpoint joins
+    (guide §3.1)."""
 
     if pre_symmetrized:
         # Round-12 optimization (guide §2.3/§3.1): score straight off the
@@ -72,7 +66,7 @@ def community_modularity(
         edges = edges.filter(F.col("src") != F.col("dst"))
         lu = labels.select(F.col("node").alias("src"), F.col("label").alias("cu"))
         lv = labels.select(F.col("node").alias("dst"), F.col("label").alias("cv"))
-        ann = edges.join(_bc(lu), "src").join(_bc(lv), "dst")
+        ann = edges.join(F.broadcast(lu), "src").join(F.broadcast(lv), "dst")
         internal = (
             ann.filter(F.col("cu") == F.col("cv"))
             .groupBy(F.col("cu").alias("community"))
@@ -94,7 +88,7 @@ def community_modularity(
         )
         lu = labels.select(F.col("node").alias("u"), F.col("label").alias("cu"))
         lv = labels.select(F.col("node").alias("v"), F.col("label").alias("cv"))
-        ann = e.join(_bc(lu), "u").join(_bc(lv), "v")
+        ann = e.join(F.broadcast(lu), "u").join(F.broadcast(lv), "v")
         internal = (
             ann.filter(F.col("cu") == F.col("cv"))
             .groupBy(F.col("cu").alias("community"))

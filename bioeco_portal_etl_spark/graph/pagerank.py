@@ -44,7 +44,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     persist_edges: bool = True,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """e9 fixed-point PageRank; returns (node, pr_e9).
 
@@ -91,12 +90,8 @@ def pagerank(
     for _ in range(iterations):
         # broadcast the O(V) rank table into the O(E) join so the
         # persisted edge frame never moves or sorts (round-12, guide
-        # §3.1 — post-aggregate size estimates kept picking sort-merge);
-        # disable past broadcast limits to fall back to the shuffle join
-        # against the src-partitioned edges.
-        rhs = ranks.withColumnRenamed("node", "src")
-        if broadcast_ranks:
-            rhs = F.broadcast(rhs)
+        # §3.1 — post-aggregate size estimates kept picking sort-merge)
+        rhs = F.broadcast(ranks.withColumnRenamed("node", "src"))
         contribs = (
             e.join(rhs, "src")
             .filter(F.col("outdeg") > 0)
@@ -162,7 +157,6 @@ def personalized_pagerank(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Personalized PageRank (PPR): the teleport mass returns to the SEED
     set instead of spreading uniformly, so ranks measure proximity to the
@@ -211,12 +205,8 @@ def personalized_pagerank(
     )
     teleport = (DAMP_DEN - DAMP_NUM) * E9 // DAMP_DEN
     for _ in range(iterations):
-        # broadcast the O(V) rank table (see pagerank() — round-12);
-        # flag-gated since round 13: pass broadcast_ranks=False past
-        # broadcast limits for the shuffle-join fallback
-        rhs = ranks.withColumnRenamed("node", "src")
-        if broadcast_ranks:
-            rhs = F.broadcast(rhs)
+        # broadcast the O(V) rank table (see pagerank() — round-12)
+        rhs = F.broadcast(ranks.withColumnRenamed("node", "src"))
         contribs = (
             e.join(rhs, "src")
             .filter((F.col("outdeg") > 0) & (F.col("ppr_e9") > 0))

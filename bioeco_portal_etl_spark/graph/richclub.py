@@ -23,15 +23,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def rich_club(
-    edges: DataFrame, ks: list[int], broadcast_degrees: bool = True
-) -> DataFrame:
+def rich_club(edges: DataFrame, ks: list[int]) -> DataFrame:
     """(k, n_nodes, n_edges, phi_e6) per threshold in ``ks``. ``edges``
     is an undirected (src, dst) list; canonicalized and deduplicated
-    here. ``broadcast_degrees``: broadcast the node-sized degree lookups
-    onto the edge stream (guide §3.1); past broadcast limits pass
-    ``False`` for the shuffle-join fallback (the |ks|-row threshold and
-    per-k aggregate tables stay broadcast either way — constant-sized)."""
+    here. The node-sized degree lookups and the constant-sized |ks|-row
+    threshold and per-k aggregate tables are broadcast (guide §3.1)."""
     e = edges.filter(F.col("src") != F.col("dst")).select(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
     ).distinct()
@@ -41,10 +37,8 @@ def rich_club(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    if broadcast_degrees:
-        du, dv = F.broadcast(du), F.broadcast(dv)
+    du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")))
+    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))
     ann = e.join(du, "u").join(dv, "v")
     kt = edges.sparkSession.createDataFrame(
         [(int(k),) for k in ks], "k long"

@@ -26,7 +26,6 @@ def node_jaccard(
     min_common: int = 2,
     max_item_degree: int = 64,
     pair_partitions: int | None = None,
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """(src_a, src_b, n_common, deg_a, deg_b, jaccard_e4) for src pairs
     sharing >= ``min_common`` distinct neighbors, via neighbors of degree
@@ -82,13 +81,10 @@ def node_jaccard(
         .agg(F.count(F.lit(1)).alias("n_common"))
         .filter(F.col("n_common") >= min_common)
     )
-    da = deg.select(F.col("src").alias("src_a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("src").alias("src_b"), F.col("deg").alias("deg_b"))
-    if broadcast_degrees:
-        # entity-degree tables are node-sized — broadcast them onto the
-        # pair stream (round-12, guide §3.1); past broadcast limits pass
-        # broadcast_degrees=False for the shuffle-join fallback
-        da, db = F.broadcast(da), F.broadcast(db)
+    # entity-degree tables are node-sized — broadcast them onto the pair
+    # stream (round-12, guide §3.1)
+    da = F.broadcast(deg.select(F.col("src").alias("src_a"), F.col("deg").alias("deg_a")))
+    db = F.broadcast(deg.select(F.col("src").alias("src_b"), F.col("deg").alias("deg_b")))
     return (
         pairs.join(da, "src_a")
         .join(db, "src_b")

@@ -37,17 +37,14 @@ def sssp_bounded(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int,
-    broadcast_dist: bool = True,
 ) -> DataFrame:
     """(node, dist): cheapest path cost from any source using at most
     ``rounds`` edges. ``edges`` must carry (src, dst, w) with BIGINT
     nonnegative w; ``sources`` must carry (node). Unreached nodes are
     absent (no infinity sentinel rows).
 
-    ``broadcast_dist``: broadcast the per-round distance table into the
-    edge join (guide §3.1). It grows toward O(reached nodes); past
-    broadcast limits (~hundreds of millions of rows / the 8 GB relation
-    cap) pass ``False`` for the shuffle-join fallback."""
+    The per-round distance table, O(reached nodes), is broadcast into the
+    edge join (guide §3.1)."""
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     if rounds > 1:
         e = e.localCheckpoint(eager=True)
@@ -55,11 +52,8 @@ def sssp_bounded(
         "dist", F.lit(0).cast("long")
     )
     for r in range(rounds):
-        # O(reached) distance table broadcast (round-12, guide §3.1),
-        # flag-gated since round 13
-        rhs = dist.withColumnRenamed("node", "src")
-        if broadcast_dist:
-            rhs = F.broadcast(rhs)
+        # O(reached) distance table broadcast (round-12, guide §3.1)
+        rhs = F.broadcast(dist.withColumnRenamed("node", "src"))
         cand = e.join(rhs, "src").select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),

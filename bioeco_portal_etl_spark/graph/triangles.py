@@ -32,43 +32,21 @@ def _canonical(edges: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def triangle_stats(
-    edges: DataFrame,
-    a: str = "src",
-    b: str = "dst",
-    broadcast_degrees: bool = True,
-) -> DataFrame:
-    """One-row graph summary: (n_nodes, n_edges, n_wedges, n_triangles).
-
-    n_wedges counts paths of length 2 in the ORIENTED graph (the join's
-    actual intermediate cardinality — the quantity degree orientation
-    bounds), so the row doubles as a plan-cost witness.
-
-    ``broadcast_degrees``: broadcast the node-sized degree table into
-    the two orientation joins (guide §3.1). Past broadcast limits
-    (~hundreds of millions of nodes / the 8 GB relation cap) pass
-    ``False`` for the shuffle-join fallback.
-    """
-    # ONE materialization of the canonical edge set: every downstream
-    # branch (degrees, orientation, wedge closure, the count row) re-reads
-    # the cached edges instead of replaying the upstream lineage — without
-    # this the 4-way stats row re-derives the source scan ~12x.
-    und = _canonical(edges, a, b).persist()
+def _degrees_and_orientation(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(node, deg) over the canonical edges ``und``, and each edge oriented
+    (lo, hi) from its (deg, id)-lexicographically smaller endpoint. The
+    degree table is node-sized, so both endpoint lookups are broadcast
+    and the edge frame never shuffles for orientation (round-12, guide
+    §3.1)."""
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select("v"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    # orient: (deg, id)-lexicographic min endpoint -> max endpoint
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    if broadcast_degrees:
-        du, dv = F.broadcast(du), F.broadcast(dv)
+    du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")))
+    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))
     o = (
-        # degree table is node-sized — broadcast both endpoint lookups
-        # so the edge frame never shuffles for orientation (round-12,
-        # guide §3.1; flag-gated since round 13 — see broadcast_degrees)
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -82,6 +60,22 @@ def triangle_stats(
         )
         .select("e.lo", "e.hi")
     )
+    return deg, o
+
+
+def triangle_stats(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """One-row graph summary: (n_nodes, n_edges, n_wedges, n_triangles).
+
+    n_wedges counts paths of length 2 in the ORIENTED graph (the join's
+    actual intermediate cardinality — the quantity degree orientation
+    bounds), so the row doubles as a plan-cost witness.
+    """
+    # ONE materialization of the canonical edge set: every downstream
+    # branch (degrees, orientation, wedge closure, the count row) re-reads
+    # the cached edges instead of replaying the upstream lineage — without
+    # this the 4-way stats row re-derives the source scan ~12x.
+    und = _canonical(edges, a, b).persist()
+    deg, o = _degrees_and_orientation(und)
     # wedges around the common low endpoint; (x < y) counts each unordered
     # wedge once
     e1 = o.select(F.col("lo").alias("c"), F.col("hi").alias("x"))
@@ -112,12 +106,7 @@ def triangle_stats(
     )
 
 
-def local_clustering(
-    edges: DataFrame,
-    a: str = "src",
-    b: str = "dst",
-    broadcast_degrees: bool = True,
-) -> DataFrame:
+def local_clustering(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     """Per-node local clustering coefficient (Watts & Strogatz 1998):
     (node, deg, n_tri, lcc_e6) for every node with deg >= 2, where
     lcc_e6 = (2e6 · T(v)) div (deg·(deg-1)) and T(v) counts triangles
@@ -126,37 +115,9 @@ def local_clustering(
     Same degree-oriented wedge plan as :func:`triangle_stats` (each
     triangle enumerated ONCE), then each closed wedge fans out its three
     corners — a 3× explode of the triangle stream, not a new join — and
-    one combinable count per node. Integer arithmetic throughout.
-    ``broadcast_degrees`` as in :func:`triangle_stats` (pass ``False``
-    past broadcast limits for the shuffle-join fallback)."""
+    one combinable count per node. Integer arithmetic throughout."""
     und = _canonical(edges, a, b).persist()
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select("v"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    if broadcast_degrees:
-        du, dv = F.broadcast(du), F.broadcast(dv)
-    o = (
-        # degree table is node-sized — broadcast both endpoint lookups
-        # so the edge frame never shuffles for orientation (round-12,
-        # guide §3.1; flag-gated since round 13 — see broadcast_degrees)
-        und.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("lo"), F.col("v").alias("hi")),
-            )
-            .otherwise(F.struct(F.col("v").alias("lo"), F.col("u").alias("hi")))
-            .alias("e")
-        )
-        .select("e.lo", "e.hi")
-    )
+    deg, o = _degrees_and_orientation(und)
     e1 = o.select(F.col("lo").alias("c"), F.col("hi").alias("x"))
     e2 = o.select(F.col("lo").alias("c"), F.col("hi").alias("y"))
     wedges = e1.join(e2, "c").filter(F.col("x") < F.col("y"))
@@ -271,12 +232,7 @@ tri AS (
 )"""
 
 
-def edge_support(
-    edges: DataFrame,
-    a: str = "src",
-    b: str = "dst",
-    broadcast_degrees: bool = True,
-) -> DataFrame:
+def edge_support(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     """Per-edge triangle support histogram: support(e) = number of
     triangles containing e; support-0 edges are LOCAL BRIDGES
     (Granovetter's weak ties — removing one disconnects its endpoints'
@@ -288,37 +244,9 @@ def edge_support(
     (x,y) in canonical order — so support is one combinable count over
     the 3× exploded triangle stream joined back to the edge set.
     Output: (support, n_edges) plus the derived bridge share is the
-    support-0 row. ``broadcast_degrees`` as in :func:`triangle_stats`
-    (pass ``False`` past broadcast limits for the shuffle-join
-    fallback)."""
+    support-0 row."""
     und = _canonical(edges, a, b).persist()
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select("v"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    if broadcast_degrees:
-        du, dv = F.broadcast(du), F.broadcast(dv)
-    o = (
-        # degree table is node-sized — broadcast both endpoint lookups
-        # so the edge frame never shuffles for orientation (round-12,
-        # guide §3.1; flag-gated since round 13 — see broadcast_degrees)
-        und.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("lo"), F.col("v").alias("hi")),
-            )
-            .otherwise(F.struct(F.col("v").alias("lo"), F.col("u").alias("hi")))
-            .alias("e")
-        )
-        .select("e.lo", "e.hi")
-    )
+    _, o = _degrees_and_orientation(und)
     e1 = o.select(F.col("lo").alias("c"), F.col("hi").alias("x"))
     e2 = o.select(F.col("lo").alias("c"), F.col("hi").alias("y"))
     wedges = e1.join(e2, "c").filter(F.col("x") < F.col("y"))

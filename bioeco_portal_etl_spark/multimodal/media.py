@@ -64,7 +64,7 @@ def attach_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 # Deterministic stand-in for a real header parse. Single source of truth for
-# BOTH the pandas stages below and the MM1 oracle SQL (catalog_ext builds the
+# BOTH the pandas stages below and the MM1 oracle SQL (catalog_media builds the
 # SQL from these constants): width = n % W_MOD + DIM_OFF,
 # height = n // H_DIV % H_MOD + DIM_OFF.
 FAKE_W_MOD, FAKE_H_DIV, FAKE_H_MOD, FAKE_DIM_OFF = 640, 7, 480, 16
@@ -299,7 +299,7 @@ def decode_audio(payload: bytes) -> tuple[int, list[int]]:
 # from the id alone, so an oracle can compute ground-truth statistics with
 # PURE ARITHMETIC (no codec) while the Spark side must round-trip the same
 # values through a REAL PNG encode->decode. Single source of truth for both
-# synth_rgb_png below and the MM6 oracle SQL (catalog_ext4 builds the SQL
+# synth_rgb_png below and the MM6 oracle SQL (catalog_media builds the SQL
 # from these constants): w = W_BASE + id % W_MOD, h = H_BASE + id % H_MOD,
 # v(id, x, y, c) = (id*7 + x*3 + y*5 + c*11) % 256.
 SYNTH_W_BASE, SYNTH_W_MOD = 8, 5
@@ -1053,7 +1053,7 @@ def scene_cuts(
 # Deterministic synthetic PCM: clip length and per-sample values derive
 # from the id alone — the audio twin of the SYNTH_* raster above. Single
 # source of truth for synth_pcm_wav below and the MM7 oracle SQL
-# (catalog_ext5 builds the SQL from these constants):
+# (catalog_media builds the SQL from these constants):
 # n = N_BASE + id % N_MOD, s(id, i) = (id*13 + i*7) % 2048 - 1024.
 SYNTH_N_BASE, SYNTH_N_MOD = 800, 257
 

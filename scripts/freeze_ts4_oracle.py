@@ -1,4 +1,4 @@
-"""Regenerate catalog_ext.TS4_SQL: run the deterministic ts4_kmeans_ivf
+"""Regenerate catalog_ann.TS4_SQL: run the deterministic ts4_kmeans_ivf
 entry at the three gate datasets (sf0.001 local pytest gate, sf0.01
 driver gate, sf0.1 full-scale sweep), fingerprint each embeddings table,
 and emit the literal-VALUES oracle dispatched on that fingerprint.
@@ -24,7 +24,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    from bioeco_portal_etl_spark.catalog_ext import ts4_kmeans_ivf
+    from bioeco_portal_etl_spark.catalog_ann import ts4_kmeans_ivf
 
     blocks = []
     for sf in SFS:

@@ -172,22 +172,24 @@ from bioeco_portal_etl_spark.multimodal.phash import (  # noqa: E402
 from bioeco_portal_etl_spark.streaming.joins import interval_join_outer  # noqa: E402
 from bioeco_portal_etl_spark.text.bm25 import bm25_topk  # noqa: E402
 from bioeco_portal_etl_spark.graph.labelprop import label_propagation  # noqa: E402
-from bioeco_portal_etl_spark.catalog_ext31 import (  # noqa: E402
-    dim_covariance_frame,
-    minhash_error_sweep_frame,
-    poisson_bootstrap_frame,
-    rank_stability_frame,
-)
-from bioeco_portal_etl_spark.catalog_ext32 import (  # noqa: E402
-    assortativity_frame,
-    js_divergence_frame,
+from bioeco_portal_etl_spark.catalog_analytics import (  # noqa: E402
+    exact_quantiles_frame,
     ks_test_frame,
-    time_weighted_avg_frame,
+    poisson_bootstrap_frame,
+)
+from bioeco_portal_etl_spark.catalog_ann import dim_covariance_frame  # noqa: E402
+from bioeco_portal_etl_spark.catalog_dedup import (  # noqa: E402
+    minhash_error_sweep_frame,
     truncation_dupes_frame,
 )
-from bioeco_portal_etl_spark.catalog_ext33 import (  # noqa: E402
+from bioeco_portal_etl_spark.catalog_graph import (  # noqa: E402
+    assortativity_frame,
     degree_inequality_frame,
-    exact_quantiles_frame,
+)
+from bioeco_portal_etl_spark.catalog_rel import time_weighted_avg_frame  # noqa: E402
+from bioeco_portal_etl_spark.catalog_text import (  # noqa: E402
+    js_divergence_frame,
+    rank_stability_frame,
 )
 from bioeco_portal_etl_spark.graph.kcore import kcore  # noqa: E402
 from bioeco_portal_etl_spark.operators.drift import profile_drift  # noqa: E402

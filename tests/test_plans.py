@@ -1100,6 +1100,15 @@ def test_gr16_assortativity_single_reduce(spark):
     assert "EvalPython" not in plan and "InPandas" not in plan
 
 
+def test_gr16_degree_lookups_broadcast(spark):
+    """graph/degrees.degree_assortativity broadcasts both node-sized
+    degree lookups onto the edge stream: two BroadcastHashJoins, no
+    SortMergeJoin (the edge list itself never shuffles for them)."""
+    plan = _physical(spark, "gr16_assortativity")
+    assert plan.count("BroadcastHashJoin") >= 2
+    assert "SortMergeJoin" not in plan
+
+
 def test_x39_ring_broadcasts(spark):
     """Ring contract: the N*V vnode table rides broadcast nested-loop
     joins — keys are never shuffled by ring position; per-key routing
@@ -1553,7 +1562,7 @@ def test_mm22_crest_metric_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
-# --- round-7 first batch (ext31) ------------------------------------------
+# --- round-7 first batch ------------------------------------------------
 
 
 def test_mm23_color_jpeg_two_arrow_stages(spark):
@@ -1609,7 +1618,7 @@ def test_x49_bootstrap_partial_aggs_tiny_broadcasts(spark):
     assert "EvalPython" not in plan and "InPandas" not in plan
 
 
-# --- round-7 second batch (ext32) ------------------------------------------
+# --- round-7 second batch ------------------------------------------------
 
 
 def test_x50_ks_integer_core_single_value_window(spark):
@@ -1668,7 +1677,7 @@ def test_rel38_twa_one_window_one_agg(spark):
     assert "EvalPython" not in plan and "InPandas" not in plan
 
 
-# --- round-7 third batch (ext33) -------------------------------------------
+# --- round-7 third batch -------------------------------------------------
 
 
 def test_x51_two_phase_no_global_sort(spark):

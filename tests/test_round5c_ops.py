@@ -124,7 +124,7 @@ def test_semantic_dedupe_bruteforce_parity(spark):
     verdict bit-for-bit."""
     import math
 
-    from bioeco_portal_etl_spark.catalog_ext6 import TD11_THRESHOLD_E4
+    from bioeco_portal_etl_spark.catalog_dedup import TD11_THRESHOLD_E4
     from bioeco_portal_etl_spark.similarity.semantic_dedupe import (
         semantic_dedupe,
     )

@@ -194,7 +194,7 @@ def test_wav_downsample_block_means_roundtrip(spark):
 
 
 def test_pivot_fills_absent_cells_with_zero(spark):
-    from bioeco_portal_etl_spark.catalog_ext8 import (
+    from bioeco_portal_etl_spark.catalog_rel import (
         _PIV_ALIASES,
         _PRIORITIES,
     )
@@ -234,7 +234,7 @@ def test_pivot_fills_absent_cells_with_zero(spark):
 
 
 def test_bpe_encode_counts_bounded_and_compressed(spark):
-    from bioeco_portal_etl_spark.catalog_ext8 import tx24_bpe_encode
+    from bioeco_portal_etl_spark.catalog_text import tx24_bpe_encode
     from bioeco_portal_etl_spark.sources.files import read_parquet_table
     from tests.conftest import SF_SMOKE
 

@@ -217,7 +217,7 @@ def test_rolling_slope_detects_sign(spark):
 
 
 def test_lsh_quality_counts_on_gate_fixture(spark):
-    from bioeco_portal_etl_spark.catalog_ext9 import td12_lsh_quality
+    from bioeco_portal_etl_spark.catalog_dedup import td12_lsh_quality
     from tests.conftest import SF_SMOKE
 
     row = td12_lsh_quality(spark, SF_SMOKE).collect()[0]

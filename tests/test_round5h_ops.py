@@ -76,7 +76,7 @@ def test_scd2_asof_reconstructs_state(spark):
 
 
 def test_percent_rank_exact_rationals(spark):
-    from bioeco_portal_etl_spark.catalog_ext11 import rel28_percent_rank
+    from bioeco_portal_etl_spark.catalog_rel import rel28_percent_rank
     from tests.conftest import SF_SMOKE
 
     rows = rel28_percent_rank(spark, SF_SMOKE).collect()

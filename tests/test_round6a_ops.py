@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 first batch (catalog_ext21):
+"""Operator-level tests for the round-6 first batch:
 Adamic-Adar link prediction, per-label centroid stats, split balance,
 WAV trim bounds. (The JPEG codec itself is covered in test_jpeg.py,
 including hand-pinned spec bitstreams.)"""

@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 second batch (catalog_ext22):
+"""Operator-level tests for the round-6 second batch:
 n-gram novelty, 2-D skyline, local clustering coefficient, pixel
 histogram Gini, nucleus coverage."""
 

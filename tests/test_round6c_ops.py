@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 third batch (catalog_ext23):
+"""Operator-level tests for the round-6 third batch:
 term burstiness, matryoshka prefix recall, mergeable MinHash group
 similarity, JPEG blockiness, duplicate burden."""
 

@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 fourth batch (catalog_ext24):
+"""Operator-level tests for the round-6 fourth batch:
 interval concurrency sweep, weighted median, join-cardinality audit,
 gain normalization, langid confusion."""
 

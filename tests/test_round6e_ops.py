@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 fifth batch (catalog_ext25):
+"""Operator-level tests for the round-6 fifth batch:
 bitmap suitability, shard dup locality, rich club, BPE fertility
 surface, streaming union dedupe."""
 

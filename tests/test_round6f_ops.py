@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 sixth batch (catalog_ext26):
+"""Operator-level tests for the round-6 sixth batch:
 nprobe sweep, CMS error sweep, garbage score, channel correlation,
 expectation drift."""
 
@@ -40,7 +40,7 @@ def test_cms_error_sweep_one_sided_and_decreasing(spark):
 def test_garbage_score_hand_texts(spark):
     """'zzzzzzzzzz' (no vowels, 10-run) flags; normal prose doesn't;
     empty text -> NULL ratio, flagged via the 0-coalesce rule."""
-    from bioeco_portal_etl_spark.catalog_ext26 import tx38_garbage_score
+    from bioeco_portal_etl_spark.catalog_text import tx38_garbage_score
 
     # drive the same expressions through a temp view shaped like documents
     df = spark.createDataFrame(

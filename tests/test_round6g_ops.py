@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 seventh batch (catalog_ext27):
+"""Operator-level tests for the round-6 seventh batch:
 modularity, period growth, centroid drift, key discovery, NDV audit."""
 
 from __future__ import annotations

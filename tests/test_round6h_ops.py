@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 eighth batch (catalog_ext28):
+"""Operator-level tests for the round-6 eighth batch:
 shot lengths, histq error sweep, PQ utilization, decile lift, cycle
 time."""
 

@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 ninth batch (catalog_ext29):
+"""Operator-level tests for the round-6 ninth batch:
 dedupe agreement, top movers, top paths, frame motion, hapax ratio."""
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-6 tenth batch (catalog_ext30):
+"""Operator-level tests for the round-6 tenth batch:
 edge support, id gaps, norm profile, soft-dedupe weights, crest
 factor."""
 

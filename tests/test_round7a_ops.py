@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-7 first batch (catalog_ext31):
+"""Operator-level tests for the round-7 first batch:
 semantics on small/constructed inputs, independent of the DuckDB oracle
 (tests/test_catalog_oracle.py covers the oracle equivalence)."""
 
@@ -112,7 +112,7 @@ def test_td16_catalog_shape_and_error_monotonicity(spark, q):
 def test_tx41_identical_halves_give_perfect_rho(spark):
     """If both halves carry byte-identical text, every shared term ranks
     identically -> d2 = 0 and Spearman = exactly 1e6."""
-    from bioeco_portal_etl_spark.catalog_ext31 import rank_stability_frame
+    from bioeco_portal_etl_spark.catalog_text import rank_stability_frame
 
     text = "alpha alpha alpha beta beta gamma delta delta delta delta"
     docs = spark.createDataFrame(
@@ -129,7 +129,7 @@ def test_tx41_swapped_ranks_match_hand_formula(spark):
     """Even half ranks alpha>beta>gamma; odd half swaps alpha/beta.
     Shared top terms rank (1,2,3) vs (2,1,3): d2 = 1+1+0 = 2 and
     rho = 1 - 6*2/(3*8) = 0.5 exactly."""
-    from bioeco_portal_etl_spark.catalog_ext31 import rank_stability_frame
+    from bioeco_portal_etl_spark.catalog_text import rank_stability_frame
 
     even = "alpha alpha alpha beta beta gamma"
     odd = "beta beta beta alpha alpha gamma"
@@ -187,7 +187,7 @@ def test_x49_poisson_weights_mean_one(spark):
     """The deterministic inverse-CDF draw must produce weights with mean
     ~1 (the Poisson(1) approximation's defining property) — a threshold
     typo would bias every resample the same way."""
-    from bioeco_portal_etl_spark.catalog_ext31 import _B, _pois_case
+    from bioeco_portal_etl_spark.catalog_analytics import _B, _pois_case
 
     rep = (
         spark.range(2000)

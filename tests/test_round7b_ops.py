@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-7 second batch (catalog_ext32):
+"""Operator-level tests for the round-7 second batch:
 semantics on small/constructed inputs, independent of the DuckDB oracle."""
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ def q():
 
 
 def test_x50_identical_distributions_give_zero(spark):
-    from bioeco_portal_etl_spark.catalog_ext32 import ks_test_frame
+    from bioeco_portal_etl_spark.catalog_analytics import ks_test_frame
 
     rows = [(i, f"199{5 + (i % 2)}-03-0{1 + i % 9}", float(100 + i % 7)) for i in range(140)]
     orders = spark.createDataFrame(
@@ -39,7 +39,7 @@ def test_x50_identical_distributions_give_zero(spark):
 
 
 def test_x50_disjoint_distributions_give_one(spark):
-    from bioeco_portal_etl_spark.catalog_ext32 import ks_test_frame
+    from bioeco_portal_etl_spark.catalog_analytics import ks_test_frame
 
     rows = [(i, "1995-01-02", 10.0) for i in range(5)] + [
         (100 + i, "1996-01-02", 99.0) for i in range(7)
@@ -92,7 +92,7 @@ def test_x50_matches_scipy_style_reference(spark, q):
 
 
 def test_tx42_identical_corpora_zero_disjoint_one(spark):
-    from bioeco_portal_etl_spark.catalog_ext32 import js_divergence_frame
+    from bioeco_portal_etl_spark.catalog_text import js_divergence_frame
 
     docs = spark.createDataFrame(
         [
@@ -135,7 +135,7 @@ def _sym_edges(spark, pairs):
 def test_gr22_star_graph_is_disassortative(spark):
     """A star is the canonical disassortative graph: hubs connect only
     to leaves. r = -1 exactly for a pure star."""
-    from bioeco_portal_etl_spark.catalog_ext32 import assortativity_frame
+    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
 
     star = _sym_edges(spark, [(0, i) for i in range(1, 8)])
     r = assortativity_frame(star).collect()[0]
@@ -147,7 +147,7 @@ def test_gr22_star_graph_is_disassortative(spark):
 def test_gr22_regular_graph_degenerate_null(spark):
     """In a k-regular graph every degree is equal — zero variance, the
     coefficient is undefined and must surface NULL, not a crash or 0."""
-    from bioeco_portal_etl_spark.catalog_ext32 import assortativity_frame
+    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
 
     cycle = _sym_edges(spark, [(i, (i + 1) % 6) for i in range(6)])
     r = assortativity_frame(cycle).collect()[0]
@@ -157,7 +157,7 @@ def test_gr22_regular_graph_degenerate_null(spark):
 def test_gr22_matches_hand_pearson(spark):
     """Two triangles joined by a bridge — compute Newman r by hand from
     the directed edge list and compare."""
-    from bioeco_portal_etl_spark.catalog_ext32 import assortativity_frame
+    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
 
     pairs = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5), (2, 3)]
     deg = {}
@@ -185,7 +185,7 @@ def test_gr22_matches_hand_pearson(spark):
 
 
 def test_td17_finds_planted_prefix_pair_not_others(spark):
-    from bioeco_portal_etl_spark.catalog_ext32 import truncation_dupes_frame
+    from bioeco_portal_etl_spark.catalog_dedup import truncation_dupes_frame
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     docs = spark.createDataFrame(
@@ -226,7 +226,7 @@ def test_td17_catalog_pairs_are_verified_prefixes(spark, q):
 def test_rel38_twa_weights_by_duration(spark):
     """value 10 held for 9 s then value 100 for 1 s -> TWA = 19, NOT the
     arithmetic mean 55 — the whole point of time weighting."""
-    from bioeco_portal_etl_spark.catalog_ext32 import time_weighted_avg_frame
+    from bioeco_portal_etl_spark.catalog_rel import time_weighted_avg_frame
 
     events = spark.createDataFrame(
         [
@@ -244,7 +244,7 @@ def test_rel38_twa_weights_by_duration(spark):
 
 
 def test_rel38_single_event_groups_dropped(spark):
-    from bioeco_portal_etl_spark.catalog_ext32 import time_weighted_avg_frame
+    from bioeco_portal_etl_spark.catalog_rel import time_weighted_avg_frame
 
     events = spark.createDataFrame(
         [(1, "2024-01-01 12:00:00", 9, 5.0)],

@@ -1,4 +1,4 @@
-"""Operator-level tests for the round-7 third batch (catalog_ext33)."""
+"""Operator-level tests for the round-7 third batch."""
 
 from __future__ import annotations
 
@@ -137,7 +137,7 @@ def test_x51_matches_sorted_order_statistics(spark, q):
 
 
 def test_x51_tiny_frame_exact(spark):
-    from bioeco_portal_etl_spark.catalog_ext33 import exact_quantiles_frame
+    from bioeco_portal_etl_spark.catalog_analytics import exact_quantiles_frame
 
     vals = [100_000 * i + 7 for i in range(21)]  # one per bucket
     df = spark.createDataFrame([(v,) for v in vals], "v long")
@@ -152,7 +152,7 @@ def test_x51_tiny_frame_exact(spark):
 
 
 def test_gr23_uniform_degrees_gini_zero(spark):
-    from bioeco_portal_etl_spark.catalog_ext33 import degree_inequality_frame
+    from bioeco_portal_etl_spark.catalog_graph import degree_inequality_frame
 
     deg = spark.createDataFrame(
         [(i, 5) for i in range(10)], "node long, deg long"
@@ -166,7 +166,7 @@ def test_gr23_uniform_degrees_gini_zero(spark):
 
 def test_gr23_single_hub_matches_hand_gini(spark):
     """9 nodes of degree 1 + one hub of degree 91: hand Lorenz Gini."""
-    from bioeco_portal_etl_spark.catalog_ext33 import degree_inequality_frame
+    from bioeco_portal_etl_spark.catalog_graph import degree_inequality_frame
 
     degs = [1] * 9 + [91]
     deg = spark.createDataFrame(

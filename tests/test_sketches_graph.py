@@ -400,7 +400,7 @@ def test_readability_orders_simple_vs_dense(spark):
         (2, "Extraordinarily sophisticated considerations necessitate comprehensive organizational restructuring."),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    import bioeco_portal_etl_spark.catalog_ext2 as c2
+    import bioeco_portal_etl_spark.catalog_text as c2
 
     # reuse the catalog expression by registering a temp doc table path is
     # heavier than recomputing; assert via the public query on a temp dir
