@@ -55,49 +55,49 @@ def make_unique(
     it appears later: make.unique(c("x","x","x_1")) -> x, x_2, x_1
     (SURVEY.md §2.6 A4 edge).
 
-    Distributed shape — one pass, no fixpoint, no eager job:
-      1. occurrence index per name: window keyed by name;
-      2. "blocked" suffix integers per base name: parse the distinct names
-         that look like ``base{sep}[1-9][0-9]*`` (a per-name-key groupBy —
-         same shuffle key as the window) into tiny sorted arrays;
-      3. k for occurrence i = left-fold over the blocked array
+    Distributed shape — one window, no join, no eager job:
+      1. posexplode each row into its keys: its own name (role 0) and, for
+         a name shaped ``base{sep}[1-9][0-9]*``, also (base, j) (role 1);
+      2. one window partitioned by key, ordered by role then ``order_by``:
+         row_number gives role-0 rows their occurrence index (they sort
+         before the role-1 rows), collect_set(j) over the whole partition
+         gives the base's "blocked" suffix integers; keep the role-0 rows;
+      3. k for occurrence i = left-fold over the sorted blocked array
          (acc starts at i; each blocked b <= acc bumps acc by 1) — the
          i-th smallest non-blocked positive integer, all in whole-stage
          codegen.
     Synthesized names cannot collide with each other (base + sep + integer
     decomposes uniquely for a non-digit sep) and skip every input name, so
     the output is globally unique and R-identical. Null names pass through
-    null (R propagates NA). Scale: both auxiliary frames hash on the same
-    key as the main window; blocked arrays are bounded by the count of
-    input names shaped like an existing base plus a suffix (tiny).
+    null (R propagates NA). Scale: one hash exchange on the key; the input
+    grows only by the rows whose name is shaped like a base plus a suffix.
     """
     import re as _re
 
     out = out_col or col
     pat = f"^(.*){_re.escape(sep)}([1-9][0-9]*)$"
-    df = df.withColumn(out, F.col(col))
-    w = Window.partitionBy(out).orderBy(*order_by)
-    df = df.withColumn("__occ", (F.row_number().over(w) - 1).cast("long"))
-    blocked = (
-        df.select(F.col(out).alias("__mu_name"))
-        .distinct()
-        .filter(F.col("__mu_name").rlike(pat))
-        .select(
-            F.regexp_extract("__mu_name", pat, 1).alias("__mu_base"),
-            F.regexp_extract("__mu_name", pat, 2).cast("long").alias("__mu_j"),
-        )
-        .groupBy("__mu_base")
-        .agg(F.array_sort(F.collect_set("__mu_j")).alias("__mu_blocked"))
-    )
-    df = df.join(blocked, F.col(out) == F.col("__mu_base"), "left").drop("__mu_base")
+    name = F.col(col)
+    keys = F.when(
+        name.rlike(pat), F.array(name, F.regexp_extract(name, pat, 1))
+    ).otherwise(F.array(name))
+    df = df.select("*", F.posexplode(keys).alias("__mu_role", "__mu_key"))
+    role = F.col("__mu_role")
+    j = F.when(role == 1, F.regexp_extract(name, pat, 2).cast("long"))
+    w = Window.partitionBy("__mu_key").orderBy(role, *order_by)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    df = df.select(
+        "*",
+        (F.row_number().over(w) - 1).cast("long").alias("__occ"),
+        F.array_sort(F.collect_set(j).over(whole)).alias("__mu_blocked"),
+    ).filter(role == 0)
     k = F.aggregate(
-        F.coalesce(F.col("__mu_blocked"), F.array().cast("array<long>")),
+        F.col("__mu_blocked"),
         F.col("__occ"),
         lambda acc, b: F.when(b <= acc, acc + F.lit(1).cast("long")).otherwise(acc),
     )
     return df.withColumn(
         out,
-        F.when(
-            F.col("__occ") > 0, F.concat(F.col(out), F.lit(sep), k.cast("string"))
-        ).otherwise(F.col(out)),
-    ).drop("__occ", "__mu_blocked")
+        F.when(F.col("__occ") > 0, F.concat(name, F.lit(sep), k.cast("string"))).otherwise(
+            name
+        ),
+    ).drop("__mu_role", "__mu_key", "__occ", "__mu_blocked")

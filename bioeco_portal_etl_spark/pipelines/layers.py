@@ -10,8 +10,9 @@ index.Rmd:427,482,501). Re-expressed as dataflow:
      kinds (geojson column, site CSVs, gathered shapefiles, tracks);
   2. ``write_layers``: ONE distributed grouped write — repartition by
      identifier, each executor partition writes its groups' .shp/.shx/.dbf;
-  3. ``has_shapefile`` DERIVED as a semi-join of programs against the layer
-     table (pure dataflow, no mutation);
+  3. ``has_shapefile`` DERIVED per row from the GeoJSON column and the
+     external-source names (pure dataflow, no mutation; the semi-join
+     ``with_has_shapefile`` remains for an arbitrary layer table);
   4. ``write_empty_layers`` for the remainder (K2: the reference emits a
      valid zero-feature layer for 372 of 627 programs).
 
@@ -25,7 +26,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from bioeco_portal_etl_spark.geo.shapefile import write_shapefile
 
@@ -105,45 +106,34 @@ def write_layers(
     layers.select(*cols).repartition(F.col(id_col)).foreachPartition(write_partition)
 
 
+def layer_eligible(geojson_col: str = "geometry_geojson") -> Column:
+    """True where the embedded GeoJSON exports as a homogeneous shapefile
+    layer (index.Rmd:401-415): non-null, not the literal ``"null"``
+    sentinel, and either a bare geometry other than a GeometryCollection
+    or a FeatureCollection whose non-null feature geometry types number
+    exactly one (the reference's mixed-geometry skip). One row-level
+    Column, JVM-side: no explode, groupBy or join copies the lineage.
+    Together with EXTERNAL_LAYER_NAMES it reproduces the published run's
+    372 missing-spatial programs (tests/test_reference_golden_counts.py)."""
+    from bioeco_portal_etl_spark.geo.geojson import _FEATURE_SCHEMA
+
+    g = F.col(geojson_col)
+    t = F.get_json_object(g, "$.type")
+    feats = F.from_json(g, _FEATURE_SCHEMA, {"mode": "PERMISSIVE"}).features
+    types = F.transform(feats, lambda f: F.get_json_object(f.geometry, "$.type"))
+    n_types = F.size(F.array_distinct(F.filter(types, lambda x: x.isNotNull())))
+    bare = t.isNotNull() & ~t.isin("FeatureCollection", "GeometryCollection")
+    homog = (t == "FeatureCollection") & (n_types == 1)
+    return g.isNotNull() & (g != "null") & (bare | homog)
+
+
 def layer_eligible_identifiers(
     programs: DataFrame,
     id_col: str = "identifier",
     geojson_col: str = "geometry_geojson",
 ) -> DataFrame:
-    """Programs whose embedded GeoJSON exports as a homogeneous shapefile
-    layer (index.Rmd:401-415): non-null, not the literal ``"null"``
-    sentinel, and a SINGLE geometry type — bare Point/MultiPoint/etc.
-    geometries qualify trivially; FeatureCollections qualify when their
-    features share one geometry type (the reference's
-    ``length(unique(st_geometry_type(shape))) == 1`` mixed-geometry skip);
-    (empty) GeometryCollections never qualify (zero parsed features).
-
-    All JVM-side: bare-type dispatch is one get_json_object; the
-    FeatureCollection branch re-uses the from_json+posexplode parse and a
-    count-distinct per program. Validated against the published run —
-    together with EXTERNAL_LAYER_NAMES it reproduces the notebook's 372
-    missing-spatial programs (tests/test_reference_golden_counts.py)."""
-    guarded = programs.filter(
-        F.col(geojson_col).isNotNull() & (F.col(geojson_col) != "null")
-    )
-    t = F.get_json_object(F.col(geojson_col), "$.type")
-    bare = guarded.filter(
-        t.isNotNull() & ~t.isin("FeatureCollection", "GeometryCollection")
-    ).select(id_col)
-    from bioeco_portal_etl_spark.geo.geojson import explode_feature_collection
-
-    feats = explode_feature_collection(
-        guarded.filter(t == "FeatureCollection").select(id_col, geojson_col),
-        geojson_col,
-    )
-    homog = (
-        feats.withColumn("__gt", F.get_json_object("geometry_json", "$.type"))
-        .groupBy(id_col)
-        .agg(F.count_distinct("__gt").alias("__n_types"))
-        .filter(F.col("__n_types") == 1)
-        .select(id_col)
-    )
-    return bare.union(homog)
+    """Identifiers of the programs whose GeoJSON passes ``layer_eligible``."""
+    return programs.filter(layer_eligible(geojson_col)).select(id_col)
 
 
 def with_has_shapefile_from_sources(
@@ -153,18 +143,21 @@ def with_has_shapefile_from_sources(
     geojson_col: str = "geometry_geojson",
     name_col: str = "name",
 ) -> DataFrame:
-    """EP2 coverage, derived relationally: has_shapefile = (GeoJSON column
+    """EP2 coverage, derived per row: has_shapefile = (GeoJSON column
     exports a homogeneous layer) OR (program name is served by an external
     spatial source — site CSVs, gathered/copied shapefiles, TSV/XLSX
     tracks; the reference's 34 imperative call sites at
-    index.Rmd:443-462,486,505,513-520,526,542 keyed by name). Replaces the
-    notebook's ``<<-`` mutation bookkeeping with two semi-joins."""
-    eligible = layer_eligible_identifiers(programs, id_col, geojson_col)
-    written = eligible
+    index.Rmd:443-462,486,505,513-520,526,542 keyed by name), false for a
+    null identifier. Replaces the notebook's ``<<-`` mutation bookkeeping
+    with one row-level Column; with the unique identifiers ``combine``
+    makes, it equals the ``with_has_shapefile`` semi-join."""
+    written = layer_eligible(geojson_col)
     if external_names:
-        ext = programs.filter(F.col(name_col).isin(*external_names)).select(id_col)
-        written = written.union(ext)
-    return with_has_shapefile(programs, written.distinct(), id_col)
+        written = written | F.col(name_col).isin(*external_names)
+    return programs.withColumn(
+        "has_shapefile",
+        F.coalesce(F.col(id_col).isNotNull() & written, F.lit(False)),
+    )
 
 
 def with_has_shapefile(

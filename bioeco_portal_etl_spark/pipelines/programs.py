@@ -13,9 +13,11 @@ reference hard-codes them inline (index.Rmd:105-117, :192-271, :728-739);
 an engine drives them from config so new survey rounds don't change code.
 
 Scale notes: the only shuffles are the EuroSea groupBy (A1) and the window
-ops on identifier/username — both keyed on natural entity keys. Joins are
-broadcast (dimension-scale sides). The 279->25 projection happens at scan
-(Catalyst ReadSchema), so fact bytes never pay for dropped columns.
+ops on identifier/username — both keyed on natural entity keys. The one
+join, contacts onto the survey, is broadcast; neither make_unique nor
+EP2's has_shapefile joins, so each source CSV is scanned once. The 279->25
+projection happens at scan (Catalyst ReadSchema), so fact bytes never pay
+for dropped columns.
 """
 
 from __future__ import annotations

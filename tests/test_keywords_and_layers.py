@@ -8,12 +8,15 @@ import os
 
 import pyspark.sql.functions as F
 
+from bioeco_portal_etl_spark.geo.geojson import explode_feature_collection
 from bioeco_portal_etl_spark.geo.shapefile import read_shapefile
 from bioeco_portal_etl_spark.geo.wkt import geom_type
 from bioeco_portal_etl_spark.pipelines.keywords import eov_keyword_links
 from bioeco_portal_etl_spark.pipelines.layers import (
+    layer_eligible_identifiers,
     layer_table_from_geojson,
     with_has_shapefile,
+    with_has_shapefile_from_sources,
     write_layers,
 )
 
@@ -86,3 +89,73 @@ def test_eov_keyword_links(spark):
     out = eov_keyword_links(links, tkeywords)
     rows = {(r.resourcebase_id, r.tkeyword_id) for r in out.collect()}
     assert rows == {(11, 1), (11, 2), (12, 1)}
+
+
+def _has_shapefile_by_semi_join(programs, external_names):
+    """Oracle: the set-based derivation the row-level Column replaced —
+    bare types, plus FeatureCollections exploded and grouped to one
+    distinct geometry type, plus external names, semi-joined back."""
+    g = F.col("geometry_geojson")
+    guarded = programs.filter(g.isNotNull() & (g != "null"))
+    t = F.get_json_object(g, "$.type")
+    bare = guarded.filter(
+        t.isNotNull() & ~t.isin("FeatureCollection", "GeometryCollection")
+    ).select("identifier")
+    feats = explode_feature_collection(
+        guarded.filter(t == "FeatureCollection").select("identifier", "geometry_geojson"),
+        "geometry_geojson",
+    )
+    homog = (
+        feats.withColumn("__gt", F.get_json_object("geometry_json", "$.type"))
+        .groupBy("identifier")
+        .agg(F.count_distinct("__gt").alias("__n_types"))
+        .filter(F.col("__n_types") == 1)
+        .select("identifier")
+    )
+    ext = programs.filter(F.col("name").isin(*external_names)).select("identifier")
+    return with_has_shapefile(programs, bare.union(homog).union(ext).distinct())
+
+
+def test_layer_eligible_matches_semi_join_derivation(spark):
+    point = {"type": "Point", "coordinates": [1.0, 2.0]}
+    poly = {"type": "Polygon", "coordinates": [[[0, 0], [1, 0], [1, 1], [0, 0]]]}
+    rows = [
+        ("null_json", "id_null_json", None),
+        ("null_literal", "id_null_literal", "null"),
+        ("malformed", "id_malformed", '{"type": "FeatureCollection", "features": ['),
+        ("not_json", "id_not_json", "POINT (1 2)"),
+        ("bare_point", "id_bare_point", json.dumps(point)),
+        ("bare_multipoint", "id_bare_multipoint",
+         json.dumps({"type": "MultiPoint", "coordinates": [[1, 2], [3, 4]]})),
+        ("geometry_collection", "id_geometry_collection",
+         json.dumps({"type": "GeometryCollection", "geometries": [point]})),
+        ("fc_homogeneous", "id_fc_homogeneous", _fc(point, point)),
+        ("fc_mixed", "id_fc_mixed", _fc(point, poly)),
+        ("fc_empty", "id_fc_empty", _fc()),
+        ("fc_null_geometry", "id_fc_null_geometry", _fc(None)),
+        ("fc_point_and_null", "id_fc_point_and_null", _fc(point, None)),
+        ("null_identifier", None, json.dumps(point)),
+        ("external", "id_external", None),
+    ]
+    programs = spark.createDataFrame(
+        rows, "name string, identifier string, geometry_geojson string"
+    )
+    external = ["external"]
+    got = {
+        r["name"]: r.has_shapefile
+        for r in with_has_shapefile_from_sources(programs, external).collect()
+    }
+    want = {
+        r["name"]: r.has_shapefile
+        for r in _has_shapefile_by_semi_join(programs, external).collect()
+    }
+    assert got == want
+    assert {n for n, v in got.items() if v} == {
+        "bare_point", "bare_multipoint", "fc_homogeneous", "fc_point_and_null",
+        "external",
+    }
+    eligible = {r.identifier for r in layer_eligible_identifiers(programs).collect()}
+    assert eligible == {
+        "id_bare_point", "id_bare_multipoint", "id_fc_homogeneous",
+        "id_fc_point_and_null", None,
+    }

@@ -9,6 +9,8 @@ documented in text/dedupe.py)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from bioeco_portal_etl_spark import catalog
@@ -1710,3 +1712,53 @@ def test_dq17_freshness_single_pass_broadcast_hwm(spark):
     assert "BroadcastNestedLoopJoin" in plan  # 1-row high-water mark
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan and "InPandas" not in plan
+
+
+# --- portal programs frame -----------------------------------------------
+
+
+def _assert_one_scan_each(plan, columns):
+    """One FileScan per input, told apart by a column only that input has
+    (scan paths are cut short in plan strings, column lists are not)."""
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == len(columns), plan
+    for column in columns:
+        read = re.compile(rf"FileScan \w+ \[(.*,)?{re.escape(column)}#")
+        assert sum(bool(read.search(ln)) for ln in scans) == 1, (column, plan)
+
+
+def test_portal_programs_scan_each_csv_once(spark, tmp_path):
+    """EP1 combine + EP2 coverage over the FIXTURES-shaped inputs: each
+    CSV is scanned once and the only join is the contacts broadcast —
+    has_shapefile is a row-level Column and make_unique a single window,
+    so neither copies the combined lineage."""
+    from bioeco_portal_etl_spark.pipelines.layers import with_has_shapefile_from_sources
+    from bioeco_portal_etl_spark.pipelines.programs import (
+        combine,
+        ingest_contacts,
+        ingest_eurosea,
+        ingest_survey,
+    )
+    from bioeco_portal_etl_spark.sources.files import read_csv
+    from tests import test_programs_pipeline as fx
+
+    def read(name, rows):
+        fx._write_csv(tmp_path / name, rows)
+        return read_csv(spark, str(tmp_path / name))
+
+    contacts = ingest_contacts(read("contacts.csv", fx.CONTACTS_ROWS), fx.CONTACTS_PROJ)
+    initial = ingest_survey(read("survey.csv", fx.SURVEY_ROWS), contacts, fx.SURVEY_PROJ)
+    eurosea = ingest_eurosea(
+        read("eurosea.csv", fx.EUROSEA_ROWS), fx.EUROSEA_PROJ, fx.EUROSEA_FREQ_MAP
+    )
+    programs = with_has_shapefile_from_sources(combine(initial, eurosea), ["Coral Watch"])
+    plan = programs._jdf.queryExecution().executedPlan().toString()
+    _assert_one_scan_each(plan, ["Email", "Abbrev", "Organisation"])
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_p0_canonical_entities_scans_each_table_once(spark):
+    plan = _physical(spark, "p0_canonical_entities")
+    _assert_one_scan_each(plan, ["p_brand", "s_name"])

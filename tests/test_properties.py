@@ -94,6 +94,19 @@ def test_make_unique_matches_r_examples(spark):
         assert vals == expect, (keys, vals, expect)
 
 
+def test_make_unique_base_and_suffix_holder(spark):
+    """"a_1" is both a base (its repeat becomes a_1_1) and a suffix holder
+    that blocks a_1 for the repeats of "a"; "x_1_1" blocks nothing under
+    "x" (its base is "x_1"); nulls pass through."""
+    keys = ["a", "a", "a_1", "a_1", "a_2", "x", "x_1_1", None, None]
+    df = spark.createDataFrame(
+        [(i, k) for i, k in enumerate(keys)], "id int, key string"
+    )
+    out = make_unique(df, "key", [F.col("id").asc()], out_col="uk")
+    vals = [r.uk for r in out.orderBy("id").collect()]
+    assert vals == ["a", "a_3", "a_1", "a_1_1", "a_2", "x", "x_1_1", None, None], vals
+
+
 def test_segment_dedupe_partition_invariant(spark):
     from bioeco_portal_etl_spark.text.dedupe import segment_dedupe
 
