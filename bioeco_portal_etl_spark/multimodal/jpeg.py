@@ -1,5 +1,6 @@
-"""Pure-stdlib baseline JPEG codec (grayscale, sequential DCT): the second
-REAL pixel decoder behind the ``decode_fn`` seam in multimodal/media.py.
+"""Baseline JPEG codec (sequential DCT; stdlib bitstream, numpy DCT and
+color planes): the second REAL pixel decoder behind the ``decode_fn``
+seam in multimodal/media.py.
 
 Round 5 wired genuine PNG decode (multimodal/png.py); JPEG remained the
 documented raise. This module closes that corner for the baseline
@@ -40,7 +41,8 @@ The compensating-bug risk of testing a codec against its own inverse is
 broken by hand-pinned bitstreams in tests/test_jpeg.py: scan bytes for
 known blocks are derived from the spec's code tables BY HAND and
 asserted literally, and the decoder is driven with a hand-assembled file
-the encoder never produced.
+the encoder never produced. The numpy DCT is checked against an
+independent per-term scalar loop that lives only in that test file.
 """
 
 from __future__ import annotations
@@ -48,12 +50,7 @@ from __future__ import annotations
 import math
 import struct
 
-try:  # vectorized DCT/color kernels; the pure-stdlib paths below remain
-    # the portable fallback (and the reference implementation the numpy
-    # forms are tested against) — round-12, guide §4.2
-    import numpy as _np
-except ImportError:  # pragma: no cover - numpy present in all test envs
-    _np = None
+import numpy as np
 
 # --- standard Annex K luminance Huffman tables (ITU-T T.81, public) ------
 
@@ -195,84 +192,47 @@ def _ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
     )
 
 # 8x8 DCT basis: _COS[u][x] = cos((2x+1) u pi / 16), C(u) normalization
-_COS = [[math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)] for u in range(8)]
+_COS = np.array(
+    [[math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)] for u in range(8)]
+)
 _C = [1 / math.sqrt(2)] + [1.0] * 7
+_CCW = 0.25 * np.outer(_C, _C)  # [u][v] DCT normalization
 
 # Association-stability snap for the two DCT-side roundings (round-13,
-# ADVICE r12): the numpy matrix sandwich and the scalar loop sum the same
-# 64 products in different orders, so a coefficient that lands EXACTLY on
-# a round-half boundary in one path can land ~1e-13-relative below it in
-# the other (measured: -7.5 vs -7.499999999999993) and the encoded bytes
-# diverge between environments. Snapping by a fixed epsilon BEFORE the
-# floor makes both paths round identically: the cross-path divergence is
-# bounded by ~1e-10 absolute (64-term accumulation over |sum| <= 16320,
-# scaled by 0.25), 4 orders of magnitude under the snap, while real
-# coefficient distinctions are O(1), 6 orders above it. Applied to the
-# encoder's round-half-away magnitude and the decoder's floor(v + 128.5)
-# — NOT to the YCbCr conversions, which use the same per-element IEEE
-# operation order in both paths (bit-identical by construction) and are
-# mirrored literal-for-literal by the oracle SQL.
+# ADVICE r12): the matrix sandwich below and a per-term scalar loop (the
+# reference in tests/test_jpeg.py) sum the same 64 products in different
+# orders, so a coefficient that lands EXACTLY on a round-half boundary in
+# one form can land ~1e-13-relative below it in the other (measured: -7.5
+# vs -7.499999999999993) and the encoded bytes would depend on the
+# summation order, which also varies with the BLAS numpy is built on. Snapping by a fixed epsilon BEFORE the floor makes both
+# forms round identically: their divergence is bounded by ~1e-10 absolute
+# (64-term accumulation over |sum| <= 16320, scaled by 0.25), 4 orders of
+# magnitude under the snap, while real coefficient distinctions are O(1),
+# 6 orders above it. Applied to the encoder's round-half-away magnitude
+# and the decoder's floor(v + 128.5) — NOT to the YCbCr conversions, which
+# are elementwise with the same IEEE operation order as _rgb_to_ycbcr /
+# _ycbcr_to_rgb and are mirrored literal-for-literal by the oracle SQL.
 _ROUND_SNAP = 1e-6
-
-if _np is not None:
-    _COS_NP = _np.array(_COS)  # [u][x]
-    _CCW_NP = 0.25 * _np.outer(_C, _C)  # [u][v] DCT normalization
 
 
 def _fdct_quant(block):
-    """64 spatial samples (level-shifted) -> 64 quantized (q=1) coeffs in
-    RASTER order, round-half-away-from-zero (the encoder convention).
-
-    numpy path: one 8x8 matrix sandwich (COS @ B @ COS^T) replaces the
-    4096-multiply interpreted loop. Both paths round through the
-    _ROUND_SNAP epsilon, so the reassociated sums (divergence ~1e-10
-    absolute) quantize IDENTICALLY — including at exact round-half
-    coefficients, where the raw floor(|v| + 0.5) flipped between paths
-    (tests/test_jpeg.py asserts numpy == scalar on random blocks)."""
-    if _np is not None:
-        b = block if isinstance(block, _np.ndarray) else _np.asarray(
-            block, dtype=_np.float64
-        )
-        val = _CCW_NP * (_COS_NP @ b @ _COS_NP.T)
-        mag = _np.floor(_np.abs(val) + (0.5 + _ROUND_SNAP))
-        return (
-            _np.where(val >= 0, mag, -mag).astype(_np.int64).ravel().tolist()
-        )
-    out = [0] * 64
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for y in range(8):
-                cy = _COS[u][y]
-                row = block[y]
-                for x in range(8):
-                    s += row[x] * cy * _COS[v][x]
-            val = 0.25 * _C[u] * _C[v] * s
-            out[u * 8 + v] = int(math.floor(abs(val) + (0.5 + _ROUND_SNAP))) * (
-                1 if val >= 0 else -1
-            )
-    return out
+    """64 spatial samples (level-shifted, 8x8) -> 64 quantized (q=1)
+    coeffs in RASTER order, round-half-away-from-zero (the encoder
+    convention), as one 8x8 matrix sandwich (COS @ B @ COS^T). The
+    rounding goes through the _ROUND_SNAP epsilon, so it quantizes
+    exactly like the per-term scalar loop, including at exact round-half
+    coefficients (tests/test_jpeg.py asserts equality on random blocks)."""
+    val = _CCW * (_COS @ np.asarray(block, dtype=np.float64) @ _COS.T)
+    mag = np.floor(np.abs(val) + (0.5 + _ROUND_SNAP))
+    return np.where(val >= 0, mag, -mag).astype(np.int64).ravel().tolist()
 
 
 def _idct(coeffs):
     """64 dequantized coeffs (raster order) -> 8x8 spatial samples
-    (still level-shifted, float). numpy path mirrors _fdct_quant; the
-    decoder's floor(v + 128.5) rounds through the same _ROUND_SNAP so
-    both paths reconstruct identical pixels."""
-    if _np is not None:
-        w = _CCW_NP * _np.asarray(coeffs, dtype=_np.float64).reshape(8, 8)
-        return _COS_NP.T @ w @ _COS_NP
-    out = [[0.0] * 8 for _ in range(8)]
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                cu = _C[u] * _COS[u][y]
-                base = u * 8
-                for v in range(8):
-                    s += _C[v] * coeffs[base + v] * cu * _COS[v][x]
-            out[y][x] = 0.25 * s
-    return out
+    (still level-shifted, float), the transpose sandwich of _fdct_quant;
+    the decoder's floor(v + 128.5) rounds through the same _ROUND_SNAP."""
+    w = _CCW * np.asarray(coeffs, dtype=np.float64).reshape(8, 8)
+    return _COS.T @ w @ _COS
 
 
 def _magnitude_category(n: int) -> int:
@@ -347,14 +307,6 @@ def _encode_coeffs(bw: _BitWriter, coeffs, prev_dc: int, dc_enc, ac_enc) -> int:
     return coeffs[0]
 
 
-def _plane_block(plane: list[list[int]], bx: int, by: int, w: int, h: int):
-    """8x8 level-shifted block at tile (bx, by) with edge replication."""
-    return [
-        [plane[min(by + y, h - 1)][min(bx + x, w - 1)] - 128 for x in range(8)]
-        for y in range(8)
-    ]
-
-
 def encode_jpeg_gray(rows: list[list[int]]) -> bytes:
     """8-bit grayscale rows -> baseline sequential JFIF bytes with
     all-ones quantization (quality-100-lossless-for-flat-blocks) and the
@@ -368,27 +320,16 @@ def encode_jpeg_gray(rows: list[list[int]]) -> bytes:
         raise ValueError("ragged rows")
     bw = _BitWriter()
     prev_dc = 0
-    if _np is not None:
-        # pad the whole plane once (edge replication) and slice blocks —
-        # replaces a per-block per-pixel list build (round-12, §4.2)
-        padded = _np.pad(
-            _np.asarray(rows, dtype=_np.float64) - 128.0,
-            ((0, (-h) % 8), (0, (-w) % 8)),
-            mode="edge",
-        )
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                coeffs = _fdct_quant(padded[by : by + 8, bx : bx + 8])
-                prev_dc = _encode_coeffs(
-                    bw, coeffs, prev_dc, _DC_ENC, _AC_ENC
-                )
-    else:
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                coeffs = _fdct_quant(_plane_block(rows, bx, by, w, h))
-                prev_dc = _encode_coeffs(
-                    bw, coeffs, prev_dc, _DC_ENC, _AC_ENC
-                )
+    # pad the whole plane once (edge replication) and slice blocks
+    padded = np.pad(
+        np.asarray(rows, dtype=np.float64) - 128.0,
+        ((0, (-h) % 8), (0, (-w) % 8)),
+        mode="edge",
+    )
+    for by in range(0, h, 8):
+        for bx in range(0, w, 8):
+            coeffs = _fdct_quant(padded[by : by + 8, bx : bx + 8])
+            prev_dc = _encode_coeffs(bw, coeffs, prev_dc, _DC_ENC, _AC_ENC)
     scan = bw.flush()
 
     def seg(marker: int, payload: bytes) -> bytes:
@@ -428,47 +369,24 @@ def encode_jpeg_color(rows: list[list[int]]) -> bytes:
     tabs = ((_DC_ENC, _AC_ENC), (_DC_ENC_C, _AC_ENC_C), (_DC_ENC_C, _AC_ENC_C))
     bw = _BitWriter()
     prev = [0, 0, 0]
-    if _np is not None:
-        # elementwise pinned RGB->YCbCr over the whole raster: the SAME
-        # per-element IEEE operation order as _rgb_to_ycbcr, so the
-        # plane values are bit-identical to the scalar path (round-12)
-        arr = _np.asarray(rows, dtype=_np.float64)
-        r, g, b = arr[:, 0::3], arr[:, 1::3], arr[:, 2::3]
-        y0 = 0.299 * r + 0.587 * g + 0.114 * b
-        cb0 = 128.0 + (b - y0) / 1.772
-        cr0 = 128.0 + (r - y0) / 1.402
-        pads = ((0, (-h) % 8), (0, (-w) % 8))
-        nplanes = [
-            _np.pad(
-                _np.clip(_np.floor(v + 0.5), 0, 255) - 128.0,
-                pads,
-                mode="edge",
-            )
-            for v in (y0, cb0, cr0)
-        ]
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                for c in range(3):
-                    coeffs = _fdct_quant(
-                        nplanes[c][by : by + 8, bx : bx + 8]
-                    )
-                    prev[c] = _encode_coeffs(bw, coeffs, prev[c], *tabs[c])
-    else:
-        planes: list[list[list[int]]] = [
-            [[0] * w for _ in range(h)] for _ in range(3)
-        ]
-        for y, r in enumerate(rows):
-            for x in range(w):
-                ycc = _rgb_to_ycbcr(r[3 * x], r[3 * x + 1], r[3 * x + 2])
-                for c in range(3):
-                    planes[c][y][x] = ycc[c]
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                for c in range(3):
-                    coeffs = _fdct_quant(
-                        _plane_block(planes[c], bx, by, w, h)
-                    )
-                    prev[c] = _encode_coeffs(bw, coeffs, prev[c], *tabs[c])
+    # elementwise pinned RGB->YCbCr over the whole raster: the SAME
+    # per-element IEEE operation order as _rgb_to_ycbcr, so the plane
+    # values are bit-identical to it
+    arr = np.asarray(rows, dtype=np.float64)
+    r, g, b = arr[:, 0::3], arr[:, 1::3], arr[:, 2::3]
+    y0 = 0.299 * r + 0.587 * g + 0.114 * b
+    cb0 = 128.0 + (b - y0) / 1.772
+    cr0 = 128.0 + (r - y0) / 1.402
+    pads = ((0, (-h) % 8), (0, (-w) % 8))
+    planes = [
+        np.pad(np.clip(np.floor(v + 0.5), 0, 255) - 128.0, pads, mode="edge")
+        for v in (y0, cb0, cr0)
+    ]
+    for by in range(0, h, 8):
+        for bx in range(0, w, 8):
+            for c in range(3):
+                coeffs = _fdct_quant(planes[c][by : by + 8, bx : bx + 8])
+                prev[c] = _encode_coeffs(bw, coeffs, prev[c], *tabs[c])
     scan = bw.flush()
 
     def seg(marker: int, payload: bytes) -> bytes:
@@ -676,67 +594,33 @@ def _decode_scan(data, w, h, comps):
     bw_blocks = (w + 7) // 8
     bh_blocks = (h + 7) // 8
     prev = [0] * nc
-    if _np is not None:
-        # whole-plane numpy assembly: block placement is a slice store,
-        # level shift / clamp / the pinned YCbCr inverse run elementwise
-        # over the full raster with the SAME per-element IEEE operation
-        # order as the scalar path (bit-identical) — round-12, guide §4.2
-        fplanes = [
-            _np.empty((bh_blocks * 8, bw_blocks * 8)) for _ in range(nc)
-        ]
-        for by in range(bh_blocks):
-            for bx in range(bw_blocks):
-                for c, (q, dc_tab, ac_tab) in enumerate(comps):
-                    spat, prev[c] = _decode_block(
-                        br, dc_tab, ac_tab, q, prev[c]
-                    )
-                    fplanes[c][
-                        by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8
-                    ] = spat
-        iplanes = [
-            _np.clip(
-                _np.floor(fp[:h, :w] + (128.5 + _ROUND_SNAP)), 0, 255
-            ).astype(_np.int64)
-            for fp in fplanes
-        ]
-        if nc == 1:
-            return w, h, 1, iplanes[0].tolist()
-        yp, cbp, crp = (p.astype(_np.float64) for p in iplanes)
-        r0 = yp + 1.402 * (crp - 128)
-        b0 = yp + 1.772 * (cbp - 128)
-        g0 = (yp - 0.299 * r0 - 0.114 * b0) / 0.587
-        rgb = _np.empty((h, 3 * w), dtype=_np.int64)
-        rgb[:, 0::3] = _np.clip(_np.floor(r0 + 0.5), 0, 255)
-        rgb[:, 1::3] = _np.clip(_np.floor(g0 + 0.5), 0, 255)
-        rgb[:, 2::3] = _np.clip(_np.floor(b0 + 0.5), 0, 255)
-        return w, h, 3, rgb.tolist()
-    planes = [[[0] * w for _ in range(h)] for _ in range(nc)]
+    # whole-plane assembly: block placement is a slice store; level shift,
+    # clamp and the pinned YCbCr inverse run elementwise over the full
+    # raster with the SAME per-element IEEE operation order as
+    # _ycbcr_to_rgb (bit-identical to it)
+    fplanes = [np.empty((bh_blocks * 8, bw_blocks * 8)) for _ in range(nc)]
     for by in range(bh_blocks):
         for bx in range(bw_blocks):
             for c, (q, dc_tab, ac_tab) in enumerate(comps):
                 spat, prev[c] = _decode_block(br, dc_tab, ac_tab, q, prev[c])
-                plane = planes[c]
-                for y in range(8):
-                    py = by * 8 + y
-                    if py >= h:
-                        break
-                    row = plane[py]
-                    srow = spat[y]
-                    for x in range(8):
-                        px = bx * 8 + x
-                        if px >= w:
-                            break
-                        v = int(math.floor(srow[x] + (128.5 + _ROUND_SNAP)))
-                        row[px] = 0 if v < 0 else (255 if v > 255 else v)
+                fplanes[c][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = spat
+    iplanes = [
+        np.clip(np.floor(fp[:h, :w] + (128.5 + _ROUND_SNAP)), 0, 255).astype(
+            np.int64
+        )
+        for fp in fplanes
+    ]
     if nc == 1:
-        return w, h, 1, planes[0]
-    out = [[0] * (3 * w) for _ in range(h)]
-    for y in range(h):
-        yrow, cbrow, crrow, orow = planes[0][y], planes[1][y], planes[2][y], out[y]
-        for x in range(w):
-            r, g, b = _ycbcr_to_rgb(yrow[x], cbrow[x], crrow[x])
-            orow[3 * x], orow[3 * x + 1], orow[3 * x + 2] = r, g, b
-    return w, h, 3, out
+        return w, h, 1, iplanes[0].tolist()
+    yp, cbp, crp = (p.astype(np.float64) for p in iplanes)
+    r0 = yp + 1.402 * (crp - 128)
+    b0 = yp + 1.772 * (cbp - 128)
+    g0 = (yp - 0.299 * r0 - 0.114 * b0) / 0.587
+    rgb = np.empty((h, 3 * w), dtype=np.int64)
+    rgb[:, 0::3] = np.clip(np.floor(r0 + 0.5), 0, 255)
+    rgb[:, 1::3] = np.clip(np.floor(g0 + 0.5), 0, 255)
+    rgb[:, 2::3] = np.clip(np.floor(b0 + 0.5), 0, 255)
+    return w, h, 3, rgb.tolist()
 
 
 def jpeg_header_fn(payload: bytes) -> tuple[int, int, str]:

@@ -4,12 +4,12 @@ Images/audio/video travel through the pipeline as ``BinaryType`` payload
 columns plus a typed metadata struct; decode / feature-extract runs as
 ``mapInPandas`` (Arrow batches, one Python process per task — the ONLY
 sanctioned Python hot path in the engine). Codec status: PNG decodes
-PIXEL-LEVEL for real via the pure-stdlib codec in :mod:`multimodal.png`
+PIXEL-LEVEL for real via the zlib + numpy codec in :mod:`multimodal.png`
 (``decode_image``, and the ``decode_fn`` seams on the metadata/resize
 stages) and for baseline JPEG via :mod:`multimodal.jpeg`; profiles beyond
 those route through the OPTIONAL Pillow arm (``_pil_decode``) when Pillow
 is installed, and raise otherwise. Audio decodes for real via the
-pure-stdlib WAV codec in :mod:`multimodal.wavpcm`; compressed containers
+``wave`` + numpy WAV codec in :mod:`multimodal.wavpcm`; compressed containers
 (MP3/FLAC/OGG) route through the OPTIONAL PyAV/ffmpeg arm
 (``_av_decode_audio`` behind ``decode_audio``) when PyAV is installed, and
 raise otherwise. Video remains frame-STUBBED by deliberate decline: every
@@ -26,6 +26,10 @@ deterministic fake dimensions from the byte stream so the Spark-side
 contract — schema, batch shape, partitioning — stays oracle-checkable with
 no codec at all.
 
+The vectorized kernels (pixel stats, histograms, WAV synth, clip stats,
+trim and downsample, byte features) have one code path, numpy: it is
+always present wherever ``mapInPandas`` runs, since that needs pandas.
+
 Scale notes: binary payloads make rows wide -> keep
 ``spark.sql.files.maxPartitionBytes`` at default 128 MB so tasks stay
 memory-bounded, and NEVER collect payload columns; metadata extraction
@@ -39,13 +43,7 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-try:  # vectorized per-sample/per-pixel kernels INSIDE the existing Arrow
-    # tasks (round-13, guide §4.2); every pure-Python loop below remains
-    # the portable fallback and the reference the numpy forms are tested
-    # against (tests/test_media_numpy_equivalence.py)
-    import numpy as _np
-except ImportError:  # pragma: no cover - numpy present in all test envs
-    _np = None
+import numpy as np
 
 MEDIA_META_SCHEMA = (
     "media_id long, n_bytes long, width long, height long, media_format string"
@@ -170,7 +168,7 @@ def _pil_decode(payload: bytes) -> tuple[int, int, int, list[list[int]]]:
 
 def decode_image(payload: bytes) -> tuple[int, int, int, list[list[int]]]:
     """Full-pixel decode plug-point: (width, height, channels, rows of flat
-    8-bit samples). REAL for PNG — the pure-stdlib codec in
+    8-bit samples). REAL for PNG — the zlib + numpy codec in
     :mod:`multimodal.png` (zlib inflate + all five scanline filters) — and
     for baseline sequential JPEG, grayscale AND 4:4:4 YCbCr color —
     :mod:`multimodal.jpeg` (Huffman + DPCM + dequant + IDCT + pinned
@@ -275,7 +273,7 @@ def _av_decode_audio(payload: bytes) -> tuple[int, list[int]]:
 
 def decode_audio(payload: bytes) -> tuple[int, list[int]]:
     """Audio-decode plug-point: container bytes -> (sample_rate, mono
-    16-bit PCM samples). REAL for RIFF/WAVE via the pure-stdlib codec in
+    16-bit PCM samples). REAL for RIFF/WAVE via the ``wave`` codec in
     :mod:`multimodal.wavpcm`; every other container routes through the
     OPTIONAL PyAV/ffmpeg arm (:func:`_av_decode_audio`, import-gated like
     Pillow in :func:`decode_image`); without PyAV the seam's error
@@ -465,38 +463,19 @@ def png_channel_stats(df: DataFrame, on_error: str = "raise") -> DataFrame:
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
                     w, h, ch, rows = decode_image(bytes(payload))
-                    if _np is not None:
-                        # one int64 matrix per image; channel c is the
-                        # strided column slice; // floors the nonneg mean
-                        # exactly like the scalar sum//len
-                        a = _np.asarray(rows, dtype=_np.int64)
-                        for c in range(ch):
-                            vals = a[:, c::ch]
-                            rows_out.append(
-                                {
-                                    "media_id": mid,
-                                    "channel": c,
-                                    "n_px": int(vals.size),
-                                    "mean_v": int(vals.sum() // vals.size),
-                                    "min_v": int(vals.min()),
-                                    "max_v": int(vals.max()),
-                                    "decode_ok": 1,
-                                    "decode_err": None,
-                                }
-                            )
-                        continue
+                    # one int64 matrix per image; channel c is the
+                    # strided column slice; // floors the nonneg mean
+                    a = np.asarray(rows, dtype=np.int64)
                     for c in range(ch):
-                        vals = [
-                            r[i] for r in rows for i in range(c, len(r), ch)
-                        ]
+                        vals = a[:, c::ch]
                         rows_out.append(
                             {
                                 "media_id": mid,
                                 "channel": c,
-                                "n_px": len(vals),
-                                "mean_v": sum(vals) // len(vals),
-                                "min_v": min(vals),
-                                "max_v": max(vals),
+                                "n_px": int(vals.size),
+                                "mean_v": int(vals.sum() // vals.size),
+                                "min_v": int(vals.min()),
+                                "max_v": int(vals.max()),
                                 "decode_ok": 1,
                                 "decode_err": None,
                             }
@@ -541,58 +520,26 @@ def image_histogram_stats(df: DataFrame) -> DataFrame:
     import pandas as pd
 
     def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from collections import Counter
-
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 w, h, ch, rows = decode_image(bytes(payload))
-                a = (
-                    _np.asarray(rows, dtype=_np.int64)
-                    if _np is not None
-                    else None
-                )
+                a = np.asarray(rows, dtype=np.int64)
                 for c in range(ch):
-                    if a is not None:
-                        # 8-bit values -> one bincount; argmax returns
-                        # the SMALLEST value among max-count ties, the
-                        # same tie-break as the scalar min((-count, v))
-                        counts_np = _np.bincount(
-                            a[:, c::ch].ravel(), minlength=256
-                        )
-                        n = int(counts_np.sum())
-                        mode_v = int(counts_np.argmax())
-                        mode_count = int(counts_np[mode_v])
-                        n_distinct = int((counts_np > 0).sum())
-                        sq = int(counts_np @ counts_np)
-                        out.append(
-                            (
-                                mid,
-                                c,
-                                n,
-                                n_distinct,
-                                mode_v,
-                                mode_count,
-                                1_000_000 - (1_000_000 * sq) // (n * n),
-                            )
-                        )
-                        continue
-                    counts = Counter(
-                        r[i] for r in rows for i in range(c, len(r), ch)
-                    )
-                    n = sum(counts.values())
-                    mode_v, mode_count = min(
-                        counts.items(), key=lambda kv: (-kv[1], kv[0])
-                    )
-                    sq = sum(v * v for v in counts.values())
+                    # 8-bit values -> one bincount; argmax returns the
+                    # SMALLEST value among max-count ties
+                    counts = np.bincount(a[:, c::ch].ravel(), minlength=256)
+                    n = int(counts.sum())
+                    mode_v = int(counts.argmax())
+                    sq = int(counts @ counts)
                     out.append(
                         (
                             mid,
                             c,
                             n,
-                            len(counts),
+                            int((counts > 0).sum()),
                             mode_v,
-                            mode_count,
+                            int(counts[mode_v]),
                             1_000_000 - (1_000_000 * sq) // (n * n),
                         )
                     )
@@ -919,7 +866,6 @@ def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
     STUB featurizer: byte-histogram over ``dim`` buckets, L1-normalized —
     deterministic, vectorized, and shaped exactly like a real encoder
     output (array<float> ready for similarity/knn)."""
-    import numpy as np
     import pandas as pd
 
     def feats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -1075,16 +1021,8 @@ def synth_pcm_wav(df: DataFrame, id_col: str) -> DataFrame:
                 mid = int(mid)
                 n = SYNTH_N_BASE + mid % SYNTH_N_MOD
                 ids.append(mid)
-                if _np is not None:
-                    # same formula over int64 — both operands positive,
-                    # so numpy % matches Python % exactly
-                    i = _np.arange(n, dtype=_np.int64)
-                    samples = (mid * 13 + i * 7) % 2048 - 1024
-                else:
-                    samples = [
-                        (mid * 13 + i * 7) % 2048 - 1024 for i in range(n)
-                    ]
-                blobs.append(encode_wav(samples))
+                i = np.arange(n, dtype=np.int64)
+                blobs.append(encode_wav((mid * 13 + i * 7) % 2048 - 1024))
             yield pd.DataFrame({"media_id": ids, "payload": blobs})
 
     return df.mapInPandas(gen, schema="media_id long, payload binary")
@@ -1104,7 +1042,7 @@ QUARANTINED_CLIP_SCHEMA = (
 
 def wav_clip_stats(df: DataFrame, on_error: str = "raise") -> DataFrame:
     """(media_id, payload) -> per-clip PCM statistics via a FULL
-    :func:`wavpcm.decode_wav` container parse inside the Arrow batch:
+    :func:`wavpcm.decode_wav_np` container parse inside the Arrow batch:
     sample count, integer energy (sum of squares), min/max amplitude and
     zero-crossing count — the silence/clipping/voicing triage numbers an
     audio-curation pipeline gates on before any expensive featurizer.
@@ -1124,49 +1062,23 @@ def wav_clip_stats(df: DataFrame, on_error: str = "raise") -> DataFrame:
     quarantine = on_error == "quarantine"
 
     def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from bioeco_portal_etl_spark.multimodal.wavpcm import (
-            decode_wav,
-            decode_wav_np,
-        )
+        from bioeco_portal_etl_spark.multimodal.wavpcm import decode_wav_np
 
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    if _np is not None:
-                        # int64 throughout: energy = exact integer dot;
-                        # zero_cross counts sign-bit flips between
-                        # neighbors — identical to the scalar fold
-                        _, a = decode_wav_np(bytes(payload))
-                        nz = bool(a.size)
-                        rec = {
-                            "media_id": mid,
-                            "n_samples": int(a.size),
-                            "energy": int(a @ a),
-                            "min_s": int(a.min()) if nz else None,
-                            "max_s": int(a.max()) if nz else None,
-                            "zero_cross": int(
-                                ((a[:-1] >= 0) != (a[1:] >= 0)).sum()
-                            )
-                            if nz
-                            else 0,
-                            "decode_ok": 1,
-                            "decode_err": None,
-                        }
-                        rows.append(rec)
-                        continue
-                    _, s = decode_wav(bytes(payload))
+                    # int64 throughout: energy = exact integer dot;
+                    # zero_cross counts sign flips between neighbors
+                    _, a = decode_wav_np(bytes(payload))
+                    nz = bool(a.size)
                     rec = {
                         "media_id": mid,
-                        "n_samples": len(s),
-                        "energy": sum(v * v for v in s),
-                        "min_s": min(s) if s else None,
-                        "max_s": max(s) if s else None,
-                        "zero_cross": sum(
-                            1
-                            for a, b in zip(s, s[1:])
-                            if (a >= 0) != (b >= 0)
-                        ),
+                        "n_samples": int(a.size),
+                        "energy": int(a @ a),
+                        "min_s": int(a.min()) if nz else None,
+                        "max_s": int(a.max()) if nz else None,
+                        "zero_cross": int(((a[:-1] >= 0) != (a[1:] >= 0)).sum()),
                         "decode_ok": 1,
                         "decode_err": None,
                     }
@@ -1210,7 +1122,7 @@ TRIM_BOUNDS_SCHEMA = (
 
 def wav_trim_bounds(df: DataFrame, threshold: int = 128) -> DataFrame:
     """(media_id, payload) -> leading/trailing low-amplitude trim points
-    via a FULL :func:`wavpcm.decode_wav` parse: first_loud / last_loud
+    via a FULL :func:`wavpcm.decode_wav_np` parse: first_loud / last_loud
     are the first and last sample indices with |s| >= ``threshold``,
     n_trimmed the samples a trim would drop, kept_energy the integer
     energy of the retained span — the silence-trimming stage an
@@ -1223,49 +1135,23 @@ def wav_trim_bounds(df: DataFrame, threshold: int = 128) -> DataFrame:
     import pandas as pd
 
     def bounds(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from bioeco_portal_etl_spark.multimodal.wavpcm import (
-            decode_wav,
-            decode_wav_np,
-        )
+        from bioeco_portal_etl_spark.multimodal.wavpcm import decode_wav_np
 
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if _np is not None:
-                    # int64 abs (no int16 |−32768| overflow), nonzero for
-                    # the first/last loud index, exact integer dot for
-                    # the kept-span energy
-                    _, a = decode_wav_np(bytes(payload))
-                    (loud_idx,) = _np.nonzero(_np.abs(a) >= threshold)
-                    if loud_idx.size:
-                        lo, hi = int(loud_idx[0]), int(loud_idx[-1])
-                        kept = a[lo : hi + 1]
-                        rec = (
-                            mid,
-                            int(a.size),
-                            lo,
-                            hi,
-                            lo + (int(a.size) - 1 - hi),
-                            int(kept @ kept),
-                        )
-                    else:
-                        rec = (mid, int(a.size), None, None, int(a.size), None)
-                    rows.append(rec)
-                    continue
-                _, s = decode_wav(bytes(payload))
-                loud = [i for i, v in enumerate(s) if abs(v) >= threshold]
-                if loud:
-                    lo, hi = loud[0], loud[-1]
-                    rec = (
-                        mid,
-                        len(s),
-                        lo,
-                        hi,
-                        lo + (len(s) - 1 - hi),
-                        sum(v * v for v in s[lo : hi + 1]),
-                    )
+                # int64 abs (no int16 |−32768| overflow), nonzero for the
+                # first/last loud index, exact integer dot for the
+                # kept-span energy
+                _, a = decode_wav_np(bytes(payload))
+                (loud_idx,) = np.nonzero(np.abs(a) >= threshold)
+                n = int(a.size)
+                if loud_idx.size:
+                    lo, hi = int(loud_idx[0]), int(loud_idx[-1])
+                    kept = a[lo : hi + 1]
+                    rec = (mid, n, lo, hi, lo + (n - 1 - hi), int(kept @ kept))
                 else:
-                    rec = (mid, len(s), None, None, len(s), None)
+                    rec = (mid, n, None, None, n, None)
                 rows.append(rec)
             yield pd.DataFrame(
                 rows,
@@ -1301,7 +1187,6 @@ def wav_downsample(df: DataFrame, factor: int = 4) -> DataFrame:
 
     def ds(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         from bioeco_portal_etl_spark.multimodal.wavpcm import (
-            decode_wav,
             decode_wav_np,
             encode_wav,
         )
@@ -1309,19 +1194,11 @@ def wav_downsample(df: DataFrame, factor: int = 4) -> DataFrame:
         for pdf in batches:
             ids, blobs = [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if _np is not None:
-                    # full blocks only (truncate), int64 block sums, //
-                    # is floor division in numpy exactly as in Python —
-                    # negative block sums round identically
-                    rate, a = decode_wav_np(bytes(payload))
-                    nb = a.size // factor
-                    out = a[: nb * factor].reshape(nb, factor).sum(axis=1) // factor
-                else:
-                    rate, s = decode_wav(bytes(payload))
-                    out = [
-                        sum(s[j * factor : (j + 1) * factor]) // factor
-                        for j in range(len(s) // factor)
-                    ]
+                # full blocks only (truncate), int64 block sums; numpy //
+                # floors negative block sums exactly as Python does
+                rate, a = decode_wav_np(bytes(payload))
+                nb = a.size // factor
+                out = a[: nb * factor].reshape(nb, factor).sum(axis=1) // factor
                 ids.append(mid)
                 blobs.append(encode_wav(out, sample_rate=rate // factor))
             yield pd.DataFrame({"media_id": ids, "payload": blobs})

@@ -1,5 +1,5 @@
-"""Pure-stdlib PNG codec (zlib + struct): the REAL pixel decoder behind the
-``decode_fn`` seam in multimodal/media.py.
+"""PNG codec (zlib + struct, numpy for whole-raster slices): the REAL pixel
+decoder behind the ``decode_fn`` seam in multimodal/media.py.
 
 This environment has no PIL/opencv, but PNG's baseline profile needs only
 ``zlib`` — so the codec seam can be exercised on genuine raster bytes
@@ -16,7 +16,7 @@ seam contract is "raise on what you can't decode", so a corrupt or exotic
 payload surfaces as a per-row error, never silent wrong pixels.
 
 Scale note: this runs inside the Arrow batch loop of ``mapInPandas``
-(multimodal/media.py) — per-payload pure-Python cost, zero JVM round-trips,
+(multimodal/media.py) — per-payload Python/numpy cost, zero JVM round-trips,
 payload never leaves the batch. A production deployment swaps these
 functions for PIL at the same seam without touching the Spark plan.
 """
@@ -26,12 +26,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-try:  # vectorized fast paths; the pure-stdlib loops below remain the
-    # portable fallback and reference (round-13, guide §4.2 — same
-    # convention as multimodal/jpeg.py)
-    import numpy as _np
-except ImportError:  # pragma: no cover - numpy present in all test envs
-    _np = None
+import numpy as np
 
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -125,20 +120,13 @@ def decode_png(payload: bytes) -> tuple[int, int, int, list[list[int]]]:
     stride = width * channels
     if len(raw) != height * (stride + 1):
         raise ValueError("IDAT size mismatch")
-    if _np is not None:
-        arr = _np.frombuffer(raw, dtype=_np.uint8).reshape(
-            height, stride + 1
-        )
-        if not arr[:, 0].any():
-            # every scanline filter-0 (what encode_png writes, and the
-            # common case for synthetic corpora): the whole raster is a
-            # slice — no per-byte unfilter loop (round-13, guide §4.2)
-            return (
-                width,
-                height,
-                channels,
-                arr[:, 1:].astype(_np.int64).tolist(),
-            )
+    arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
+    if not arr[:, 0].any():
+        # every scanline filter-0 (what encode_png writes, and the common
+        # case for synthetic corpora): the whole raster is a slice — no
+        # per-byte unfilter loop
+        return width, height, channels, arr[:, 1:].astype(np.int64).tolist()
+    # some scanline uses filter 1-4: unfilter byte by byte
     rows: list[list[int]] = []
     prev = bytearray(stride)
     for y in range(height):
@@ -184,23 +172,10 @@ def resize_nearest(
     scale_num, scale_den = min(max_dim, max(width, height)), max(width, height)
     out_w = max(width * scale_num // scale_den, 1)
     out_h = max(height * scale_num // scale_den, 1)
-    if _np is not None:
-        # identical integer source indexing as the scalar loop, as two
-        # gather index vectors (round-13, guide §4.2)
-        a = _np.asarray(rows, dtype=_np.int64).reshape(
-            len(rows), width, channels
-        )
-        sy = (_np.arange(out_h, dtype=_np.int64) * height) // out_h
-        sx = (_np.arange(out_w, dtype=_np.int64) * width) // out_w
-        picked = a[sy][:, sx].reshape(out_h, out_w * channels)
-        return out_w, out_h, picked.tolist()
-    out = []
-    for oy in range(out_h):
-        sy = oy * height // out_h
-        src = rows[sy]
-        line = []
-        for ox in range(out_w):
-            sx = ox * width // out_w
-            line.extend(src[sx * channels : (sx + 1) * channels])
-        out.append(line)
-    return out_w, out_h, out
+    # integer source indexing src = i * size // size', as two gather
+    # index vectors
+    a = np.asarray(rows, dtype=np.int64).reshape(len(rows), width, channels)
+    sy = (np.arange(out_h, dtype=np.int64) * height) // out_h
+    sx = (np.arange(out_w, dtype=np.int64) * width) // out_w
+    picked = a[sy][:, sx].reshape(out_h, out_w * channels)
+    return out_w, out_h, picked.tolist()

@@ -1,8 +1,8 @@
 """Real PCM WAV encode/decode on in-memory bytes — the audio twin of
 multimodal/png.py: a genuine RIFF/WAVE codec (stdlib ``wave`` + ``struct``,
-nothing to install) so the audio stages of the media pipeline can be proven
-end-to-end on real container bytes instead of the ASCII stand-in payloads
-mm4 documents (multimodal/media.py audio_frame_features).
+numpy for sample packing) so the audio stages of the media pipeline can be
+proven end-to-end on real container bytes instead of the ASCII stand-in
+payloads mm4 documents (multimodal/media.py audio_frame_features).
 
 The reference has no audio surface at all (854 lines of R over tabular/geo
 data — `notebooks/index.Rmd`); this exists for the training-data-pipeline
@@ -23,12 +23,7 @@ import io
 import struct
 import wave
 
-try:  # vectorized sample (un)packing; stdlib path is the byte-identical
-    # fallback and reference (round-13, guide §4.2 — same convention as
-    # multimodal/jpeg.py)
-    import numpy as _np
-except ImportError:  # pragma: no cover - numpy present in all test envs
-    _np = None
+import numpy as np
 
 SAMPLE_RATE = 16000
 
@@ -37,19 +32,16 @@ def encode_wav(samples, sample_rate: int = SAMPLE_RATE) -> bytes:
     """Mono 16-bit PCM WAV bytes for ``samples`` (ints in [-32768, 32767];
     list or 1-D integer numpy array). Deterministic: fixed
     rate/width/channels, no metadata chunks beyond what ``wave`` always
-    writes — byte-identical across runs and hosts. The numpy path packs
-    via ``astype('<i2').tobytes()`` (identical little-endian int16 bytes
-    to ``struct.pack``) with explicit type and range checks mirroring
-    struct.pack's errors (a float sample is rejected, never truncated)."""
-    if _np is not None:
-        arr = _np.asarray(samples)
-        if arr.size and arr.dtype.kind not in "biu":
-            raise TypeError(f"samples must be integers, got {arr.dtype}")
-        if arr.size and (arr.min() < -32768 or arr.max() > 32767):
-            raise ValueError("sample out of int16 range")
-        frames = arr.astype("<i2").tobytes()
-    else:
-        frames = struct.pack(f"<{len(samples)}h", *samples)
+    writes — byte-identical across runs and hosts. Packs via
+    ``astype('<i2').tobytes()`` (the little-endian int16 bytes
+    ``struct.pack('<h')`` writes) with explicit type and range checks: a
+    float sample is rejected, never truncated."""
+    arr = np.asarray(samples)
+    if arr.size and arr.dtype.kind not in "biu":
+        raise TypeError(f"samples must be integers, got {arr.dtype}")
+    if arr.size and (arr.min() < -32768 or arr.max() > 32767):
+        raise ValueError("sample out of int16 range")
+    frames = arr.astype("<i2").tobytes()
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
@@ -86,12 +78,9 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
 
 def decode_wav_np(payload: bytes):
     """(sample_rate, int64 numpy array) — the vectorized twin of
-    :func:`decode_wav` for numpy-path consumers:
+    :func:`decode_wav` for numpy consumers:
     ``frombuffer('<i2')`` reads the identical little-endian int16 frames,
     widened to int64 so downstream integer arithmetic (energy sums,
-    products) cannot overflow. Raises exactly like decode_wav; falls back
-    to decode_wav without numpy."""
-    if _np is None:  # pragma: no cover - numpy present in all test envs
-        return decode_wav(payload)
+    products) cannot overflow. Raises exactly like decode_wav."""
     rate, _, raw = _read_pcm(payload)
-    return rate, _np.frombuffer(raw, dtype="<i2").astype(_np.int64)
+    return rate, np.frombuffer(raw, dtype="<i2").astype(np.int64)

@@ -4,8 +4,8 @@ Reference parity:
   - read_csv  -> notebooks/index.Rmd:56,69,433 (read.csv; multiline quoted
     GeoJSON fields — 25,123 physical lines for 243 records)
   - read_tsv  -> notebooks/index.Rmd:531
-  - read_excel-> notebooks/index.Rmd:135,547 (read.xlsx sheet 1) — gated: no
-    xlsx lib in this environment; a pandas bridge is used when available
+  - read_excel-> notebooks/index.Rmd:135,547 (read.xlsx sheet 1) — the
+    bundled stdlib reader in sources/xlsx.py, one path everywhere
   - list_files-> notebooks/index.Rmd:472-474 (recursive .shp listing)
 
 Scale notes: CSV with multiLine=True cannot be split within a file (each file
@@ -20,6 +20,9 @@ import glob as _glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from bioeco_portal_etl_spark.sources.xlsx import read_xlsx_table
 
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -83,35 +86,20 @@ def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -
 def read_excel(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:
     """S4: Excel scan (reference read.xlsx, notebooks/index.Rmd:135,547).
     Driver-side by design — xlsx files are dimension-scale configuration
-    inputs. Uses pandas' xlsx engine when one is installed; otherwise the
-    bundled pure-stdlib reader (sources/xlsx.py), so the path is runnable
-    with no optional dependencies. All-numeric columns arrive as double,
-    everything else as string with blank cells null (R read.xlsx's
-    numeric-or-character column typing)."""
-    try:
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet)
-        return spark.createDataFrame(pdf)
-    except ImportError:
-        from bioeco_portal_etl_spark.sources.xlsx import read_xlsx_table
-
-        header, body = read_xlsx_table(path, sheet)
-        from pyspark.sql.types import (
-            DoubleType,
-            StringType,
-            StructField,
-            StructType,
+    inputs — through the bundled reader (sources/xlsx.py), so the output
+    does not depend on which optional Excel engines are installed.
+    All-numeric columns arrive as double, everything else as string with
+    blank cells null (R read.xlsx's numeric-or-character column typing).
+    Raises ValueError for a file that is not an xlsx (zip) container."""
+    header, body = read_xlsx_table(path, sheet)
+    fields = []
+    for j, name in enumerate(header):
+        vals = [r[j] for r in body if r[j] is not None]
+        numeric = bool(vals) and all(isinstance(v, float) for v in vals)
+        fields.append(
+            StructField(name, DoubleType() if numeric else StringType(), True)
         )
-
-        fields = []
-        for j, name in enumerate(header):
-            vals = [r[j] for r in body if r[j] is not None]
-            numeric = bool(vals) and all(isinstance(v, float) for v in vals)
-            fields.append(
-                StructField(name, DoubleType() if numeric else StringType(), True)
-            )
-        return spark.createDataFrame(body, StructType(fields))
+    return spark.createDataFrame(body, StructType(fields))
 
 
 def list_files(root: str, pattern: str = "*.shp", recursive: bool = True) -> list[str]:

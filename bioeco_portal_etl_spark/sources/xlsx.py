@@ -1,5 +1,6 @@
-"""Minimal pure-stdlib XLSX reader — S4's engine when no pandas xlsx
-backend (openpyxl/xlrd) is installed.
+"""Minimal pure-stdlib XLSX reader — S4's only engine (``files.read_excel``
+calls it whether or not a pandas xlsx backend such as openpyxl is
+installed, so column types and nulls never depend on the environment).
 
 Reference parity: R ``read.xlsx(path, 1)`` at notebooks/index.Rmd:135
 (EuroSea) and :547 (WESPAS positions). XLSX is a zip of XML parts; this
@@ -87,8 +88,13 @@ def _cell_value(c, shared: list[str]):
 
 def read_xlsx_rows(path: str, sheet: int = 0) -> list[list]:
     """The n-th worksheet as dense rows (None for absent cells), trailing
-    all-None cells trimmed per row; rows keep their sheet order."""
-    with zipfile.ZipFile(path) as z:
+    all-None cells trimmed per row; rows keep their sheet order. Raises
+    ValueError when ``path`` is not a zip container."""
+    try:
+        z = zipfile.ZipFile(path)
+    except zipfile.BadZipFile as e:
+        raise ValueError(f"not an xlsx (zip) file: {path}") from e
+    with z:
         shared = _shared_strings(z)
         root = ET.fromstring(z.read(_sheet_path(z, sheet)))
         rows: list[list] = []

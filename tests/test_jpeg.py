@@ -1,4 +1,4 @@
-"""Pure-stdlib baseline JPEG codec (multimodal/jpeg.py).
+"""Baseline JPEG codec (multimodal/jpeg.py).
 
 The roundtrip tests alone can't catch compensating bugs (a wrong zigzag
 used by BOTH encoder and decoder still roundtrips), so the first two
@@ -7,6 +7,8 @@ DC cat-0 = '00', DC cat-4 = '101', AC EOB = '1010', pad bits = 1s.
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 
@@ -178,49 +180,89 @@ def test_decoder_rejects_unsupported_profiles():
         decode_jpeg(four)
 
 
-def test_numpy_scalar_equivalence_randomized():
+# Independent scalar oracle for the numpy DCT: per-term loops over their
+# own basis table. They sum the 64 products in a different order than the
+# matrix sandwich, which is exactly what exposes a missing round-half snap.
+_SCALAR_COS = [
+    [math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)] for u in range(8)
+]
+_SCALAR_C = [1 / math.sqrt(2)] + [1.0] * 7
+_SCALAR_SNAP = 1e-6  # the pinned round-half snap (jpeg._ROUND_SNAP)
+
+
+def _scalar_fdct_quant(block):
+    out = [0] * 64
+    for u in range(8):
+        for v in range(8):
+            s = 0.0
+            for y in range(8):
+                cy = _SCALAR_COS[u][y]
+                row = block[y]
+                for x in range(8):
+                    s += row[x] * cy * _SCALAR_COS[v][x]
+            val = 0.25 * _SCALAR_C[u] * _SCALAR_C[v] * s
+            out[u * 8 + v] = int(math.floor(abs(val) + (0.5 + _SCALAR_SNAP))) * (
+                1 if val >= 0 else -1
+            )
+    return out
+
+
+def _scalar_idct(coeffs):
+    out = [[0.0] * 8 for _ in range(8)]
+    for y in range(8):
+        for x in range(8):
+            s = 0.0
+            for u in range(8):
+                cu = _SCALAR_C[u] * _SCALAR_COS[u][y]
+                base = u * 8
+                for v in range(8):
+                    s += _SCALAR_C[v] * coeffs[base + v] * cu * _SCALAR_COS[v][x]
+            out[y][x] = 0.25 * s
+    return out
+
+
+def test_numpy_scalar_equivalence_randomized(monkeypatch):
     """Round-13 regression (ADVICE r12): the numpy matrix-sandwich DCT and
     the scalar loop reassociate float sums, so raw floor(|v| + 0.5)
     quantization flipped at exact round-half coefficients (-7.5 vs
-    -7.499999999999993) and encoder bytes diverged with vs without numpy.
+    -7.499999999999993) and encoder bytes depended on the summation order.
     Integer inputs produce exact-half DC and (0,4)/(4,0)/(4,4)
     coefficients routinely (eighth-integer grids), so random images
-    exercise the boundary densely. With the _ROUND_SNAP both paths must
-    be byte- and pixel-identical on arbitrary inputs, not just the
-    block-constant fixtures."""
+    exercise the boundary densely. With the _ROUND_SNAP the numpy kernels
+    must be byte- and pixel-identical to the test-local scalar loops on
+    arbitrary inputs, not just the block-constant fixtures."""
     import random
 
     from bioeco_portal_etl_spark.multimodal import jpeg as J
 
-    assert J._np is not None, "test env must have numpy"
     rng = random.Random(1312)
 
-    def scalar_only(fn, *a):
-        saved = J._np
-        J._np = None
-        try:
-            return fn(*a)
-        finally:
-            J._np = saved
-
-    # raw kernel: random blocks, both paths quantize identically
+    # raw kernel: random blocks quantize identically
     for _ in range(300):
         block = [[rng.randrange(-128, 128) for _ in range(8)] for _ in range(8)]
-        assert J._fdct_quant(block) == scalar_only(J._fdct_quant, block)
+        assert J._fdct_quant(block) == _scalar_fdct_quant(block)
 
-    # full codec: gray + color roundtrips, bytes and pixels identical
-    for i in range(12):
+    # full codec: gray + color roundtrips through the numpy kernels, then
+    # with the scalar loops patched in; bytes and pixels identical
+    images = []
+    for _ in range(12):
         w, h = 8 + rng.randrange(12), 8 + rng.randrange(10)
         gray = [[rng.randrange(256) for _ in range(w)] for _ in range(h)]
-        enc_np = J.encode_jpeg_gray(gray)
-        enc_sc = scalar_only(J.encode_jpeg_gray, gray)
-        assert enc_np == enc_sc, f"gray encode bytes diverge (img {i})"
-        assert J.decode_jpeg(enc_np) == scalar_only(J.decode_jpeg, enc_np)
+        rgb = [[rng.randrange(256) for _ in range(3 * w)] for _ in range(h)]
+        images.append((gray, rgb))
 
-        rgb = [
-            [rng.randrange(256) for _ in range(3 * w)] for _ in range(h)
-        ]
-        enc_np = J.encode_jpeg_color(rgb)
-        enc_sc = scalar_only(J.encode_jpeg_color, rgb)
-        assert enc_np == enc_sc, f"color encode bytes diverge (img {i})"
-        assert J.decode_jpeg(enc_np) == scalar_only(J.decode_jpeg, enc_np)
+    def run():
+        out = []
+        for gray, rgb in images:
+            for enc in (J.encode_jpeg_gray(gray), J.encode_jpeg_color(rgb)):
+                out.append((enc, J.decode_jpeg(enc)))
+        return out
+
+    got_np = run()
+    monkeypatch.setattr(J, "_fdct_quant", _scalar_fdct_quant)
+    monkeypatch.setattr(J, "_idct", _scalar_idct)
+    got_sc = run()
+    for i, ((enc_np, dec_np), (enc_sc, dec_sc)) in enumerate(zip(got_np, got_sc)):
+        kind = ("gray", "color")[i % 2]
+        assert enc_np == enc_sc, f"{kind} encode bytes diverge (img {i // 2})"
+        assert dec_np == dec_sc, f"{kind} decode pixels diverge (img {i // 2})"

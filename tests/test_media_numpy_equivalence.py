@@ -1,18 +1,19 @@
-"""Round-13 (guide §4.2): the numpy fast paths added inside the Arrow
-tasks of the WAV/PNG operators must be EXACTLY equivalent to the
-pure-stdlib loops they accelerate — the stdlib paths stay as the portable
-fallback and reference, so any divergence is environment-dependent output
-(the jpeg.py round-half lesson, ADVICE r12).
-
-Each test runs the same kernel with numpy present and with the module's
-``_np`` monkeypatched to None, on randomized inputs, and asserts
-bit-identical results (bytes for codecs, values for stats).
+"""Round-13 (guide §4.2): the numpy kernels inside the Arrow tasks of the
+WAV/PNG operators must be EXACTLY equivalent to plain integer loops —
+any divergence is output that depends on the arithmetic form (the jpeg.py
+round-half lesson, ADVICE r12). The codecs have no stdlib fallback, so
+the reference forms live here in the test: ``struct.pack`` + ``wave`` for
+WAV bytes, the input rows for PNG decode, and the integer
+nearest-neighbour loop for ``resize_nearest``. Inputs are randomized and
+results must be bit-identical (bytes for codecs, values for stats).
 """
 
 from __future__ import annotations
 
+import io
 import random
 import struct
+import wave
 import zlib
 
 import numpy as np
@@ -22,27 +23,45 @@ from bioeco_portal_etl_spark.multimodal import png as PNG
 from bioeco_portal_etl_spark.multimodal import wavpcm as W
 
 
-def _scalar(module, fn, *args):
-    saved = module._np
-    module._np = None
-    try:
-        return fn(*args)
-    finally:
-        module._np = saved
+def _struct_wav(samples, sample_rate=W.SAMPLE_RATE):
+    """Reference WAV bytes: ``struct.pack`` frames through ``wave``."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
+
+
+def _loop_resize_nearest(width, height, channels, rows, max_dim):
+    """Reference nearest-neighbour downsample: integer source indexing
+    src = i * size // size', one output pixel at a time."""
+    scale_num, scale_den = min(max_dim, max(width, height)), max(width, height)
+    out_w = max(width * scale_num // scale_den, 1)
+    out_h = max(height * scale_num // scale_den, 1)
+    out = []
+    for oy in range(out_h):
+        src = rows[oy * height // out_h]
+        line = []
+        for ox in range(out_w):
+            sx = ox * width // out_w
+            line.extend(src[sx * channels : (sx + 1) * channels])
+        out.append(line)
+    return out_w, out_h, out
 
 
 def test_wav_encode_decode_equivalence():
-    assert W._np is not None
     rng = random.Random(7)
     for _ in range(20):
         n = rng.randrange(0, 2000)
         samples = [rng.randrange(-32768, 32768) for _ in range(n)]
         enc_np = W.encode_wav(samples)
-        enc_sc = _scalar(W, W.encode_wav, samples)
-        assert enc_np == enc_sc
+        assert enc_np == _struct_wav(samples)
+        assert W.encode_wav(np.asarray(samples, dtype=np.int64)) == enc_np
         rate, s_list = W.decode_wav(enc_np)
         rate2, s_np = W.decode_wav_np(enc_np)
-        assert rate == rate2 and s_np.tolist() == s_list
+        assert rate == rate2 and s_np.tolist() == s_list == samples
         # a data chunk shorter than the header's frame count: both raise
         for cut in (1, 2) if n else ():
             for decode in (W.decode_wav, W.decode_wav_np):
@@ -51,20 +70,20 @@ def test_wav_encode_decode_equivalence():
 
 
 def test_wav_encode_range_check_matches_struct():
+    """encode_wav rejects what ``struct.pack('<h')`` rejects: out-of-range
+    and non-integer samples (a float is never truncated to an int)."""
     with pytest.raises(ValueError):
         W.encode_wav([40000])
-    with pytest.raises(Exception):  # struct.error on the stdlib path
-        _scalar(W, W.encode_wav, [40000])
-    # a float sample is rejected on both paths, never truncated to int
+    with pytest.raises(struct.error):
+        _struct_wav([40000])
     for bad in ([1.5], [0, 2.0], np.array([1.5])):
         with pytest.raises(TypeError):
             W.encode_wav(bad)
-        with pytest.raises(Exception):  # struct.error on the stdlib path
-            _scalar(W, W.encode_wav, list(bad))
+        with pytest.raises(struct.error):
+            _struct_wav(list(bad))
 
 
 def test_png_filter0_fast_path_equivalence():
-    assert PNG._np is not None
     rng = random.Random(11)
     for ch in (1, 3, 4):
         w, h = 5 + rng.randrange(9), 4 + rng.randrange(7)
@@ -72,14 +91,12 @@ def test_png_filter0_fast_path_equivalence():
             [rng.randrange(256) for _ in range(w * ch)] for _ in range(h)
         ]
         payload = PNG.encode_png(rows, channels=ch)
-        got_np = PNG.decode_png(payload)
-        got_sc = _scalar(PNG, PNG.decode_png, payload)
-        assert got_np == got_sc == (w, h, ch, rows)
+        assert PNG.decode_png(payload) == (w, h, ch, rows)
 
 
 def test_png_nonzero_filters_still_loop_decode():
     """A hand-built PNG with Up-filtered scanlines must NOT take the
-    filter-0 shortcut; numpy and scalar paths agree (both unfilter)."""
+    filter-0 slice; the per-byte unfilter recovers the source rows."""
     w, h, ch = 4, 3, 1
     base = [[(x * 37 + y * 11) % 256 for x in range(w)] for y in range(h)]
     raw = bytearray()
@@ -95,9 +112,7 @@ def test_png_nonzero_filters_still_loop_decode():
         + PNG._chunk(b"IDAT", zlib.compress(bytes(raw), 6))
         + PNG._chunk(b"IEND", b"")
     )
-    got_np = PNG.decode_png(payload)
-    got_sc = _scalar(PNG, PNG.decode_png, payload)
-    assert got_np == got_sc == (w, h, ch, base)
+    assert PNG.decode_png(payload) == (w, h, ch, base)
 
 
 def test_resize_nearest_equivalence():
@@ -108,9 +123,8 @@ def test_resize_nearest_equivalence():
             [rng.randrange(256) for _ in range(w * ch)] for _ in range(h)
         ]
         for max_dim in (1, 3, 7, max(w, h) + 5):
-            got_np = PNG.resize_nearest(w, h, ch, rows, max_dim)
-            got_sc = _scalar(PNG, PNG.resize_nearest, w, h, ch, rows, max_dim)
-            assert got_np == got_sc
+            got = PNG.resize_nearest(w, h, ch, rows, max_dim)
+            assert got == _loop_resize_nearest(w, h, ch, rows, max_dim)
 
 
 def _collect_map_in_pandas(fn_df):
@@ -119,9 +133,8 @@ def _collect_map_in_pandas(fn_df):
 
 def test_media_operators_numpy_vs_scalar(spark):
     """End-to-end: synth -> stats/trim/downsample through mapInPandas,
-    numpy on vs off (media._np monkeypatched inside the driver only —
-    workers re-import, so instead compare against hand-computed scalar
-    reference built from the SAME formulas here in the test)."""
+    compared against a scalar reference built from the SAME formulas
+    here in the test."""
     import pyspark.sql.functions as F
 
     from bioeco_portal_etl_spark.multimodal import media as M

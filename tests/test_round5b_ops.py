@@ -426,6 +426,7 @@ def test_wav_quarantine_routes_bad_payloads(spark):
         (1, good),
         (2, b"NOT A RIFF CONTAINER AT ALL"),
         (3, good[:10]),  # truncated header
+        (4, good[:-2]),  # intact header, data chunk one sample short
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
 
@@ -435,9 +436,10 @@ def test_wav_quarantine_routes_bad_payloads(spark):
     }
     assert got[1].decode_ok == 1 and got[1].n_samples == 3
     assert got[1].energy == 100 * 100 + 100 * 100 + 50 * 50
-    for bad in (2, 3):
+    for bad in (2, 3, 4):
         assert got[bad].decode_ok == 0
         assert got[bad].decode_err and got[bad].n_samples is None
+    assert "truncated data chunk" in got[4].decode_err
     # default mode fails the task (deterministic-gate posture)
     with pytest.raises(Exception):
         wav_clip_stats(df).collect()

@@ -55,6 +55,64 @@ def test_excel_gated(spark, tmp_path):
         read_excel(spark, str(p))
 
 
+def _tiny_xlsx(path):
+    """Smallest workbook the bundled reader accepts: workbook + rels +
+    shared strings + one sheet, written with zipfile."""
+    import zipfile
+
+    main = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    rel = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    parts = {
+        "xl/workbook.xml": (
+            f'<workbook xmlns="{main}" xmlns:r="{rel}"><sheets>'
+            '<sheet name="S1" sheetId="1" r:id="rId1"/></sheets></workbook>'
+        ),
+        "xl/_rels/workbook.xml.rels": (
+            '<Relationships xmlns="http://schemas.openxmlformats.org/'
+            'package/2006/relationships"><Relationship Id="rId1" '
+            f'Type="{rel}/worksheet" Target="worksheets/sheet1.xml"/>'
+            "</Relationships>"
+        ),
+        "xl/sharedStrings.xml": (
+            f'<sst xmlns="{main}"><si><t>name</t></si><si><t>alpha</t></si>'
+            "<si><t>n/a</t></si></sst>"
+        ),
+        "xl/worksheets/sheet1.xml": (
+            f'<worksheet xmlns="{main}"><sheetData>'
+            '<row r="1"><c r="A1" t="s"><v>0</v></c>'
+            '<c r="B1" t="inlineStr"><is><t>depth</t></is></c>'
+            '<c r="C1" t="inlineStr"><is><t>active</t></is></c>'
+            '<c r="D1" t="inlineStr"><is><t>year</t></is></c></row>'
+            '<row r="2"><c r="A2" t="s"><v>1</v></c><c r="B2"><v>12.5</v></c>'
+            '<c r="C2" t="b"><v>1</v></c><c r="D2"><v>2012</v></c></row>'
+            '<row r="3"><c r="A3" t="inlineStr"><is><t>beta</t></is></c>'
+            '<c r="B3"/><c r="C3" t="b"><v>0</v></c>'
+            '<c r="D3" t="s"><v>2</v></c></row>'
+            "</sheetData></worksheet>"
+        ),
+    }
+    with zipfile.ZipFile(path, "w") as z:
+        for name, xml in parts.items():
+            z.writestr(name, xml)
+
+
+def test_excel_bundled_reader_types_and_nulls(spark, tmp_path):
+    """S4 reads a real workbook with the bundled reader: shared and inline
+    strings, a number, booleans and a blank cell. An all-numeric column is
+    double with the blank as null; booleans and a number/string mix are
+    strings in R read.xlsx's rendering (TRUE, 2012 not 2012.0)."""
+    p = tmp_path / "book.xlsx"
+    _tiny_xlsx(p)
+    df = read_excel(spark, str(p))
+    assert df.schema.simpleString() == (
+        "struct<name:string,depth:double,active:string,year:string>"
+    )
+    assert [tuple(r) for r in df.collect()] == [
+        ("alpha", 12.5, "TRUE", "2012"),
+        ("beta", None, "FALSE", "n/a"),
+    ]
+
+
 def test_rest_payload_parse(spark):
     """S7: nested JSON payload -> rows via spark.read.json (fetch injected —
     the HTTP hop is an external contract, like the reference's GeoNode API)."""
