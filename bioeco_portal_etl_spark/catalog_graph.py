@@ -757,7 +757,9 @@ def gr16_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
     edges = _chain_supplier_edges(spark, sf)
-    return degree_assortativity(edges).orderBy("m_edges")
+    return degree_assortativity(edges).select(
+        "m_edges", "sum_dx", "sum_dy", "assortativity_e6"
+    ).orderBy("m_edges")
 
 
 def _gr16_sql() -> str:
@@ -979,11 +981,12 @@ SELECT support, n_edges FROM esup ORDER BY support"""
 def gr22_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     """Newman degree-assortativity r of the same-day customer
     co-activity graph: Pearson correlation of (deg(u), deg(v)) over the
-    DIRECTED edge list (both orientations present, so the symmetric
-    formula needs no half-weights). Degrees come from one groupBy of the
-    persisted edge list; moment sums are BIGINTs (each < 2^53, exact as
-    doubles); the final combination is IEEE, spelled identically in the
-    oracle."""
+    DIRECTED, deduplicated edge list (both orientations present, so the
+    symmetric formula needs no half-weights). The kernel is gr16's
+    (graph/degrees.py degree_assortativity); a zero-variance (regular)
+    graph surfaces NULL."""
+    from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
+
     orders = T(spark, sf, "orders")
     o = orders.select("o_custkey", "o_orderdate")
     a, b = o.alias("a"), o.alias("b")
@@ -996,51 +999,10 @@ def gr22_assortativity(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    return assortativity_frame(edges)
-
-
-def assortativity_frame(edges: DataFrame) -> DataFrame:
-    """Frame-level body of gr22 over a directed, deduplicated,
-    symmetric (src, dst) edge list."""
-    e = edges.persist()  # degrees + the annotated join both consume it
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    dj = (
-        e.join(
-            F.broadcast(deg.select(F.col("src").alias("u"), F.col("deg").alias("j"))),
-            e.src == F.col("u"),
-        )
-        .join(
-            F.broadcast(deg.select(F.col("src").alias("v"), F.col("deg").alias("k"))),
-            e.dst == F.col("v"),
-        )
-        .select("j", "k")
-    )
-    agg = dj.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum(F.col("j") * F.col("k")).alias("sjk"),
-        F.sum("j").alias("sj"),
-        F.sum("k").alias("sk"),
-        F.sum(F.col("j") * F.col("j")).alias("sj2"),
-        F.sum(F.col("k") * F.col("k")).alias("sk2"),
-    )
-    nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    md = F.col("m").cast("double")
-    num = md * F.col("sjk").cast("double") - F.col("sj").cast(
-        "double"
-    ) * F.col("sk").cast("double")
-    den = F.sqrt(
-        md * F.col("sj2").cast("double")
-        - F.col("sj").cast("double") * F.col("sj").cast("double")
-    ) * F.sqrt(
-        md * F.col("sk2").cast("double")
-        - F.col("sk").cast("double") * F.col("sk").cast("double")
-    )
-    return agg.crossJoin(F.broadcast(nodes)).select(
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        F.col("m").cast("long").alias("n_directed_edges"),
-        F.when(den > 0, F.floor(num / den * 1000000.0).cast("long"))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("assortativity_e6"),
+    return degree_assortativity(edges).select(
+        "n_nodes",
+        F.col("m_edges").alias("n_directed_edges"),
+        "assortativity_e6",
     )
 
 

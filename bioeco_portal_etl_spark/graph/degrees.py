@@ -39,20 +39,24 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Newman's degree assortativity coefficient — the one-number answer
     to "do hubs link to hubs?" (positive: social-network-like; negative:
     hub-and-spoke/technological). It is the Pearson correlation of
-    (deg(src), deg(dst)) over the DIRECTED edge list:
+    (deg(src), deg(dst)) over the DIRECTED edge list, where deg(v) is
+    v's row count as ``src`` (a multigraph keeps its parallel edges):
 
         r = (M·Σxy − Σx·Σy) / sqrt((M·Σxx − (Σx)²) · (M·Σyy − (Σy)²))
 
-    Exactness: degrees are integers, so all six sufficient statistics
-    are EXACT integer sums (order-independent — no float-sum drift);
-    one IEEE sqrt+divide closes r inside a floor-e6. Overflow: deg <=
-    1e6 and |E| <= 1e9 keeps M·Σxx under 2^63 for real degree
-    distributions at the fixture scales (document before applying to a
-    hub of degree > ~3e6).
+    Exactness: degrees are integers, so the six sufficient statistics
+    are exact integer sums (order-independent — no float-sum drift).
+    The moment products run in decimal(38,0): M·Σxx already reaches
+    4e19 on a dense co-activity graph, past both 2^63 (a long multiply
+    wraps silently in non-ANSI mode) and 2^53 (a double product
+    rounds). One IEEE sqrt+divide closes r inside a floor-e6. A
+    zero-variance graph (every degree equal) has no r: NULL, never a
+    division by zero (which raises under ANSI).
 
     Plan: one degree aggregate, two broadcast enrichment joins keyed by
-    endpoint, one global 6-sum reduce. Returns a single row
-    (m_edges, sum_dx, sum_dy, assortativity_e6)."""
+    endpoint, one global 6-sum reduce, plus the node count from the
+    degree table. Returns a single row
+    (m_edges, sum_dx, sum_dy, n_nodes, assortativity_e6)."""
     e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed("src", "node")
     # node-sized degree lookups broadcast onto the edge stream (guide §3.1)
@@ -67,16 +71,19 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
         F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
         F.sum(F.col("dy") * F.col("dy")).alias("syy"),
     )
-    num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")
-    # sqrt(a)*sqrt(b), NOT sqrt(a*b): each variance term fits int64 but
-    # their PRODUCT can exceed 2^63 and Spark's non-ANSI long multiply
-    # wraps silently (found the hard way: -560578 vs the true -121705)
-    den = F.sqrt(
-        F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
-    ) * F.sqrt(F.col("m") * F.col("syy") - F.col("sy") * F.col("sy"))
-    return agg.select(
+    nodes = F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
+    m, sx, sy, sxy, sxx, syy = (
+        F.col(c).cast("decimal(38,0)") for c in ("m", "sx", "sy", "sxy", "sxx", "syy")
+    )
+    num = m * sxy - sx * sy
+    # sqrt(a)*sqrt(b), NOT sqrt(a*b): the product of the two variance
+    # terms can outgrow even decimal(38,0)
+    den = F.sqrt(m * sxx - sx * sx) * F.sqrt(m * syy - sy * sy)
+    return agg.crossJoin(nodes).select(
         F.col("m").cast("long").alias("m_edges"),
         F.col("sx").cast("long").alias("sum_dx"),
         F.col("sy").cast("long").alias("sum_dy"),
-        F.floor(num / den * 1_000_000).cast("long").alias("assortativity_e6"),
+        F.col("n_nodes").cast("long").alias("n_nodes"),
+        F.when(den > 0, F.floor(num / den * 1_000_000).cast("long"))
+        .alias("assortativity_e6"),
     )

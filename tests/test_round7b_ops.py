@@ -135,29 +135,29 @@ def _sym_edges(spark, pairs):
 def test_gr22_star_graph_is_disassortative(spark):
     """A star is the canonical disassortative graph: hubs connect only
     to leaves. r = -1 exactly for a pure star."""
-    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
+    from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
     star = _sym_edges(spark, [(0, i) for i in range(1, 8)])
-    r = assortativity_frame(star).collect()[0]
+    r = degree_assortativity(star).collect()[0]
     assert r.n_nodes == 8
-    assert r.n_directed_edges == 14
+    assert r.m_edges == 14
     assert r.assortativity_e6 == -1_000_000
 
 
 def test_gr22_regular_graph_degenerate_null(spark):
     """In a k-regular graph every degree is equal — zero variance, the
     coefficient is undefined and must surface NULL, not a crash or 0."""
-    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
+    from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
     cycle = _sym_edges(spark, [(i, (i + 1) % 6) for i in range(6)])
-    r = assortativity_frame(cycle).collect()[0]
+    r = degree_assortativity(cycle).collect()[0]
     assert r.assortativity_e6 is None
 
 
 def test_gr22_matches_hand_pearson(spark):
     """Two triangles joined by a bridge — compute Newman r by hand from
     the directed edge list and compare."""
-    from bioeco_portal_etl_spark.catalog_graph import assortativity_frame
+    from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
     pairs = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5), (2, 3)]
     deg = {}
@@ -175,7 +175,7 @@ def test_gr22_matches_hand_pearson(spark):
     num = m * sjk - sj * sk
     den = math.sqrt(m * sj2 - sj * sj) * math.sqrt(m * sk2 - sk * sk)
     exp = math.floor(num / den * 1e6)
-    r = assortativity_frame(_sym_edges(spark, pairs)).collect()[0]
+    r = degree_assortativity(_sym_edges(spark, pairs)).collect()[0]
     assert r.assortativity_e6 == exp
 
 
