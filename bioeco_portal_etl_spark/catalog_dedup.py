@@ -191,17 +191,28 @@ WHERE n_common >= 2 ORDER BY doc_id, bench_id
 """
 
 
+def _lsh_clusters(d: DataFrame) -> DataFrame:
+    """(node, cluster_id): connected components of the td2 LSH pairs."""
+    from bioeco_portal_etl_spark.graph.cc import connected_components
+
+    pairs = minhash_lsh_pairs(d, "doc_id", "text").select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    )
+    # every node has a component; the coalesce only keeps cluster_id
+    # non-nullable in the schema, as td7 and td9 have always declared it
+    return connected_components(pairs).select(
+        "node", F.coalesce("component", "node").alias("cluster_id")
+    )
+
+
 def td7_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup PAIRS -> connected components with cluster_id = min member
-    (text/dedupe.connected_components — iterative min-label propagation;
-    Spark SQL has no recursive CTE, the driver loop converges in
-    O(cluster diameter) joins). Oracle: DuckDB RECURSIVE CTE closure over
-    the identical LSH pair set."""
-    from bioeco_portal_etl_spark.text.dedupe import connected_components
-
+    (graph/cc.connected_components — min-label propagation with pointer
+    jumping; Spark SQL has no recursive CTE, the driver loop converges in
+    O(log n) rounds). Oracle: DuckDB RECURSIVE CTE closure over the
+    identical LSH pair set."""
     d = T(spark, sf, "documents")
-    pairs = minhash_lsh_pairs(d, "doc_id", "text")
-    return connected_components(pairs).orderBy("node")
+    return _lsh_clusters(d).orderBy("node")
 
 
 TD7_SQL = f"""
@@ -229,11 +240,8 @@ def td9_cluster_keep_best(spark: SparkSession, sf: str) -> DataFrame:
     (doc_id, cluster_id, quality, keep) so downstream is a semi-join.
     Tie on quality -> smallest doc_id (deterministic both engines: the
     score is round(.,4)-quantized, so equality is exact)."""
-    from bioeco_portal_etl_spark.text.dedupe import connected_components
-
     d = T(spark, sf, "documents")
-    pairs = minhash_lsh_pairs(d, "doc_id", "text")
-    comps = connected_components(pairs)
+    comps = _lsh_clusters(d)
     q = quality_table(d, "doc_id", "text").select("doc_id", "quality")
     member = comps.join(q, comps.node == q.doc_id).select(
         "cluster_id", F.col("node").alias("doc_id"), "quality"

@@ -177,16 +177,21 @@ def gr3_khop_reach(spark: SparkSession, sf: str) -> DataFrame:
     """3-hop minimum-distance reach from flagged suppliers (s_suppkey %
     17 == 0) over the ADJACENT-line supplier chain graph (sparser than
     gr1/gr2's full co-order clique, so distances are non-trivial) —
-    graph/bfs.py khop_reach, bounded min-label propagation."""
-    from bioeco_portal_etl_spark.graph.bfs import khop_reach
+    graph/sssp.py sssp_bounded with unit weights: 3 rounds of min-hop
+    relaxation; dist cast back to int."""
+    from bioeco_portal_etl_spark.graph.sssp import sssp_bounded
 
-    edges = _chain_supplier_edges(spark, sf)
+    edges = _chain_supplier_edges(spark, sf).withColumn("w", F.lit(1))
     seeds = (
         T(spark, sf, "supplier")
         .filter(F.col("s_suppkey") % 17 == 0)
         .select(F.col("s_suppkey").alias("node"))
     )
-    return khop_reach(edges, seeds, k=3).orderBy("dist", "node")
+    return (
+        sssp_bounded(edges, seeds, rounds=3)
+        .select("node", F.col("dist").cast("int").alias("dist"))
+        .orderBy("dist", "node")
+    )
 
 
 def _gr3_sql() -> str:
@@ -407,9 +412,7 @@ def gr7_label_communities(spark: SparkSession, sf: str) -> DataFrame:
         .persist()
     )
     return community_sizes(
-        label_propagation(
-            sym, rounds=2, pre_symmetrized=True, persist_edges=False
-        ),
+        label_propagation(sym, rounds=2, pre_symmetrized=True),
         top_k=20,
     )
 
@@ -926,9 +929,7 @@ def gr20_modularity(spark: SparkSession, sf: str) -> DataFrame:
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    labels = label_propagation(
-        sym, rounds=2, pre_symmetrized=True, persist_edges=False
-    )
+    labels = label_propagation(sym, rounds=2, pre_symmetrized=True)
     return community_modularity(
         sym, labels, top_k=20, pre_symmetrized=True
     ).orderBy(

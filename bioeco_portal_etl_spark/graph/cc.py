@@ -9,7 +9,12 @@ similarity/kmeans.py Lloyd's):
 
 1. **edge relaxation** — every node takes the min label among itself and
    its neighbors: one join of the (persisted, pre-partitioned) symmetric
-   edge list against the current labels + one groupBy-min;
+   edge list against the current labels + one groupBy-min. The edge list
+   carries one ``(v, v)`` row per node, so "itself" is just another
+   neighbor and the loop stays union-free: a union of the relaxed labels
+   with the previous ones makes Spark 4.1's constraint rewrite
+   (``UnionBase.rewriteConstraints``) fail on the LSH-pairs plan that td7
+   and td9 feed in;
 2. **pointer jumping** — ``label(v) <- label(label(v))`` via a self-join
    of the label table, which halves chain depth every round: combined
    with relaxation the loop converges in O(log n) iterations instead of
@@ -55,34 +60,42 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     isn't reached within ``max_iter`` rounds (pointer jumping makes that
     ~log2(n) — 25 covers any graph that fits on a cluster)."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+    # every edge (a, b) yields (a, b), (b, a), (a, a), (b, b): the
+    # symmetric list plus each node's self-loop, from ONE pass over the
+    # input; repartition("dst") + dropDuplicates is one exchange and
+    # leaves the list laid out for the per-round join on dst
     sym = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        e.select(
+            F.explode(
+                F.array(
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                    F.struct("src", F.col("src").alias("dst")),
+                    F.struct(F.col("dst").alias("src"), "dst"),
+                )
+            ).alias("e")
         )
-        .distinct()
+        .select("e.src", "e.dst")
         .repartition("dst")
+        .dropDuplicates(["src", "dst"])
         .persist()
     )
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
     try:
-        for it in range(max_iter):
-            # 1. relaxation: min over self + neighbor labels
+        # the self-loops are exactly the node list: initial label = own id
+        labels = sym.filter(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("node"), F.col("src").alias("label")
+        )
+        prev_sum = labels.agg(F.sum("label")).first()[0]
+        for _ in range(max_iter):
+            # 1. relaxation: min over the neighbor labels (self included)
             nbr = (
                 sym.join(labels, sym["dst"] == labels["node"])
-                .select(F.col("src").alias("node"), "label")
-                .unionByName(labels)
-                .groupBy("node")
+                .groupBy(F.col("src").alias("node"))
                 .agg(F.min("label").alias("label"))
             )
             # 2. pointer jumping: label <- label(label) (label rows exist
             # for every node; a label that is itself a root maps to itself)
-            jumped = (
+            labels = (
                 nbr.alias("x")
                 .join(
                     nbr.select(
@@ -99,10 +112,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             )
             # 3. scalar fixpoint test: labels only ever decrease, so an
             # unchanged sum means NO label changed
-            new_sum = jumped.agg(F.sum("label")).first()[0]
-            if it == 0:
-                labels.unpersist()
-            labels = jumped
+            new_sum = labels.agg(F.sum("label")).first()[0]
             if new_sum == prev_sum:
                 return labels.select(
                     "node", F.col("label").alias("component")

@@ -65,7 +65,6 @@ def _argmax_label(nbr: DataFrame) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     rounds: int = 2,
-    persist_edges: bool = True,
     pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(node, label) after ``rounds`` synchronous updates; initial label =
@@ -73,11 +72,9 @@ def label_propagation(
     long columns — symmetrized and self-loop-stripped here. Isolated
     nodes don't appear (no edges = no community evidence).
 
-    ``persist_edges`` pins the symmetrized O(E) list (and with it the
-    upstream edge derivation — often an expensive self-join, e.g. gr7's
-    orders⋈orders co-activity graph) so each round pays ONE label
-    broadcast, not a lineage replay; the pagerank.py pattern. Turn off
-    when the caller persists (and lays out) the frame itself.
+    Each round reads ``edges`` again: a caller whose edge derivation is
+    expensive (gr7's orders⋈orders co-activity graph) persists and lays
+    out the frame itself.
 
     ``pre_symmetrized``: caller certifies the list already contains both
     directions of every edge, deduplicated. Ideally the caller also
@@ -102,8 +99,6 @@ def label_propagation(
             .repartition("src")
             .dropDuplicates(["src", "dst"])
         )
-    if persist_edges:
-        sym = sym.persist()
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()

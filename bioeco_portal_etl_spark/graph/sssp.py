@@ -1,11 +1,12 @@
 """Bounded-round weighted shortest paths (multi-source Bellman-Ford).
 
-`graph/bfs.py` answers "how many HOPS away" — this module answers "how
-CHEAP is the best route" over weighted edges, the primitive behind
-latency-weighted reachability, cost-bounded influence, and routing-table
-seeds. Dijkstra's priority queue is inherently sequential; the
-data-parallel formulation is Bellman-Ford relaxation, which is just a
-fixed number of supersteps of
+This module answers "how CHEAP is the best route" over weighted edges,
+the primitive behind latency-weighted reachability, cost-bounded
+influence, and routing-table seeds; with every weight 1 it answers "how
+many HOPS away" (k-hop BFS reach, gr3; oracle in graph/bfs.py).
+Dijkstra's priority queue is inherently sequential; the data-parallel
+formulation is Bellman-Ford relaxation, which is just a fixed number of
+supersteps of
 
     cand  = dist JOIN edges ON node = src      -- shuffle on src
     relax = (cand UNION dist).groupBy(node).min -- partial-combinable MIN
@@ -41,10 +42,13 @@ def sssp_bounded(
     """(node, dist): cheapest path cost from any source using at most
     ``rounds`` edges. ``edges`` must carry (src, dst, w) with BIGINT
     nonnegative w; ``sources`` must carry (node). Unreached nodes are
-    absent (no infinity sentinel rows).
+    absent (no infinity sentinel rows). Raises ``ValueError`` on
+    ``rounds < 0``.
 
     The per-round distance table, O(reached nodes), is broadcast into the
     edge join (guide §3.1)."""
+    if rounds < 0:
+        raise ValueError(f"rounds must be >= 0, got {rounds}")
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     if rounds > 1:
         e = e.localCheckpoint(eager=True)

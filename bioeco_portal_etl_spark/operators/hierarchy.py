@@ -5,7 +5,7 @@ systems; the reference's program registry is flat, so this is engine
 extension surface like the set ops in catalog_rel).
 
 Spark-first iterative algorithm, same family as
-text/dedupe.connected_components but DIRECTED and depth-accumulating:
+graph/cc.connected_components but DIRECTED and depth-accumulating:
 pointer jumping. State is one (node, anc, depth) row per node, where
 ``anc`` is an ancestor and ``depth`` the exact edge count from node to
 anc. Each round substitutes every node's ancestor by THAT ancestor's own

@@ -87,6 +87,11 @@ def build_merge_sql(
     ``merge``: ANSI ``MERGE INTO`` with an UNQUALIFIED update-target list —
     accepted by Postgres 15+ (which REJECTS ``SET t.col``), Derby, SQL
     Server, Oracle, DB2.
+    ``derby``: the same MERGE with each key cast to ``VARCHAR(32672)`` in
+    ``ON``: Spark's JDBC writer creates string columns as CLOB on Derby,
+    and Derby rejects ``CLOB = CLOB``. For string keys only: Derby cannot
+    convert INTEGER to VARCHAR. Postgres ``text`` keys keep the plain
+    form so the join stays indexable.
     ``postgres_onconflict``: pre-15 Postgres (the GeoNode deployments the
     reference targets run 9.x-13): ``INSERT .. SELECT .. ON CONFLICT DO
     UPDATE`` — requires a unique index on the key columns, which the
@@ -95,8 +100,12 @@ def build_merge_sql(
         return f"{quote}{c}{quote}"
 
     cols = ", ".join(q(c) for c in [*key_cols, *update_cols])
-    if dialect == "merge":
-        on = " AND ".join(f"t.{q(c)} = s.{q(c)}" for c in key_cols)
+    if dialect in ("merge", "derby"):
+        key = "CAST({} AS VARCHAR(32672))" if dialect == "derby" else "{}"
+        on = " AND ".join(
+            f"{key.format(f't.{q(c)}')} = {key.format(f's.{q(c)}')}"
+            for c in key_cols
+        )
         sets = ", ".join(f"{q(c)} = s.{q(c)}" for c in update_cols)
         vals = ", ".join(f"s.{q(c)}" for c in [*key_cols, *update_cols])
         return (
@@ -204,7 +213,16 @@ def stage_and_cdc_merge(
         target_table, staging, key_cols, seq_col, op_col, value_cols,
         delete_op=delete_op, quote=quote,
     )
-    jvm = df.sparkSession._jvm
+    _merge_and_drop_staging(df.sparkSession, jdbc_url, props, merge, staging)
+
+
+def _merge_and_drop_staging(
+    spark, jdbc_url: str, props: dict[str, str], merge: str, staging: str
+) -> None:
+    """Run ``merge`` on one driver-side JDBC connection (auto-commit), then
+    drop ``staging`` — on success AND failure, so a failed MERGE does not
+    leak a uniquely-named full delta copy per retry."""
+    jvm = spark._jvm
     if "driver" in props:
         jvm.org.apache.spark.sql.execution.datasources.jdbc.DriverRegistry.register(
             props["driver"]
@@ -312,7 +330,6 @@ def stage_and_merge(
     staging_table: str | None = None,
     jdbc_properties: dict[str, str] | None = None,
     quote: str = '"',
-    drop_staging: bool = True,
     dialect: str = "merge",
 ) -> None:
     """K5 at scale: bulk-stage the new state via ``df.write.jdbc`` (parallel
@@ -329,7 +346,7 @@ def stage_and_merge(
         Spark's JDBC dialects typically create tables unquoted;
       - each run uses a unique staging name by default (concurrent runs
         against the same target cannot clobber each other's staging), and
-        drops it afterwards unless ``drop_staging=False``;
+        drops it afterwards, also when the MERGE fails;
       - credentials in ``jdbc_properties`` are used for BOTH the staging
         write and the driver-side MERGE connection;
       - the MERGE runs on a plain auto-commit connection (no explicit
@@ -337,6 +354,7 @@ def stage_and_merge(
         picks the reconciliation statement (build_merge_sql): ``merge`` =
         ANSI MERGE with an UNQUALIFIED update-target list (Postgres 15+
         rejects ``SET t.col``; also Derby/SQL Server/Oracle);
+        ``derby`` = that MERGE with string keys cast out of CLOB;
         ``postgres_onconflict`` = INSERT..SELECT..ON CONFLICT for the
         pre-15 Postgres the reference's GeoNode deployments run.
       - driver classpath: works out of the box for drivers on Spark's system
@@ -356,28 +374,4 @@ def stage_and_merge(
     merge = build_merge_sql(
         target_table, staging, key_cols, update_cols, quote=quote, dialect=dialect
     )
-
-    jvm = df.sparkSession._jvm
-    if "driver" in props:
-        jvm.org.apache.spark.sql.execution.datasources.jdbc.DriverRegistry.register(
-            props["driver"]
-        )
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(jdbc_url, jprops)
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.executeUpdate(merge)
-        finally:
-            # drop staging on success AND failure — a failed MERGE must not
-            # leak a uniquely-named full delta copy per retry
-            if drop_staging:
-                try:
-                    stmt.executeUpdate(f"DROP TABLE {staging}")
-                except Exception:
-                    pass  # connection may be unusable after the merge error
-            stmt.close()
-    finally:
-        conn.close()
+    _merge_and_drop_staging(df.sparkSession, jdbc_url, props, merge, staging)

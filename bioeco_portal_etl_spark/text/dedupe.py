@@ -256,83 +256,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return sums.select(F.col(id_col), value.cast("long").alias("simhash"))
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Duplicate-cluster resolution: near-dup PAIRS -> connected components
-    with deterministic ``cluster_id = min(member id)`` — the step between
-    pair mining (minhash_lsh_pairs / ngram_jaccard_pairs) and keep-one
-    canonicalization (keep the cluster id, drop the rest).
-
-    Spark-first iterative algorithm (Spark SQL has no recursive CTE): each
-    round combines MIN-LABEL PROPAGATION (take the min of your own and your
-    neighbors' labels — one equi-join + one aggregate) with POINTER JUMPING
-    (label <- label(label), one self-join), so convergence is O(log
-    diameter) rounds, not O(diameter) — a 1000-node chain settles in ~10
-    rounds. Every round ends in ``localCheckpoint`` to TRUNCATE LINEAGE:
-    without it the logical plan doubles per round and the driver dies
-    re-planning (observed as an OOM inside plan stringification long before
-    any data pressure). On a production cluster prefer a reliable
-    ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` so blocks
-    survive executor loss; the driver-side loop and convergence check
-    (kmeans-style count action per round) are identical.
-
-    Engine-exact (min over ids), so the DuckDB oracle can verify it with a
-    recursive-CTE closure over the same pair set.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    try:
-        for _ in range(max_iter):
-            neigh = (
-                edges.join(labels, edges.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("label").alias("nlabel"))
-            )
-            l2 = labels.join(neigh, labels.node == neigh.src, "left").select(
-                labels.node.alias("node"),
-                F.col("label").alias("old"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("mid"),
-            )
-            ptr = l2.select(
-                F.col("node").alias("pnode"), F.col("mid").alias("plabel")
-            )
-            l3 = l2.join(ptr, l2.mid == ptr.pnode, "left").select(
-                "node",
-                "old",
-                F.least(
-                    F.col("mid"), F.coalesce(F.col("plabel"), F.col("mid"))
-                ).alias("label"),
-            )
-            new_labels = l3.localCheckpoint()
-            changed = (
-                new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
-            )
-            labels = new_labels.select("node", "label")
-            if changed == 0:
-                return labels.select(
-                    F.col("node"), F.col("label").alias("cluster_id")
-                )
-    finally:
-        edges.unpersist()
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-
-
 def segment_dedupe(
     df: DataFrame,
     id_col: str,

@@ -89,6 +89,20 @@ def test_stage_and_merge_upsert(spark, derby_url):
     assert dict((r.id, r.title) for r in back2.collect()) == rows
 
 
+def test_stage_and_merge_string_key_derby(spark, derby_url):
+    """A string key through the ``derby`` dialect: Spark stages strings as
+    CLOB, which Derby cannot compare in the MERGE's ON clause unless the
+    key is cast to VARCHAR."""
+    from bioeco_portal_etl_spark.sinks.jdbc_upsert import stage_and_merge
+
+    base = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+    base.write.jdbc(derby_url, "skeyed", mode="overwrite")
+    delta = spark.createDataFrame([("b", 20), ("c", 3)], "k string, v int")
+    stage_and_merge(delta, derby_url, "skeyed", ["k"], ["v"], dialect="derby")
+    back = read_jdbc_table(spark, derby_url, "skeyed")
+    assert dict((r.k, r.v) for r in back.collect()) == {"a": 1, "b": 20, "c": 3}
+
+
 def test_dialect_matrix_exact_sql():
     """The exact statements each backend receives (round-3 ADVICE: Derby
     proves the mechanism, these pin the Postgres-family dialect the
@@ -114,6 +128,12 @@ def test_dialect_matrix_exact_sql():
     )
     assert build_merge_sql("tgt", "stg", ["id"], ["title"]) == (
         'MERGE INTO tgt t USING stg s ON t."id" = s."id" '
+        'WHEN MATCHED THEN UPDATE SET "title" = s."title" '
+        'WHEN NOT MATCHED THEN INSERT ("id", "title") VALUES (s."id", s."title")'
+    )
+    assert build_merge_sql("tgt", "stg", ["id"], ["title"], dialect="derby") == (
+        'MERGE INTO tgt t USING stg s ON CAST(t."id" AS VARCHAR(32672)) = '
+        'CAST(s."id" AS VARCHAR(32672)) '
         'WHEN MATCHED THEN UPDATE SET "title" = s."title" '
         'WHEN NOT MATCHED THEN INSERT ("id", "title") VALUES (s."id", s."title")'
     )

@@ -351,28 +351,34 @@ def test_bigram_lm_boilerplate_scores_higher(spark):
 
 
 def test_khop_reach_distances_and_bound(spark):
-    from bioeco_portal_etl_spark.graph.bfs import khop_reach
+    from bioeco_portal_etl_spark.graph.sssp import sssp_bounded
 
     # path 0-1-2-3-4-5, seed {0}: dist = index, cut at k=3
     pairs = [(i, i + 1) for i in range(5)] + [(i + 1, i) for i in range(5)]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
+    edges = spark.createDataFrame(pairs, "src long, dst long").withColumn(
+        "w", F.lit(1)
+    )
     seeds = spark.createDataFrame([(0,)], "node long")
     out = {
         r["node"]: r["dist"]
-        for r in khop_reach(edges, seeds, k=3, persist_edges=False).collect()
+        for r in sssp_bounded(edges, seeds, rounds=3).collect()
     }
     assert out == {0: 0, 1: 1, 2: 2, 3: 3}
+    with pytest.raises(ValueError):
+        sssp_bounded(edges, seeds, rounds=-1)
 
 
 def test_khop_multiple_seeds_take_min(spark):
-    from bioeco_portal_etl_spark.graph.bfs import khop_reach
+    from bioeco_portal_etl_spark.graph.sssp import sssp_bounded
 
     pairs = [(0, 1), (1, 0), (1, 2), (2, 1), (2, 3), (3, 2)]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
+    edges = spark.createDataFrame(pairs, "src long, dst long").withColumn(
+        "w", F.lit(1)
+    )
     seeds = spark.createDataFrame([(0,), (3,)], "node long")
     out = {
         r["node"]: r["dist"]
-        for r in khop_reach(edges, seeds, k=2, persist_edges=False).collect()
+        for r in sssp_bounded(edges, seeds, rounds=2).collect()
     }
     assert out == {0: 0, 3: 0, 1: 1, 2: 1}
 

@@ -150,10 +150,32 @@ def test_cap_per_group_keeps_first_n_by_order(spark):
     assert got == expect
 
 
+def _union_find_clusters(edges):
+    """node -> min member of its component, for every node on an edge:
+    an independent pure-python union-find over ``(a, b)`` pairs."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    roots = {}
+    for x in list(parent):
+        roots.setdefault(find(x), []).append(x)
+    return {x: min(members) for members in roots.values() for x in members}
+
+
 def test_connected_components_matches_union_find(spark):
     """Min-label propagation ≡ an independent pure-python union-find over
     adversarial small graphs (chains, stars, merged rings, singleton-free)."""
     import random
+
+    from bioeco_portal_etl_spark.graph.cc import connected_components
 
     rng = random.Random(7)
     for trial in range(4):
@@ -163,48 +185,46 @@ def test_connected_components_matches_union_find(spark):
             for _ in range(rng.randint(10, 60))
         }
         pairs = spark.createDataFrame(
-            [(a, b) for a, b in sorted(edges)], "id_a long, id_b long"
+            [(a, b) for a, b in sorted(edges)], "src long, dst long"
         )
-        from bioeco_portal_etl_spark.text.dedupe import connected_components
-
         got = {
-            r.node: r.cluster_id for r in connected_components(pairs).collect()
+            r.node: r.component for r in connected_components(pairs).collect()
         }
-
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        roots = {}
-        for x in range(n):
-            roots.setdefault(find(x), []).append(x)
-        expect = {}
-        for members in roots.values():
-            if len(members) > 1:  # operator only labels nodes with edges
-                m = min(members)
-                for x in members:
-                    expect[x] = m
-        touched = {x for e in edges for x in e}
-        expect = {x: v for x, v in expect.items() if x in touched}
+        # the operator only labels nodes with edges
+        expect = _union_find_clusters(edges)
         assert got == expect, (trial, sorted(edges))
 
 
 def test_connected_components_long_chain_converges(spark):
     """A 30-node chain needs ~log-diameter-ish rounds of propagation — the
     operator must converge (not hit max_iter) and label all nodes 0."""
-    from bioeco_portal_etl_spark.text.dedupe import connected_components
+    from bioeco_portal_etl_spark.graph.cc import connected_components
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(30)], "src long, dst long"
     )
-    got = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
+    got = {r.node: r.component for r in connected_components(pairs).collect()}
     assert got == {i: 0 for i in range(31)}
+
+
+def test_connected_components_over_lsh_pairs(spark):
+    """td7's input shape: components over the MinHash-LSH candidate pairs
+    of the sf0.001 documents equal a union-find over the collected pairs.
+    A union inside the relaxation loop made Spark's constraint rewrite
+    (UnionBase.rewriteConstraints) fail on this plan."""
+    from bioeco_portal_etl_spark.graph.cc import connected_components
+    from bioeco_portal_etl_spark.sources.files import read_parquet_table
+    from bioeco_portal_etl_spark.text.dedupe import minhash_lsh_pairs
+    from tests.conftest import SF_SMOKE
+
+    d = read_parquet_table(spark, SF_SMOKE, "documents")
+    pairs = minhash_lsh_pairs(d, "doc_id", "text").select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    )
+    edges = [(r.src, r.dst) for r in pairs.collect()]
+    assert edges
+    got = {r.node: r.component for r in connected_components(pairs).collect()}
+    assert got == _union_find_clusters(edges)
 
 
 def test_scd2_merge_semantics(spark):
