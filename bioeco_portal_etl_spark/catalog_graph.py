@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from bioeco_portal_etl_spark.graph.undirected import canonical, undirected
 from bioeco_portal_etl_spark.sources.files import read_parquet_table as T
 
 
@@ -377,12 +378,16 @@ def _coactivity_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Customers active on the same order date — a bounded-fan-out
     projection graph (daily cohort sizes are small constants), the same
     shape as gr1's co-order supplier graph but over a sparser
-    key, so communities/cores are non-trivial."""
+    key, so communities/cores are non-trivial. Each co-active pair is
+    emitted in one orientation (src < dst), once per shared order pair:
+    the join produces half the rows the both-orientation form would, and
+    graph.undirected restores the other orientation in its one dedupe
+    exchange."""
     o = T(spark, sf, "orders").select("o_custkey", "o_orderdate")
     a, b = o.alias("a"), o.alias("b")
     return (
         a.join(b, "o_orderdate")
-        .filter(F.col("a.o_custkey") != F.col("b.o_custkey"))
+        .filter(F.col("a.o_custkey") < F.col("b.o_custkey"))
         .select(
             F.col("a.o_custkey").alias("src"),
             F.col("b.o_custkey").alias("dst"),
@@ -399,20 +404,8 @@ def gr7_label_communities(spark: SparkSession, sf: str) -> DataFrame:
         label_propagation,
     )
 
-    # The co-activity join already emits BOTH orderings of every pair
-    # (the <> condition), so distinct(e) == distinct(e UNION swap(e)) —
-    # pre_symmetrized skips the 2x union the generic path would pay, and
-    # the repartition("src") + dropDuplicates layout (one exchange,
-    # subset-of-keys rule) leaves every LPA round exchange-free
-    # (round-12, guide §2.4; same shared-frame shape as gr20).
-    sym = (
-        _coactivity_edges(spark, sf)
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
     return community_sizes(
-        label_propagation(sym, rounds=2, pre_symmetrized=True),
+        label_propagation(undirected(_coactivity_edges(spark, sf)), rounds=2),
         top_k=20,
     )
 
@@ -443,11 +436,9 @@ def gr8_kcore(spark: SparkSession, sf: str) -> DataFrame:
     Spark loop converges within that budget on the gate data."""
     from bioeco_portal_etl_spark.graph.kcore import kcore
 
-    # co-activity emits both orderings by construction — skip the
-    # symmetrizing union inside kcore (round-12; dedupe still runs)
-    return kcore(
-        _coactivity_edges(spark, sf), k=_KCORE_K, pre_symmetrized=True
-    ).orderBy("node")
+    return kcore(undirected(_coactivity_edges(spark, sf)), k=_KCORE_K).orderBy(
+        "node"
+    )
 
 
 gr8_kcore.__doc__ = gr8_kcore.__doc__.format(k=_KCORE_K)
@@ -496,9 +487,6 @@ SELECT node, side, score_e6 FROM hitsr ORDER BY side, node"""
 # gr10 — deterministic random-walk corpus
 # ---------------------------------------------------------------------------
 
-_GR10_EDGES_SQL = """SELECT a.o_custkey AS src, b.o_custkey AS dst
-  FROM orders a JOIN orders b
-    ON a.o_orderdate = b.o_orderdate AND a.o_custkey <> b.o_custkey"""
 _GR10_LEN = 3
 
 
@@ -507,35 +495,15 @@ def gr10_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     same-day co-activity graph (graph/walks.py): the walk corpus a graph
     embedding trains on, bit-reproducible because hop choices are md5
     functions of (walk, step, node) over sorted adjacency."""
-    o = T(spark, sf, "orders").select("o_custkey", "o_orderdate")
-    a, b = o.alias("a"), o.alias("b")
-    edges = (
-        a.join(b, "o_orderdate")
-        .filter(F.col("a.o_custkey") != F.col("b.o_custkey"))
-        .select(
-            F.col("a.o_custkey").alias("src"),
-            F.col("b.o_custkey").alias("dst"),
-        )
-    )
     from bioeco_portal_etl_spark.graph.walks import random_walks
 
-    # Round-12 (guide §2.4): the co-activity join already emits both
-    # orderings, so dedupe it ONCE — repartition("src") + dropDuplicates
-    # is one exchange whose hash(src) layout the adjacency collect_set,
-    # the seed distinct, AND every per-hop groupBy alignment then reuse
-    # exchange-free — and persist it so adjacency and seeds don't each
-    # replay the orders⋈orders join.
-    sym = (
-        edges.repartition("src").dropDuplicates(["src", "dst"]).persist()
-    )
+    sym = undirected(_coactivity_edges(spark, sf))
     seeds = (
-        sym.select(F.col("src").alias("walk_id"))
+        sym.df.select(F.col("src").alias("walk_id"))
         .distinct()
         .filter(F.col("walk_id") % 10 == 0)
     )
-    return random_walks(
-        sym, seeds, length=_GR10_LEN, pre_symmetrized=True
-    ).orderBy("walk_id", "pos")
+    return random_walks(sym, seeds, length=_GR10_LEN).orderBy("walk_id", "pos")
 
 
 gr10_random_walks.__doc__ = gr10_random_walks.__doc__.format(l=_GR10_LEN)
@@ -548,7 +516,7 @@ def _gr10_sql() -> str:
         "SELECT DISTINCT src AS walk_id FROM sym WHERE src % 10 = 0"
     )
     return f"""
-WITH {duck_random_walks(_GR10_EDGES_SQL, seeds, length=_GR10_LEN)}
+WITH {duck_random_walks(_COACT_EDGES_SQL, seeds, length=_GR10_LEN)}
 SELECT walk_id, pos, node FROM walks ORDER BY walk_id, pos"""
 
 
@@ -632,7 +600,7 @@ def gr13_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     supplier chain graph, 3 supersteps — nodes ranked by proximity to
     the seeds; zero-mass nodes are filtered (they are 'unreachable in 3
     damped steps', not rank-0 peers)."""
-    from bioeco_portal_etl_spark.graph.pagerank import personalized_pagerank
+    from bioeco_portal_etl_spark.graph.pagerank import pagerank
 
     edges = _chain_supplier_edges(spark, sf)
     seeds = (
@@ -641,9 +609,9 @@ def gr13_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("s_suppkey").alias("node"))
     )
     return (
-        personalized_pagerank(edges, seeds, iterations=3)
-        .filter(F.col("ppr_e9") > 0)
-        .select("node", F.col("ppr_e9").cast("long").alias("ppr_e9"))
+        pagerank(edges, iterations=3, seeds=seeds)
+        .filter(F.col("pr_e9") > 0)
+        .select("node", F.col("pr_e9").cast("long").alias("ppr_e9"))
         .orderBy("node")
     )
 
@@ -805,14 +773,10 @@ def gr17_adamic_adar(spark: SparkSession, sf: str) -> DataFrame:
     from bioeco_portal_etl_spark.graph.linkpred import adamic_adar
 
     return (
-        # co-activity emits both orderings by construction, so the
-        # symmetrizing union inside adamic_adar is pure duplication —
-        # skip it (round-12; the dedupe still runs, keyed by src)
         adamic_adar(
-            _coactivity_edges(spark, sf),
+            undirected(_coactivity_edges(spark, sf)),
             max_degree=200,
             min_common=2,
-            pre_symmetrized=True,
         )
         .orderBy(F.desc("aa_e6"), "u", "v")
         .limit(500)
@@ -912,27 +876,12 @@ def gr20_modularity(spark: SparkSession, sf: str) -> DataFrame:
     from bioeco_portal_etl_spark.graph.labelprop import label_propagation
     from bioeco_portal_etl_spark.graph.modularity import community_modularity
 
-    # the co-activity self-join is symmetric by construction (the <>
-    # join emits both orderings); materialize it ONCE and share the
-    # frame between the detector and the scorer — without this the
-    # orders⋈orders join replays per consumer (10.0s -> 8.2s at sf0.1).
-    # Round-12 layout (guide §2.4): dedupe via repartition("src") +
-    # dropDuplicates instead of .distinct() — ONE exchange, and hash(src)
-    # co-locates every (src, dst) group (subset-of-keys rule), so the
-    # persisted frame is ALREADY the partitioning every downstream
-    # aggregate keys on: LPA's per-round (node=src, label) counts, the
-    # scorer's degree count, and the initial-label distinct all run
-    # exchange-free, with the label table broadcast into the joins.
-    sym = (
-        _coactivity_edges(spark, sf)
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-    labels = label_propagation(sym, rounds=2, pre_symmetrized=True)
-    return community_modularity(
-        sym, labels, top_k=20, pre_symmetrized=True
-    ).orderBy(
+    # ONE persisted edge frame shared by the detector and the scorer:
+    # without it the orders⋈orders join replays per consumer (10.0s ->
+    # 8.2s at sf0.1).
+    sym = undirected(_coactivity_edges(spark, sf))
+    labels = label_propagation(sym, rounds=2)
+    return community_modularity(sym, labels, top_k=20).orderBy(
         F.desc("n_nodes"), "community"
     )
 
@@ -988,18 +937,19 @@ def gr22_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     graph surfaces NULL."""
     from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
-    orders = T(spark, sf, "orders")
-    o = orders.select("o_custkey", "o_orderdate")
-    a, b = o.alias("a"), o.alias("b")
-    edges = (
-        a.join(b, "o_orderdate")
-        .filter(F.col("a.o_custkey") != F.col("b.o_custkey"))
-        .select(
-            F.col("a.o_custkey").alias("src"),
-            F.col("b.o_custkey").alias("dst"),
-        )
-        .distinct()
-    )
+    # the directed list the kernel reads: both orientations of each
+    # distinct pair. The two halves are disjoint, so no second dedupe
+    # runs, and no cache is pinned (undirected() persists; this single
+    # aggregate pass does not need it)
+    und = canonical(_coactivity_edges(spark, sf))
+    edges = und.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
     return degree_assortativity(edges).select(
         "n_nodes",
         F.col("m_edges").alias("n_directed_edges"),

@@ -7,8 +7,9 @@ questions are centrality (:mod:`pagerank`) and local clustering
 distributed (src, dst) edge list — no driver-side adjacency, no RDDs —
 the same shapes GraphX/GraphFrames lower to, minus the framework.
 
-Connected components (the third classic) already ships in
-text/dedupe.py's duplicate-cluster resolution (td7).
+Connected components (the third classic) is :mod:`cc`, shared by gr6
+and the duplicate-cluster resolution of td7/td9. Undirected kernels read
+one representation, built only by :mod:`undirected`.
 
 Engine exactness: PageRank runs in e9 fixed-point integer arithmetic
 (sums of longs are order-independent where float mass would reassociate

@@ -37,7 +37,7 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     broadcast into the per-half-step joins (guide §3.1)."""
 
     # a production caller persists the distinct edge list across the
-    # 2 * iterations references (the pagerank persist_edges pattern);
+    # 2 * iterations references (as pagerank does);
     # the fixed-iteration plan here stays declarative so Catalyst sees
     # the whole tree and the catalog's plan pins stay inspectable
     e = edges.select("src", "dst").distinct()

@@ -28,36 +28,24 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
+
 
 def kcore(
-    edges: DataFrame,
+    edges: UndirectedEdges,
     k: int = 3,
     max_rounds: int = 12,
-    pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(node, deg) for every node of the k-core, with ``deg`` its degree
-    INSIDE the core. ``edges`` is undirected (src, dst); symmetrized and
-    self-loop-stripped here. Raises if peeling hasn't converged within
+    INSIDE the core. Raises if peeling hasn't converged within
     ``max_rounds`` (each round deletes >= 1 node, so rounds <= |V|; real
     graphs peel in a handful — raise max_rounds for adversarial chains).
 
-    Round-12 knobs (guide §2.4/§3.1): ``pre_symmetrized`` skips the
-    swap-union when the caller's list already carries both directions as
-    a set (e.g. the co-activity join); the dedupe then runs keyed by src
-    so per-round degree counts need no exchange. The surviving-node set
-    is broadcast into both endpoint semi-joins (the set is <= |V| ids and
-    SHRINKS every round) so the edge frame never shuffles during
-    peeling."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not pre_symmetrized:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    sym = (
-        e.repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
+    The input is already hash(src)-partitioned, so the per-round degree
+    counts need no exchange. The surviving-node set is broadcast into
+    both endpoint semi-joins (the set is <= |V| ids and SHRINKS every
+    round) so the edge frame never shuffles during peeling."""
+    sym = edge_frame(edges)
     n_edges = sym.count()
     for _ in range(max_rounds):
         deg = sym.groupBy(F.col("src").alias("node")).agg(

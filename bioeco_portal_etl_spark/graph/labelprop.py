@@ -40,6 +40,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
+
 
 def _argmax_label(nbr: DataFrame) -> DataFrame:
     """Per-node most-frequent label, ties to the SMALLEST label — as one
@@ -63,42 +65,17 @@ def _argmax_label(nbr: DataFrame) -> DataFrame:
 
 
 def label_propagation(
-    edges: DataFrame,
+    edges: UndirectedEdges,
     rounds: int = 2,
-    pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(node, label) after ``rounds`` synchronous updates; initial label =
-    own node id. ``edges`` is an undirected edge list given as (src, dst)
-    long columns — symmetrized and self-loop-stripped here. Isolated
-    nodes don't appear (no edges = no community evidence).
+    own node id. Edge ids are long columns. Isolated nodes don't appear
+    (no edges = no community evidence).
 
-    Each round reads ``edges`` again: a caller whose edge derivation is
-    expensive (gr7's orders⋈orders co-activity graph) persists and lays
-    out the frame itself.
-
-    ``pre_symmetrized``: caller certifies the list already contains both
-    directions of every edge, deduplicated. Ideally the caller also
-    hash-partitions it by ``src`` (e.g. ``repartition("src")`` before
-    ``persist()``): every per-round aggregate then runs exchange-free.
-
-    The O(V) label table is broadcast into the per-round join so the
-    edge frame never shuffles or sorts."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if pre_symmetrized:
-        sym = e
-    else:
-        # ONE exchange, keyed by src: hash(src) co-locates every
-        # (src, dst) group, so the dedupe aggregate runs in place and the
-        # output layout is exactly what the per-round aggregates want —
-        # a .distinct() would exchange on (src, dst) and leave the rounds
-        # misaligned (each groupBy(node=src, ...) re-shuffling |E| rows).
-        sym = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition("src")
-            .dropDuplicates(["src", "dst"])
-        )
+    The input is hash(src)-partitioned, so every per-round aggregate runs
+    exchange-free, and the O(V) label table is broadcast into the
+    per-round join so the edge frame never shuffles or sorts."""
+    sym = edge_frame(edges)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()

@@ -32,37 +32,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
+
 
 def adamic_adar(
-    edges: DataFrame,
+    edges: UndirectedEdges,
     max_degree: int = 200,
     min_common: int = 2,
-    persist_edges: bool = True,
-    pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(u, v, n_common, aa_e6) for non-adjacent pairs (u < v) sharing
-    >= ``min_common`` middles of degree <= ``max_degree``. ``edges`` is
-    an undirected (src, dst) list; symmetrized and de-self-looped here.
+    >= ``min_common`` middles of degree <= ``max_degree``.
 
-    ``persist_edges`` pins the symmetrized list, which this plan
-    references THREE times (degrees, wedge middles, the known-edge
-    anti-join) — without it the upstream edge derivation replays per
-    reference (the labelprop/pagerank recompute-once lesson; measured
-    22.9s -> 8s-class on the sf0.1 co-activity graph).
-
-    ``pre_symmetrized``: the caller certifies both directions are
-    already present AS A SET; the symmetrizing union is skipped and the
-    dedupe runs keyed by src (one exchange whose hash(src) layout the
-    degree count and the wedge middles then reuse exchange-free —
-    round-12, guide §2.4)."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not pre_symmetrized:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    sym = e.repartition("src").dropDuplicates(["src", "dst"])
-    if persist_edges:
-        sym = sym.persist()
+    The plan reads the persisted edge frame THREE times (degrees, wedge
+    middles, the known-edge anti-join), and its hash(src) layout serves
+    the degree count and the wedge middles without an exchange."""
+    sym = edge_frame(edges)
     deg = sym.groupBy(F.col("src").alias("w")).agg(
         F.count(F.lit(1)).alias("deg")
     )

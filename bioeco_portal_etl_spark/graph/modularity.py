@@ -23,84 +23,36 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
+
 
 def community_modularity(
-    edges: DataFrame,
+    edges: UndirectedEdges,
     labels: DataFrame,
     top_k: int = 20,
-    pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(community, n_nodes, internal_edges, degree_sum, q_contrib_e6)
     for the ``top_k`` largest communities (size DESC, community ASC).
-    ``edges`` is an undirected (src, dst) list (canonicalized here);
     ``labels`` is (node, label) — the detector's output.
 
-    ``pre_symmetrized``: the input already carries BOTH directions of
-    every edge, deduplicated and self-loop-free (a persisted frame
-    shared with the detector) — the scorer then reads the symmetric
-    frame directly: internal/m are the symmetric counts halved
-    (integer-exact) and degree is the per-src out-count, with the label
-    table broadcast onto both endpoints.
-
-    The O(V) label table is broadcast into the two endpoint joins
-    (guide §3.1)."""
-
-    if pre_symmetrized:
-        # Round-12 optimization (guide §2.3/§3.1): score straight off the
-        # FULL symmetric frame instead of filtering to the src<dst half
-        # and unioning two projections for degrees. With sym symmetric,
-        # deduplicated and self-loop-free: every undirected edge appears
-        # exactly twice, so internal/m are the symmetric counts halved
-        # (integer-exact) and degree(v) is simply v's out-count in sym —
-        # ONE aggregate over a frame the caller typically has
-        # hash(src)-partitioned (then it needs no exchange at all),
-        # instead of a 2x union re-shuffled from scratch. The tiny label
-        # table is broadcast into both endpoint joins so the O(E) side
-        # never moves (it previously sort-merge-joined twice).
-        # Cheap self-loop guard (round-13, ADVICE r12): the old
-        # src<dst canonicalization dropped self-loops for free; the
-        # halved-count form would silently truncate odd counts under
-        # div 2 if a caller violated the self-loop-free certification.
-        # The filter is a scan-level predicate — no exchange, no
-        # measurable cost — and makes the contract enforced, not hoped.
-        edges = edges.filter(F.col("src") != F.col("dst"))
-        lu = labels.select(F.col("node").alias("src"), F.col("label").alias("cu"))
-        lv = labels.select(F.col("node").alias("dst"), F.col("label").alias("cv"))
-        ann = edges.join(F.broadcast(lu), "src").join(F.broadcast(lv), "dst")
-        internal = (
-            ann.filter(F.col("cu") == F.col("cv"))
-            .groupBy(F.col("cu").alias("community"))
-            .agg(F.expr("count(1) div 2").alias("internal_edges"))
-        )
-        deg = edges.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        m = edges.agg(F.expr("count(1) div 2").alias("m"))
-    else:
-        e = (
-            edges.filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("v"),
-            )
-            .distinct()
-            .persist()
-        )
-        lu = labels.select(F.col("node").alias("u"), F.col("label").alias("cu"))
-        lv = labels.select(F.col("node").alias("v"), F.col("label").alias("cv"))
-        ann = e.join(F.broadcast(lu), "u").join(F.broadcast(lv), "v")
-        internal = (
-            ann.filter(F.col("cu") == F.col("cv"))
-            .groupBy(F.col("cu").alias("community"))
-            .agg(F.count(F.lit(1)).alias("internal_edges"))
-        )
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        m = e.agg(F.count(F.lit(1)).alias("m"))
+    Every undirected edge appears exactly twice in the symmetric frame,
+    so internal/m are the symmetric counts halved (integer-exact) and
+    degree(v) is v's out-count: ONE aggregate over the hash(src)-
+    partitioned frame, which needs no exchange. The O(V) label table is
+    broadcast into the two endpoint joins (guide §3.1)."""
+    sym = edge_frame(edges)
+    lu = labels.select(F.col("node").alias("src"), F.col("label").alias("cu"))
+    lv = labels.select(F.col("node").alias("dst"), F.col("label").alias("cv"))
+    ann = sym.join(F.broadcast(lu), "src").join(F.broadcast(lv), "dst")
+    internal = (
+        ann.filter(F.col("cu") == F.col("cv"))
+        .groupBy(F.col("cu").alias("community"))
+        .agg(F.expr("count(1) div 2").alias("internal_edges"))
+    )
+    deg = sym.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    m = sym.agg(F.expr("count(1) div 2").alias("m"))
     comm = (
         labels.join(deg, "node", "left")
         .groupBy(F.col("label").alias("community"))

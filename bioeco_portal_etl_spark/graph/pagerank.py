@@ -41,15 +41,20 @@ DAMP_NUM, DAMP_DEN = 85, 100  #: damping 0.85 as an exact rational
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    persist_edges: bool = True,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """e9 fixed-point PageRank; returns (node, pr_e9).
 
-    ``edges`` is a directed edge list (duplicate edges count once —
-    deduplicated here). ``persist_edges`` pins the partitioned edge list
-    in memory across iterations (turn off for one-shot tiny graphs).
+    ``edges`` is a directed (src, dst) list (duplicate edges count once —
+    deduplicated here). ``seeds`` (a ``node`` column) makes it
+    Personalized PageRank (Jeh & Widom 2003's topic-sensitive
+    formulation): the initial and teleport mass go to the seed set
+    instead of spreading uniformly, so ranks measure proximity to the
+    seeds — the primitive behind related-item panels, local community
+    scoring and seed-expansion labeling. Nodes unreached from the seeds
+    carry rank 0. Without ``seeds`` every node is a seed, which is plain
+    PageRank. The seed flag rides the persisted node table, so no extra
+    join appears in the loop.
     """
     # ONE exchange for dedupe + layout (round-12, guide §2.4): hash(src)
     # co-locates every (src, dst) group — the subset-of-keys rule — so
@@ -58,12 +63,11 @@ def pagerank(
     # and the outdeg aggregate want it. distinct().repartition("src")
     # paid a second full |E| exchange for the same layout.
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .repartition("src")
         .dropDuplicates(["src", "dst"])
+        .persist()
     )
-    if persist_edges:
-        e = e.persist()
 
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = (
@@ -73,20 +77,30 @@ def pagerank(
         .join(outdeg.withColumnRenamed("src", "node"), "node", "left")
         .withColumn("outdeg", F.coalesce("outdeg", F.lit(0)))
     )
-    # |V| as a window count — one exchange of the small node table, no
-    # crossJoin against a second aggregation subtree.
-    nodes = nodes.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    if persist_edges:
-        # every iteration's teleport join re-reads nodes; pin the O(V)
-        # table alongside the edges so reference i doesn't replay the
-        # degree/distinct lineage
-        nodes = nodes.persist()
+    if seeds is None:
+        nodes = nodes.withColumn("is_seed", F.lit(1))
+    else:
+        s = seeds.select("node").distinct().withColumn("is_seed", F.lit(1))
+        nodes = nodes.join(s, "node", "left").withColumn(
+            "is_seed", F.coalesce("is_seed", F.lit(0))
+        )
+    # |S| as a window sum — one exchange of the small node table, no
+    # crossJoin against a second aggregation subtree. Every iteration's
+    # teleport join re-reads nodes; pin the O(V) table alongside the
+    # edges so reference i doesn't replay the degree/distinct lineage.
+    nodes = nodes.withColumn(
+        "ns", F.sum("is_seed").over(Window.partitionBy())
+    ).persist()
 
     # integer div, never float `/` + cast: Spark's cast truncates but
     # DuckDB's CAST rounds-to-nearest — `div`/`//` agree on positives.
     ranks = nodes.select(
-        "node", "outdeg", "n", F.expr(f"{E9} div n").alias("pr_e9")
+        "node", "outdeg", "is_seed", "ns",
+        F.expr(f"CASE WHEN is_seed = 1 THEN {E9} div ns ELSE 0 END").alias(
+            "pr_e9"
+        ),
     )
+    teleport = (DAMP_DEN - DAMP_NUM) * E9 // DAMP_DEN
     for _ in range(iterations):
         # broadcast the O(V) rank table into the O(E) join so the
         # persisted edge frame never moves or sorts (round-12, guide
@@ -94,7 +108,7 @@ def pagerank(
         rhs = F.broadcast(ranks.withColumnRenamed("node", "src"))
         contribs = (
             e.join(rhs, "src")
-            .filter(F.col("outdeg") > 0)
+            .filter((F.col("outdeg") > 0) & (F.col("pr_e9") > 0))
             .select(
                 F.col("dst").alias("node"),
                 F.expr(
@@ -103,17 +117,12 @@ def pagerank(
             )
         )
         sums = contribs.groupBy("node").agg(F.sum("c").alias("in_mass"))
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                "outdeg",
-                "n",
-                (
-                    F.expr(f"{(DAMP_DEN - DAMP_NUM) * E9 // DAMP_DEN} div n")
-                    + F.coalesce(F.col("in_mass"), F.lit(0))
-                ).alias("pr_e9"),
-            )
+        ranks = nodes.join(sums, "node", "left").select(
+            "node", "outdeg", "is_seed", "ns",
+            (
+                F.expr(f"CASE WHEN is_seed = 1 THEN {teleport} div ns ELSE 0 END")
+                + F.coalesce(F.col("in_mass"), F.lit(0))
+            ).alias("pr_e9"),
         )
     return ranks.select("node", "pr_e9")
 
@@ -151,90 +160,8 @@ pr{i + 1} AS (
     return ",\n".join(parts)
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Personalized PageRank (PPR): the teleport mass returns to the SEED
-    set instead of spreading uniformly, so ranks measure proximity to the
-    seeds — the primitive behind related-item panels, local community
-    scoring, and seed-expansion labeling (Jeh & Widom 2003's topic-
-    sensitive formulation). Returns (node, ppr_e9); nodes never reached
-    from the seeds carry rank 0 and are omitted only if they have no
-    edge at all (the node table is edge endpoints, as in pagerank()).
-
-    Same e9 integer fixed-point contract as :func:`pagerank` (identical
-    overflow/rounding analysis); the only changes are pr0 (e9/|S| on
-    seeds, 0 elsewhere) and the teleport term (seed-only). Same
-    two-shuffle superstep; the seed membership flag rides the persisted
-    node table so no extra join appears in the loop."""
-    # same single-exchange dedupe+layout as pagerank() (round-12)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    s = seeds.select(F.col("node")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .join(outdeg.withColumnRenamed("src", "node"), "node", "left")
-        .withColumn("outdeg", F.coalesce("outdeg", F.lit(0)))
-        .join(s.withColumn("is_seed", F.lit(1)), "node", "left")
-        .withColumn("is_seed", F.coalesce("is_seed", F.lit(0)))
-    )
-    nodes = nodes.withColumn(
-        "ns", F.sum("is_seed").over(Window.partitionBy())
-    ).persist()
-
-    ranks = nodes.select(
-        "node",
-        "outdeg",
-        "is_seed",
-        "ns",
-        F.expr(f"CASE WHEN is_seed = 1 THEN {E9} div ns ELSE 0 END").alias(
-            "ppr_e9"
-        ),
-    )
-    teleport = (DAMP_DEN - DAMP_NUM) * E9 // DAMP_DEN
-    for _ in range(iterations):
-        # broadcast the O(V) rank table (see pagerank() — round-12)
-        rhs = F.broadcast(ranks.withColumnRenamed("node", "src"))
-        contribs = (
-            e.join(rhs, "src")
-            .filter((F.col("outdeg") > 0) & (F.col("ppr_e9") > 0))
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"({DAMP_NUM} * ppr_e9) div ({DAMP_DEN} * outdeg)"
-                ).alias("c"),
-            )
-        )
-        sums = contribs.groupBy("node").agg(F.sum("c").alias("in_mass"))
-        ranks = nodes.join(sums, "node", "left").select(
-            "node",
-            "outdeg",
-            "is_seed",
-            "ns",
-            (
-                F.expr(
-                    f"CASE WHEN is_seed = 1 THEN {teleport} div ns ELSE 0 END"
-                )
-                + F.coalesce(F.col("in_mass"), F.lit(0))
-            ).alias("ppr_e9"),
-        )
-    return ranks.select("node", "ppr_e9")
-
-
 def duck_ppr(edges_select: str, seeds_select: str, iterations: int = 3) -> str:
-    """DuckDB CTE body mirroring :func:`personalized_pagerank`,
+    """DuckDB CTE body mirroring :func:`pagerank` with ``seeds``,
     iterations unrolled; exposes ``ppr{iterations}(node, ppr_e9)``."""
     teleport = (DAMP_DEN - DAMP_NUM) * E9 // DAMP_DEN
     parts = [

@@ -22,15 +22,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import canonical
+
 
 def rich_club(edges: DataFrame, ks: list[int]) -> DataFrame:
     """(k, n_nodes, n_edges, phi_e6) per threshold in ``ks``. ``edges``
     is an undirected (src, dst) list; canonicalized and deduplicated
     here. The node-sized degree lookups and the constant-sized |ks|-row
     threshold and per-k aggregate tables are broadcast (guide §3.1)."""
-    e = edges.filter(F.col("src") != F.col("dst")).select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct()
+    e = canonical(edges)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))

@@ -20,16 +20,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import canonical
+
 
 def _canonical(edges: DataFrame, a: str, b: str) -> DataFrame:
-    """Undirected edge set as canonical (u < v) pairs, deduplicated."""
-    u = F.least(F.col(a), F.col(b))
-    v = F.greatest(F.col(a), F.col(b))
-    return (
-        edges.filter(F.col(a) != F.col(b))
-        .select(u.alias("u"), v.alias("v"))
-        .distinct()
-    )
+    """:func:`canonical` over the endpoint columns ``a`` and ``b``."""
+    return canonical(edges.select(F.col(a).alias("src"), F.col(b).alias("dst")))
 
 
 def _degrees_and_orientation(und: DataFrame) -> tuple[DataFrame, DataFrame]:

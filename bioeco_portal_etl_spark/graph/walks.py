@@ -29,21 +29,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
 from bioeco_portal_etl_spark.sketches import h60
 
 
-def adjacency(edges: DataFrame, pre_symmetrized: bool = False) -> DataFrame:
-    """(node, nbrs) — symmetrized, deduplicated, SORTED neighbor arrays
-    (the sort pins hash-index semantics across engines).
-
-    ONE shuffle, not two: a separate ``.distinct()`` before the groupBy
-    would shuffle the full symmetrized edge stream twice; ``collect_set``
-    dedupes INSIDE the aggregate with map-side partials
-    (ObjectHashAggregate partial_collect_set), so multi-edges collapse
-    before the exchange. On the sf0.1 co-activity graph (9.3M edges, avg
-    degree 608) array materialization dominates the operator's cost;
-    wall-clock deltas on the round-5 box are host-contention-noisy, so
-    the claim here is structural (exchange count), not a stopwatch.
+def adjacency(edges: UndirectedEdges) -> DataFrame:
+    """(node, nbrs) — SORTED neighbor arrays (the sort pins hash-index
+    semantics across engines). The input is already deduplicated and
+    hash(src)-partitioned, so the array build runs with no exchange.
 
     Degree bound: per-node arrays are O(max_degree) row memory. That
     holds for the co-activity fixture and most power-law graphs after a
@@ -51,28 +44,15 @@ def adjacency(edges: DataFrame, pre_symmetrized: bool = False) -> DataFrame:
     formulation instead ((node, rank, dst) + row_number — prototyped, ~2x
     slower here because materializing the 9.1M-row rank table costs more
     than the arrays; revisit only when degree actually breaks rows)."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if pre_symmetrized:
-        # caller certifies both directions are already present (as a
-        # set) — collect_set over the swap-union would assemble the
-        # identical arrays from twice the rows (round-12; and when the
-        # caller also hash-partitions by src, the array build runs with
-        # no exchange at all)
-        sym = e
-    else:
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    return sym.groupBy(F.col("src").alias("node")).agg(
-        F.sort_array(F.collect_set("dst")).alias("nbrs")
+    return edge_frame(edges).groupBy(F.col("src").alias("node")).agg(
+        F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
 
 
 def random_walks(
-    edges: DataFrame,
+    edges: UndirectedEdges,
     seeds: DataFrame,
     length: int = 3,
-    pre_symmetrized: bool = False,
 ) -> DataFrame:
     """(walk_id, pos, node) rows for one walk per seed: pos 0 is the seed
     itself, then ``length`` hash-driven hops. ``seeds`` needs a
@@ -86,7 +66,7 @@ def random_walks(
     # CONSTRUCTION (every bench pass / catalog call). The checkpoint
     # idiom (graph/cc.py) pays off only for loops whose plan GROWS per
     # iteration; this one is depth-L fixed.
-    adj = adjacency(edges, pre_symmetrized=pre_symmetrized)
+    adj = adjacency(edges)
     cur = seeds.select(
         F.col("walk_id"),
         F.lit(0).cast("long").alias("pos"),

@@ -23,6 +23,7 @@ from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType
 
 
 def _batch(iterable, size):
@@ -89,30 +90,24 @@ def build_merge_sql(
     Server, Oracle, DB2.
     ``derby``: the same MERGE with each key cast to ``VARCHAR(32672)`` in
     ``ON``: Spark's JDBC writer creates string columns as CLOB on Derby,
-    and Derby rejects ``CLOB = CLOB``. For string keys only: Derby cannot
-    convert INTEGER to VARCHAR. Postgres ``text`` keys keep the plain
+    and Derby rejects ``CLOB = CLOB``. Derby cannot convert INTEGER to
+    VARCHAR either, so :func:`stage_and_merge` casts only the keys the
+    staged frame types as strings. Postgres ``text`` keys keep the plain
     form so the join stays indexable.
     ``postgres_onconflict``: pre-15 Postgres (the GeoNode deployments the
     reference targets run 9.x-13): ``INSERT .. SELECT .. ON CONFLICT DO
     UPDATE`` — requires a unique index on the key columns, which the
     MERGE path does not."""
+    if dialect in ("merge", "derby"):
+        cast = key_cols if dialect == "derby" else []
+        return _merge_into(
+            target_table, staging_table, key_cols, update_cols, quote, cast
+        )
+
     def q(c: str) -> str:
         return f"{quote}{c}{quote}"
 
     cols = ", ".join(q(c) for c in [*key_cols, *update_cols])
-    if dialect in ("merge", "derby"):
-        key = "CAST({} AS VARCHAR(32672))" if dialect == "derby" else "{}"
-        on = " AND ".join(
-            f"{key.format(f't.{q(c)}')} = {key.format(f's.{q(c)}')}"
-            for c in key_cols
-        )
-        sets = ", ".join(f"{q(c)} = s.{q(c)}" for c in update_cols)
-        vals = ", ".join(f"s.{q(c)}" for c in [*key_cols, *update_cols])
-        return (
-            f"MERGE INTO {target_table} t USING {staging_table} s ON {on} "
-            f"WHEN MATCHED THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-        )
     if dialect == "postgres_onconflict":
         conflict = ", ".join(q(c) for c in key_cols)
         sets = ", ".join(f"{q(c)} = EXCLUDED.{q(c)}" for c in update_cols)
@@ -122,6 +117,34 @@ def build_merge_sql(
             f"ON CONFLICT ({conflict}) DO UPDATE SET {sets}"
         )
     raise ValueError(f"unknown merge dialect: {dialect!r}")
+
+
+def _merge_into(
+    target_table: str,
+    staging_table: str,
+    key_cols: list[str],
+    update_cols: list[str],
+    quote: str,
+    cast_keys: list[str],
+) -> str:
+    """The ANSI MERGE of :func:`build_merge_sql`, with the keys in
+    ``cast_keys`` compared as ``VARCHAR(32672)`` (Derby's CLOB strings)."""
+    def q(c: str) -> str:
+        return f"{quote}{c}{quote}"
+
+    def key(c: str, side: str) -> str:
+        ref = f"{side}.{q(c)}"
+        return f"CAST({ref} AS VARCHAR(32672))" if c in cast_keys else ref
+
+    cols = ", ".join(q(c) for c in [*key_cols, *update_cols])
+    on = " AND ".join(f"{key(c, 't')} = {key(c, 's')}" for c in key_cols)
+    sets = ", ".join(f"{q(c)} = s.{q(c)}" for c in update_cols)
+    vals = ", ".join(f"s.{q(c)}" for c in [*key_cols, *update_cols])
+    return (
+        f"MERGE INTO {target_table} t USING {staging_table} s ON {on} "
+        f"WHEN MATCHED THEN UPDATE SET {sets} "
+        f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
+    )
 
 
 def build_cdc_merge_sql(
@@ -354,7 +377,8 @@ def stage_and_merge(
         picks the reconciliation statement (build_merge_sql): ``merge`` =
         ANSI MERGE with an UNQUALIFIED update-target list (Postgres 15+
         rejects ``SET t.col``; also Derby/SQL Server/Oracle);
-        ``derby`` = that MERGE with string keys cast out of CLOB;
+        ``derby`` = that MERGE with the keys the staged frame types as
+        strings cast out of CLOB (any key types, composite keys too);
         ``postgres_onconflict`` = INSERT..SELECT..ON CONFLICT for the
         pre-15 Postgres the reference's GeoNode deployments run.
       - driver classpath: works out of the box for drivers on Spark's system
@@ -367,11 +391,19 @@ def stage_and_merge(
 
     props = dict(jdbc_properties or {})
     staging = staging_table or f"{target_table}_stage_{uuid.uuid4().hex[:12]}"
-    df.select(*key_cols, *update_cols).dropDuplicates(key_cols).write.jdbc(
-        jdbc_url, staging, mode="overwrite", properties=props
-    )
+    staged = df.select(*key_cols, *update_cols).dropDuplicates(key_cols)
+    staged.write.jdbc(jdbc_url, staging, mode="overwrite", properties=props)
 
-    merge = build_merge_sql(
-        target_table, staging, key_cols, update_cols, quote=quote, dialect=dialect
-    )
+    if dialect == "derby":
+        strings = {
+            f.name for f in staged.schema.fields if isinstance(f.dataType, StringType)
+        }
+        merge = _merge_into(
+            target_table, staging, key_cols, update_cols, quote,
+            [c for c in key_cols if c in strings],
+        )
+    else:
+        merge = build_merge_sql(
+            target_table, staging, key_cols, update_cols, quote=quote, dialect=dialect
+        )
     _merge_and_drop_staging(df.sparkSession, jdbc_url, props, merge, staging)

@@ -103,6 +103,39 @@ def test_stage_and_merge_string_key_derby(spark, derby_url):
     assert dict((r.k, r.v) for r in back.collect()) == {"a": 1, "b": 20, "c": 3}
 
 
+def test_stage_and_merge_int_key_derby(spark, derby_url):
+    """An INTEGER key through the ``derby`` dialect stays uncast: Derby
+    cannot convert INTEGER to VARCHAR."""
+    from bioeco_portal_etl_spark.sinks.jdbc_upsert import stage_and_merge
+
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    base.write.jdbc(derby_url, "ikeyed", mode="overwrite")
+    delta = spark.createDataFrame([(2, "bb"), (3, "c")], "id int, v string")
+    stage_and_merge(delta, derby_url, "ikeyed", ["id"], ["v"], dialect="derby")
+    back = read_jdbc_table(spark, derby_url, "ikeyed")
+    assert dict((r.id, r.v) for r in back.collect()) == {1: "a", 2: "bb", 3: "c"}
+
+
+def test_stage_and_merge_composite_key_derby(spark, derby_url):
+    """A composite (int, string) key through the ``derby`` dialect: only
+    the string (CLOB) half is cast; neither the all-cast ``derby`` form
+    nor the uncast ``merge`` form runs on this key."""
+    from bioeco_portal_etl_spark.sinks.jdbc_upsert import stage_and_merge
+
+    base = spark.createDataFrame(
+        [(1, "a", 10), (1, "b", 11), (2, "a", 12)], "n int, k string, v int"
+    )
+    base.write.jdbc(derby_url, "ckeyed", mode="overwrite")
+    delta = spark.createDataFrame(
+        [(1, "b", 110), (2, "b", 13)], "n int, k string, v int"
+    )
+    stage_and_merge(delta, derby_url, "ckeyed", ["n", "k"], ["v"], dialect="derby")
+    back = read_jdbc_table(spark, derby_url, "ckeyed")
+    assert {(r.n, r.k): r.v for r in back.collect()} == {
+        (1, "a"): 10, (1, "b"): 110, (2, "a"): 12, (2, "b"): 13,
+    }
+
+
 def test_dialect_matrix_exact_sql():
     """The exact statements each backend receives (round-3 ADVICE: Derby
     proves the mechanism, these pin the Postgres-family dialect the

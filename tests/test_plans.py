@@ -1764,3 +1764,53 @@ def test_portal_programs_scan_each_csv_once(spark, tmp_path):
 def test_p0_canonical_entities_scans_each_table_once(spark):
     plan = _physical(spark, "p0_canonical_entities")
     _assert_one_scan_each(plan, ["p_brand", "s_name"])
+
+
+def _nodes(plan):
+    """Physical operators of ``plan`` (a JVM SparkPlan), adaptive plans
+    read at their initial form, NOT descending into cached relations."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _nodes(plan.inputPlan())
+        return
+    yield plan
+    if plan.nodeName() == "InMemoryTableScan":
+        return
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _src_repartitions(nodes):
+    return [
+        n for n in nodes
+        if n.nodeName() == "Exchange"
+        and re.search(r"hashpartitioning\(src#\d+L?, \d+\), REPARTITION_BY_COL",
+                      n.simpleString(100))
+    ]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "gr7_label_communities",
+        "gr10_random_walks",
+        "gr17_adamic_adar",
+        "gr20_modularity",
+    ],
+)
+def test_undirected_edges_built_once_and_persisted(spark, name):
+    """Undirected-graph contract (graph/undirected.py): the query reads
+    its edge list through ONE persisted relation, whose plan holds the
+    only symmetrizing exchange — one REPARTITION_BY_COL on src fed by
+    the orientation Union. A second symmetrization, or a lost persist,
+    adds a src repartition outside the cache."""
+    df = catalog.queries()[name](spark, SF_SMOKE)
+    live = list(_nodes(df._jdf.queryExecution().executedPlan()))
+    scans = [n for n in live if n.nodeName() == "InMemoryTableScan"]
+    assert scans, "edge list not persisted"
+    builders = {s.relation().cacheBuilder() for s in scans}
+    assert len(builders) == 1
+    assert _src_repartitions(live) == []
+    (cached,) = builders
+    (ex,) = _src_repartitions(list(_nodes(cached.cachedPlan())))
+    assert ex.child().nodeName() == "Union"

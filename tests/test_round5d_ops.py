@@ -132,6 +132,7 @@ def _lpa_ref(edges, rounds):
 
 def test_labelprop_matches_reference_two_communities(spark):
     from bioeco_portal_etl_spark.graph.labelprop import label_propagation
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     # two triangles joined by one bridge edge
     edges = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
@@ -139,19 +140,20 @@ def test_labelprop_matches_reference_two_communities(spark):
     for rounds in (1, 2, 3):
         got = {
             r["node"]: r["label"]
-            for r in label_propagation(e, rounds=rounds).collect()
+            for r in label_propagation(undirected(e), rounds=rounds).collect()
         }
         assert got == _lpa_ref(edges, rounds), rounds
 
 
 def test_labelprop_star_collapses_to_hub_minlabel(spark):
     from bioeco_portal_etl_spark.graph.labelprop import label_propagation
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     edges = [(0, i) for i in range(1, 6)]
     e = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["label"]
-        for r in label_propagation(e, rounds=1).collect()
+        for r in label_propagation(undirected(e), rounds=1).collect()
     }
     # leaves see only the hub(0); hub sees labels 1..5 all once -> min = 1
     assert got == {0: 1, **{i: 0 for i in range(1, 6)}}
@@ -183,6 +185,7 @@ def _kcore_ref(edges, k):
 
 def test_kcore_matches_reference_peeler(spark):
     from bioeco_portal_etl_spark.graph.kcore import kcore
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     # K4 plus a pendant path hanging off it: 3-core = the K4 exactly
     edges = [
@@ -190,22 +193,23 @@ def test_kcore_matches_reference_peeler(spark):
         (4, 5), (5, 6), (6, 7),
     ]
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["deg"] for r in kcore(e, k=3).collect()}
+    got = {r["node"]: r["deg"] for r in kcore(undirected(e), k=3).collect()}
     assert got == _kcore_ref(edges, 3) == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
 def test_kcore_cascade_peels_chain(spark):
     from bioeco_portal_etl_spark.graph.kcore import kcore
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     # a pure path: 2-core is empty — peeling must cascade end-to-end
     edges = [(i, i + 1) for i in range(8)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    assert kcore(e, k=2).count() == 0
+    assert kcore(undirected(e), k=2).count() == 0
     # and a cycle is its own 2-core
     cyc = spark.createDataFrame(
         edges + [(8, 0)], "src long, dst long"
     )
-    got = {r["node"]: r["deg"] for r in kcore(cyc, k=2).collect()}
+    got = {r["node"]: r["deg"] for r in kcore(undirected(cyc), k=2).collect()}
     assert got == {i: 2 for i in range(9)}
 
 
@@ -323,7 +327,8 @@ def test_salted_join_identity_property(spark, big_rows, dim_keys):
 )
 def test_kcore_matches_reference_on_random_graphs(spark, edges, k):
     from bioeco_portal_etl_spark.graph.kcore import kcore
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["deg"] for r in kcore(e, k=k, max_rounds=25).collect()}
+    got = {r["node"]: r["deg"] for r in kcore(undirected(e), k=k, max_rounds=25).collect()}
     assert got == _kcore_ref(edges, k)

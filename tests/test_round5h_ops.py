@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 
 def test_random_walks_are_valid_and_deterministic(spark):
     from bioeco_portal_etl_spark.graph.walks import random_walks
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
     e = spark.createDataFrame(edges, "src long, dst long")
@@ -17,7 +18,7 @@ def test_random_walks_are_valid_and_deterministic(spark):
     def run():
         return sorted(
             (r["walk_id"], r["pos"], r["node"])
-            for r in random_walks(e, seeds, length=4).collect()
+            for r in random_walks(undirected(e), seeds, length=4).collect()
         )
 
     w1, w2 = run(), run()
@@ -40,10 +41,11 @@ def test_random_walks_are_valid_and_deterministic(spark):
 
 def test_random_walk_stops_at_isolated_seed(spark):
     from bioeco_portal_etl_spark.graph.walks import random_walks
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     e = spark.createDataFrame([(1, 2)], "src long, dst long")
     seeds = spark.createDataFrame([(9,)], "walk_id long")  # not in graph
-    rows = random_walks(e, seeds, length=3).collect()
+    rows = random_walks(undirected(e), seeds, length=3).collect()
     assert [(r["pos"], r["node"]) for r in rows] == [(0, 9)]
 
 

@@ -7,6 +7,7 @@ cms_build)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_ppr_mass_localizes_at_seed(spark):
@@ -15,7 +16,7 @@ def test_ppr_mass_localizes_at_seed(spark):
     walk length), and the seed half of the path holds more mass than
     the far half. (Per-hop monotonic decay would be WRONG to assert:
     damped-walk mass oscillates with path parity on bipartite graphs.)"""
-    from bioeco_portal_etl_spark.graph.pagerank import personalized_pagerank
+    from bioeco_portal_etl_spark.graph.pagerank import pagerank
 
     fwd = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "src long, dst long"
@@ -25,8 +26,8 @@ def test_ppr_mass_localizes_at_seed(spark):
     )
     seeds = spark.createDataFrame([(1,)], "node long")
     ppr = lambda k: {
-        r["node"]: r["ppr_e9"]
-        for r in personalized_pagerank(edges, seeds, iterations=k).collect()
+        r["node"]: r["pr_e9"]
+        for r in pagerank(edges, iterations=k, seeds=seeds).collect()
     }
     r2, r3 = ppr(2), ppr(3)
     assert r2[4] == 0 and r3[4] > 0  # reach expands one hop per round
@@ -38,7 +39,7 @@ def test_ppr_matches_unrolled_reference(spark):
     """Exact e9 values on a 2-node graph, hand-unrolled: seed {1},
     edges 1<->2, 3 iterations — teleport 150_000_000 to the seed only,
     85% damped mass alternating across the edge."""
-    from bioeco_portal_etl_spark.graph.pagerank import personalized_pagerank
+    from bioeco_portal_etl_spark.graph.pagerank import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1)], "src long, dst long"
@@ -49,10 +50,31 @@ def test_ppr_matches_unrolled_reference(spark):
     for _ in range(3):
         p1, p2 = 150_000_000 + (85 * p2) // 100, (85 * p1) // 100
     out = {
-        r["node"]: r["ppr_e9"]
-        for r in personalized_pagerank(edges, seeds, iterations=3).collect()
+        r["node"]: r["pr_e9"]
+        for r in pagerank(edges, iterations=3, seeds=seeds).collect()
     }
     assert out == {1: p1, 2: p2}
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_pagerank_every_endpoint_seeded_is_plain_pagerank(spark, seed):
+    """Seeding every endpoint gives the uniform teleport of plain
+    PageRank: identical rows, on directed random graphs with dangling
+    nodes and duplicate edges."""
+    import random
+
+    from bioeco_portal_etl_spark.graph.pagerank import pagerank
+
+    rng = random.Random(seed)
+    pairs = [tuple(rng.sample(range(30), 2)) for _ in range(70)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    seeds = spark.createDataFrame(
+        [(n,) for n in {n for p in pairs for n in p}], "node long"
+    )
+    plain = sorted(map(tuple, pagerank(edges).collect()))
+    seeded = sorted(map(tuple, pagerank(edges, seeds=seeds).collect()))
+    assert len(plain) == len(seeds.collect())
+    assert plain == seeded
 
 
 def test_l_diversity_flags_homogeneous_group(spark):

@@ -14,13 +14,14 @@ def test_adamic_adar_known_square(spark):
     """Square a-b-c-d-a: (a,c) and (b,d) are the non-adjacent pairs, each
     with 2 common neighbors of degree 2 -> aa_e6 = 2 * floor(1e6/ln 2)."""
     from bioeco_portal_etl_spark.graph.linkpred import adamic_adar
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1)], "src long, dst long"
     )
     out = {
         (r["u"], r["v"]): (r["n_common"], r["aa_e6"])
-        for r in adamic_adar(edges, min_common=1).collect()
+        for r in adamic_adar(undirected(edges), min_common=1).collect()
     }
     w = math.floor(1_000_000 / math.log(2))
     assert out == {(1, 3): (2, 2 * w), (2, 4): (2, 2 * w)}
@@ -30,16 +31,17 @@ def test_adamic_adar_excludes_existing_edges_and_hubs(spark):
     """A triangle has NO candidates (all pairs adjacent); adding a hub
     with degree above the cap must not create any."""
     from bioeco_portal_etl_spark.graph.linkpred import adamic_adar
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     tri = [(1, 2), (2, 3), (1, 3)]
     hub = [(99, x) for x in range(1, 9)]  # deg(99) = 8
     edges = spark.createDataFrame(tri + hub, "src long, dst long")
     # cap below the hub degree: only triangle middles survive, and every
     # triangle pair is adjacent -> empty
-    out = adamic_adar(edges, max_degree=7, min_common=1).collect()
+    out = adamic_adar(undirected(edges), max_degree=7, min_common=1).collect()
     assert out == []
     # cap admitting the hub: leaves 4..8 pair up through it
-    out2 = adamic_adar(edges, max_degree=8, min_common=1).collect()
+    out2 = adamic_adar(undirected(edges), max_degree=8, min_common=1).collect()
     assert all(r["n_common"] >= 1 for r in out2)
     assert {(r["u"], r["v"]) for r in out2} >= {(4, 5), (7, 8)}
 

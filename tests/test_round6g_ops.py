@@ -13,6 +13,7 @@ def test_modularity_two_cliques_vs_random_split(spark):
     community has e_c=3, d_c=6, m=6 -> contribution = 3/6 - (6/12)^2 =
     0.25 -> 250000; total Q = 0.5 (strong structure)."""
     from bioeco_portal_etl_spark.graph.modularity import community_modularity
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     tri1 = [(1, 2), (2, 3), (1, 3)]
     tri2 = [(4, 5), (5, 6), (4, 6)]
@@ -23,7 +24,7 @@ def test_modularity_two_cliques_vs_random_split(spark):
     )
     out = {
         r["community"]: r
-        for r in community_modularity(edges, labels).collect()
+        for r in community_modularity(undirected(edges), labels).collect()
     }
     for c in (1, 4):
         assert out[c]["internal_edges"] == 3
@@ -36,7 +37,7 @@ def test_modularity_two_cliques_vs_random_split(spark):
     )
     bad_q = sum(
         r["q_contrib_e6"]
-        for r in community_modularity(edges, bad).collect()
+        for r in community_modularity(undirected(edges), bad).collect()
     )
     assert bad_q < 500_000
 
@@ -46,6 +47,7 @@ def test_modularity_negative_contribution(spark):
     NEGATIVE contribution — the floor(::DOUBLE /) spelling must floor
     toward -inf, not truncate."""
     from bioeco_portal_etl_spark.graph.modularity import community_modularity
+    from bioeco_portal_etl_spark.graph.undirected import undirected
 
     edges = spark.createDataFrame(
         [(1, 2), (3, 4)], "src long, dst long"
@@ -55,7 +57,7 @@ def test_modularity_negative_contribution(spark):
     )
     out = {
         r["community"]: r["q_contrib_e6"]
-        for r in community_modularity(edges, labels).collect()
+        for r in community_modularity(undirected(edges), labels).collect()
     }
     # each community: e_c=0, d_c=2, m=2 -> -(2/4)^2 = -0.25
     assert out[7] == out[8] == -250_000

@@ -86,7 +86,7 @@ def test_pagerank_uniform_on_symmetric_regular_graph(spark):
 
     # 4-cycle, symmetric: every node must hold the same rank
     pairs = [(0, 1), (1, 0), (1, 2), (2, 1), (2, 3), (3, 2), (3, 0), (0, 3)]
-    ranks = pagerank(_edges(spark, pairs), iterations=3, persist_edges=False).collect()
+    ranks = pagerank(_edges(spark, pairs), iterations=3).collect()
     vals = {r["pr_e9"] for r in ranks}
     assert len(vals) == 1 and len(ranks) == 4
     # total mass stays ~1.0 (truncation loses < 1e-9 * E * iters)
@@ -100,7 +100,7 @@ def test_pagerank_hub_outranks_leaves(spark):
     pairs = [(0, i) for i in range(1, 6)] + [(i, 0) for i in range(1, 6)]
     ranks = {
         r["node"]: r["pr_e9"]
-        for r in pagerank(_edges(spark, pairs), iterations=3, persist_edges=False).collect()
+        for r in pagerank(_edges(spark, pairs), iterations=3).collect()
     }
     assert ranks[0] > max(v for k, v in ranks.items() if k != 0)
 
