@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from bioeco_portal_etl_spark.graph.undirected import canonical, undirected
+from bioeco_portal_etl_spark.graph.undirected import both_orientations, undirected
 from bioeco_portal_etl_spark.sources.files import read_parquet_table as T
 
 
@@ -937,19 +937,7 @@ def gr22_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     graph surfaces NULL."""
     from bioeco_portal_etl_spark.graph.degrees import degree_assortativity
 
-    # the directed list the kernel reads: both orientations of each
-    # distinct pair. The two halves are disjoint, so no second dedupe
-    # runs, and no cache is pinned (undirected() persists; this single
-    # aggregate pass does not need it)
-    und = canonical(_coactivity_edges(spark, sf))
-    edges = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = both_orientations(_coactivity_edges(spark, sf))
     return degree_assortativity(edges).select(
         "n_nodes",
         F.col("m_edges").alias("n_directed_edges"),

@@ -23,11 +23,6 @@ from pyspark.sql import DataFrame
 from bioeco_portal_etl_spark.graph.undirected import canonical
 
 
-def _canonical(edges: DataFrame, a: str, b: str) -> DataFrame:
-    """:func:`canonical` over the endpoint columns ``a`` and ``b``."""
-    return canonical(edges.select(F.col(a).alias("src"), F.col(b).alias("dst")))
-
-
 def _degrees_and_orientation(und: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(node, deg) over the canonical edges ``und``, and each edge oriented
     (lo, hi) from its (deg, id)-lexicographically smaller endpoint. The
@@ -59,7 +54,7 @@ def _degrees_and_orientation(und: DataFrame) -> tuple[DataFrame, DataFrame]:
     return deg, o
 
 
-def triangle_stats(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """One-row graph summary: (n_nodes, n_edges, n_wedges, n_triangles).
 
     n_wedges counts paths of length 2 in the ORIENTED graph (the join's
@@ -70,7 +65,7 @@ def triangle_stats(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     # branch (degrees, orientation, wedge closure, the count row) re-reads
     # the cached edges instead of replaying the upstream lineage — without
     # this the 4-way stats row re-derives the source scan ~12x.
-    und = _canonical(edges, a, b).persist()
+    und = canonical(edges).persist()
     deg, o = _degrees_and_orientation(und)
     # wedges around the common low endpoint; (x < y) counts each unordered
     # wedge once
@@ -102,7 +97,7 @@ def triangle_stats(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     )
 
 
-def local_clustering(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+def local_clustering(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient (Watts & Strogatz 1998):
     (node, deg, n_tri, lcc_e6) for every node with deg >= 2, where
     lcc_e6 = (2e6 · T(v)) div (deg·(deg-1)) and T(v) counts triangles
@@ -112,7 +107,7 @@ def local_clustering(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFr
     triangle enumerated ONCE), then each closed wedge fans out its three
     corners — a 3× explode of the triangle stream, not a new join — and
     one combinable count per node. Integer arithmetic throughout."""
-    und = _canonical(edges, a, b).persist()
+    und = canonical(edges).persist()
     deg, o = _degrees_and_orientation(und)
     e1 = o.select(F.col("lo").alias("c"), F.col("hi").alias("x"))
     e2 = o.select(F.col("lo").alias("c"), F.col("hi").alias("y"))
@@ -228,7 +223,7 @@ tri AS (
 )"""
 
 
-def edge_support(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+def edge_support(edges: DataFrame) -> DataFrame:
     """Per-edge triangle support histogram: support(e) = number of
     triangles containing e; support-0 edges are LOCAL BRIDGES
     (Granovetter's weak ties — removing one disconnects its endpoints'
@@ -241,7 +236,7 @@ def edge_support(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     the 3× exploded triangle stream joined back to the edge set.
     Output: (support, n_edges) plus the derived bridge share is the
     support-0 row."""
-    und = _canonical(edges, a, b).persist()
+    und = canonical(edges).persist()
     _, o = _degrees_and_orientation(und)
     e1 = o.select(F.col("lo").alias("c"), F.col("hi").alias("x"))
     e2 = o.select(F.col("lo").alias("c"), F.col("hi").alias("y"))

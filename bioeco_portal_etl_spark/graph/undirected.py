@@ -19,6 +19,9 @@ would replay the symmetrizing exchange of an expensive source join.
 
 :func:`canonical` is the other shape: each undirected edge once as a
 (u < v) pair, for the kernels that count edges rather than walk them.
+:func:`both_orientations` turns those pairs back into a (src, dst) list
+without a cache or a src partitioning, for a kernel that reads the list
+in one pass.
 """
 
 from __future__ import annotations
@@ -73,3 +76,20 @@ def canonical(edges: DataFrame) -> DataFrame:
         )
         .distinct()
     )
+
+
+def both_orientations(edges: DataFrame) -> DataFrame:
+    """The :func:`canonical` pairs of ``edges`` as a (src, dst) list with
+    both orientations, each once. The two halves of the explode are
+    disjoint, so the pairs' one distinct is the only dedupe; nothing is
+    persisted or partitioned on src, so this is not an
+    :class:`UndirectedEdges` (a one-pass aggregate needs neither)."""
+    pairs = canonical(edges)
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")

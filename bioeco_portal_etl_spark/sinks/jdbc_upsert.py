@@ -88,21 +88,14 @@ def build_merge_sql(
     ``merge``: ANSI ``MERGE INTO`` with an UNQUALIFIED update-target list —
     accepted by Postgres 15+ (which REJECTS ``SET t.col``), Derby, SQL
     Server, Oracle, DB2.
-    ``derby``: the same MERGE with each key cast to ``VARCHAR(32672)`` in
-    ``ON``: Spark's JDBC writer creates string columns as CLOB on Derby,
-    and Derby rejects ``CLOB = CLOB``. Derby cannot convert INTEGER to
-    VARCHAR either, so :func:`stage_and_merge` casts only the keys the
-    staged frame types as strings. Postgres ``text`` keys keep the plain
-    form so the join stays indexable.
     ``postgres_onconflict``: pre-15 Postgres (the GeoNode deployments the
     reference targets run 9.x-13): ``INSERT .. SELECT .. ON CONFLICT DO
     UPDATE`` — requires a unique index on the key columns, which the
-    MERGE path does not."""
-    if dialect in ("merge", "derby"):
-        cast = key_cols if dialect == "derby" else []
-        return _merge_into(
-            target_table, staging_table, key_cols, update_cols, quote, cast
-        )
+    MERGE path does not.
+    Derby's MERGE depends on the key types, which only the staged frame
+    knows: :func:`stage_and_merge` builds it for ``dialect="derby"``."""
+    if dialect == "merge":
+        return _merge_into(target_table, staging_table, key_cols, update_cols, quote, [])
 
     def q(c: str) -> str:
         return f"{quote}{c}{quote}"
@@ -128,7 +121,11 @@ def _merge_into(
     cast_keys: list[str],
 ) -> str:
     """The ANSI MERGE of :func:`build_merge_sql`, with the keys in
-    ``cast_keys`` compared as ``VARCHAR(32672)`` (Derby's CLOB strings)."""
+    ``cast_keys`` compared as ``VARCHAR(32672)``. Spark's JDBC writer
+    creates string columns as CLOB on Derby, and Derby rejects
+    ``CLOB = CLOB``; it also cannot convert INTEGER to VARCHAR, so only
+    string keys may be cast. Postgres ``text`` keys keep the plain form
+    so the join stays indexable."""
     def q(c: str) -> str:
         return f"{quote}{c}{quote}"
 
@@ -374,11 +371,12 @@ def stage_and_merge(
         write and the driver-side MERGE connection;
       - the MERGE runs on a plain auto-commit connection (no explicit
         commit — pgJDBC rejects commit() under autoCommit). ``dialect``
-        picks the reconciliation statement (build_merge_sql): ``merge`` =
-        ANSI MERGE with an UNQUALIFIED update-target list (Postgres 15+
-        rejects ``SET t.col``; also Derby/SQL Server/Oracle);
-        ``derby`` = that MERGE with the keys the staged frame types as
-        strings cast out of CLOB (any key types, composite keys too);
+        picks the reconciliation statement: ``merge`` = ANSI MERGE with
+        an UNQUALIFIED update-target list (Postgres 15+ rejects
+        ``SET t.col``; also SQL Server/Oracle, and Derby for non-string
+        keys); ``derby`` = that MERGE with the keys the staged frame
+        types as strings cast out of CLOB (any key types, composite keys
+        too);
         ``postgres_onconflict`` = INSERT..SELECT..ON CONFLICT for the
         pre-15 Postgres the reference's GeoNode deployments run.
       - driver classpath: works out of the box for drivers on Spark's system
@@ -402,7 +400,7 @@ def stage_and_merge(
             target_table, staging, key_cols, update_cols, quote,
             [c for c in key_cols if c in strings],
         )
-    else:
+    else:  # build_merge_sql rejects "derby": the key cast above is its only form
         merge = build_merge_sql(
             target_table, staging, key_cols, update_cols, quote=quote, dialect=dialect
         )

@@ -118,8 +118,8 @@ def test_stage_and_merge_int_key_derby(spark, derby_url):
 
 def test_stage_and_merge_composite_key_derby(spark, derby_url):
     """A composite (int, string) key through the ``derby`` dialect: only
-    the string (CLOB) half is cast; neither the all-cast ``derby`` form
-    nor the uncast ``merge`` form runs on this key."""
+    the string (CLOB) half is cast. The uncast ``merge`` form fails on
+    ``CLOB = CLOB``, and casting every key fails on the INTEGER half."""
     from bioeco_portal_etl_spark.sinks.jdbc_upsert import stage_and_merge
 
     base = spark.createDataFrame(
@@ -142,6 +142,7 @@ def test_dialect_matrix_exact_sql():
     reference's GeoNode sink needs — with no Postgres in this env, the
     statements themselves are the asserted contract)."""
     from bioeco_portal_etl_spark.sinks.jdbc_upsert import (
+        _merge_into,
         build_merge_sql,
         build_upsert_sql,
     )
@@ -164,11 +165,13 @@ def test_dialect_matrix_exact_sql():
         'WHEN MATCHED THEN UPDATE SET "title" = s."title" '
         'WHEN NOT MATCHED THEN INSERT ("id", "title") VALUES (s."id", s."title")'
     )
-    assert build_merge_sql("tgt", "stg", ["id"], ["title"], dialect="derby") == (
-        'MERGE INTO tgt t USING stg s ON CAST(t."id" AS VARCHAR(32672)) = '
-        'CAST(s."id" AS VARCHAR(32672)) '
+    # Derby (stage_and_merge dialect="derby"): only the string key is cast
+    assert _merge_into("tgt", "stg", ["id", "k"], ["title"], '"', ["k"]) == (
+        'MERGE INTO tgt t USING stg s ON t."id" = s."id" AND '
+        'CAST(t."k" AS VARCHAR(32672)) = CAST(s."k" AS VARCHAR(32672)) '
         'WHEN MATCHED THEN UPDATE SET "title" = s."title" '
-        'WHEN NOT MATCHED THEN INSERT ("id", "title") VALUES (s."id", s."title")'
+        'WHEN NOT MATCHED THEN INSERT ("id", "k", "title") '
+        'VALUES (s."id", s."k", s."title")'
     )
     # pre-15 Postgres path: INSERT..SELECT..ON CONFLICT, EXCLUDED refs
     assert build_merge_sql(
@@ -181,8 +184,9 @@ def test_dialect_matrix_exact_sql():
     )
     with pytest.raises(ValueError):
         build_upsert_sql("t", ["k"], ["v"], dialect="oracle8i")
-    with pytest.raises(ValueError):
-        build_merge_sql("t", "s", ["k"], ["v"], dialect="nope")
+    for dialect in ("nope", "derby"):
+        with pytest.raises(ValueError):
+            build_merge_sql("t", "s", ["k"], ["v"], dialect=dialect)
 
 
 def test_postgres_onconflict_merge_executes():
