@@ -22,22 +22,14 @@ similarity/kmeans.py Lloyd's):
    Kiveris et al., "Connected Components in MapReduce and Beyond");
 3. **convergence check** — labels are monotonically non-increasing, so
    the fixpoint test is the SCALAR ``sum(label)`` staying unchanged: one
-   map-side-combinable aggregate per iteration, no diff join, and the
-   only thing the driver ever collects (no data-sized collect anywhere).
+   map-side-combinable aggregate observed by the round's own checkpoint
+   job (operators/fixpoint.py), no diff join, and the only thing the
+   driver ever collects (no data-sized collect anywhere).
 
-Each iteration's label table is ``localCheckpoint``-ed (eager), which
-BOTH materializes it and truncates the logical plan. Plain ``persist``
-is not enough here: persist substitutes the cached data only at
-physical-planning time, so the *logical* plan of iteration k still
-contains iteration k-1's full tree — and since pointer jumping
-references ``nbr`` twice, the tree DOUBLES per iteration (2^k nodes;
-measured: iter times 1.6s, 1.2s, 1.7s, 7.2s, 40s, then driver OOM on a
-32-edge graph). Checkpointed label tables are node-count-sized and are
-reclaimed by the ContextCleaner once the next iteration drops the
-reference. At 100 TB the per-iteration cost is
-two keyed shuffles of the label table (node-count-sized, far smaller than
-the edge list after the first rounds) against an edge list that is
-shuffled ONCE at persist time and co-partitioned thereafter.
+At 100 TB the per-iteration cost is two keyed shuffles of the label
+table (node-count-sized, far smaller than the edge list after the first
+rounds) against an edge list that is shuffled ONCE at persist time and
+co-partitioned thereafter.
 
 Component id = MIN node id in the component — canonical, deterministic,
 and exactly what a keep-lowest-id dedup policy wants.
@@ -51,6 +43,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from bioeco_portal_etl_spark.operators.fixpoint import iterate
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -85,8 +79,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = sym.filter(F.col("src") == F.col("dst")).select(
             F.col("src").alias("node"), F.col("src").alias("label")
         )
-        prev_sum = labels.agg(F.sum("label")).first()[0]
-        for _ in range(max_iter):
+
+        def step(labels: DataFrame) -> DataFrame:
             # 1. relaxation: min over the neighbor labels (self included)
             nbr = (
                 sym.join(labels, sym["dst"] == labels["node"])
@@ -95,7 +89,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             )
             # 2. pointer jumping: label <- label(label) (label rows exist
             # for every node; a label that is itself a root maps to itself)
-            labels = (
+            return (
                 nbr.alias("x")
                 .join(
                     nbr.select(
@@ -105,22 +99,16 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
                     "label",
                     "left",
                 )
-                .select(
-                    "node", F.coalesce("root", "label").alias("label")
-                )
-                .localCheckpoint(eager=True)
+                .select("node", F.coalesce("root", "label").alias("label"))
             )
-            # 3. scalar fixpoint test: labels only ever decrease, so an
-            # unchanged sum means NO label changed
-            new_sum = labels.agg(F.sum("label")).first()[0]
-            if new_sum == prev_sum:
-                return labels.select(
-                    "node", F.col("label").alias("component")
-                )
-            prev_sum = new_sum
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations"
-        )
+
+        # 3. labels only ever decrease: an unchanged sum means NO label changed
+        labels = iterate(labels, step, rounds=max_iter, metric=F.sum("label"))
+        if labels is None:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} iterations"
+            )
+        return labels.select("node", F.col("label").alias("component"))
     finally:
         sym.unpersist()
 

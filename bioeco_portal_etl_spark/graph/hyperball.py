@@ -25,10 +25,6 @@ transcendental, but its argument takes one of 63 rational values
 ``64/V`` and the closest ``floor`` boundary sits 7.9e-3 away (verified
 exhaustively in tests) — engine ulp divergence is ~1e-13 relative, so
 the floored surface is cross-engine stable.
-
-Iteration hygiene: registers are localCheckpoint()ed each round —
-persist() alone does NOT truncate the growing lineage (same lesson as
-graph/cc.py / graph/kcore.py).
 """
 
 from __future__ import annotations
@@ -38,33 +34,13 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bioeco_portal_etl_spark.operators.fixpoint import iterate
 from bioeco_portal_etl_spark.sketches.hll import (
     ALPHA_M,
     M,
     _POW55,
     hll_registers,
-    merge_registers,
 )
-
-
-def hll_estimate_corrected(
-    registers: DataFrame, group_cols: list[str], out_col: str = "est_distinct"
-) -> DataFrame:
-    """Small-range-corrected HLL estimate: linear counting
-    ``floor(m * ln(m / V))`` while any register is empty (V = m - hit
-    buckets), raw harmonic formula once the sketch saturates. One grouped
-    aggregate either way (V and S come from the same pass)."""
-    term = F.expr("shiftleft(1L, CAST(55 - register AS INT))")
-    agg = registers.groupBy(*group_cols).agg(
-        F.sum(term - F.lit(1 << 55)).alias("__delta"),
-        F.count(F.lit(1)).alias("__hit"),
-    )
-    v = F.lit(M) - F.col("__hit")
-    s = F.col("__delta") + F.lit(M * (1 << 55))
-    raw = F.floor(F.lit(ALPHA_M * M * M) * F.lit(_POW55) / s)
-    lin = F.floor(F.lit(float(M)) * F.log(F.lit(float(M)) / v))
-    est = F.when(v > 0, lin).otherwise(raw).cast("long")
-    return agg.select(*group_cols, est.alias(out_col))
 
 
 _RCOLS = [f"r{i}" for i in range(M)]
@@ -122,37 +98,44 @@ def hyperball_neighborhood(
     picking sort-merge, re-sorting the edge frame every round), then one
     grouped merge of m max aggregates (map-side partial); estimates are
     a projection of the wide register row, so no extra shuffle per
-    radius. Register state is |V| rows total, never ball-sized.
+    radius. Register state is |V| rows total, never ball-sized: each
+    radius's estimate is one more column of it, so the result is the last
+    round's state and no earlier round is kept alive.
     (A self-loop formulation that folds the keep-your-own-ball union
     into the join was prototyped and measured SLOWER at bench scale —
     the loop-edge construction cost more than the per-round union it
     removed; paired A/B in OPTIMIZATION_r12.md.)"""
-    # Materialize the (deduped) edge list ONCE: every radius joins the
-    # same |E| rows, and upstream edge constructions are often joins /
-    # distincts themselves — recomputing them per round is the pagerank
-    # lesson (edges persisted once) plus a variance source: re-derived
-    # edge stats can flip the per-round join strategy between runs.
+    # every radius joins these rows; materializing them once also keeps
+    # re-derived edge stats from flipping the join strategy between runs
     e = edges.select(F.col("src"), F.col("dst")).distinct()
     if radius > 1:
         e = e.localCheckpoint(eager=True)
+    est = _estimate_wide(_RCOLS)
     regs = _widen(hll_registers(nodes.select("node"), ["node"], "node"))
-    est = _estimate_wide(_RCOLS).alias("ball_est")
-    out = regs.select("node", F.lit(0).cast("long").alias("r"), est)
-    for r in range(1, radius + 1):
-        rhs = F.broadcast(regs)
+
+    def step(state: DataFrame) -> DataFrame:
+        balls = state.columns[1 + len(_RCOLS):]
+        rhs = F.broadcast(state.select("node", *_RCOLS))
         prop = e.join(rhs, e["src"] == rhs["node"]).select(
-            F.col("dst").alias("node"), *_RCOLS
+            F.col("dst").alias("node"),
+            *_RCOLS,
+            *[F.lit(None).cast("long").alias(b) for b in balls],
         )
-        regs = (
-            regs.unionByName(prop)
+        return (
+            state.unionByName(prop)
             .groupBy("node")
-            .agg(*[F.max(c).alias(c) for c in _RCOLS])
-            .localCheckpoint(eager=True)
+            .agg(*[F.max(c).alias(c) for c in _RCOLS + balls])
+            .withColumn(f"__b{len(balls)}", est)
         )
-        out = out.unionByName(
-            regs.select("node", F.lit(r).cast("long").alias("r"), est)
-        )
-    return out
+
+    state = iterate(regs.withColumn("__b0", est), step, rounds=radius)
+    balls = [f"__b{r}" for r in range(radius + 1)]
+    return (
+        state.unpivot("node", balls, "r", "ball_est")
+        # a node first reached at radius r has no estimate below r
+        .filter(F.col("ball_est").isNotNull())
+        .select("node", F.substring("r", 4, 9).cast("long").alias("r"), "ball_est")
+    )
 
 
 def duck_hyperball(edges_sql: str, nodes_sql: str, radius: int) -> str:

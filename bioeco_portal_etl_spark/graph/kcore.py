@@ -15,12 +15,11 @@ Plan shape per round:
   degree = sym.groupBy(src)           -- map-side combinable count
   keep   = degree >= k                -- tiny filter
   sym    = sym ⋉ keep (src) ⋉ keep (dst)  -- two semi-joins
-The edge list is localCheckpoint'ed each round: the filtered edges feed
-BOTH next-round semi-joins and the degree aggregate, and an uncheckpointed
-twice-referenced iteration plan grows 3^rounds (the connected-components
-lesson — graph/cc.py). Convergence is detected by the edge COUNT (peeling
-only removes edges, so an unchanged count means an unchanged graph);
-the count is the same scalar action that materializes the checkpoint.
+Each round is checkpointed by operators/fixpoint.py: the filtered edges
+feed BOTH next-round semi-joins and the degree aggregate. Convergence is
+the edge COUNT staying unchanged (peeling only removes edges, so an
+unchanged count means an unchanged graph), observed by the round's own
+checkpoint job.
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from bioeco_portal_etl_spark.graph.undirected import UndirectedEdges, edge_frame
+from bioeco_portal_etl_spark.operators.fixpoint import iterate
 
 
 def kcore(
@@ -45,30 +45,30 @@ def kcore(
     counts need no exchange. The surviving-node set is broadcast into
     both endpoint semi-joins (the set is <= |V| ids and SHRINKS every
     round) so the edge frame never shuffles during peeling."""
-    sym = edge_frame(edges)
-    n_edges = sym.count()
-    for _ in range(max_rounds):
+
+    def step(sym: DataFrame) -> DataFrame:
         deg = sym.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
         keep_src = F.broadcast(keep.withColumnRenamed("node", "src"))
         keep_dst = F.broadcast(keep.withColumnRenamed("node", "dst"))
-        sym = (
+        return (
             sym.join(keep_src, "src", "semi")
             .join(keep_dst, "dst", "semi")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        new_edges = sym.count()
-        if new_edges == n_edges:
-            return (
-                sym.groupBy(F.col("src").alias("node"))
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-            )
-        n_edges = new_edges
-    raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
+
+    core = iterate(
+        edge_frame(edges), step, rounds=max_rounds, metric=F.count(F.lit(1))
+    )
+    if core is None:
+        raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
+    return (
+        core.groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .filter(F.col("deg") >= k)
+    )
 
 
 def duck_kcore(edges_select: str, k: int = 3, rounds: int = 12) -> str:

@@ -21,17 +21,14 @@ an unconverged approximation.
 Exactness: weights and distances are BIGINT throughout; MIN is
 order-independent, so the unrolled DuckDB mirror matches bit-for-bit.
 Ties need no tiebreak — MIN over equal values is the value.
-
-Iteration hygiene: the frontier table is localCheckpoint()ed per round
-(persist() does NOT truncate the growing join lineage — same lesson as
-graph/cc.py / graph/kcore.py); edges are materialized once and reused
-by every round (graph/hyperball.py's variance lesson).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from bioeco_portal_etl_spark.operators.fixpoint import iterate
 
 
 def sssp_bounded(
@@ -51,25 +48,27 @@ def sssp_bounded(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     if rounds > 1:
+        # every round joins these rows; materializing them once is one job
+        # fewer and faster than re-deriving them per round (gr3 at sf0.1)
         e = e.localCheckpoint(eager=True)
     dist = sources.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
-    for r in range(rounds):
+
+    def step(dist: DataFrame) -> DataFrame:
         # O(reached) distance table broadcast (round-12, guide §3.1)
         rhs = F.broadcast(dist.withColumnRenamed("node", "src"))
         cand = e.join(rhs, "src").select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
+        return (
             dist.unionByName(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if r < rounds - 1:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+
+    return iterate(dist, step, rounds=rounds)
 
 
 def duck_sssp(edges_select: str, sources_select: str, rounds: int) -> str:

@@ -64,8 +64,8 @@ def random_walks(
     # stage at runtime, so the build runs once per job anyway — while an
     # eager localCheckpoint would re-materialize it at every DataFrame
     # CONSTRUCTION (every bench pass / catalog call). The checkpoint
-    # idiom (graph/cc.py) pays off only for loops whose plan GROWS per
-    # iteration; this one is depth-L fixed.
+    # idiom (operators/fixpoint.py) pays off only for loops whose plan
+    # GROWS per iteration; this one is depth-L fixed.
     adj = adjacency(edges)
     cur = seeds.select(
         F.col("walk_id"),

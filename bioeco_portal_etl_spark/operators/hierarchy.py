@@ -12,12 +12,11 @@ anc. Each round substitutes every node's ancestor by THAT ancestor's own
 ancestor (one self-equi-join) and adds the depths — path lengths DOUBLE
 per round, so a depth-D hierarchy converges in ceil(log2 D) + 1 rounds,
 not D (a million-deep chain settles in ~21 joins). Roots are fixed points
-(anc = node, depth += 0), so convergence is detectable as "no row
-changed"; the count action per round doubles as the convergence check,
-exactly like the k-means driver loop. Every round ends in
-``localCheckpoint`` to truncate lineage (the plan otherwise doubles per
-round — the same driver-OOM trap connected_components documents; use a
-reliable checkpoint dir on a real cluster).
+(anc = node, depth += 0). The rounds run through operators/fixpoint.py
+until the pair (row count, ``sum(depth)``) stops changing: a row whose
+ancestor chain ends at a missing parent drops out, and a surviving row
+that moves gains depth, so depth alone can stay put while a drop cancels
+a gain.
 
 Scale shape: each round is one hash(anc)-shuffle equi-join of the node
 table against itself — O(nodes) state, no fan-out (every node has exactly
@@ -34,6 +33,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from bioeco_portal_etl_spark.operators.fixpoint import iterate
 
 
 def flatten_hierarchy(
@@ -54,31 +55,28 @@ def flatten_hierarchy(
         .otherwise(F.lit(1))
         .cast("long")
         .alias("depth"),
-    ).localCheckpoint()
-    for _ in range(max_iter):
+    )
+
+    def step(state: DataFrame) -> DataFrame:
         ptr = state.select(
             F.col("node").alias("p_node"),
             F.col("anc").alias("p_anc"),
             F.col("depth").alias("p_depth"),
         )
-        nxt = (
-            state.join(ptr, state.anc == ptr.p_node)
-            .select(
-                "node",
-                F.col("p_anc").alias("anc"),
-                (F.col("depth") + F.col("p_depth")).alias("depth"),
-                (F.col("anc") != F.col("p_anc")).alias("__moved"),
-            )
-            .localCheckpoint()
+        return state.join(ptr, state.anc == ptr.p_node).select(
+            "node",
+            F.col("p_anc").alias("anc"),
+            (F.col("depth") + F.col("p_depth")).alias("depth"),
         )
-        moved = nxt.filter(F.col("__moved")).limit(1).count()
-        state = nxt.drop("__moved")
-        if moved == 0:
-            return state.select("node", F.col("anc").alias("root"), "depth")
-    raise RuntimeError(
-        f"flatten_hierarchy did not converge in {max_iter} pointer jumps — "
-        "cycle in the parent relation, or depth > 2^max_iter"
-    )
+
+    metric = F.struct(F.count(F.lit(1)), F.sum("depth"))
+    state = iterate(state, step, rounds=max_iter, metric=metric)
+    if state is None:
+        raise RuntimeError(
+            f"flatten_hierarchy did not converge in {max_iter} pointer jumps — "
+            "cycle in the parent relation, or depth > 2^max_iter"
+        )
+    return state.select("node", F.col("anc").alias("root"), "depth")
 
 
 def bom_rollup(
@@ -100,7 +98,7 @@ def bom_rollup(
     Plain parent-chain walk, one equi-join per level up to ``max_depth``
     (BOM depth is a schema property, single digits in practice — the
     fixed unroll IS the production shape); the walking state is one row
-    per node, localCheckpoint()ed per round. eff_qty fits int64 for
+    per node. eff_qty fits int64 for
     qty <= ~1e3 at depth 6 — far beyond real assemblies.
 
     Walk invariant: ``anc`` is the lowest UNCONSUMED ancestor (NULL once
@@ -108,6 +106,7 @@ def bom_rollup(
     far; each round consumes one ancestor level: if anc is a non-root,
     its qty multiplies in and anc advances; if anc is a root, anc
     retires to NULL with root := anc."""
+    # every level joins this table: materialize it once
     up = nodes.select(
         F.col(node_col).alias("u_node"),
         F.col(parent_col).alias("u_parent"),
@@ -122,21 +121,18 @@ def bom_rollup(
         .cast("long")
         .alias("eff_qty"),
     )
-    for _ in range(max_depth):
-        anc_is_root = F.col("anc").isNotNull() & F.col("u_parent").isNull()
-        anc_internal = F.col("anc").isNotNull() & F.col("u_parent").isNotNull()
-        state = (
-            state.join(up, state.anc == up.u_node, "left")
-            .select(
-                "node",
-                F.when(anc_internal, F.col("u_parent")).alias("anc"),
-                F.when(anc_is_root, F.col("anc"))
-                .otherwise(F.col("root"))
-                .alias("root"),
-                F.when(anc_internal, F.col("eff_qty") * F.col("u_qty"))
-                .otherwise(F.col("eff_qty"))
-                .alias("eff_qty"),
-            )
-            .localCheckpoint(eager=True)
+    anc_is_root = F.col("anc").isNotNull() & F.col("u_parent").isNull()
+    anc_internal = F.col("anc").isNotNull() & F.col("u_parent").isNotNull()
+
+    def step(state: DataFrame) -> DataFrame:
+        return state.join(up, state.anc == up.u_node, "left").select(
+            "node",
+            F.when(anc_internal, F.col("u_parent")).alias("anc"),
+            F.when(anc_is_root, F.col("anc")).otherwise(F.col("root")).alias("root"),
+            F.when(anc_internal, F.col("eff_qty") * F.col("u_qty"))
+            .otherwise(F.col("eff_qty"))
+            .alias("eff_qty"),
         )
+
+    state = iterate(state, step, rounds=max_depth)
     return state.select("node", "root", "eff_qty")

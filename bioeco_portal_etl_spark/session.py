@@ -19,6 +19,16 @@ from pyspark.sql import SparkSession
 _CHECKOUT = str(Path(__file__).resolve().parent.parent)
 
 
+def physical_memory_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
+def default_driver_memory() -> str:
+    """A quarter of physical memory, at most 24g: the Python workers and a
+    DuckDB oracle share the host (a fixed 24g was OOM-killed on 15 GB)."""
+    return f"{min(physical_memory_mb() // 4, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "bioeco-portal-etl-spark",
     master: str | None = None,
@@ -28,15 +38,18 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster, ``master`` comes from spark-submit; locally we default to
-    ``local[$SPARK_GRAFT_CPUS]``. Shuffle partitions default to 2x local cores
-    (small local runs) — on a 1000-executor cluster AQE coalesces from a high
-    initial count, so production submits should raise this to ~2-3x total cores.
+    ``local[$SPARK_GRAFT_CPUS]``. Shuffle partitions default to one per local
+    core (``$SPARK_GRAFT_CPUS``) — on a 1000-executor cluster AQE coalesces
+    from a high initial count, so production submits should raise this to
+    ~2-3x total cores. The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set,
+    else :func:`default_driver_memory`.
     Python workers get the package's checkout on their PYTHONPATH, ahead of
     the caller's PYTHONPATH; an ``extra_conf`` value for
     ``spark.executorEnv.PYTHONPATH`` replaces both.
     """
     worker_path = [_CHECKOUT, *filter(None, [os.environ.get("PYTHONPATH")])]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -63,7 +76,7 @@ def get_spark(
                 else (int(cpus) if str(cpus).isdigit() else 32)
             ),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
     )

@@ -34,7 +34,7 @@ broadcast join; pair counting is a partial-agg groupBy on a small key
 space; the per-round rewrite is a narrow map over the word table. For a
 full vocab build you iterate ``pair_counts -> top_merge -> apply_merge``
 k times; each round's plan is truncated by the word table being a stable
-cached/checkpointed frame (see graph/cc.py for the localCheckpoint
+cached/checkpointed frame (see operators/fixpoint.py for the localCheckpoint
 pattern used for iterative plans).
 
 Reference parity note: the reference ETL (iobis/bioeco-portal-etl) has no

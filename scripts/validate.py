@@ -65,7 +65,7 @@ def main() -> int:
 
     import duckdb
 
-    from bioeco_portal_etl_spark.session import get_spark
+    from bioeco_portal_etl_spark.session import get_spark, physical_memory_mb
 
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", str(REPO / "__spark_entry__.py")
@@ -89,7 +89,9 @@ def main() -> int:
     entry_ok = n > 0 and bool(cols)
     print(f"entry: rows={n} cols={cols} -> {'OK' if entry_ok else 'FAIL'}")
 
-    con = duckdb.connect()
+    # DuckDB defaults to 80% of RAM, which with the Spark driver's heap
+    # oversubscribes the host; the sf0.1 gr8_kcore oracle needs ~7 GB
+    con = duckdb.connect(config={"memory_limit": f"{physical_memory_mb() // 2}MB"})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"

@@ -41,3 +41,14 @@ def test_mapinpandas_query_runs_outside_the_checkout(tmp_path):
     # the checkout first, merged with the caller's PYTHONPATH
     assert worker_path == os.pathsep.join([str(REPO), "/caller/path"])
     assert int(rows) > 0
+
+
+def test_default_driver_heap_is_below_physical_memory():
+    from bioeco_portal_etl_spark.session import (
+        default_driver_memory,
+        physical_memory_mb,
+    )
+
+    heap = default_driver_memory()
+    assert heap.endswith("m")
+    assert 0 < int(heap[:-1]) < physical_memory_mb()
