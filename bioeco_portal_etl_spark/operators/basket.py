@@ -23,6 +23,24 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
+def basket_pairs(
+    df: DataFrame, basket_col: str, item_col: str
+) -> DataFrame:
+    """(item_a, item_b, support_ab) for unordered item pairs co-occurring
+    in a basket (item_a < item_b; items deduplicated per basket first)."""
+    items = df.select(
+        F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
+    ).distinct()
+    a = items.withColumnRenamed("item", "item_a")
+    b = items.withColumnRenamed("item", "item_b")
+    return (
+        a.join(b, "basket")
+        .filter(F.col("item_a") < F.col("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(F.count(F.lit(1)).alias("support_ab"))
+    )
+
+
 def association_rules(
     df: DataFrame,
     basket_col: str,

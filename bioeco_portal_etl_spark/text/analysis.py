@@ -93,6 +93,32 @@ def token_counts(col: Column | str) -> dict[str, Column]:
     }
 
 
+def quality_features(col: Column | str) -> dict[str, Column]:
+    """Gopher-style quality signals, all engine-exact ints or guarded ratios."""
+    c = _nn(_c(col))
+    tok = tokens(c)
+    n_tok = F.size(tok)
+    n_chars = F.length(c)
+    word_chars = F.aggregate(
+        tok, F.lit(0), lambda acc, t: acc + F.length(t)
+    )
+    n_punct = F.regexp_count(c, F.lit(PUNCT_PATTERN))
+    n_stop = F.regexp_count(F.lower(c), F.lit(_profile_regex(STOPWORDS)))
+    return {
+        "n_chars": n_chars,
+        "n_tokens": n_tok,
+        "mean_word_len": F.round(
+            F.when(n_tok > 0, word_chars / n_tok).otherwise(F.lit(0.0)), 4
+        ),
+        "punct_ratio": F.round(
+            F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0)), 4
+        ),
+        "stopword_ratio": F.round(
+            F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0)), 4
+        ),
+    }
+
+
 def quality_score(col: Column | str) -> Column:
     """Composite [0,1] quality score: length saturation × stopword presence ×
     punctuation sanity (shared _score_expr — single source of truth with

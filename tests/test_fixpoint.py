@@ -30,14 +30,16 @@ def _run_in_group(spark, group, fn):
     return out, _persisted(spark) - before, jobs
 
 
-def _stage_names(spark, jobs):
+def _actions(spark, jobs):
+    """The action behind each job, in job order: the call-site name of the
+    job's last stage. Broadcast builds run as jobs of their own on a
+    helper thread (``withThreadLocalCaptured``); they are left out."""
     st = spark.sparkContext.statusTracker()
-    return [
-        st.getStageInfo(s).name
-        for j in jobs
-        for s in st.getJobInfo(j).stageIds
-        if st.getStageInfo(s) is not None
+    names = [
+        st.getStageInfo(max(st.getJobInfo(j).stageIds)).name.split(" at ")[0]
+        for j in sorted(jobs)
     ]
+    return [n for n in names if "withThreadLocalCaptured" not in n]
 
 
 def _chain(spark, n=40):
@@ -56,15 +58,21 @@ def test_cc_keeps_only_the_returned_round(spark):
 
 
 def test_cc_rounds_run_no_separate_scalar_action(spark):
-    """Every job of the loop is a checkpoint (or a stage AQE submits for
-    one); an action called from Python, such as a per-round ``first()``
-    of the label sum, would carry its .py call site in the stage name."""
-    _, _, jobs = _run_in_group(
-        spark, "fixpoint-cc-jobs", lambda: connected_components(_chain(spark))
-    )
-    names = _stage_names(spark, jobs)
-    assert any(n.startswith("localCheckpoint") for n in names)
-    assert not [n for n in names if ".py:" in n]
+    """The 40-node chain converges in six rounds. With adaptive execution
+    off, each action is exactly one job, so the loop's actions are the one
+    ``save`` that reads the starting label sum and one ``localCheckpoint``
+    per round. A per-round scalar, whether a ``first()``, a ``count()`` or
+    a writer, would add an action."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, _, jobs = _run_in_group(
+            spark, "fixpoint-cc-jobs",
+            lambda: connected_components(_chain(spark)),
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert _actions(spark, jobs) == ["save"] + ["localCheckpoint"] * 6
 
 
 @pytest.mark.parametrize("n", [1, 2, 5])
