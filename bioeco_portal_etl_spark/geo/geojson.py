@@ -7,20 +7,19 @@ Reference parity:
 
 Strategy: GeoJSON FeatureCollections held in a string column are parsed with
 ``from_json`` + ``explode`` — declarative, codegen-friendly, no Python. The
-geometry of each feature is re-serialized as compact GeoJSON (to_json) and/or
-converted to WKT with a pandas UDF (coordinate arrays are ragged, so the WKT
-rendering of arbitrary nesting is Python; it is Arrow-batched and only used on
-geometry-bearing rows).
+geometry of each feature stays compact GeoJSON text in the DataFrame.
+``geojson_text_to_wkt`` renders one such text as WKT (coordinate arrays are
+ragged, so rendering arbitrary nesting is Python); the layer writer calls it
+inside the task that already writes the shapefiles, so no separate
+Python-eval stage runs for it.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.functions import pandas_udf
 
 # Schema for a FeatureCollection: geometry kept as raw JSON string so ragged
 # coordinate nesting survives (coordinates depth differs per geometry type).
@@ -87,42 +86,13 @@ def _geojson_geom_to_wkt(geom: dict) -> str:
     return None
 
 
-# pandas UDFs are built lazily (first call) — decorating at import time would
-# require an active SparkSession just to import this module.
-def _wkt_conv(geom_json: "pd.Series") -> "pd.Series":
-    def conv(s):
-        if s is None:
-            return None
-        try:
-            return _geojson_geom_to_wkt(json.loads(s))
-        except (ValueError, TypeError, IndexError, KeyError):
-            return None
-
-    return geom_json.map(conv)
-
-
-def _type_conv(geom_json: "pd.Series") -> "pd.Series":
-    def conv(s):
-        if s is None:
-            return None
-        try:
-            return json.loads(s).get("type", "").upper()
-        except (ValueError, TypeError, AttributeError):
-            return None
-
-    return geom_json.map(conv)
-
-
-def geojson_to_wkt(col: Column | str) -> Column:
-    """Arrow-batched GeoJSON-geometry-string -> WKT."""
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_wkt_conv, "string")(c)
-
-
-def geojson_geom_type(col: Column | str) -> Column:
-    """st_geometry_type for GeoJSON-string geometries."""
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_type_conv, "string")(c)
+def geojson_text_to_wkt(text: str | None) -> str | None:
+    """WKT for one GeoJSON geometry string; None when the text is null, does
+    not parse, or holds no geometry type that WKT renders."""
+    try:
+        return _geojson_geom_to_wkt(json.loads(text))
+    except (ValueError, TypeError, IndexError, KeyError, AttributeError):
+        return None
 
 
 def union_points_geojson_agg(lon: Column | str, lat: Column | str) -> Column:

@@ -5,11 +5,13 @@ per program (notebooks/index.Rmd:401-587) and tracks coverage by MUTATING a
 ``has_shapefile`` column from inside writer functions (`<<-`,
 index.Rmd:427,482,501). Re-expressed as dataflow:
 
-  1. a LAYER-SOURCE table (identifier, geometry_wkt, attrs...) — whatever
+  1. a LAYER-SOURCE table (identifier, geometry, attrs...) — whatever
      subset of programs has geometry, from any of the reference's source
-     kinds (geojson column, site CSVs, gathered shapefiles, tracks);
+     kinds (geojson column, site CSVs, gathered shapefiles, tracks); the
+     geometry is text, GeoJSON or WKT;
   2. ``write_layers``: ONE distributed grouped write — repartition by
-     identifier, each executor partition writes its groups' .shp/.shx/.dbf;
+     identifier, each executor partition renders its GeoJSON features as
+     WKT and writes its groups' .shp/.shx/.dbf;
   3. ``has_shapefile`` DERIVED per row from the GeoJSON column and the
      external-source names (pure dataflow, no mutation; the semi-join
      ``with_has_shapefile`` remains for an arbitrary layer table);
@@ -28,6 +30,11 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from bioeco_portal_etl_spark.geo.geojson import (
+    _FEATURE_SCHEMA,
+    explode_feature_collection,
+    geojson_text_to_wkt,
+)
 from bioeco_portal_etl_spark.geo.shapefile import write_shapefile
 
 
@@ -38,69 +45,61 @@ def layer_table_from_geojson(
     attr_cols: list[str] | None = None,
 ) -> DataFrame:
     """EP2 step 1 (index.Rmd:401-416): programs with an embedded GeoJSON
-    column -> one layer row per feature with WKT geometry. Handles BOTH
-    column shapes the combined frame carries: FeatureCollections (the
-    contacts survey's ErinSpatialGeoJSON) and bare geometries (the EuroSea
-    flow's sfc_geojson(st_union(...)) Point/MultiPoint strings) —
-    geojson_sf() accepts both (index.Rmd:408).
+    column -> one layer row per feature, its ``geometry`` the feature's
+    GeoJSON geometry text. Handles BOTH column shapes the combined frame
+    carries: FeatureCollections (the contacts survey's ErinSpatialGeoJSON)
+    and bare geometries (the EuroSea flow's sfc_geojson(st_union(...))
+    Point/MultiPoint strings) — geojson_sf() accepts both (index.Rmd:408).
 
     Composition: from_json + posexplode (geo/geojson) for collections, a
-    zero-parse passthrough for bare geometries -> pandas-UDF WKT rendering
-    on geometry-bearing rows only -> homogeneity filter comes from the
-    caller via geom_type (A5/F5, the mixed-collection skip rule)."""
-    from bioeco_portal_etl_spark.geo.geojson import (
-        explode_feature_collection,
-        geojson_to_wkt,
-    )
-
+    zero-parse passthrough for bare geometries; JVM-only, no Python-eval
+    stage. ``write_layers`` renders the text as WKT in its write task. The
+    homogeneity filter comes from the caller (``layer_eligible``, A5/F5,
+    the mixed-collection skip rule)."""
     attr_cols = attr_cols or []
     t = F.get_json_object(F.col(geojson_col), "$.type")
     fc = explode_feature_collection(
-        programs.filter(t == "FeatureCollection"), geojson_col
-    ).select(id_col, "geometry_json", *attr_cols)
+        programs.filter(t == "FeatureCollection"), geojson_col, "geometry"
+    ).select(id_col, "geometry", *attr_cols)
     bare = programs.filter(
         t.isNotNull() & ~t.isin("FeatureCollection", "GeometryCollection")
-    ).select(
-        id_col, F.col(geojson_col).alias("geometry_json"), *attr_cols
-    )
-    feats = fc.unionByName(bare)
-    return (
-        feats.filter(F.col("geometry_json").isNotNull())
-        .select(
-            F.col(id_col),
-            geojson_to_wkt("geometry_json").alias("geometry_wkt"),
-            *[F.col(c) for c in attr_cols],
-        )
-        .filter(F.col("geometry_wkt").isNotNull())
-    )
+    ).select(id_col, F.col(geojson_col).alias("geometry"), *attr_cols)
+    return fc.unionByName(bare).filter(F.col("geometry").isNotNull())
 
 
 def write_layers(
     layers: DataFrame,
     out_dir: str,
     id_col: str = "identifier",
-    wkt_col: str = "geometry_wkt",
+    geom_col: str = "geometry",
     attr_cols: list[str] | None = None,
 ) -> None:
     """K1: write ``{out_dir}/{identifier}/{identifier}.shp`` per identifier.
 
-    Features for one identifier are grouped inside a partition (repartition
-    on the key guarantees no identifier spans partitions) and sorted by WKT
-    for deterministic record order."""
+    ``geom_col`` holds WKT or GeoJSON geometry text. GeoJSON (text that
+    starts with ``{``) is rendered as WKT inside the write task, and a
+    feature whose GeoJSON does not render is dropped; WKT and nulls pass
+    through unchanged. Features for one identifier are grouped inside a
+    partition (repartition on the key guarantees no identifier spans
+    partitions) and sorted by WKT for deterministic record order."""
     attr_cols = attr_cols or []
-    cols = [id_col, wkt_col, *attr_cols]
+    cols = [id_col, geom_col, *attr_cols]
 
     def write_partition(rows):
         by_id: dict[str, list] = {}
         for r in rows:
-            by_id.setdefault(r[id_col], []).append(r)
+            wkt = r[geom_col]
+            if wkt is not None and wkt.lstrip().startswith("{"):
+                wkt = geojson_text_to_wkt(wkt)
+                if wkt is None:
+                    continue
+            by_id.setdefault(r[id_col], []).append(
+                (wkt, {c: r[c] for c in attr_cols})
+            )
         for ident, feats in by_id.items():
-            feats.sort(key=lambda r: (r[wkt_col] is None, r[wkt_col] or ""))
-            base = os.path.join(out_dir, ident, ident)
+            feats.sort(key=lambda f: (f[0] is None, f[0] or ""))
             write_shapefile(
-                base,
-                [(r[wkt_col], {c: r[c] for c in attr_cols}) for r in feats],
-                field_names=attr_cols,
+                os.path.join(out_dir, ident, ident), feats, field_names=attr_cols
             )
 
     layers.select(*cols).repartition(F.col(id_col)).foreachPartition(write_partition)
@@ -115,8 +114,6 @@ def layer_eligible(geojson_col: str = "geometry_geojson") -> Column:
     Column, JVM-side: no explode, groupBy or join copies the lineage.
     Together with EXTERNAL_LAYER_NAMES it reproduces the published run's
     372 missing-spatial programs (tests/test_reference_golden_counts.py)."""
-    from bioeco_portal_etl_spark.geo.geojson import _FEATURE_SCHEMA
-
     g = F.col(geojson_col)
     t = F.get_json_object(g, "$.type")
     feats = F.from_json(g, _FEATURE_SCHEMA, {"mode": "PERMISSIVE"}).features

@@ -66,8 +66,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for the few pandas-UDF paths (geo transform, multimodal decode)
+        # Arrow for the pandas paths (the UTM->WGS84 UDF, mapInPandas kernels)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no call-site capture per Column/DataFrame call (~6 py4j round trips
+        # each); it only enriches error messages
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.shuffle.partitions",
             str(

@@ -10,14 +10,19 @@ Reference parity:
 
 Scale notes: CSV with multiLine=True cannot be split within a file (each file
 is one partition) — acceptable because multiline sources are dimension-scale;
-fact-scale data arrives as parquet/ORC. Schemas should be passed explicitly
-(inference scans the data twice and guesses).
+fact-scale data arrives as parquet/ORC. ``read_csv`` never infers a schema
+(inference costs two Spark jobs per file and guesses from whatever values a
+file holds): without an explicit schema every column is a string, named from
+the header record read on the driver, and the ``ingest_*`` steps cast the
+columns they project.
 """
 
 from __future__ import annotations
 
+import csv
 import glob as _glob
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -38,18 +43,46 @@ def read_csv(
     sep: str = ",",
     header: bool = True,
 ) -> DataFrame:
-    reader = (
+    """CSV scan. Without ``schema`` every column is a string: the names come
+    from the file's first record, read on the driver with the same
+    separator and quoting, so the call starts no Spark job. ``path`` must
+    then be one local file (a directory, glob or remote path raises
+    ValueError; pass ``schema`` for those)."""
+    if schema is None:
+        schema = _string_schema(path, sep, header, null_value)
+    return (
         spark.read.option("header", header)
         .option("multiLine", multi_line)
         .option("escape", '"')
         .option("nullValue", null_value)
         .option("sep", sep)
+        .schema(schema)
+        .csv(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
+
+
+def _string_schema(path: str, sep: str, header: bool, null_value: str) -> StructType:
+    """All-string schema named as Spark names a CSV header: a blank or
+    null-valued name becomes ``_c{i}``, a case-insensitive duplicate
+    becomes ``{name}{i}``, and without a header every column is ``_c{i}``."""
+    if not os.path.isfile(path):
+        raise ValueError(
+            f"read_csv: {path!r} is not a local file; pass an explicit schema"
+        )
+    with open(path, newline="", encoding="utf-8", errors="replace") as f:
+        # Spark skips blank lines before the first record
+        first = next(
+            (r for r in csv.reader(f, delimiter=sep) if len(r) > 1 or (r and r[0].strip())),
+            [],
+        )
+    counts = Counter(n.lower() for n in first)
+    names = [
+        f"_c{i}" if not header or not n or n == null_value
+        else f"{n}{i}" if counts[n.lower()] > 1
+        else n
+        for i, n in enumerate(first)
+    ]
+    return StructType([StructField(n, StringType(), True) for n in names])
 
 
 def read_tsv(spark: SparkSession, path: str, schema=None, **kw) -> DataFrame:

@@ -11,8 +11,7 @@ import numpy as np
 from bioeco_portal_etl_spark.geo.crs import _utm_to_wgs84_np, utm_to_wgs84
 from bioeco_portal_etl_spark.geo.geojson import (
     explode_feature_collection,
-    geojson_geom_type,
-    geojson_to_wkt,
+    geojson_text_to_wkt,
     point_geojson,
 )
 
@@ -53,23 +52,21 @@ def test_explode_feature_collection(spark):
     assert by_pid[3][0].geometry_json is None
 
 
-def test_geojson_to_wkt_types(spark):
-    df = spark.createDataFrame(
-        [
-            ('{"type":"Point","coordinates":[2.5,41.0]}',),
-            ('{"type":"LineString","coordinates":[[0,0],[1,1]]}',),
-            ('{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,0]]]}',),
-            (None,),
-        ],
-        "g string",
-    )
-    rows = df.select(
-        geojson_to_wkt("g").alias("wkt"), geojson_geom_type("g").alias("t")
-    ).collect()
-    assert rows[0].wkt == "POINT (2.5 41.0)" and rows[0].t == "POINT"
-    assert rows[1].wkt == "LINESTRING (0 0, 1 1)"
-    assert rows[2].wkt.startswith("POLYGON ((0 0, 1 0, 1 1, 0 0))")
-    assert rows[3].wkt is None and rows[3].t is None
+def test_geojson_to_wkt_types():
+    """The renderer write_layers applies to GeoJSON geometry text."""
+    wkt = [
+        geojson_text_to_wkt(g)
+        for g in (
+            '{"type":"Point","coordinates":[2.5,41.0]}',
+            '{"type":"LineString","coordinates":[[0,0],[1,1]]}',
+            '{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,0]]]}',
+            None,
+        )
+    ]
+    assert wkt[0] == "POINT (2.5 41.0)"
+    assert wkt[1] == "LINESTRING (0 0, 1 1)"
+    assert wkt[2].startswith("POLYGON ((0 0, 1 0, 1 1, 0 0))")
+    assert wkt[3] is None
 
 
 def test_point_geojson_null_pairing(spark):

@@ -52,3 +52,26 @@ def test_default_driver_heap_is_below_physical_memory():
     heap = default_driver_memory()
     assert heap.endswith("m")
     assert 0 < int(heap[:-1]) < physical_memory_mb()
+
+
+_DEBUG_KEY = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_dataframe_debugging_off_unless_overridden(tmp_path):
+    """get_spark turns off PySpark's per-call origin capture; extra_conf
+    can turn it back on."""
+    script = tmp_path / "conf.py"
+    script.write_text(
+        f"import sys\nsys.path.insert(0, {str(REPO)!r})\n"
+        "from bioeco_portal_etl_spark.session import get_spark\n"
+        "conf = {'spark.driver.memory': '1g'}\n"
+        "for extra in ({}, {" + repr(_DEBUG_KEY) + ": 'true'}):\n"
+        "    spark = get_spark(master='local[1]', shuffle_partitions=1,\n"
+        "                      extra_conf={**conf, **extra})\n"
+        "    print(spark.conf.get(" + repr(_DEBUG_KEY) + "))\n"
+        "    spark.stop()\n"
+    )
+    proc = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.split()[-2:] == ["false", "true"]

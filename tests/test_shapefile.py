@@ -96,7 +96,7 @@ def test_distributed_layer_write_and_has_shapefile(spark, tmp_path):
             ("prog_a", "POINT (3 4)", "s2"),
             ("prog_b", "LINESTRING (0 0, 1 1)", "s3"),
         ],
-        "identifier string, geometry_wkt string, site string",
+        "identifier string, geometry string, site string",
     )
     write_layers(layers, out, attr_cols=["site"])
     flagged = with_has_shapefile(programs, layers)
@@ -119,7 +119,7 @@ def test_layer_write_into_spark_roundtrip(spark, tmp_path):
     out = str(tmp_path / "layers")
     layers = spark.createDataFrame(
         [("p", "POLYGON ((0 0, 2 0, 2 2, 0 0))", "x")],
-        "identifier string, geometry_wkt string, site string",
+        "identifier string, geometry string, site string",
     )
     write_layers(layers, out, attr_cols=["site"])
     feats = read_shapefile(os.path.join(out, "p", "p"))

@@ -9,6 +9,7 @@ import pytest
 
 from bioeco_portal_etl_spark.sources.files import (
     list_files,
+    read_csv,
     read_excel,
     read_jsonl,
     read_tsv,
@@ -22,7 +23,55 @@ def test_read_tsv(spark, tmp_path):
     p.write_text("x\ty\n500000\t4427757\n501000\t4428000\n")
     df = read_tsv(spark, str(p))
     rows = df.collect()
-    assert len(rows) == 2 and rows[0].x == 500000
+    assert len(rows) == 2 and rows[0].x == "500000"
+    assert {f.dataType.simpleString() for f in df.schema.fields} == {"string"}
+
+
+def _jobs(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_read_csv_starts_no_job(spark, tmp_path):
+    p = tmp_path / "t.csv"
+    p.write_text('a,b\n1,"x\ny"\n')
+    spark.range(1).count()  # the job-id list is not empty
+    before = _jobs(spark)
+    df = read_csv(spark, str(p))
+    assert _jobs(spark) == before
+    assert df.collect() == [("1", "x\ny")]
+
+
+def test_read_csv_names_match_spark_header(spark, tmp_path):
+    """Blank, null-valued and case-insensitively duplicated names and a
+    quoted comma are named as Spark's own header read names them."""
+    p = tmp_path / "h.csv"
+    p.write_text('id,,"Name, full",ID,NA,x\n1,2,3,4,5,6\n')
+    inferred = (
+        spark.read.option("header", True).option("multiLine", True)
+        .option("escape", '"').option("nullValue", "NA")
+        .option("inferSchema", True).csv(str(p))
+    )
+    df = read_csv(spark, str(p))
+    assert df.columns == inferred.columns == [
+        "id0", "_c1", "Name, full", "ID3", "_c4", "x"
+    ]
+    assert df.collect() == [tuple("123456")]
+
+
+def test_read_csv_without_header_names_by_position(spark, tmp_path):
+    p = tmp_path / "n.tsv"
+    p.write_text("\n7\tb\tc\n8\te\tf\n")
+    df = read_tsv(spark, str(p), header=False)
+    assert df.columns == ["_c0", "_c1", "_c2"]
+    assert sorted(df.collect()) == [("7", "b", "c"), ("8", "e", "f")]
+
+
+def test_read_csv_needs_schema_for_a_directory(spark, tmp_path):
+    (tmp_path / "part.csv").write_text("a\n1\n")
+    with pytest.raises(ValueError, match="schema"):
+        read_csv(spark, str(tmp_path))
+    df = read_csv(spark, str(tmp_path), schema="a string")
+    assert df.collect() == [("1",)]
 
 
 def test_read_jsonl_explicit_schema(spark, tmp_path):
