@@ -500,8 +500,7 @@ def w10_streaming_update_counts(spark: SparkSession, sf: str) -> DataFrame:
     """The UPDATE-mode face of streaming aggregation (w9 is append):
     per-event-type count/sum where every trigger emits the CHANGED groups
     and a foreachBatch merge keeps the latest row per key — the
-    convergent-table pattern behind every streaming dashboard sink
-    (streaming/sink.py's JDBC upsert is the productionized form; here the
+    convergent-table pattern behind every streaming dashboard sink (the
     merge target is a driver dict because the state is group-cardinality-
     sized by construction). After the drain the merged table must equal
     the batch aggregate exactly — which is what the oracle checks."""

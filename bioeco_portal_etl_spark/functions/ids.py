@@ -36,10 +36,3 @@ def zip_with_index(df: DataFrame, name: str = "row_idx") -> DataFrame:
     rdd = df.rdd.zipWithIndex().map(lambda pair: (*pair[0], pair[1]))
     schema = df.schema.add(name, "long", False)
     return df.sparkSession.createDataFrame(rdd, schema)
-
-
-def with_source_order(df: DataFrame, source: str, order_by: list[str | Column]) -> DataFrame:
-    """Tag rows with (source, source_row_idx) — the deterministic ordering
-    substrate SURVEY.md §4.3 requires before unions feed order-sensitive ops."""
-    df = with_row_id(df, order_by, name="source_row_idx")
-    return df.withColumn("source", F.lit(source))

@@ -137,17 +137,3 @@ def union_points_geojson_agg(lon: Column | str, lat: Column | str) -> Column:
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
-
-
-def point_geojson(lon: Column | str, lat: Column | str) -> Column:
-    """G3 for the common case: point -> compact GeoJSON string, pure built-ins."""
-    lon_c = F.col(lon) if isinstance(lon, str) else lon
-    lat_c = F.col(lat) if isinstance(lat, str) else lat
-    return F.when(
-        lon_c.isNotNull() & lat_c.isNotNull(),
-        F.format_string(
-            '{"type":"Point","coordinates":[%s,%s]}',
-            lon_c.cast("string"),
-            lat_c.cast("string"),
-        ),
-    )

@@ -7,8 +7,10 @@ from the public spec ("ESRI Shapefile Technical Description", ESRI white
 paper, July 1998): .shp geometry + .shx index + .dbf (dBase III) attributes.
 
 Supported shapes: Point, MultiPoint, PolyLine, Polygon, Null (empty layers) —
-exactly the reference's surface. Geometries travel as WKT strings inside the
-engine (§2.9); the writer parses WKT at the file boundary only.
+exactly the reference's surface. MULTILINESTRING writes as a PolyLine with
+one part per line and MULTIPOLYGON as a Polygon with one part per ring.
+Geometries travel as WKT strings inside the engine (§2.9); the writer
+parses WKT at the file boundary only.
 
 Scale posture: shapefiles are per-entity exports (hundreds of features), not
 fact data. The distributed writer groups by entity key and writes from
@@ -34,7 +36,9 @@ _WKT_TYPES = {
     "POINT": SHAPE_POINT,
     "MULTIPOINT": SHAPE_MULTIPOINT,
     "LINESTRING": SHAPE_POLYLINE,
+    "MULTILINESTRING": SHAPE_POLYLINE,
     "POLYGON": SHAPE_POLYGON,
+    "MULTIPOLYGON": SHAPE_POLYGON,
 }
 
 
@@ -68,9 +72,9 @@ def parse_wkt(wkt: str | None):
     if body == "EMPTY":
         return SHAPE_NULL, []
     inner = body[1:-1].strip()
-    if st in (SHAPE_POINT, SHAPE_MULTIPOINT, SHAPE_POLYLINE):
+    if typ in ("POINT", "MULTIPOINT", "LINESTRING"):
         return st, [_parse_coord_list(inner)]
-    # POLYGON: one coord list per ring
+    # one coord list per ring (POLYGON, MULTIPOLYGON) or line (MULTILINESTRING)
     rings = re.findall(r"\(([^()]*)\)", inner)
     return st, [_parse_coord_list(r) for r in rings]
 
@@ -94,8 +98,10 @@ def to_wkt(shape_type: int, parts: list[list[tuple[float, float]]]) -> str | Non
         return f"POINT ({_fnum(x)} {_fnum(y)})"
     if shape_type == SHAPE_MULTIPOINT:
         return f"MULTIPOINT ({fmt(parts[0])})"
-    if shape_type == SHAPE_POLYLINE:
+    if shape_type == SHAPE_POLYLINE and len(parts) == 1:
         return f"LINESTRING ({fmt(parts[0])})"
+    if shape_type == SHAPE_POLYLINE:
+        return "MULTILINESTRING (" + ", ".join(f"({fmt(r)})" for r in parts) + ")"
     if shape_type == SHAPE_POLYGON:
         return "POLYGON (" + ", ".join(f"({fmt(r)})" for r in parts) + ")"
     raise ValueError(f"unsupported shape type {shape_type}")

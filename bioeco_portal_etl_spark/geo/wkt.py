@@ -83,8 +83,3 @@ def geom_type(wkt: Column | str) -> Column:
     MULTIPOINT/MULTILINESTRING/MULTIPOLYGON/GEOMETRYCOLLECTION)."""
     c = F.upper(F.trim(_c(wkt)))
     return F.regexp_extract(c, r"^([A-Z]+)", 1)
-
-
-def empty_geometry() -> Column:
-    """G8: empty-geometry literal for zero-feature layers."""
-    return F.lit("GEOMETRYCOLLECTION EMPTY")

@@ -621,26 +621,3 @@ def _decode_scan(data, w, h, comps):
     rgb[:, 1::3] = np.clip(np.floor(g0 + 0.5), 0, 255)
     rgb[:, 2::3] = np.clip(np.floor(b0 + 0.5), 0, 255)
     return w, h, 3, rgb.tolist()
-
-
-def jpeg_header_fn(payload: bytes) -> tuple[int, int, str]:
-    """(width, height, 'jpeg') from the SOF0 header only — the cheap
-    metadata path for decode_media_metadata's decode_fn seam."""
-    if not is_jpeg(payload):
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        seg_len = struct.unpack_from(">H", payload, pos)[0]
-        if marker == 0xC0:
-            _, hh, ww, _ = struct.unpack_from(">BHHB", payload, pos + 2)
-            return ww, hh, "jpeg"
-        if marker == 0xDA:
-            break
-        pos += seg_len
-    raise ValueError("no SOF0 header found")

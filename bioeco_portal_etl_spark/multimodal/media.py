@@ -856,31 +856,6 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 256, max_frames: int = 8) 
     return df.mapInPandas(frames, schema=FRAMES_SCHEMA)
 
 
-FEATURES_SCHEMA = "media_id long, feature array<float>"
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature-extraction stage: payload -> fixed-dim float vector
-    (the embedding-model batch shape; numpy-vectorized inside the batch).
-
-    STUB featurizer: byte-histogram over ``dim`` buckets, L1-normalized —
-    deterministic, vectorized, and shaped exactly like a real encoder
-    output (array<float> ready for similarity/knn)."""
-    import pandas as pd
-
-    def feats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float32")
-                total = hist.sum()
-                out.append((hist / total if total else hist).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": out})
-
-    return df.mapInPandas(feats, schema=FEATURES_SCHEMA)
-
-
 AUDIO_FRAME_SCHEMA = "media_id long, frame_idx long, n_samples long, energy long, peak long"
 _AUDIO_CENTER = 64  # u8 midpoint for the ASCII-payload stand-in
 

@@ -51,12 +51,3 @@ def ordinal_min(col: Column | str, levels: list[str]) -> Column:
     ordinal = F.array_position(lit_levels, c)  # 1-based; 0 = not found
     min_ord = F.min(F.when(ordinal > 0, ordinal))
     return F.element_at(lit_levels, min_ord.cast("int"))
-
-
-def min_skip_null(col: Column | str) -> Column:
-    """min with na.rm=TRUE; all-null group -> null (not R's Inf)."""
-    return F.min(_c(col))
-
-
-def max_skip_null(col: Column | str) -> Column:
-    return F.max(_c(col))

@@ -55,22 +55,6 @@ def k_anonymity_audit(
     )
 
 
-def suppress_risky(
-    df: DataFrame, qi_cols: list[str], k: int
-) -> DataFrame:
-    """The enforcement half: drop every record whose QI group has fewer
-    than k members. Anti-join against the (tiny, group-cardinality) risky
-    tuple set — broadcast when it fits, never a row-scale shuffle of the
-    corpus beyond the one the size aggregate already paid."""
-    risky = (
-        df.groupBy(*qi_cols)
-        .agg(F.count(F.lit(1)).alias("g_n"))
-        .filter(F.col("g_n") < k)
-        .select(*qi_cols)
-    )
-    return df.join(F.broadcast(risky), qi_cols, "left_anti")
-
-
 def l_diversity_audit(
     df: DataFrame,
     qi_cols: list[str],

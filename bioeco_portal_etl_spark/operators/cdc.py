@@ -11,12 +11,12 @@ changeset downstream (JDBC upsert sink, SCD2 merge, incremental dedupe).
 
 Plan shape: ONE full-outer sort-merge join on the key — the minimum
 possible for a diff (every row of both sides must meet its counterpart).
-Both snapshots shuffle on the key; with bucketed/pre-partitioned snapshot
-tables (operators/bucketed.py) the exchanges disappear entirely, which is
-how a daily 100 TB diff stays affordable: write snapshots bucketed by key
-once, diff them exchange-free forever after. Unchanged rows are dropped
-before the changeset leaves the join stage, so downstream traffic is
-proportional to churn, not snapshot size.
+Both snapshots shuffle on the key; with snapshot tables written by a plain
+``bucketBy(n, key).sortBy(key).saveAsTable`` the exchanges disappear
+entirely, which is how a daily 100 TB diff stays affordable: write
+snapshots bucketed by key once, diff them exchange-free forever after.
+Unchanged rows are dropped before the changeset leaves the join stage, so
+downstream traffic is proportional to churn, not snapshot size.
 
 Column-level change tracking rides the same pass: a NULL-skipping
 concat_ws over per-column `IS DISTINCT FROM` flags — no second scan, no
@@ -120,7 +120,7 @@ def apply_changeset(
 
     Plan: one LEFT ANTI join removes every touched key (update + delete)
     from the base, then inserts/updates union back in — the anti join
-    hashes on the raw key, so bucketed snapshots (operators/bucketed.py)
+    hashes on the raw key, so bucketed snapshots (``bucketBy`` tables)
     apply their daily changeset with NO Exchange on the 100 TB side;
     the union side is churn-sized. Touched-key multiplicity never
     duplicates: changesets are keyed (one row per key by construction)."""

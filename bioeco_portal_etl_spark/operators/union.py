@@ -3,15 +3,13 @@
 Reference parity: notebooks/index.Rmd:346,476 — bind_rows unions frames with
 different column sets, filling missing columns with NA (25-col ∪ 21-col ->
 29-col). Spark's unionByName(allowMissingColumns=True) matches exactly; this
-wrapper adds n-ary folding and type reconciliation for columns that appear
-with different (but coercible) types across inputs.
+wrapper adds n-ary folding.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
@@ -21,28 +19,3 @@ def union_by_name(*dfs: DataFrame) -> DataFrame:
     if not dfs:
         raise ValueError("union_by_name needs at least one DataFrame")
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-
-
-def union_coerced(*dfs: DataFrame) -> DataFrame:
-    """bind_rows with type reconciliation: when the same column name carries
-    different types across inputs, cast everything to the first-seen type's
-    common widened form (string wins over conflicting primitives — R's
-    coercion ladder, simplified)."""
-    types: dict[str, str] = {}
-    for df in dfs:
-        for f in df.schema.fields:
-            t = f.dataType.simpleString()
-            if f.name not in types:
-                types[f.name] = t
-            elif types[f.name] != t:
-                types[f.name] = "string"
-    aligned = [
-        df.select(
-            *[
-                (F.col(c).cast(types[c]) if df.schema[c].dataType.simpleString() != types[c] else F.col(c)).alias(c)
-                for c in df.columns
-            ]
-        )
-        for df in dfs
-    ]
-    return union_by_name(*aligned)

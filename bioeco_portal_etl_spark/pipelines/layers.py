@@ -110,17 +110,22 @@ def layer_eligible(geojson_col: str = "geometry_geojson") -> Column:
     layer (index.Rmd:401-415): non-null, not the literal ``"null"``
     sentinel, and either a bare geometry other than a GeometryCollection
     or a FeatureCollection whose non-null feature geometry types number
-    exactly one (the reference's mixed-geometry skip). One row-level
-    Column, JVM-side: no explode, groupBy or join copies the lineage.
+    exactly one (the reference's mixed-geometry skip), that one not a
+    GeometryCollection: a shapefile holds no collection type. One
+    row-level Column, JVM-side: no explode, groupBy or join copies the lineage.
     Together with EXTERNAL_LAYER_NAMES it reproduces the published run's
     372 missing-spatial programs (tests/test_reference_golden_counts.py)."""
     g = F.col(geojson_col)
     t = F.get_json_object(g, "$.type")
     feats = F.from_json(g, _FEATURE_SCHEMA, {"mode": "PERMISSIVE"}).features
     types = F.transform(feats, lambda f: F.get_json_object(f.geometry, "$.type"))
-    n_types = F.size(F.array_distinct(F.filter(types, lambda x: x.isNotNull())))
+    distinct = F.array_distinct(F.filter(types, lambda x: x.isNotNull()))
     bare = t.isNotNull() & ~t.isin("FeatureCollection", "GeometryCollection")
-    homog = (t == "FeatureCollection") & (n_types == 1)
+    homog = (
+        (t == "FeatureCollection")
+        & (F.size(distinct) == 1)
+        & ~F.array_contains(distinct, "GeometryCollection")
+    )
     return g.isNotNull() & (g != "null") & (bare | homog)
 
 

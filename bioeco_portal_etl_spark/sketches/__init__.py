@@ -13,8 +13,8 @@ state):
   - :mod:`cms`   — Count-Min sketch (Cormode & Muthukrishnan 2005): a d*w
     counter grid with min-over-rows point estimates.
   - :mod:`bloom_md5` — Bloom membership gate with md5-derived positions
-    (Kirsch-Mitzenmacher double hashing), the oracle-checkable sibling of
-    the xxhash64 Bloom in text/incremental.py.
+    (Kirsch-Mitzenmacher double hashing), so a second engine rebuilds the
+    identical bitset.
 
 Engine exactness: every hash is md5-derived (byte-identical in DuckDB),
 every estimate either stays in 64-bit integer arithmetic or performs a

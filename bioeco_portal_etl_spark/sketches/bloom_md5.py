@@ -1,13 +1,12 @@
-"""Bloom membership gate with md5-derived positions — the
-oracle-checkable sibling of the xxhash64 Bloom in text/incremental.py.
+"""Bloom membership gate with md5-derived positions.
 
-Same 100 TB shape as the incremental-dedupe Bloom (one scan of the
-history folds bit positions into 64-bit words via ``groupBy(word)
-.agg(bit_or)``; membership is a broadcast join of the word table against
-the batch's exploded positions), but the hash family is md5-derived so a
-second engine can rebuild the identical bitset and reproduce membership
-decisions bit-for-bit — false positives included. That turns the Bloom
-from a property-tested component into a hash-gated one.
+One scan of the history folds bit positions into 64-bit words via
+``groupBy(word).agg(bit_or)``; membership is a broadcast join of the word
+table against the batch's exploded positions. The hash family is
+md5-derived so a second engine can rebuild the identical bitset and
+reproduce membership decisions bit-for-bit — false positives included.
+That turns the Bloom from a property-tested component into a hash-gated
+one.
 
 Packing: 60 bits per word, not 64 — DuckDB range-checks ``1 << 63``
 (signed overflow), and 60 keeps every shift strictly positive-safe in

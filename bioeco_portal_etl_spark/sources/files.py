@@ -89,33 +89,6 @@ def read_tsv(spark: SparkSession, path: str, schema=None, **kw) -> DataFrame:
     return read_csv(spark, path, schema=schema, sep="\t", multi_line=False, **kw)
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema=None, multi_line: bool = False
-) -> DataFrame:
-    """JSON-lines scan (one object per line — the splittable lake form; the
-    reference's JSON surface is API payloads and GeoJSON strings, SURVEY.md
-    §2.1 S6/S7). Pass an explicit schema in production: inference scans the
-    data twice and infers from whatever sample it sees — a 100 TB footgun.
-    ``multi_line=True`` reads whole-file JSON arrays (NOT splittable; one
-    file = one task — keep for small fixture files only)."""
-    reader = spark.read.option("multiLine", multi_line)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
-    """ORC scan — the second columnar lake format next to parquet
-    (SURVEY.md §2.1 extension). Same pushdown properties as the parquet
-    scans: predicate pushdown + column pruning reach the ORC reader
-    (ORC holds min/max stripe statistics like parquet row groups), so a
-    filtered 2-column projection over a 100 TB ORC lake reads stripes
-    and columns, not files. ``columns`` prunes eagerly at the API edge
-    for callers that know their projection."""
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
 def read_excel(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:
     """S4: Excel scan (reference read.xlsx, notebooks/index.Rmd:135,547).
     Driver-side by design — xlsx files are dimension-scale configuration

@@ -90,27 +90,6 @@ def run_stream_to_memory(
     )
 
 
-def watermarked_dedupe(
-    events: DataFrame, key_cols: list[str], ts_col: str = "ts"
-) -> DataFrame:
-    """Built-in streaming dedupe: dropDuplicatesWithinWatermark keeps the
-    first arrival per key and evicts key state once the watermark passes —
-    the engine-managed face of stateful.streaming_dedupe (which keeps
-    custom TTL state for cross-watermark semantics). Requires the input to
-    carry a watermark (read_event_stream sets one)."""
-    return events.dropDuplicatesWithinWatermark([*key_cols, ts_col])
-
-
-def enrich_stream(
-    stream: DataFrame, dim: DataFrame, on: str, how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment join: the static dimension side is re-read
-    per micro-batch (picking up slowly-changing updates) and broadcast —
-    stream-static equi-joins are stateless, so no watermark bookkeeping is
-    involved. The standard dimension-enrichment shape for event pipelines."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
 def windowed_distinct_hll(
     events: DataFrame, window: str = "1 hour", value_col: str = "user_id"
 ) -> DataFrame:

@@ -60,22 +60,3 @@ def ngram_overlap_pairs(
         .agg(F.count(F.lit(1)).alias("n_common"))
         .filter(F.col("n_common") >= min_common)
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    min_common: int = 2,
-    max_shingle_df: int = 1000,
-) -> DataFrame:
-    """Corpus minus contaminated documents (left_anti on the overlap set) —
-    the composed form a curation pipeline calls before training export."""
-    hits = ngram_overlap_pairs(
-        corpus, benchmark, id_col, text_col, k, min_common, max_shingle_df
-    ).select("doc_id").distinct()
-    return corpus.join(
-        hits.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )

@@ -28,20 +28,6 @@ from bioeco_portal_etl_spark.sketches import h60
 from bioeco_portal_etl_spark.text.tokenize import TOKEN_SPLIT, tokens
 
 
-def hashed_features(
-    docs: DataFrame, id_col: str, text_col: str, dim: int = 64, min_len: int = 1
-) -> DataFrame:
-    """(doc_id, bucket, weight): hashed TF vectors — weight = total count
-    of tokens hashing to the bucket."""
-    arr = F.filter(tokens(text_col), lambda t: F.length(t) >= min_len)
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(arr).alias("term"))
-        .select("doc_id", (h60(F.col("term")) % dim).alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
-
-
 def collision_audit(
     docs: DataFrame, id_col: str, text_col: str, dim: int = 64, min_len: int = 1
 ) -> DataFrame:

@@ -61,11 +61,6 @@ def test_snapshot_diff_bucketed_is_exchange_free(spark, tmp_path):
     """The SCALING.md contract: with both snapshots bucketed by the key,
     the full-outer diff join runs with NO Exchange on either side — a
     daily 100 TB diff pays zero shuffle after the write-time bucketing."""
-    from bioeco_portal_etl_spark.operators.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-
     old = spark.createDataFrame(
         [(i, f"v{i}", i * 10) for i in range(500)], "k int, a string, b int"
     )
@@ -73,12 +68,14 @@ def test_snapshot_diff_bucketed_is_exchange_free(spark, tmp_path):
         [(i, f"v{i}" if i % 7 else "patched", i * 10) for i in range(490)],
         "k int, a string, b int",
     )
-    write_bucketed(old, "cdc_old_b", ["k"], 4, path=str(tmp_path / "old"))
-    write_bucketed(new, "cdc_new_b", ["k"], 4, path=str(tmp_path / "new"))
+    for df, table in ((old, "cdc_old_b"), (new, "cdc_new_b")):
+        df.write.mode("overwrite").bucketBy(4, "k").sortBy("k").option(
+            "path", str(tmp_path / table)
+        ).format("parquet").saveAsTable(table)
     try:
         diff = snapshot_diff(
-            read_bucketed(spark, "cdc_old_b"),
-            read_bucketed(spark, "cdc_new_b"),
+            spark.table("cdc_old_b"),
+            spark.table("cdc_new_b"),
             ["k"],
             ["a", "b"],
         )

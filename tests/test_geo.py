@@ -12,7 +12,6 @@ from bioeco_portal_etl_spark.geo.crs import _utm_to_wgs84_np, utm_to_wgs84
 from bioeco_portal_etl_spark.geo.geojson import (
     explode_feature_collection,
     geojson_text_to_wkt,
-    point_geojson,
 )
 
 FC = json.dumps(
@@ -67,13 +66,6 @@ def test_geojson_to_wkt_types():
     assert wkt[1] == "LINESTRING (0 0, 1 1)"
     assert wkt[2].startswith("POLYGON ((0 0, 1 0, 1 1, 0 0))")
     assert wkt[3] is None
-
-
-def test_point_geojson_null_pairing(spark):
-    df = spark.createDataFrame([(2.5, 41.0), (None, 41.0)], "lon double, lat double")
-    rows = df.select(point_geojson("lon", "lat").alias("g")).collect()
-    assert json.loads(rows[0].g)["coordinates"] == [2.5, 41.0]
-    assert rows[1].g is None
 
 
 def _forward_tm(lat_deg, lon_deg, zone, k0=0.9996, a=6378137.0, f_inv=298.257223563):

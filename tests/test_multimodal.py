@@ -1,6 +1,5 @@
 """Multimodal plumbing tests: binary payload columns through mapInPandas
-stages — metadata decode, resize, frame sampling (fan-out), feature
-extraction. Codecs are stubbed; schemas, batch shapes, fan-out, and
+stages — metadata decode, resize, frame sampling (fan-out). Codecs are stubbed; schemas, batch shapes, fan-out, and
 determinism are the real contracts under test."""
 
 from __future__ import annotations
@@ -10,11 +9,9 @@ import pyspark.sql.functions as F
 from bioeco_portal_etl_spark.multimodal.media import (
     attach_payload,
     decode_media_metadata,
-    extract_features,
     resize_media,
     sample_frames,
 )
-from bioeco_portal_etl_spark.similarity.knn import cosine_topk
 from bioeco_portal_etl_spark.sources.files import read_parquet_table
 from tests.conftest import SF_SMOKE
 
@@ -51,21 +48,6 @@ def test_frame_sampling_fan_out(spark):
     assert len(f.frame) <= 64
 
 
-def test_features_feed_similarity_search(spark):
-    """The stub featurizer's output is shaped like a real encoder's: plug it
-    straight into the ANN operator (array<float> contract end-to-end)."""
-    feats = extract_features(_payloads(spark), dim=16)
-    assert dict(feats.dtypes)["feature"] == "array<float>"
-    sums = feats.select(
-        F.aggregate("feature", F.lit(0.0), lambda a, x: a + x).alias("s")
-    ).collect()
-    assert all(abs(r.s - 1.0) < 1e-5 for r in sums)  # L1-normalized
-    queries = feats.filter(F.col("media_id") < 3)
-    topk = cosine_topk(feats, queries, "feature", "media_id", k=3)
-    got = topk.groupBy("query_id").count().collect()
-    assert all(r["count"] == 3 for r in got)
-
-
 def test_null_text_payloads_do_not_crash(spark):
     """Null text -> empty payload through every stage (the oracle side
     coalesces identically)."""
@@ -76,7 +58,6 @@ def test_null_text_payloads_do_not_crash(spark):
     meta = {r.media_id: r.n_bytes for r in decode_media_metadata(payloads).collect()}
     assert meta == {1: 9, 2: 0}
     assert resize_media(payloads).count() == 2
-    assert extract_features(payloads).count() == 2
     frames = sample_frames(payloads)
     assert frames.filter(F.col("media_id") == 2).count() == 1  # min 1 frame
 

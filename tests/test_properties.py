@@ -123,28 +123,3 @@ def test_chunk_windows_partition_invariant(spark):
     a = chunk_windows(docs, "doc_id", "text", chunk_size=16, stride=12)
     b = chunk_windows(_scrambled(docs), "doc_id", "text", chunk_size=16, stride=12)
     assert _sig(a) == _sig(b)
-
-
-def test_bloom_filter_partition_invariant(spark):
-    """The bloom bitset is a pure function of content: building it from any
-    layout of history must gate the identical batch subset."""
-    from bioeco_portal_etl_spark.text.incremental import (
-        bloom_build,
-        bloom_new_docs,
-        bloom_params,
-    )
-
-    docs = read_parquet_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    history = docs.filter(F.col("doc_id") < 250)
-    batch = docs.filter(F.col("doc_id") >= 200)
-    m, k = bloom_params(250, 0.01)
-    a = bloom_new_docs(batch, bloom_build(history, "text", m, k), "doc_id", "text", m, k)
-    b = bloom_new_docs(
-        _scrambled(batch),
-        bloom_build(_scrambled(history), "text", m, k),
-        "doc_id",
-        "text",
-        m,
-        k,
-    )
-    assert _sig(a) == _sig(b)

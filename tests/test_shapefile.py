@@ -127,3 +127,53 @@ def test_layer_write_into_spark_roundtrip(spark, tmp_path):
         [(w, a.get("site")) for w, a in feats], "geometry_wkt string, site string"
     )
     assert df.collect()[0].geometry_wkt == "POLYGON ((0 0, 2 0, 2 2, 0 0))"
+
+
+def test_every_layer_eligible_geometry_type_writes(spark, tmp_path):
+    """Every row ``layer_eligible`` passes reaches the shapefile: a
+    MultiLineString writes as a PolyLine with one part per line and reads
+    back as MULTILINESTRING; a MultiPolygon writes as a Polygon with one
+    part per ring. Collections of GeometryCollections are refused like a
+    bare one, and a null feature geometry does not refuse its collection."""
+    import json
+
+    from bioeco_portal_etl_spark.pipelines.layers import (
+        layer_eligible,
+        layer_table_from_geojson,
+    )
+
+    def fc(*geoms):
+        feats = [{"type": "Feature", "properties": {}, "geometry": g} for g in geoms]
+        return json.dumps({"type": "FeatureCollection", "features": feats})
+
+    pt = {"type": "Point", "coordinates": [1, 2]}
+    gc = {"type": "GeometryCollection", "geometries": [pt]}
+    sources = {
+        "pt": (pt, "POINT (1 2)"),
+        "mpt": ({"type": "MultiPoint", "coordinates": [[1, 2], [3, 4]]}, "MULTIPOINT (1 2, 3 4)"),
+        "ln": ({"type": "LineString", "coordinates": [[0, 0], [1, 1]]}, "LINESTRING (0 0, 1 1)"),
+        "mln": (
+            {"type": "MultiLineString", "coordinates": [[[0, 0], [1, 1]], [[2, 2], [3, 3]]]},
+            "MULTILINESTRING ((0 0, 1 1), (2 2, 3 3))",
+        ),
+        "pg": (
+            {"type": "Polygon", "coordinates": [[[0, 0], [4, 0], [4, 4], [0, 0]]]},
+            "POLYGON ((0 0, 4 0, 4 4, 0 0))",
+        ),
+        "mpg": (
+            {"type": "MultiPolygon", "coordinates": [
+                [[[0, 0], [4, 0], [4, 4], [0, 0]]], [[[5, 5], [6, 5], [6, 6], [5, 5]]]]},
+            "POLYGON ((0 0, 4 0, 4 4, 0 0), (5 5, 6 5, 6 6, 5 5))",
+        ),
+    }
+    rows = [(k, json.dumps(g)) for k, (g, _) in sources.items()]
+    rows += [("fc_pt", fc(pt, None)), ("gc", json.dumps(gc)), ("fc_gc", fc(gc, gc))]
+    programs = spark.createDataFrame(rows, "identifier string, geometry_geojson string")
+    eligible = programs.filter(layer_eligible())
+    assert {r.identifier for r in eligible.collect()} == {*sources, "fc_pt"}
+
+    out = str(tmp_path / "layers")
+    write_layers(layer_table_from_geojson(eligible), out)
+    for ident, (_, wkt) in sources.items():
+        assert [f[0] for f in read_shapefile(os.path.join(out, ident, ident))] == [wkt]
+    assert [f[0] for f in read_shapefile(os.path.join(out, "fc_pt", "fc_pt"))] == ["POINT (1 2)"]

@@ -11,7 +11,6 @@ from bioeco_portal_etl_spark.sources.files import (
     list_files,
     read_csv,
     read_excel,
-    read_jsonl,
     read_tsv,
 )
 from bioeco_portal_etl_spark.sources.registry import SourceSpec, read_source
@@ -72,27 +71,6 @@ def test_read_csv_needs_schema_for_a_directory(spark, tmp_path):
         read_csv(spark, str(tmp_path))
     df = read_csv(spark, str(tmp_path), schema="a string")
     assert df.collect() == [("1",)]
-
-
-def test_read_jsonl_explicit_schema(spark, tmp_path):
-    p = tmp_path / "rows.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "a", "tags": ["x", "y"]}\n'
-        '{"id": 2, "name": null, "tags": []}\n'
-        '{"id": 3, "name": "c"}\n'  # missing field -> null, not an error
-    )
-    df = read_jsonl(
-        spark, str(p), schema="id long, name string, tags array<string>"
-    )
-    rows = {r.id: (r.name, r.tags) for r in df.collect()}
-    assert rows == {1: ("a", ["x", "y"]), 2: (None, []), 3: ("c", None)}
-
-
-def test_read_jsonl_multiline_array(spark, tmp_path):
-    p = tmp_path / "arr.json"
-    p.write_text('[{"id": 1}, {"id": 2}]')
-    df = read_jsonl(spark, str(p), schema="id long", multi_line=True)
-    assert sorted(r.id for r in df.collect()) == [1, 2]
 
 
 def test_excel_gated(spark, tmp_path):
@@ -257,21 +235,3 @@ def test_registry_shp_kind(spark, tmp_path):
     df = read_source(spark, SourceSpec(name="p", kind="shp", path=base))
     rows = sorted((r.geometry_wkt, r.site) for r in df.collect())
     assert rows == [("POINT (1.5 2.5)", "a"), ("POINT (3 4)", "b")]
-
-
-def test_orc_roundtrip_with_pruning(spark, tmp_path):
-    from bioeco_portal_etl_spark.sources.files import read_orc
-
-    path = str(tmp_path / "t.orc")
-    spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id long, name string, v double"
-    ).write.orc(path)
-    back = read_orc(spark, path, columns=["id", "name"])
-    assert back.columns == ["id", "name"]
-    assert sorted((r["id"], r["name"]) for r in back.collect()) == [
-        (1, "a"),
-        (2, "b"),
-    ]
-    # pushdown: a filter on id must reach the ORC scan node
-    plan = read_orc(spark, path).filter("id = 2")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(id), EqualTo(id,2)]" in plan or "id" in plan

@@ -115,38 +115,14 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert ("2024-01-01 10:00:00", 2) in batch  # batch sees all three rows
 
 
-def test_watermarked_dedupe_stream_equals_batch_distinct(spark, event_dir):
-    """dropDuplicatesWithinWatermark over (user_id, event_type, ts) ≡ batch
-    dropDuplicates on the same keys (the fixture's duplicates all fall
-    within the watermark horizon)."""
-    from bioeco_portal_etl_spark.streaming.windows import watermarked_dedupe
-
-    keys = ["user_id", "event_type"]
-    stream = watermarked_dedupe(
-        read_event_stream(spark, event_dir), keys
-    ).select("user_id", "event_type", "ts")
-    q = run_stream_to_memory(stream, "wdedupe_mem", mode="append")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = _sig(spark.table("wdedupe_mem"))
-    batch = _sig(
-        spark.read.parquet(event_dir)
-        .dropDuplicates([*keys, "ts"])
-        .select("user_id", "event_type", "ts")
-    )
-    assert got == batch
-
-
 def test_enrich_stream_equals_batch_join(spark, event_dir):
     """Stream-static broadcast enrichment ≡ the batch left join."""
-    from bioeco_portal_etl_spark.streaming.windows import enrich_stream
+    from bioeco_portal_etl_spark.streaming.joins import static_enrich
 
     dim = spark.createDataFrame(
         [(i, "tier%d" % (i % 3)) for i in range(200)], "user_id long, tier string"
     )
-    stream = enrich_stream(read_event_stream(spark, event_dir), dim, "user_id")
+    stream = static_enrich(read_event_stream(spark, event_dir), dim, "user_id")
     q = run_stream_to_memory(
         stream.select("event_id", "user_id", "tier"), "enrich_mem", mode="append"
     )

@@ -15,7 +15,6 @@ them mention event count:
   w17 binned quantiles   <= windows x (bins + 1)
   w18 CMS grid           <= windows x (d*w cells + 1)
   w19 native sessions    <= sessions (session_window merges in-store)
-  dedupe-within-watermark<= distinct keys in the horizon
   w5/w21 applyInPandasWithState <= one state row per key
 
 N_EVENTS (24k) / bound ratios range 30x-500x here and GROW with event
@@ -30,7 +29,6 @@ import pytest
 from bioeco_portal_etl_spark.streaming.windows import (
     native_session_counts,
     run_stream_to_memory,
-    watermarked_dedupe,
     windowed_binned_quantiles,
     windowed_cms_grid,
     windowed_distinct_hll,
@@ -47,7 +45,7 @@ def dense_events_dir(spark, tmp_path_factory):
     """24k events, 50 users, 4 hours: each user fires every 30 s, so
     every user x window cell holds ~120 events (dense), every user is
     one continuous session (30 s << 30 min gap), and event_id repeats
-    mod 2000 (dup-heavy for the dedupe bound)."""
+    mod 2000."""
     d = str(tmp_path_factory.mktemp("dense_events") / "ev")
     (
         spark.range(N_EVENTS)
@@ -148,36 +146,6 @@ def test_w19_native_session_state_is_sessions_not_events(
     # store; allow unmerged adjacency slack before compaction
     assert 0 < mx <= N_USERS * 4, mx
     assert mx * 30 < N_EVENTS
-
-
-def test_dedupe_state_is_distinct_keys_not_arrivals(
-    spark, dense_events_dir
-):
-    # watermarked_dedupe keys on (key_cols..., ts) — exact-event dedupe —
-    # so true duplicates must share the timestamp too: derive ts from
-    # event_id (2000 distinct (event_id, ts) pairs across 24k arrivals),
-    # then watermark the DERIVED column.
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .parquet(dense_events_dir)
-        .select(
-            "event_id",
-            F.timestamp_seconds(F.lit(EPOCH) + F.col("event_id") * 7).alias(
-                "ts"
-            ),
-        )
-        .withWatermark("ts", "10 minutes")
-    )
-    n_out, mx = _drain_max_state(
-        watermarked_dedupe(stream, ["event_id"]), "sb_dedupe"
-    )
-    # 24k arrivals, 2000 distinct keys; the watermark horizon can
-    # additionally evict old keys mid-drain, so the high-water mark may
-    # sit below even the distinct count — the bound is what matters
-    assert 0 < mx <= 2000 + 1, mx
-    assert n_out >= 2000  # every distinct key emitted at least once
 
 
 def test_w5_sessionize_state_is_one_row_per_user(spark, dense_events_dir):

@@ -1,5 +1,5 @@
 """Training-pipeline operator semantics beyond the oracle gate:
-decontamination (overlap thresholds, removal), stratified hash split
+decontamination (overlap thresholds), stratified hash split
 (determinism, append-stability, per-stratum fractions), repetition
 signals (crafted repetitive vs clean docs)."""
 
@@ -12,10 +12,7 @@ from bioeco_portal_etl_spark.operators.sampling import (
     stratified_hash_split,
 )
 from bioeco_portal_etl_spark.text.analysis import repetition_table
-from bioeco_portal_etl_spark.text.decontam import (
-    decontaminate,
-    ngram_overlap_pairs,
-)
+from bioeco_portal_etl_spark.text.decontam import ngram_overlap_pairs
 
 
 def _docs(spark, rows):
@@ -40,8 +37,6 @@ def test_overlap_requires_min_common_distinct_shingles(spark):
     }
     # bench shingles: {alpha beta gamma, beta gamma delta}; doc 11 has both
     assert pairs == {(11, 0, 2)}
-    kept = decontaminate(corpus, bench, "doc_id", "text", k=3, min_common=2)
-    assert sorted(r.doc_id for r in kept.collect()) == [10, 12]
 
 
 def test_overlap_short_docs_cannot_contaminate(spark):
@@ -430,65 +425,6 @@ def test_chunk_windows_plan_is_shuffle_free(spark):
     d = read_parquet_table(spark, "/root/testdata/sf0.001", "documents")
     plan = chunk_windows(d, "doc_id", "text")._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-def test_bloom_incremental_dedupe_no_false_negatives_and_bounded_fp(spark):
-    """Bloom contract vs the exact anti-join: every batch doc whose content
-    exists in history is dropped (NO false negatives, ever); genuinely-new
-    docs survive at >= 1-fpp empirically."""
-    from bioeco_portal_etl_spark.sources.files import read_parquet_table
-    from bioeco_portal_etl_spark.text.incremental import (
-        bloom_build,
-        bloom_new_docs,
-        bloom_params,
-    )
-
-    docs = read_parquet_table(spark, "/root/testdata/sf0.001", "documents")
-    history = docs.filter(F.col("doc_id") < 400)
-    # batch: 100 exact-content dups of history + 100 genuinely new docs
-    dups = history.filter(F.col("doc_id") < 100).select(
-        (F.col("doc_id") + 10_000).alias("doc_id"), "text"
-    )
-    fresh = docs.filter(F.col("doc_id") >= 400).select(
-        "doc_id", F.concat(F.lit("UNSEEN "), F.col("text")).alias("text")
-    )
-    batch = dups.unionByName(fresh)
-
-    m, k = bloom_params(expected_items=400, fpp=0.01)
-    bloom = bloom_build(history, "text", m, k)
-    kept = {r.doc_id for r in bloom_new_docs(batch, bloom, "doc_id", "text", m, k).collect()}
-
-    # no false negatives: every content-dup of history must be gone
-    assert not any(d >= 10_000 for d in kept)
-    # bounded false positives: >= 95% of the 100 truly-new docs survive
-    n_new_kept = sum(1 for d in kept if d < 10_000)
-    assert n_new_kept >= 95, n_new_kept
-    # and the exact anti-join agrees on everything the bloom kept
-    from bioeco_portal_etl_spark.text.dedupe import content_hash
-
-    exact_new = {
-        r.doc_id
-        for r in batch.join(
-            history.select(content_hash("text").alias("h")).distinct(),
-            content_hash("text") == F.col("h"),
-            "left_anti",
-        ).collect()
-    }
-    assert kept <= exact_new
-
-
-def test_bloom_word_table_is_bounded_and_broadcastable(spark):
-    from bioeco_portal_etl_spark.sources.files import read_parquet_table
-    from bioeco_portal_etl_spark.text.incremental import bloom_build, bloom_params
-
-    docs = read_parquet_table(spark, "/root/testdata/sf0.001", "documents")
-    m, k = bloom_params(500, 0.01)
-    bloom = bloom_build(docs, "text", m, k)
-    assert bloom.count() <= m // 64 + 1
-    # one scan, one shuffle: the aggregate's partial (map-side) bit_or is
-    # what keeps the shuffle bounded by m/64 rows per partition
-    plan = bloom._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
 
 
 def test_lm_staged_vocab_oov_floor_penalty(spark):
