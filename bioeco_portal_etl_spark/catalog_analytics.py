@@ -947,8 +947,9 @@ def x21_dup_matrix(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("id_b"), F.col("source").alias("__sb")
     )
     return (
+        # without the hint x21 broadcasts the pair side instead
         pairs.join(F.broadcast(a), "id_a")
-        .join(F.broadcast(b), "id_b")
+        .join(b, "id_b")
         .select(
             F.least("__sa", "__sb").alias("source_a"),
             F.greatest("__sa", "__sb").alias("source_b"),
@@ -1622,7 +1623,7 @@ def x34_selectivity_audit(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     return (
-        bounds.join(F.broadcast(melted), "predicate")
+        bounds.join(melted, "predicate")
         .select(
             "predicate",
             F.col("est_lo").cast("long").alias("est_lo"),
@@ -2411,8 +2412,9 @@ def poisson_bootstrap_frame(orders_raw: DataFrame) -> DataFrame:
         F.col("mean_e4").alias("boot_hi_e4")
     )
     return (
+        # without the hint x49 broadcasts the point-estimate side (the orders aggregate) instead
         point.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
+        .crossJoin(hi)
         .select(
             F.lit(_B).cast("long").alias("n_resamples"),
             "point_mean_e4",
@@ -2504,7 +2506,7 @@ def ks_test_frame(orders: DataFrame) -> DataFrame:
     totals = per_value.agg(
         F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
     )
-    scored = cum.crossJoin(F.broadcast(totals)).select(
+    scored = cum.crossJoin(totals).select(
         "n_a",
         "n_b",
         F.abs(
@@ -2611,6 +2613,7 @@ def exact_quantiles_frame(values: DataFrame) -> DataFrame:
             cum += c
     tgt = spark.createDataFrame(targets, "p long, bkt long, off long")
     per_value = (
+        # without the hint x51 broadcasts the value side instead
         b.join(F.broadcast(tgt), "bkt")
         .groupBy("p", "off", "v")
         .agg(F.count(F.lit(1)).alias("c"))

@@ -639,7 +639,7 @@ def td14_dedupe_agreement(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.coalesce("__l", F.lit(0))).alias("n_both"),
     )
     nl = lsh.agg(F.count(F.lit(1)).alias("n_lsh_pairs"))
-    return ex.crossJoin(F.broadcast(nl)).select(
+    return ex.crossJoin(nl).select(
         F.col("n_exact_pairs").cast("long").alias("n_exact_pairs"),
         F.col("n_lsh_pairs").cast("long").alias("n_lsh_pairs"),
         F.col("n_both").cast("long").alias("n_both"),
@@ -772,7 +772,7 @@ def minhash_error_sweep_frame(docs: DataFrame) -> DataFrame:
         F.col("doc_id").alias("id_b"),
         *[F.col(f"_m{p}").alias(f"b{p}") for p in range(8)],
     )
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     for k in _TD16_KS:
         matches = sum(
             (F.col(f"a{p}") == F.col(f"b{p}")).cast("long") for p in range(k)
@@ -798,9 +798,10 @@ def minhash_error_sweep_frame(docs: DataFrame) -> DataFrame:
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("szb"))
     exact = (
         pairs.select("id_a", "id_b", *[f"est{k}" for k in _TD16_KS])
+        # without the hint td16 plans a SortMergeJoin
         .join(F.broadcast(inter), ["id_a", "id_b"], "left")
-        .join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
+        .join(sa, "id_a")
+        .join(sb, "id_b")
         .withColumn(
             "true_e6",
             F.when(

@@ -96,7 +96,7 @@ def dq2_referential(spark: SparkSession, sf: str) -> DataFrame:
             c, o.o_custkey == c.c_custkey, "left_anti"
         ),
         "customer_orphan_nations": c.join(
-            F.broadcast(n), c.c_nationkey == n.n_nationkey, "left_anti"
+            n, c.c_nationkey == n.n_nationkey, "left_anti"
         ),
     }
     out = None
@@ -822,7 +822,7 @@ def dq17_freshness_lag(spark: SparkSession, sf: str) -> DataFrame:
     )
     hwm = e.agg(F.max("ts_us").alias("hwm_us"))
     return (
-        per_type.crossJoin(F.broadcast(hwm))
+        per_type.crossJoin(hwm)
         .select(
             "event_type",
             F.col("n_events").cast("long").alias("n_events"),

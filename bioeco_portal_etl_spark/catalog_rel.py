@@ -229,7 +229,7 @@ def j1_broadcast_left_join(spark: SparkSession, sf: str) -> DataFrame:
     o = T(spark, sf, "orders")
     c = T(spark, sf, "customer").select("c_custkey", "c_name", "c_mktsegment")
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey, "left")
+        o.join(c, o.o_custkey == c.c_custkey, "left")
         .select("o_orderkey", "c_name", "c_mktsegment")
         .orderBy("o_orderkey")
     )
@@ -249,7 +249,7 @@ def j4_differing_key_names(spark: SparkSession, sf: str) -> DataFrame:
         F.col("r_regionkey").alias("rk"), F.col("r_name").alias("region_name")
     )
     return (
-        n.join(F.broadcast(r), n.n_regionkey == r.rk, "left")
+        n.join(r, n.n_regionkey == r.rk, "left")
         .select("n_name", "region_name")
         .orderBy("n_name")
     )
@@ -515,8 +515,9 @@ def rel1_rollup(spark: SparkSession, sf: str) -> DataFrame:
     c = T(spark, sf, "customer")
     n = T(spark, sf, "nation")
     r = T(spark, sf, "region")
+    # without the hint rel1 broadcasts the customer side instead (sf0.001)
     joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
+        r, n.n_regionkey == r.r_regionkey
     )
     return (
         joined.rollup("r_name", "n_name")
@@ -594,7 +595,7 @@ def rel4_conditional_pivot(spark: SparkSession, sf: str) -> DataFrame:
     status — sum(when(...)) columns, one aggregate, no pivot shuffle."""
     c = T(spark, sf, "customer").select("c_custkey", "c_nationkey")
     o = T(spark, sf, "orders")
-    joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+    joined = o.join(c, o.o_custkey == c.c_custkey)
     return (
         joined.groupBy("c_nationkey")
         .agg(

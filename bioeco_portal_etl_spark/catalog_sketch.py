@@ -211,7 +211,7 @@ def sk5_kmv_setops(spark: SparkSession, sf: str) -> DataFrame:
     ti = a.distinct().intersect(b.distinct()).agg(
         F.count(F.lit(1)).alias("true_intersection")
     )
-    return est.crossJoin(F.broadcast(tu)).crossJoin(F.broadcast(ti))
+    return est.crossJoin(tu).crossJoin(ti)
 
 
 def _sk5_sql() -> str:
@@ -379,7 +379,7 @@ def sk8_hist_merge_quantiles(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(_SK8_BINS - 1).cast("long"),
         )
 
-    out = est.crossJoin(F.broadcast(exact))
+    out = est.crossJoin(exact)
     cols = [F.col("n").cast("long").alias("n")]
     for name, _, _ in _SK8_PCTS:
         cols += [
@@ -480,7 +480,7 @@ def sk10_bloom_fpr(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_probed"),
         F.sum(F.col("possibly_seen").cast("long")).alias("n_false_pos"),
     )
-    out = agg.crossJoin(F.broadcast(n_ins))
+    out = agg.crossJoin(n_ins)
     load = F.col("n_inserted") * _BF_K / F.lit(float(_BF_M))
     one_bit = 1 - F.exp(-load)
     theory = F.floor(one_bit * one_bit * one_bit * 10000).cast("long")
@@ -677,7 +677,7 @@ def sk13_histq_error_sweep(spark: SparkSession, sf: str) -> DataFrame:
             F.col("n").cast("long").alias("n"),
             F.col("p50_est_cents").cast("long").alias("p50_est_cents"),
         )
-        row = est.crossJoin(F.broadcast(exact)).select(
+        row = est.crossJoin(exact).select(
             "bins",
             "n",
             "p50_est_cents",

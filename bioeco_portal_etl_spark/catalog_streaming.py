@@ -722,7 +722,7 @@ def w12_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         spark.table("w12_ssoj_mem")
-        .crossJoin(F.broadcast(cutoff))
+        .crossJoin(cutoff)
         .filter(F.col("err_ts") <= F.col("cut"))
         .select("err_id", "user_id", "err_ts", "click_ts", "click_value")
         .orderBy("err_id", "click_ts", "click_value")
@@ -1223,7 +1223,7 @@ def w18_stream_cms_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         probes.join(
-            F.broadcast(g),
+            g,
             (F.col("window_start") == F.col("g_ws"))
             & (F.col("row") == F.col("g_row"))
             & (F.col("bucket") == F.col("g_bucket")),

@@ -935,6 +935,7 @@ def tx24_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("w") != "")
     )
     return (
+        # without the hint tx24 broadcasts the token stream instead
         tok.join(F.broadcast(vocab), "w")
         .groupBy("doc_id")
         .agg(
@@ -1364,7 +1365,7 @@ def tx36_langid_confusion(spark: SparkSession, sf: str) -> DataFrame:
     )
     tot = cell.groupBy("true_lang").agg(F.sum("n").alias("tn"))
     return (
-        cell.join(F.broadcast(tot), "true_lang")
+        cell.join(tot, "true_lang")
         .select(
             "true_lang",
             "pred_lang",
@@ -1441,6 +1442,7 @@ def tx37_bpe_fertility(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id"),
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"),
     ).filter(F.col("w") != "")
+    # without the hint tx37 broadcasts the token stream instead
     enc = tok.join(F.broadcast(vocab), "w")
     per_doc = enc.groupBy("lang", "doc_id").agg(
         F.count(F.lit(1)).alias("words"), F.sum("n_sub").alias("subs")
@@ -1755,13 +1757,7 @@ def js_divergence_frame(docs: DataFrame) -> DataFrame:
     totals = terms.groupBy("grp").agg(F.sum("c").alias("tot"))
     pairs = (
         totals.select(F.col("grp").alias("grp_a"), F.col("tot").alias("tot_a"))
-        .crossJoin(
-            F.broadcast(
-                totals.select(
-                    F.col("grp").alias("grp_b"), F.col("tot").alias("tot_b")
-                )
-            )
-        )
+        .crossJoin(totals.select(F.col("grp").alias("grp_b"), F.col("tot").alias("tot_b")))
         .filter(F.col("grp_a") < F.col("grp_b"))
     )
     # union-of-support term grid per pair

@@ -76,7 +76,7 @@ def q3_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
     l = T(spark, sf, "lineitem").filter(F.col("l_shipdate") > "1998-06-01")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
         .select(
@@ -116,8 +116,8 @@ def q5_region_revenue(spark: SparkSession, sf: str) -> DataFrame:
     o = T(spark, sf, "orders")
     l = T(spark, sf, "lineitem")
     dims = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("c_custkey", "r_name")
     )
     return (
@@ -231,7 +231,7 @@ def q11_value_suppliers(spark: SparkSession, sf: str) -> DataFrame:
     # 3*total_q form (ADVICE r8). Magnitudes fit decimal(38,6) with huge
     # headroom: grand_total*nsupp ~ 1e13 at sf0.1, ~1e19 only at SF~1e5.
     return (
-        per_supp.crossJoin(F.broadcast(total))
+        per_supp.crossJoin(total)
         .filter(F.col("value") * F.col("nsupp") > F.col("grand_total"))
         # surface as double on both engines (decimal stays internal); cast
         # BEFORE the sort so tie order under double rounding matches too
@@ -432,7 +432,7 @@ def q22_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
             F.sum(F.col("c_acctbal").cast(_DEC)).cast("double") / F.count(F.lit(1))
         ).alias("avg_bal")
     )
-    rich = c.crossJoin(F.broadcast(avg_bal)).filter(
+    rich = c.crossJoin(avg_bal).filter(
         F.col("c_acctbal") > F.col("avg_bal")
     )
     idle = rich.join(o, rich.c_custkey == o.o_custkey, "left_anti")
@@ -473,12 +473,13 @@ def q2_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     s = T(spark, sf, "supplier")
     n = T(spark, sf, "nation")
     r = T(spark, sf, "region").filter(F.col("r_name") == "EUROPE")
-    sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+    sn = s.join(n, s.s_nationkey == n.n_nationkey).join(
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     )
     mins = sn.groupBy("s_nationkey").agg(F.min("s_acctbal").alias("min_bal"))
     return (
         sn.join(
+            # without the hint q2 plans a SortMergeJoin
             F.broadcast(mins),
             (sn.s_nationkey == mins.s_nationkey)
             & (F.col("s_acctbal") == F.col("min_bal")),
@@ -539,9 +540,9 @@ def q7_volume_shipping(spark: SparkSession, sf: str) -> DataFrame:
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
-        .crossJoin(F.broadcast(pair2))
+        .join(n1, F.col("s_nationkey") == F.col("sn_key"))
+        .join(n2, F.col("c_nationkey") == F.col("cn_key"))
+        .crossJoin(pair2)
     )
     pair = (
         (F.col("supp_nation") == F.col("na"))
@@ -597,10 +598,11 @@ def q8_market_share(spark: SparkSession, sf: str) -> DataFrame:
     s = T(spark, sf, "supplier")
     n = T(spark, sf, "nation")
     r = T(spark, sf, "region").filter(F.col("r_name") == "ASIA")
-    cn = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
+    cn = c.join(n, c.c_nationkey == n.n_nationkey).join(
+        r, F.col("n_regionkey") == F.col("r_regionkey")
     )
     sn = s.join(
+        # without the hint q8 broadcasts the supplier side instead (sf0.001, sf0.01)
         F.broadcast(
             T(spark, sf, "nation").select(
                 F.col("n_nationkey").alias("sn_key"),
@@ -669,10 +671,10 @@ def q9_product_profit(spark: SparkSession, sf: str) -> DataFrame:
     n = T(spark, sf, "nation")
     amount = _rev() - (F.lit(0.7) * F.col("l_quantity")).cast(_DEC)
     j = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
         .join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
     )
     return (
         j.groupBy(
@@ -713,7 +715,7 @@ def q10_returned_items(spark: SparkSession, sf: str) -> DataFrame:
     j = (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
     )
     return (
         j.groupBy("c_custkey", "c_name", "n_name")
@@ -819,7 +821,7 @@ def q15_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     rev = l.groupBy("l_suppkey").agg(F.sum(_rev()).alias("total_revenue"))
     mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .filter(F.col("total_revenue") == F.col("max_revenue"))
         .join(s, F.col("l_suppkey") == s.s_suppkey)
         # equality on the exact decimal above; double only at the surface
@@ -860,8 +862,8 @@ def q16_supplier_cnt(spark: SparkSession, sf: str) -> DataFrame:
     bad = T(spark, sf, "supplier").filter(F.col("s_acctbal") < 2000).select(
         "s_suppkey"
     )
-    j = l.join(F.broadcast(p), l.l_partkey == p.p_partkey).join(
-        F.broadcast(bad), l.l_suppkey == bad.s_suppkey, "left_anti"
+    j = l.join(p, l.l_partkey == p.p_partkey).join(
+        bad, l.l_suppkey == bad.s_suppkey, "left_anti"
     )
     return (
         j.groupBy("p_brand", "p_type", "p_size")
@@ -909,17 +911,18 @@ def q20_part_stock_chain(spark: SparkSession, sf: str) -> DataFrame:
     s = T(spark, sf, "supplier")
     nat = T(spark, sf, "nation")
     target_nation = (
+        # without the hint q20 broadcasts the supplier side instead (sf0.001, sf0.01)
         s.join(F.broadcast(nat), s.s_nationkey == nat.n_nationkey)
         .agg(F.min("n_name").alias("n_name"))
     )
-    n = nat.join(F.broadcast(target_nation), "n_name", "left_semi")
+    n = nat.join(target_nation, "n_name", "left_semi")
     # floor() before the long conversion: Spark's double->long CAST
     # truncates toward zero while DuckDB's rounds half-to-even — identical
     # on today's integral l_quantity but silently divergent on any future
     # fractional value. floor() is defined identically on both engines
     # (ADVICE r8).
     pair_qty = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey, "left_semi")
+        l.join(p, l.l_partkey == p.p_partkey, "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.floor("l_quantity")).alias("shipped"))
     )
@@ -927,7 +930,7 @@ def q20_part_stock_chain(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("shipped").alias("total_q"), F.count(F.lit(1)).alias("npairs")
     )
     qty = (
-        pair_qty.crossJoin(F.broadcast(tot))
+        pair_qty.crossJoin(tot)
         .filter(
             F.lit(2) * F.col("shipped") * F.col("npairs")
             > F.lit(3) * F.col("total_q")
@@ -937,7 +940,7 @@ def q20_part_stock_chain(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         s.join(qty, s.s_suppkey == qty.l_suppkey, "left_semi")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .select("s_suppkey", "s_name")
         .orderBy("s_suppkey")
     )

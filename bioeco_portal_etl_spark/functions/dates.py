@@ -11,8 +11,7 @@ produces Jan 1 of the year, so the reference's end-of-year is **Dec 31 of
 the SAME year** — confirmed against the published run (docs/index.html:
 ACCOBAMS end year 2018 -> 2018-12-31; pinned in
 tests/test_reference_golden_counts.py). The change_on_boundary=FALSE
-reading (Dec 31 of year-1) is wrong for Dates and kept only as
-``end_of_year_datetime_boundary`` for POSIXct-style callers.
+reading (Dec 31 of year-1) is wrong for Dates.
 """
 
 from __future__ import annotations
@@ -41,16 +40,3 @@ def end_of_year(col: Column | str) -> Column:
     day => Dec 31 of the SAME year."""
     d = _c(col)
     return F.to_date(F.concat(F.year(d).cast("string"), F.lit("-12-31")))
-
-
-def end_of_year_datetime_boundary(col: Column | str) -> Column:
-    """The POSIXct-style boundary (change_on_boundary=FALSE): a Jan-1 input
-    ceilings to itself, minus one day => Dec 31 of the PREVIOUS year. Not
-    what the reference's Date-class flow does — kept for callers porting
-    date-time (not Date) ceiling logic."""
-    d = _c(col)
-    on_boundary = (F.month(d) == 1) & (F.dayofmonth(d) == 1)
-    ceil = F.when(on_boundary, d).otherwise(
-        F.to_date(F.concat((F.year(d) + 1).cast("string"), F.lit("-01-01")))
-    )
-    return F.date_sub(ceil, 1)

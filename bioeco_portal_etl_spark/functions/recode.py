@@ -7,18 +7,15 @@ notebooks/export_in_obis.R:3-9 (5-way In_OBIS map).
 Semantics: keys found in the map are replaced; **unmatched values pass through
 UNCHANGED** (not nulled) — dplyr::recode's default. Nulls stay null.
 
-Two physical strategies:
-  - ``recode``: a literal ``map_from_arrays`` lookup — constant-folded by
-    Catalyst, zero shuffle, right for maps of tens..thousands of pairs.
-  - ``recode_via_join``: broadcast-join against a mapping DataFrame — right
-    when the map itself is data (a dimension table), or too large to inline.
-Both produce identical results; both avoid any Python UDF.
+``recode`` is a literal ``map_from_arrays`` lookup — constant-folded by
+Catalyst, no shuffle and no Python UDF, right for maps of tens..thousands
+of pairs.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 def _c(col: Column | str) -> Column:
@@ -37,25 +34,3 @@ def recode(col: Column | str, mapping: dict[str, str], default_passthrough: bool
     if default_passthrough:
         return F.coalesce(looked_up, c)
     return looked_up
-
-
-def recode_via_join(
-    df: DataFrame,
-    col: str,
-    mapping_df: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value",
-    default_passthrough: bool = True,
-) -> DataFrame:
-    """Broadcast-join recode: replaces ``col`` in-place. The mapping side is
-    always broadcast — it is a dimension, never a fact."""
-    m = mapping_df.select(
-        F.col(key_col).alias("__recode_key"), F.col(value_col).alias("__recode_val")
-    )
-    joined = df.join(F.broadcast(m), df[col] == F.col("__recode_key"), "left")
-    replaced = (
-        F.coalesce(F.col("__recode_val"), F.col(col))
-        if default_passthrough
-        else F.col("__recode_val")
-    )
-    return joined.withColumn(col, replaced).drop("__recode_key", "__recode_val")

@@ -31,76 +31,25 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def canonicalize_url(col: Column | str) -> Column:
-    """Canonical form of an absolute ``scheme://host[:port]/path?query#frag``
-    URL. Null-safe: null in, null out. Strings without ``://`` (relative or
-    malformed URLs) are returned UNCHANGED — guarded explicitly, because
-    with instr()==0 the substring arithmetic below would silently eat the
-    first two characters and prepend '://'."""
-    url = _c(col)
-    # 1. drop fragment
-    h = F.instr(url, "#")
-    base = F.when(h > 0, F.substring(url, F.lit(1), h - 1)).otherwise(url)
-    # 2. split scheme
-    p = F.instr(base, "://")
-    scheme = F.lower(F.substring(base, F.lit(1), p - 1))
-    rest = F.substring(base, p + 3, F.length(base))
-    # 3. split query
-    qp = F.instr(rest, "?")
-    hostpath = F.when(qp > 0, F.substring(rest, F.lit(1), qp - 1)).otherwise(rest)
-    query = F.when(qp > 0, F.substring(rest, qp + 1, F.length(rest))).otherwise(
-        F.lit("")
-    )
-    # 4. split host / path
-    s = F.instr(hostpath, "/")
-    host_raw = F.when(s > 0, F.substring(hostpath, F.lit(1), s - 1)).otherwise(
-        hostpath
-    )
-    path_raw = F.when(s > 0, F.substring(hostpath, s, F.length(hostpath))).otherwise(
-        F.lit("")
-    )
-    # 5. host: lowercase, strip www., strip scheme-default port
-    host = F.regexp_replace(F.lower(host_raw), r"^www\.", "")
-    host = F.when(
-        scheme == "http", F.regexp_replace(host, ":80$", "")
-    ).when(
-        scheme == "https", F.regexp_replace(host, ":443$", "")
-    ).otherwise(host)
-    # 6. path: collapse duplicate slashes, strip trailing
-    path = F.regexp_replace(F.regexp_replace(path_raw, "/{2,}", "/"), "/+$", "")
-    # 7. query: drop tracking params, sort the rest
-    params = F.array_sort(
-        F.filter(
-            F.split(query, "&"),
-            lambda t: (t != "") & ~t.rlike(TRACKING_RE),
-        )
-    )
-    q = F.array_join(params, "&")
-    return F.when(
-        p > 0,
-        F.concat(
-            scheme,
-            F.lit("://"),
-            host,
-            path,
-            F.when(q != "", F.concat(F.lit("?"), q)).otherwise(F.lit("")),
-        ),
-    ).otherwise(url)
-
-
 def canonicalize_urls(
     df, url_col, out_col: str = "canonical_url", keep: list[str] | None = None
 ):
-    """Staged-projection form of :func:`canonicalize_url` — USE THIS IN
-    PIPELINES. The scalar Column version nests each stage inside the next
-    (``rest`` references ``base`` twice, ``hostpath`` references ``rest``
-    twice, …), so the final expression tree contains exponentially many
-    copies of the input expression and codegen re-evaluates them all
-    (measured ~10× slower at sf0.1 on the x10 fixture). Here every stage
-    is a NAMED column referenced multiply by the next projection —
-    Catalyst's CollapseProject keeps multiply-referenced non-cheap aliases
-    materialized (the same property text/dedupe.shingled relies on), so
-    each stage computes exactly once per row."""
+    """Canonical form of an absolute ``scheme://host[:port]/path?query#frag``
+    URL in ``out_col``. Null-safe: null in, null out. Strings without
+    ``://`` (relative or malformed URLs) are returned UNCHANGED — guarded
+    explicitly, because with instr()==0 the substring arithmetic would
+    silently eat the first two characters and prepend '://'.
+
+    Staged projections, not one Column: a single nested expression puts
+    each stage inside the next (``rest`` references ``base`` twice,
+    ``hostpath`` references ``rest`` twice, …), so the tree contains
+    exponentially many copies of the input expression and codegen
+    re-evaluates them all (measured ~10× slower at sf0.1 on the x10
+    fixture). Here every stage is a NAMED column referenced multiply by
+    the next projection — Catalyst's CollapseProject keeps
+    multiply-referenced non-cheap aliases materialized (the same property
+    text/dedupe.shingled relies on), so each stage computes exactly once
+    per row."""
     keep = keep if keep is not None else [c for c in df.columns]
     u = _c(url_col)
     h = F.instr(u, "#")
@@ -201,7 +150,7 @@ def canonicalize_urls(
 
 
 def duck_canonical_url(expr: str) -> str:
-    """DuckDB expression mirroring :func:`canonicalize_url` (oracle side).
+    """DuckDB expression mirroring :func:`canonicalize_urls` (oracle side).
 
     'g' flags on every regexp_replace: DuckDB replaces first-match by
     default while Spark replaces all — the mirror must match Spark."""

@@ -82,7 +82,7 @@ def point_in_polygon_join(
     )
     x, y = F.col(x_col), F.col(y_col)
     cand = points.join(
-        F.broadcast(p),
+        p,
         (x >= F.col("__minx"))
         & (x <= F.col("__maxx"))
         & (y >= F.col("__miny"))

@@ -59,9 +59,9 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     (m_edges, sum_dx, sum_dy, n_nodes, assortativity_e6)."""
     e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed("src", "node")
-    # node-sized degree lookups broadcast onto the edge stream (guide §3.1)
+    # without the hint gr16 broadcasts the edges instead and gr22 plans a SortMergeJoin
     dx = F.broadcast(deg.select(F.col("node").alias("src"), F.col("d").alias("dx")))
-    dy = F.broadcast(deg.select(F.col("node").alias("dst"), F.col("d").alias("dy")))
+    dy = F.broadcast(deg.select(F.col("node").alias("dst"), F.col("d").alias("dy")))  # without it gr22 plans a SortMergeJoin
     pairs = e.join(dx, "src").join(dy, "dst")
     agg = pairs.agg(
         F.count(F.lit(1)).alias("m"),
@@ -71,7 +71,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
         F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
         F.sum(F.col("dy") * F.col("dy")).alias("syy"),
     )
-    nodes = F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
+    nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     m, sx, sy, sxy, sxx, syy = (
         F.col(c).cast("decimal(38,0)") for c in ("m", "sx", "sy", "sxy", "sxx", "syy")
     )

@@ -115,6 +115,7 @@ def hyperball_neighborhood(
 
     def step(state: DataFrame) -> DataFrame:
         balls = state.columns[1 + len(_RCOLS):]
+        # without the hint gr11, gr14 and gr15 broadcast the edge list instead
         rhs = F.broadcast(state.select("node", *_RCOLS))
         prop = e.join(rhs, e["src"] == rhs["node"]).select(
             F.col("dst").alias("node"),

@@ -51,8 +51,9 @@ def kcore(
             F.count(F.lit(1)).alias("deg")
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
+        # acts inside each round's localCheckpoint: without it gr8's sf0.1 checkpoint plans a SortMergeJoin
         keep_src = F.broadcast(keep.withColumnRenamed("node", "src"))
-        keep_dst = F.broadcast(keep.withColumnRenamed("node", "dst"))
+        keep_dst = F.broadcast(keep.withColumnRenamed("node", "dst"))  # without it: SortMergeJoin in the checkpoint plan
         return (
             sym.join(keep_src, "src", "semi")
             .join(keep_dst, "dst", "semi")

@@ -82,6 +82,7 @@ def label_propagation(
         .select("node", F.col("node").alias("label"))
     )
     for _ in range(rounds):
+        # without the hint gr7 and gr20 plan a SortMergeJoin per round
         lbl = F.broadcast(labels)
         nbr = (
             sym.join(lbl, sym["dst"] == lbl["node"])

@@ -52,6 +52,7 @@ def adamic_adar(
     )
     # middles: (w, leaf) with the hub cap applied BEFORE the wedge join.
     # The capped degree table is node-sized — broadcast (guide §3.1).
+    # without the hint gr17 plans 2 more SortMergeJoins
     capped = F.broadcast(deg.filter(F.col("deg") <= max_degree))
     mid = (
         sym.select(F.col("src").alias("w"), F.col("dst").alias("leaf"))

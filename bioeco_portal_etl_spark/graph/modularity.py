@@ -43,6 +43,7 @@ def community_modularity(
     sym = edge_frame(edges)
     lu = labels.select(F.col("node").alias("src"), F.col("label").alias("cu"))
     lv = labels.select(F.col("node").alias("dst"), F.col("label").alias("cv"))
+    # without these hints gr20 plans 2 SortMergeJoins
     ann = sym.join(F.broadcast(lu), "src").join(F.broadcast(lv), "dst")
     internal = (
         ann.filter(F.col("cu") == F.col("cv"))
@@ -63,7 +64,7 @@ def community_modularity(
     )
     out = (
         comm.join(internal, "community", "left")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             "community",
             F.col("n_nodes").cast("long").alias("n_nodes"),

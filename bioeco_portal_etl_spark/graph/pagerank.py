@@ -105,6 +105,7 @@ def pagerank(
         # broadcast the O(V) rank table into the O(E) join so the
         # persisted edge frame never moves or sorts (round-12, guide
         # §3.1 — post-aggregate size estimates kept picking sort-merge)
+        # without the hint gr1 plans 3 SortMergeJoins and gr13 broadcasts the edges instead
         rhs = F.broadcast(ranks.withColumnRenamed("node", "src"))
         contribs = (
             e.join(rhs, "src")

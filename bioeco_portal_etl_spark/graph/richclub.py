@@ -37,27 +37,31 @@ def rich_club(edges: DataFrame, ks: list[int]) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+    # without either hint gr19 plans a SortMergeJoin
     du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")))
-    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))
+    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))  # without it: SortMergeJoin
     ann = e.join(du, "u").join(dv, "v")
     kt = edges.sparkSession.createDataFrame(
         [(int(k),) for k in ks], "k long"
     )
     ek = (
+        # without the hint gr19 plans a CartesianProduct
         ann.crossJoin(F.broadcast(kt))
         .filter((F.col("du") > F.col("k")) & (F.col("dv") > F.col("k")))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_edges"))
     )
     nk = (
+        # without the hint gr19 plans a CartesianProduct
         deg.crossJoin(F.broadcast(kt))
         .filter(F.col("deg") > F.col("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
     )
     return (
+        # without either hint gr19 plans a SortMergeJoin
         kt.join(F.broadcast(nk), "k", "left")
-        .join(F.broadcast(ek), "k", "left")
+        .join(F.broadcast(ek), "k", "left")  # without it: SortMergeJoin
         .select(
             "k",
             F.coalesce("n_nodes", F.lit(0)).cast("long").alias("n_nodes"),

@@ -83,8 +83,9 @@ def node_jaccard(
     )
     # entity-degree tables are node-sized — broadcast them onto the pair
     # stream (round-12, guide §3.1)
+    # without either hint gr5 plans one more SortMergeJoin
     da = F.broadcast(deg.select(F.col("src").alias("src_a"), F.col("deg").alias("deg_a")))
-    db = F.broadcast(deg.select(F.col("src").alias("src_b"), F.col("deg").alias("deg_b")))
+    db = F.broadcast(deg.select(F.col("src").alias("src_b"), F.col("deg").alias("deg_b")))  # without it: one more SortMergeJoin
     return (
         pairs.join(da, "src_a")
         .join(db, "src_b")

@@ -56,7 +56,7 @@ def sssp_bounded(
     )
 
     def step(dist: DataFrame) -> DataFrame:
-        # O(reached) distance table broadcast (round-12, guide §3.1)
+        # without the hint gr3 and gr12 broadcast the checkpointed edge list instead
         rhs = F.broadcast(dist.withColumnRenamed("node", "src"))
         cand = e.join(rhs, "src").select(
             F.col("dst").alias("node"),

@@ -35,8 +35,9 @@ def _degrees_and_orientation(und: DataFrame) -> tuple[DataFrame, DataFrame]:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+    # without either hint gr2, gr18 and gr21 plan 2 more SortMergeJoins
     du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("deg").alias("du")))
-    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))
+    dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")))  # without it: 2 more SortMergeJoins
     o = (
         und.join(du, "u")
         .join(dv, "v")
@@ -92,8 +93,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
     return (
         deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-        .crossJoin(F.broadcast(und.agg(F.count(F.lit(1)).alias("n_edges"))))
-        .crossJoin(F.broadcast(wagg))
+        .crossJoin(und.agg(F.count(F.lit(1)).alias("n_edges")))
+        .crossJoin(wagg)
     )
 
 

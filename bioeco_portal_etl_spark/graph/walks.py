@@ -86,6 +86,7 @@ def random_walks(
             # the frontier never exceeds the seed count — broadcast it so
             # the adjacency table is only probed, never sorted/shuffled
             # per hop (round-12, guide §3.1)
+            # without the hint gr10 plans a SortMergeJoin per hop
             F.broadcast(cur).join(adj, "node")
             .select(
                 "walk_id",

@@ -31,9 +31,9 @@ def split_balance(
     strat_tot = cell.groupBy("stratum").agg(F.sum("n").alias("strat_n"))
     total = cell.agg(F.sum("n").alias("total_n"))
     out = (
-        cell.join(F.broadcast(split_tot), "split")
-        .join(F.broadcast(strat_tot), "stratum")
-        .crossJoin(F.broadcast(total))
+        cell.join(split_tot, "split")
+        .join(strat_tot, "stratum")
+        .crossJoin(total)
     )
     share = F.expr("CAST((1000000 * n) div split_n AS BIGINT)")
     corpus = F.expr("CAST((1000000 * strat_n) div total_n AS BIGINT)")

@@ -67,7 +67,7 @@ def association_rules(
     )
     if min_support_per is not None:
         pairs = (
-            pairs.crossJoin(F.broadcast(n_baskets))
+            pairs.crossJoin(n_baskets)
             .filter(
                 (F.col("support_ab") >= min_support)
                 & (
@@ -86,9 +86,9 @@ def association_rules(
         F.col("item").alias("item_b"), F.col("support").alias("support_b")
     )
     return (
-        pairs.join(F.broadcast(sa), "item_a")
-        .join(F.broadcast(sb), "item_b")
-        .crossJoin(F.broadcast(n_baskets))
+        pairs.join(sa, "item_a")
+        .join(sb, "item_b")
+        .crossJoin(n_baskets)
         .select(
             "item_a",
             "item_b",

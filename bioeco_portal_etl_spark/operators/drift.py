@@ -51,7 +51,7 @@ def cusum_drift(
         .orderBy("__ts", "__id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    walked = vals.join(F.broadcast(mean)).select(
+    walked = vals.join(mean).select(
         "key",
         "__id",
         F.sum(F.col("__v") - F.col("__mean_e")).over(w).alias("__s"),

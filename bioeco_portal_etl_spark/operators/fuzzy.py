@@ -7,8 +7,7 @@ of the name), are pruned by a length band, and only then pay the
 O(len²) edit-distance comparison. The all-pairs formulation is O(n²)
 comparisons; blocking reduces it to Σ|block|² — at 100 TB the blocking
 key is the only shuffle key, each block is processed within its hash
-partition, and a hot block is capped the same way the LSH banding caps
-degenerate buckets (max_block guard).
+partition.
 
 Same composition family as text/dedupe.py's LSH→rescore: block (cheap,
 recall-oriented) → verify (exact, precision-oriented).
@@ -27,7 +26,6 @@ def blocked_fuzzy_best_match(
     block_key: Column | None = None,
     max_distance: int = 2,
     length_band: int = 2,
-    max_block: int | None = None,
 ) -> DataFrame:
     """Best fuzzy match per row among same-block candidates:
     ``(id, best_match_id, best_distance)`` for every row with at least one
@@ -36,10 +34,7 @@ def blocked_fuzzy_best_match(
     ``block_key`` defaults to the name's first whitespace token. The
     argmin is ``min(struct(distance, id))`` under groupBy(id) — candidate
     rows are born inside the block-join partitions, so the combiner
-    collapses them map-side and the final shuffle carries ≤1 row per id.
-    ``max_block`` optionally caps pathological blocks (skew guard): blocks
-    larger than the cap are dropped, trading recall for a bounded worst
-    case — the documented LSH max_bucket trade."""
+    collapses them map-side and the final shuffle carries ≤1 row per id."""
     key = (
         block_key
         if block_key is not None
@@ -51,12 +46,6 @@ def blocked_fuzzy_best_match(
         key.alias("_fblock"),
         F.length(name_col).alias("_flen"),
     )
-    if max_block is not None:
-        sizes = base.groupBy("_fblock").agg(F.count(F.lit(1)).alias("_bn"))
-        base = base.join(
-            F.broadcast(sizes.filter(F.col("_bn") <= max_block)).select("_fblock"),
-            "_fblock",
-        )
     left = base
     right = base.select(
         F.col("_fid").alias("_gid"),

@@ -86,6 +86,7 @@ def certified_heavy_hitters(
         [(c,) for c in cand_keys], "key string"
     )
     recount = (
+        # acts in tx23's build-time collect: without it that collect broadcasts the keys instead (sf0.1)
         keys.join(F.broadcast(cand), "key")
         .groupBy("key")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -46,8 +46,8 @@ def join_card_audit(
         F.sum("cr").alias("n_right"), F.count(F.lit(1)).alias("ndv_right")
     )
     return (
-        lstats.crossJoin(F.broadcast(rstats))
-        .crossJoin(F.broadcast(actual))
+        lstats.crossJoin(rstats)
+        .crossJoin(actual)
         .select(
             F.lit(label).alias("join_name"),
             F.col("n_left").cast("long").alias("n_left"),

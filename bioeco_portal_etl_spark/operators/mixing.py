@@ -100,7 +100,7 @@ def temperature_mix(
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("n"))
     thr = mix_thresholds(counts, stratum_col, alpha, budget_frac)
     return (
-        df.join(F.broadcast(thr.select(stratum_col, "thr")), stratum_col)
+        df.join(thr.select(stratum_col, "thr"), stratum_col)
         .filter(hash_bucket(id_col, salt) < F.col("thr"))
         .drop("thr")
     )

@@ -50,7 +50,7 @@ def ndv_estimate_audit(
         )
         t = df.agg(F.count_distinct(F.col(c)).alias("true_ndv"))
         row = (
-            s.crossJoin(F.broadcast(t))
+            s.crossJoin(t)
             .select(
                 F.lit(c).alias("column_name"),
                 F.col("true_ndv").cast("long").alias("true_ndv"),

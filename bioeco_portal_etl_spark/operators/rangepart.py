@@ -84,7 +84,7 @@ def range_assignment_audit(
     counts = df.groupBy(F.col(value_col).alias("__v")).agg(
         F.count(F.lit(1)).alias("n_rows_v")
     )
-    b = F.broadcast(boundaries.select("boundary"))
+    b = boundaries.select("boundary")
     per_value = (
         counts.join(b, how="cross")
         .groupBy("__v")

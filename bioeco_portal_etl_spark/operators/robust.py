@@ -49,7 +49,7 @@ def median_mad(
     selected element is unique cross-engine."""
     med = _lower_median(df, group_cols, value_col, tiebreak, "median")
     n = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n"))
-    dev = df.join(F.broadcast(med), group_cols).select(
+    dev = df.join(med, group_cols).select(
         *group_cols,
         F.abs(F.col(value_col) - F.col("median")).alias("__dev"),
         F.col(tiebreak),

@@ -72,6 +72,7 @@ def scd2_merge(
         F.col(key_col).alias("__k"),
         *[F.col(c).alias(f"__u_{c}") for c in attr_cols],
     )
+    # without the hint rel11's hash joins build on the dimension side instead
     j = open_rows.join(F.broadcast(u), F.col(key_col) == F.col("__k"), "full")
 
     same = None

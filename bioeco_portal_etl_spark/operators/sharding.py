@@ -68,6 +68,7 @@ def ring_assign(
     sc = df.sparkSession.sparkContext
     if keyed.rdd.getNumPartitions() < sc.defaultParallelism:
         keyed = keyed.repartition(sc.defaultParallelism, "__k")
+    # without the hint x39 broadcasts the keyed rows instead of the ring
     j = keyed.join(F.broadcast(ring), how="cross")
     per_key = j.groupBy("__k", "__kpos").agg(
         F.min(

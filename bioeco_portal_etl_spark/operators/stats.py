@@ -34,7 +34,7 @@ def equi_width_histogram(
     span = F.col("__hi") - F.col("__lo") + 1
     # floor-division spelled floor(a/b) on doubles — the PORTABILITY
     # cross-engine spelling (operands here are non-negative longs < 2^53)
-    binned = vals.join(F.broadcast(bounds)).select(
+    binned = vals.join(bounds).select(
         F.least(
             F.floor(
                 ((F.col("__v") - F.col("__lo")) * nbins).cast("double") / span
@@ -117,6 +117,7 @@ def winsorize_stats(
         F.min(F.when(F.col("__cum") >= k_lo, F.col("__v"))).alias("lo_e"),
         F.min(F.when(F.col("__cum") >= k_hi, F.col("__v"))).alias("hi_e"),
     )
+    # without the hint x17 broadcasts the whole lineitem scan instead
     clamped = vals.join(F.broadcast(thresholds), "g").select(
         "g",
         "lo_e",
@@ -162,6 +163,7 @@ def group_zscore(
         F.sum("v_e").alias("__s1"),
         F.sum(F.col("v_e") * F.col("v_e")).alias("__s2"),
     )
+    # without the hint x19 broadcasts the data side instead
     joined = data.join(F.broadcast(moments), group_col)
     var_num = F.col("__n") * F.col("__s2") - F.col("__s1") * F.col("__s1")
     z = (
@@ -236,7 +238,7 @@ def equi_depth_bins(
         "hi_e",
         F.lag("hi_e").over(lagw).alias("__lo_excl"),
     )
-    assigned = vals.join(F.broadcast(edged)).filter(
+    assigned = vals.join(edged).filter(
         (F.col("__v") <= F.col("hi_e"))
         & (F.col("__lo_excl").isNull() | (F.col("__v") > F.col("__lo_excl")))
     )

@@ -41,7 +41,7 @@ def markov_transitions(
     )
     counts = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
     totals = counts.groupBy("src").agg(F.sum("cnt").alias("__row_total"))
-    return counts.join(F.broadcast(totals), "src").select(
+    return counts.join(totals, "src").select(
         "src",
         "dst",
         "cnt",

@@ -35,6 +35,7 @@ def eov_keyword_links(
         F.col("id").alias("tkeyword_id"), F.col("alt_label")
     )
     joined = eov_links.join(
+        # unmeasured: no catalog query or portal stage reaches this join
         F.broadcast(tk), eov_links.short_name == tk.alt_label, "left"
     ).select(F.col("layer_id").alias("resourcebase_id"), "tkeyword_id")
     if keep_unmatched:

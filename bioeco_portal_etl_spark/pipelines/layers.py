@@ -170,6 +170,7 @@ def with_has_shapefile(
     written = layers.select(F.col(id_col)).distinct().withColumn(
         "__has", F.lit(True)
     )
+    # unmeasured: no catalog query or portal stage reaches this join
     joined = programs.join(F.broadcast(written), id_col, "left")
     return joined.withColumn(
         "has_shapefile", F.coalesce(F.col("__has"), F.lit(False))

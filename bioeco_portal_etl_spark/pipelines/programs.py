@@ -14,10 +14,11 @@ an engine drives them from config so new survey rounds don't change code.
 
 Scale notes: the only shuffles are the EuroSea groupBy (A1) and the window
 ops on identifier/username — both keyed on natural entity keys. The one
-join, contacts onto the survey, is broadcast; neither make_unique nor
-EP2's has_shapefile joins, so each source CSV is scanned once. The 279->25
-projection happens at scan (Catalyst ReadSchema), so fact bytes never pay
-for dropped columns.
+join, contacts onto the survey, is broadcast by the session's size
+threshold, not a hint, so a contacts table that outgrows it gets a
+shuffle join; neither make_unique nor EP2's has_shapefile joins, so
+each source CSV is scanned once. The 279->25 projection happens at scan
+(Catalyst ReadSchema), so fact bytes never pay for dropped columns.
 """
 
 from __future__ import annotations
@@ -112,7 +113,7 @@ def ingest_survey(
         df = df.withColumn("abstract", F.col(abstract_col))
     if source is not None:
         df = df.withColumn("source", F.lit(source))
-    df = df.join(F.broadcast(contacts), "name", "left")
+    df = df.join(contacts, "name", "left")
     df = flag_columns(df, eov_pattern)
     if "url" in df.columns:
         df = df.withColumn("url", str_trunc("url", url_trunc))

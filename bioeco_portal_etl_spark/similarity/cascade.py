@@ -55,6 +55,7 @@ def ann_with_exact_fallback(
         )
         .select("query_id")
     )
+    # without the hint ts18 plans a SortMergeJoin (anti)
     confident = ivf.join(F.broadcast(low), "query_id", "left_anti").select(
         "query_id",
         "match_id",
@@ -63,6 +64,7 @@ def ann_with_exact_fallback(
         F.lit("ivf").alias("path"),
     )
     fallback_q = queries.join(
+        # without the hint ts18 plans a SortMergeJoin (semi)
         F.broadcast(low.withColumnRenamed("query_id", id_col)),
         id_col,
         "left_semi",

@@ -31,6 +31,7 @@ def _cells(vectors: DataFrame, centroids: DataFrame, rank_limit: int) -> DataFra
         F.col("q_v").alias("c_v"),
         F.col("q_n").alias("c_n"),
     )
+    # without the hint ts4 broadcasts the vectors instead of the centroids
     scored = vectors.join(F.broadcast(c), F.lit(True)).select(
         "_cid",
         "_v",
@@ -149,8 +150,9 @@ def ivf_cell_stats(
     total = df.agg(F.count(F.lit(1)).alias("__N"))
     return (
         cent.select(F.col("q_id").alias("cell_id"))
+        # without the hint ts15 plans a SortMergeJoin
         .join(F.broadcast(counts), "cell_id", "left")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "cell_id",
             F.coalesce(F.col("n_vecs"), F.lit(0)).cast("long").alias("n_vecs"),

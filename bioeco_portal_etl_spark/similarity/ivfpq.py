@@ -114,9 +114,11 @@ def ivfpq_topk(
     probes = _cells(qn, cent, nprobe).select(
         F.col("_cid").alias("query_id"), "cell_id"
     )
+    # without the hint ts6 plans a SortMergeJoin
     cand = F.broadcast(probes).join(index, "cell_id")
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("vec_id"))
     lut = pq_lut(queries, codebooks, vec_col, id_col, n_sub, sub_dim)
+    # without the hint ts6 plans a SortMergeJoin
     joined = cand.join(F.broadcast(lut), ["query_id", "subspace", "code"])
     return adc_rank(joined, k)

@@ -111,6 +111,7 @@ def cosine_topk(
     q = with_norm(queries, vec_col, id_col).select(
         F.col(id_col).alias("q_id"), F.col("_v").alias("q_v"), F.col("_n").alias("q_n")
     )
+    # without the hint ts1, ts8, ts9, ts11, ts13, ts17, ts18, ts20 and ts21 broadcast the corpus instead
     return _topk(_scored_pairs(F.broadcast(q), cand, F.lit(True), exclude_self), k)
 
 
@@ -133,6 +134,7 @@ def lsh_bucket_topk(
         F.col(id_col).alias("q_id"), F.col("_v").alias("q_v"), F.col("_n").alias("q_n")
     )
     q = q.withColumn("bucket", sign_bucket(F.col("q_v"), bits))
+    # without the hint ts2 broadcasts the corpus instead
     return _topk(_scored_pairs(F.broadcast(q), cand, "bucket", exclude_self), k)
 
 
@@ -197,6 +199,7 @@ def hard_negative_topk(
     )
     cos = cosine(F.col("q_v"), F.col("_v"), F.col("q_n"), F.col("_n"))
     scored = (
+        # without the hint ts14 broadcasts the corpus instead
         F.broadcast(q)
         .join(cand, F.col("q_label") != F.col("neg_label"))
         .select(
@@ -234,6 +237,7 @@ def cosine_range_search(
     q = with_norm(queries, vec_col, id_col).select(
         F.col(id_col).alias("q_id"), F.col("_v").alias("q_v"), F.col("_n").alias("q_n")
     )
+    # without the hint ts12 broadcasts the corpus instead
     scored = _scored_pairs(F.broadcast(q), cand, F.lit(True), exclude_self)
     return scored.filter(F.col("score_e4") >= threshold_e4)
 
@@ -276,6 +280,7 @@ def topk_diversity(
         F.col(id_col).alias("m_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
     )
     scored = (
+        # without the hint ts17 broadcasts the embeddings scan instead
         va.join(F.broadcast(pairs), "m_a")
         .join(vb, "m_b")
         .select(

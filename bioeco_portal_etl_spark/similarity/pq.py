@@ -73,6 +73,7 @@ def encode_from_subspaces(
     cb = codebooks.select(
         F.col("subspace").alias("cb_sub"), "code", F.col("subvec").alias("cvec")
     )
+    # without the hint ts5 and ts7 broadcast the sub-vector side instead
     scored = sub.join(F.broadcast(cb), sub.subspace == cb.cb_sub).select(
         "vec_id",
         *carry,
@@ -123,6 +124,7 @@ def pq_lut(
     cb = codebooks.select(
         F.col("subspace").alias("cb_sub"), "code", F.col("subvec").alias("cvec")
     )
+    # without the hint ts5, ts6 and ts7 broadcast the query sub-vectors instead
     return qsub.join(F.broadcast(cb), qsub.subspace == cb.cb_sub).select(
         "query_id",
         "subspace",
@@ -172,6 +174,7 @@ def pq_topk(
     tables; approximate squared-L2 ascending, floor-e4, id tiebreaks."""
     encoded = pq_encode(corpus, codebooks, vec_col, id_col, n_sub, sub_dim)
     lut = pq_lut(queries, codebooks, vec_col, id_col, n_sub, sub_dim)
+    # without the hint ts5 and ts7 plan a SortMergeJoin
     joined = encoded.join(F.broadcast(lut), ["subspace", "code"])
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("vec_id"))

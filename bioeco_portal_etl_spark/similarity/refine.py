@@ -43,7 +43,7 @@ def exact_rerank(
     exact = (
         cand.select("query_id", "match_id")
         .join(cv, "match_id")
-        .join(F.broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .select(
             "query_id",
             "match_id",

@@ -58,7 +58,7 @@ def assign_clusters(
         F.col("_v").alias("c_v"),
         F.col("_n").alias("c_n"),
     )
-    scored = m.crossJoin(F.broadcast(c)).select(
+    scored = m.crossJoin(c).select(
         "vec_id",
         "cluster",
         score_e4(

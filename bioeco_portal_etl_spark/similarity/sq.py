@@ -82,7 +82,7 @@ def sq_encode(
         )
 
     return (
-        df.crossJoin(F.broadcast(scale))
+        df.crossJoin(scale)
         .withColumn(out_col, F.transform(F.col(vec_col), q))
         .drop("amax")
     )
@@ -119,6 +119,7 @@ def sq8_topk(
     q = sq_encode(queries, vec_col, scale).select(
         F.col(id_col).alias("query_id"), F.col("code").alias("q_code")
     )
+    # without the hint ts10 broadcasts the corpus instead of the queries
     scored = F.broadcast(q).crossJoin(c)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("_cid"))
@@ -159,7 +160,7 @@ def sq_distortion(corpus: DataFrame, vec_col: str, id_col: str) -> DataFrame:
             * 1000000000000.0
         ),
     )
-    return enc.crossJoin(F.broadcast(scale)).select(
+    return enc.crossJoin(scale).select(
         F.col(id_col),
         F.aggregate(
             err, F.lit(0).cast("long"), lambda acc, v: acc + v

@@ -89,7 +89,7 @@ def bloom_contains_md5(
     )
     # shiftright() takes a Python int shift; a per-row shift count needs the
     # SQL form. bits is always >= 0 (max bit index 59 < sign bit).
-    probed = keyed.join(F.broadcast(bloom), "word", "left").select(
+    probed = keyed.join(bloom, "word", "left").select(
         key_col,
         F.coalesce(
             F.expr("shiftright(bits, bitpos) % 2 != 0"), F.lit(False)

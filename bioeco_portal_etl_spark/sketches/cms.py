@@ -88,7 +88,7 @@ def cms_estimate(
         )
     )
     return (
-        probes.join(F.broadcast(grid), ["row", "bucket"], "left")
+        probes.join(grid, ["row", "bucket"], "left")
         .groupBy(key_col)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_cnt"))
     )

@@ -74,6 +74,7 @@ def group_minhash_similarity(
         (F.col(f"a{p}") == F.col(f"b{p}")).cast("long") for p in range(num_perm)
     )
     pairs = (
+        # without the hint sk11 plans a CartesianProduct here
         a.crossJoin(F.broadcast(b))
         .filter(F.col("grp_a") < F.col("grp_b"))
         .select(
@@ -101,8 +102,9 @@ def group_minhash_similarity(
     sa = sizes.select(F.col("grp").alias("grp_a"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col("grp").alias("grp_b"), F.col("sz").alias("szb"))
     exact = (
+        # without either hint sk11 plans a SortMergeJoin here
         inter.join(F.broadcast(sa), "grp_a")
-        .join(F.broadcast(sb), "grp_b")
+        .join(F.broadcast(sb), "grp_b")  # without it: SortMergeJoin
         .select(
             "grp_a",
             "grp_b",

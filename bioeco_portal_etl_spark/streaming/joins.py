@@ -99,4 +99,6 @@ def static_enrich(
     across triggers). Left join keeps events whose key has no dimension
     row — enrichment must never drop facts. Works identically on a batch
     frame (the unified-face convention of interval_join above)."""
+    # a dimension built from local rows has no size estimate: without the
+    # hint the planner shuffles both sides into a SortMergeJoin
     return stream.join(F.broadcast(dim), key, how)

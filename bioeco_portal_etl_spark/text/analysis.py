@@ -93,20 +93,6 @@ def token_counts(col: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] quality score: length saturation × stopword presence ×
-    punctuation sanity (shared _score_expr — single source of truth with
-    quality_table)."""
-    c = _nn(_c(col))
-    tok = tokens(c)
-    return _score_expr(
-        F.size(tok),
-        F.length(c),
-        F.regexp_count(F.lower(c), F.lit(_profile_regex(STOPWORDS))),
-        F.regexp_count(c, F.lit(PUNCT_PATTERN)),
-    )
-
-
 def fingerprint(col: Column | str, k: int = 4, width: int = 16) -> Column:
     """Document fingerprint: min-md5 over k-word shingles (winnowing-style
     selection of one representative k-gram hash), truncated to ``width`` hex
@@ -144,8 +130,7 @@ def fingerprint_table(
 def quality_table(df, id_col: str, text_col: str):
     """DataFrame-level quality features + composite score, computing the
     token array and every regexp count exactly once (layered selects). Score
-    formula comes from the shared _score_expr — one source of truth with
-    quality_score and the TX3 oracle. Null text counts as empty."""
+    formula comes from _score_expr, which the TX3 oracle mirrors. Null text counts as empty."""
     c = _nn(_c(text_col))
     tok = df.select(F.col(id_col), c.alias("__text"), tokens(c).alias("__tok"))
     feats = tok.select(
@@ -240,8 +225,8 @@ def tfidf_top_terms(df, id_col: str, text_col: str, top_k: int = 3):
     dft = tf.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
     n = tok.agg(F.count_distinct(id_col).alias("__n"))
     scored = (
-        tf.join(F.broadcast(dft), "__t")
-        .join(F.broadcast(n))
+        tf.join(dft, "__t")
+        .join(n)
         .select(
             F.col(id_col),
             F.col("__t").alias("term"),
@@ -374,9 +359,9 @@ def pmi_bigrams(df, text_col: str, min_count: int = 5, top_k: int = 100):
     total = c12.agg(F.sum("cnt").alias("__n"))
     scored = (
         c12.filter(F.col("cnt") >= min_count)
-        .join(F.broadcast(left), "w1")
-        .join(F.broadcast(right), "w2")
-        .join(F.broadcast(total))
+        .join(left, "w1")
+        .join(right, "w2")
+        .join(total)
         .select(
             "w1",
             "w2",

@@ -42,6 +42,7 @@ def blocklist_hits(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     )
     hits = (
+        # without the hint tx25 broadcasts the token stream instead
         tok.join(F.broadcast(bl), "term")
         .groupBy(id_col)
         .agg(

@@ -88,8 +88,8 @@ def bm25_topk(
     dfreq = qt.groupBy("__t").agg(F.count(F.lit(1)).alias("df_t"))
     contrib = F.expr(CONTRIB_EXPR.format(k1=k1, b=b))
     per_doc = (
-        qt.join(F.broadcast(dfreq), "__t")
-        .join(F.broadcast(stats))
+        qt.join(dfreq, "__t")
+        .join(stats)
         .select(F.col(id_col), contrib.alias("__c_e4"))
         .groupBy(id_col)
         .agg(

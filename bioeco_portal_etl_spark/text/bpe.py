@@ -138,7 +138,7 @@ def apply_merge(
         "THEN concat(substring(acc, 1, length(acc) - length(ml)), ml, mr) "
         "ELSE concat(acc, ' ', x) END)"
     )
-    return wf_spaced.crossJoin(F.broadcast(merge)).withColumn(
+    return wf_spaced.crossJoin(merge).withColumn(
         spaced_col, F.expr(merged)
     )
 
@@ -166,7 +166,7 @@ def bpe_rounds(
         outs.append(
             pc.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= top_k)
-            .crossJoin(F.broadcast(merge.select("mp")))
+            .crossJoin(merge.select("mp"))
             .select(
                 F.lit(rnd).cast("long").alias("round"),
                 F.col("rank").cast("long").alias("rank"),

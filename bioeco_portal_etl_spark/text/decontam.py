@@ -54,7 +54,7 @@ def ngram_overlap_pairs(
         .select(F.col("_s"), F.explode("_bids").alias("bench_id"))
     )
     corp = _exploded(corpus, id_col, text_col, k, "doc_id")
-    joined = corp.join(F.broadcast(common), "_s")
+    joined = corp.join(common, "_s")
     return (
         joined.groupBy("doc_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_common"))

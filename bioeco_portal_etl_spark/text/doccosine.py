@@ -83,7 +83,7 @@ def doc_cosine2_pairs(
     space (<= 1e6)."""
     df_t = tc.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     kept = tc.join(
-        F.broadcast(df_t.filter(F.col("df") <= max_df).select("term")), "term"
+        df_t.filter(F.col("df") <= max_df).select("term"), "term"
     )
     norms = kept.groupBy("doc_id").agg(
         F.sum(F.col("c") * F.col("c")).alias("n2")

@@ -64,7 +64,7 @@ def dsir_weights(
     # lineage — qualify both sides or Spark flags __n_t as ambiguous.
     ratio = (
         stats.alias("s")
-        .crossJoin(F.broadcast(totals.alias("t")))
+        .crossJoin(totals.alias("t"))
         .select(
             F.col("s.__b").alias("__b"),
             F.expr(
@@ -74,6 +74,7 @@ def dsir_weights(
         )
     )
     return (
+        # without the hint x31 broadcasts the token stream instead
         tok.join(F.broadcast(ratio), "__b")
         .groupBy(id_col)
         .agg(

@@ -20,8 +20,7 @@ DuckDB's ``//`` floors, and these scores are negative).
 Scale shape: the vocabulary table is Heaps-law bounded (≪ corpus), so it
 broadcasts; token scoring is a map-side hash join over the exploded
 tokens inside the same stage as tokenization; one groupBy(doc) shuffle
-ends the plan. At 100 TB, train the vocab once into a staging table and
-feed it via ``vocab=`` instead of recomputing per run.
+ends the plan.
 """
 
 from __future__ import annotations
@@ -57,39 +56,20 @@ def unigram_vocab(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def unigram_lm_scores(
-    df: DataFrame, id_col: str, text_col: str, vocab: DataFrame | None = None
-) -> DataFrame:
-    """Per-document (n_tokens, sum_lp_e4, avg_lp_e4) under the unigram LM.
-    Zero-token documents carry no signal and are dropped (same contract as
-    simhash/repetition). ``vocab`` defaults to self-training on ``df``;
-    pass a staged table for incremental scoring at scale.
-
-    OOV contract (matters only for staged vocabs — a self-trained vocab
-    covers every token by construction, so the default path skips the OOV
-    machinery and keeps the plan a single inner broadcast join): tokens
-    absent from ``vocab`` are NOT dropped. They count toward ``n_tokens``
-    and score the vocab's MINIMUM log-prob (a floor penalty, the
-    rarest-known-token probability) — so rare-token soup scores WORSE with
-    a staged vocab, never better, which is the direction the CCNet-style
-    gate needs. Implemented as a left join + coalesce against a broadcast
-    1-row floor scalar; the vocab join itself stays a broadcast hash join
-    (Heaps-law bounded build side, pinned in tests/test_plans.py)."""
+def unigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document (n_tokens, sum_lp_e4, avg_lp_e4) under the unigram LM
+    trained on ``df`` itself, so every token is in the vocabulary. Zero-token
+    documents carry no signal and are dropped (same contract as
+    simhash/repetition). The vocab join is a broadcast hash join at the
+    default threshold: its build side is Heaps-law bounded (pinned in
+    tests/test_plans.py)."""
     tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
-    if vocab is None:
-        joined = tok.join(F.broadcast(unigram_vocab(df, text_col)), "__t")
-        lp = F.col("__lp_e4")
-    else:
-        floor_lp = vocab.agg(F.min("__lp_e4").alias("__floor_lp"))
-        joined = tok.join(F.broadcast(vocab), "__t", "left").crossJoin(
-            F.broadcast(floor_lp)
-        )
-        lp = F.coalesce(F.col("__lp_e4"), F.col("__floor_lp"))
     return (
-        joined.groupBy(id_col)
+        tok.join(unigram_vocab(df, text_col), "__t")
+        .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(lp).alias("sum_lp_e4"),
+            F.sum("__lp_e4").alias("sum_lp_e4"),
         )
         .select(
             F.col(id_col),
@@ -170,7 +150,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             )
         ).alias("b"),
     ).select(F.col(id_col), "b.w1", "b.w2")
-    joined = big.join(F.broadcast(bigram_vocab(df, text_col)), ["w1", "w2"])
+    joined = big.join(bigram_vocab(df, text_col), ["w1", "w2"])
     return (
         joined.groupBy(id_col)
         .agg(

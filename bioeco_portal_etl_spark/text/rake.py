@@ -76,7 +76,7 @@ def rake_keywords(
         F.expr("CAST(floor(1e4 * deg / freq) AS BIGINT)").alias("ws_e4"),
     )
     scored = (
-        word_in_phrase.join(F.broadcast(wscore), "w")
+        word_in_phrase.join(wscore, "w")
         .groupBy(id_col, "seg")
         .agg(F.sum("ws_e4").alias("score_e4"))
         .join(phrases, [id_col, "seg"])

@@ -75,13 +75,6 @@ def test_fuzzy_tiebreak_smallest_id(spark):
     assert out[11] == 10
 
 
-def test_fuzzy_max_block_guard(names):
-    # every "alpha" row removed when the block cap is below the block size
-    out = blocked_fuzzy_best_match(names, "id", "name", max_block=3).collect()
-    ids = {r["id"] for r in out}
-    assert ids == {6, 7}
-
-
 def test_fuzzy_partition_invariant(spark):
     p = read_parquet_table(spark, SF_SMOKE, "part").select(
         F.col("p_partkey").alias("id"), F.col("p_name").alias("name")

@@ -56,6 +56,26 @@ def test_j1_broadcast_left_join(spark):
     assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["q3_shipping_priority", "j4_differing_key_names", "tx11_lm_score", "sk2_cms_heavy_hitters", "x7_temperature_mix"],
+)
+def test_size_chooses_the_join(spark, name):
+    """No hint forces these joins: the session threshold broadcasts the
+    small side, and with broadcasting off (a side that has outgrown the
+    threshold) the planner shuffles both sides instead."""
+    plan = _physical(spark, name)
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _physical(spark, name)
+    finally:
+        spark.conf.set(key, default)
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+
+
 def test_a1_partial_aggregation(spark):
     plan = _physical(spark, "a1_grouped_merge")
     assert "partial_" in plan  # merge agg pre-combines map-side

@@ -427,23 +427,13 @@ def test_chunk_windows_plan_is_shuffle_free(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_lm_staged_vocab_oov_floor_penalty(spark):
-    """Staged-vocab OOV contract (round-3 ADVICE): out-of-vocab tokens are
-    counted in n_tokens and scored at the vocab's MIN log-prob, so staged
-    vocabs can only penalize rare-token docs, never silently drop them."""
+def test_lm_self_trained_scores(spark):
+    """Every token of a self-trained vocab is in it: each counts toward
+    n_tokens and scores its own log-prob."""
     from bioeco_portal_etl_spark.text.lm import unigram_lm_scores, unigram_vocab
 
     train = _docs(spark, [(0, "aa aa aa bb")])  # lp(aa)=ln(3/4), lp(bb)=ln(1/4)
-    vocab = unigram_vocab(train, "text")
-    lps = {r["__t"]: r["__lp_e4"] for r in vocab.collect()}
-    floor = min(lps.values())  # = lp(bb)
-    score = _docs(spark, [(1, "aa zz zz")])  # zz is OOV
-    out = unigram_lm_scores(score, "doc_id", "text", vocab=vocab).collect()
-    assert len(out) == 1
-    row = out[0]
-    assert row.n_tokens == 3  # OOV tokens still counted
-    assert row.sum_lp_e4 == lps["aa"] + 2 * floor
-    # self-trained path is unchanged: every token in-vocab, no floor applied
-    self_out = unigram_lm_scores(train, "doc_id", "text").collect()[0]
-    assert self_out.n_tokens == 4
-    assert self_out.sum_lp_e4 == 3 * lps["aa"] + lps["bb"]
+    lps = {r["__t"]: r["__lp_e4"] for r in unigram_vocab(train, "text").collect()}
+    (row,) = unigram_lm_scores(train, "doc_id", "text").collect()
+    assert row.n_tokens == 4
+    assert row.sum_lp_e4 == 3 * lps["aa"] + lps["bb"]
